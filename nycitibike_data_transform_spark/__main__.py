@@ -36,7 +36,7 @@ import sys
 from pyspark.sql import DataFrame, SparkSession
 
 from nycitibike_data_transform_spark import quality
-from nycitibike_data_transform_spark.catalog import table_name
+from nycitibike_data_transform_spark.catalog import read_parquet, table_name
 from nycitibike_data_transform_spark.models.pipeline_def import testdata_pipeline
 from nycitibike_data_transform_spark.models.zones import UNKNOWN_BOROUGH
 from nycitibike_data_transform_spark.session import get_spark
@@ -245,7 +245,7 @@ def _read_model(spark: SparkSession, warehouse: str, model: str) -> DataFrame:
     if not os.path.isdir(root):
         raise PreflightError(f"model {model} not materialized under {warehouse}")
     try:
-        return spark.read.parquet(root)
+        return read_parquet(spark, root)
     except Exception as exc:  # corrupt/empty dir: clean FAILED, not a traceback
         raise PreflightError(f"model {model} unreadable under {warehouse}: {exc}")
 

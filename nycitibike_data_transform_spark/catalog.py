@@ -13,8 +13,11 @@ layers ``{warehouse}/{env}/{layer}/{table}/``.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 LAYERS = (
     "1_src",
@@ -57,6 +60,65 @@ def layer_path(warehouse: str, env: str, layer: str, table: str) -> str:
     return f"{warehouse}/{env}/{layer}/{table}"
 
 
+# session confs that change what parquet schema inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+
+# absolute path -> (inference key, schema): one entry per path, replaced
+# when the path's listing or the inference confs change
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _listing(path: str) -> tuple:
+    """(relpath, size, mtime_ns, inode) of every file at or under
+    ``path``; a rewrite, an added or removed file all change it."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns, st.st_ino),)
+    out = []
+    for d, dirs, names in os.walk(path):
+        dirs.sort()
+        for n in sorted(names):
+            f = os.path.join(d, n)
+            try:
+                st = os.stat(f)
+            except FileNotFoundError:  # removed mid-walk: the inference cannot read it either
+                continue
+            out.append((os.path.relpath(f, path), st.st_size, st.st_mtime_ns, st.st_ino))
+    return tuple(out)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without re-running schema inference
+    on an unchanged path.
+
+    Inference starts a Spark job that reads a footer (~100 ms CPU); a
+    read under a given schema starts none. The inferred schema is
+    memoized per path, keyed by the path's file listing and the confs
+    in ``_INFERENCE_CONFS``, and reused as ``spark.read.schema(...)``
+    while both match. The listing is taken before inference, so a
+    change racing the read can only force a later re-inference, never
+    pin a stale schema. A path that is not a local file or directory
+    (a ``scheme://`` URL, a glob, a missing path) is not memoized: it
+    always infers."""
+    if not os.path.exists(path):
+        return spark.read.parquet(path)
+    path = os.path.abspath(path)
+    key = (_listing(path), tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS))
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (key, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver testdata table, normalizing timestamps.
 
@@ -80,7 +142,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     and stay correct either way)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     for field in df.schema.fields:
         kind = field.dataType.simpleString()
         if name == "events" and field.name == "ts" and kind == "bigint":

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from nycitibike_data_transform_spark.catalog import read_parquet
 from nycitibike_data_transform_spark.models.rides import stage_rides
 from nycitibike_data_transform_spark.models.zones import location_dim
 from nycitibike_data_transform_spark.pipeline import Pipeline
@@ -43,7 +44,7 @@ def testdata_pipeline(sf_dir: str, warehouse_dir: str) -> Pipeline:
     """Configured DAG over the driver's testdata tables."""
     p = Pipeline(warehouse_dir=warehouse_dir)
     for table in ("lineitem", "nation", "region"):
-        p.add_source(table, lambda s, t=table: s.read.parquet(f"{sf_dir}/{t}.parquet"))
+        p.add_source(table, lambda s, t=table: read_parquet(s, f"{sf_dir}/{t}.parquet"))
     p.add_model(
         "location_dim",
         lambda s, nation, region: location_dim(nation, region),

@@ -22,6 +22,7 @@ from graphlib import TopologicalSorter
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nycitibike_data_transform_spark.catalog import read_parquet
 from nycitibike_data_transform_spark.versioning import VersionedTable
 
 
@@ -61,7 +62,7 @@ def read_table_for_merge(spark: SparkSession, path: str, schema) -> DataFrame:
     kept its stale rows). An explicit schema makes Spark parse the
     dir value directly as the caller's type — exact round-trip.
     """
-    on_disk = spark.read.parquet(path).columns
+    on_disk = read_parquet(spark, path).columns
     expected = [f.name for f in schema.fields]
     if sorted(on_disk) != sorted(expected):
         raise ValueError(
@@ -640,6 +641,6 @@ class Pipeline:
                     if model.partition_by:
                         writer = writer.partitionBy(*model.partition_by)
                     writer.parquet(path)
-                    df = spark.read.parquet(path)
+                    df = read_parquet(spark, path)
             built[name] = df
         return built

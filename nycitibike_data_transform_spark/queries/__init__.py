@@ -124,57 +124,6 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
     # CORRECTNESS_r*.json evidence). Ranking: never-driver-green
     # first, then stalest-first, ties alphabetical. The first
     # 50 entries are the next driver correctness window.
-    "span_strip_bloom",
-    "stratified_sample",
-    "streaming_upsert_view",
-    "string_functions",
-    "table_profile",
-    "top_supplier",
-    "topk_scan_decimal",
-    "user_streaks",
-    "weighted_sample",
-    "zorder_scan",
-    "anti_join",
-    "approx_distinct",
-    "argmax_orders",
-    "collect_sorted",
-    "compression_signal",
-    "containment_pairs",
-    "cosine_topk_ivf",
-    "cosine_topk_lsh",
-    "cube_orders",
-    "curriculum_stages",
-    "dataset_report",
-    "decontaminate_bloom",
-    "dedup_latest",
-    "dispersion",
-    "distinct_parts_per_flag",
-    "embedding_dedup",
-    "embedding_near_dup",
-    "event_type_daily",
-    "events_hourly",
-    "forecast_revenue",
-    "global_shuffle",
-    "grouping_sets",
-    "hash_sample",
-    "minhash_pairs",
-    "mixture_plan",
-    "pack_render",
-    "perplexity_score",
-    "price_histogram",
-    "quality_logit",
-    "repetition_strip",
-    "returned_items",
-    "rollup_qty",
-    "semi_join",
-    "set_intersect",
-    "shard_manifest",
-    "shipping_priority",
-    "simhash",
-    "skew_join_events",
-    "streaming_source_mix",
-    "streaming_user_totals",
-    # ---- past the 50-entry driver window ----
     "surrogate_keys",
     "table_profile_approx",
     "token_budget_select",
@@ -225,6 +174,7 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
     "scrub_pii",
     "set_except",
     "signup_purchase_funnel",
+    # ---- past the 50-entry driver window ----
     "split_leakage",
     "stage_rides",
     "supplier_wait",
@@ -285,6 +235,56 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
     "unimax_mixture",
     "url_host_stats",
     "zipf_fit",
+    "anti_join",
+    "approx_distinct",
+    "argmax_orders",
+    "collect_sorted",
+    "compression_signal",
+    "containment_pairs",
+    "cosine_topk_ivf",
+    "cosine_topk_lsh",
+    "cube_orders",
+    "curriculum_stages",
+    "dataset_report",
+    "decontaminate_bloom",
+    "dedup_latest",
+    "dispersion",
+    "distinct_parts_per_flag",
+    "embedding_dedup",
+    "embedding_near_dup",
+    "event_type_daily",
+    "events_hourly",
+    "forecast_revenue",
+    "global_shuffle",
+    "grouping_sets",
+    "hash_sample",
+    "minhash_pairs",
+    "mixture_plan",
+    "pack_render",
+    "perplexity_score",
+    "price_histogram",
+    "quality_logit",
+    "repetition_strip",
+    "returned_items",
+    "rollup_qty",
+    "semi_join",
+    "set_intersect",
+    "shard_manifest",
+    "shipping_priority",
+    "simhash",
+    "skew_join_events",
+    "span_strip_bloom",
+    "stratified_sample",
+    "streaming_source_mix",
+    "streaming_upsert_view",
+    "streaming_user_totals",
+    "string_functions",
+    "table_profile",
+    "top_supplier",
+    "topk_scan_decimal",
+    "user_streaks",
+    "weighted_sample",
+    "zorder_scan",
 )
 
 

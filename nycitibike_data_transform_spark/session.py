@@ -8,7 +8,9 @@ warehouse" is a Catalyst/Tungsten session configured for:
 - UTC session timezone (parity with the DuckDB oracle and with the
   reference's timestamp semantics),
 - Arrow for any pandas interchange,
-- shuffle partitions sized to the machine, not the 200 default.
+- shuffle partitions sized to the machine, not the 200 default,
+- a generated-class cache that holds the registry's working set, so a
+  repeated op reuses its compiled classes instead of recompiling them.
 
 On a real cluster the same builder applies — only ``master`` and the
 memory sizing change; AQE re-sizes shuffles at runtime so the static
@@ -21,6 +23,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
@@ -32,6 +36,13 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """Build (or reuse) the engine's session.
+
+    ``spark.sql.codegen.cache.maxEntries`` is a static conf: the JVM
+    sizes its generated-class cache once, from the session that
+    triggers the first codegen. It therefore takes effect only when
+    this function builds the JVM's first session; a session obtained
+    from an already running JVM keeps that JVM's cache size."""
     cpus = default_parallelism()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
@@ -52,6 +63,10 @@ def get_spark(
         # (see bucketing.py) — off by default upstream, no cost when
         # no bucketed tables participate
         .config("spark.sql.bucketing.coalesceBucketsInJoin.enabled", "true")
+        # a sweep of the non-eager registry queries generates ~1.8k
+        # distinct classes; at the default 100 entries every repeated
+        # op evicts and recompiles the previous op's classes
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark-graft-warehouse"),
@@ -63,12 +78,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable parity configs to an externally-created
-    session (e.g. the driver's). Only touches runtime SQL confs."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.bucketing.coalesceBucketsInJoin.enabled", "true")
-    return spark

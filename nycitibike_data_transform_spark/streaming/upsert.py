@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.readwriter import DataStreamWriter
 
+from nycitibike_data_transform_spark.catalog import read_parquet
 from nycitibike_data_transform_spark.functions.dbt_compat import deduplicate
 
 
@@ -129,7 +130,7 @@ def apply_upsert_batch(
         existing = (
             table.read_current_as(spark, winners.schema)
             if versioned
-            else spark.read.parquet(path)
+            else read_parquet(spark, path)
         ).select(*winners.columns)
         merged = _winners(
             existing.unionByName(winners), keys, order_desc

@@ -357,19 +357,26 @@ def _run_hammer(kind, factory, tmp_path, n_workers, n_wins, deadline, key):
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     procs, logs = [], []
-    for w in range(n_workers):
-        log = str(tmp_path / f"{key}.log{w}")
-        logs.append(log)
-        procs.append(
-            subprocess.Popen(
-                [sys.executable, "-c", _HTTP_WORKER, repo, kind,
-                 endpoint, bucket, f"w{w}", str(n_wins), log,
-                 str(deadline), key],
-                stdout=subprocess.DEVNULL,
-                stderr=subprocess.DEVNULL,
+    try:
+        for w in range(n_workers):
+            log = str(tmp_path / f"{key}.log{w}")
+            logs.append(log)
+            procs.append(
+                subprocess.Popen(
+                    [sys.executable, "-c", _HTTP_WORKER, repo, kind,
+                     endpoint, bucket, f"w{w}", str(n_wins), log,
+                     str(deadline), key],
+                    stdout=subprocess.DEVNULL,
+                    stderr=subprocess.DEVNULL,
+                )
             )
-        )
-    rcs = [p.wait(timeout=deadline + 120) for p in procs]
+        rcs = [p.wait(timeout=deadline + 120) for p in procs]
+    finally:
+        # a wait timeout or a failed spawn must not leave workers running
+        for p in procs:
+            if p.poll() is None:
+                p.kill()
+                p.wait()
     assert all(rc in (0, 3) for rc in rcs), f"worker crashed: {rcs}"
 
     transitions: list[tuple[str, str]] = []

@@ -16,11 +16,12 @@ driver on exactly this class:
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from tools.check_oracle import lint_oracle_types
 

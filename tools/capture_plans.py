@@ -17,7 +17,8 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from nycitibike_data_transform_spark.queries import all_queries
 from nycitibike_data_transform_spark.session import get_spark
@@ -43,7 +44,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--tag", default="before")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--outdir", default="/root/repo/plans/r15")
+    ap.add_argument("--outdir", default=os.path.join(REPO, "plans", "r15"))
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
 

@@ -20,7 +20,7 @@ from collections import Counter
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from nycitibike_data_transform_spark.catalog import TESTDATA_TABLES
 from nycitibike_data_transform_spark.session import get_spark

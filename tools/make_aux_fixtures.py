@@ -26,19 +26,21 @@ committed at ``tests/fixtures/nyc_restaurant_inspections_sample.csv``.
 
 from __future__ import annotations
 
+import os
 import random
 import sys
 
 import duckdb
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from nycitibike_data_transform_spark.functions.projection import EPSG_2263, lcc_inverse_np
 from nycitibike_data_transform_spark.operators.geo_wkb import parse_wkb_polygons
 
 ZONES = "/root/reference/ref/2_DIM___AUX_NYC|nyc_nta_zones.parquet"
-OUT = "/root/repo/tests/fixtures/nyc_restaurant_inspections_sample.csv"
+OUT = os.path.join(REPO, "tests", "fixtures", "nyc_restaurant_inspections_sample.csv")
 
 CUISINES = ["American", "Chinese", "Pizza", "Mexican", "Japanese", "Bakery", "Caribbean"]
 GRADES = ["A", "A", "A", "B", "B", "C", "P", "Z"]  # A-heavy like the real feed
