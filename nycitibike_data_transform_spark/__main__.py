@@ -87,54 +87,46 @@ def preflight(spark: SparkSession, env: str, sf_dir: str, warehouse: str) -> lis
 
 def data_tests(built: dict) -> None:
     """dbt-test analogue over the materialized models: the invariants
-    the staged-rides join contract depends on (SURVEY.md §5.2)."""
+    the staged-rides join contract depends on (SURVEY.md §5.2),
+    declared per model like a dbt ``schema.yml`` and evaluated by
+    ``quality.check_all`` in one Spark action."""
     dim = built["location_dim"]
     rides = built["stage_rides"]
     mart = built["mart_borough_daily"]
     known_dim = dim.filter(dim.borough != UNKNOWN_BOROUGH)
     quality.check_all(
         {
-            "location_dim.location_id unique": quality.unique_violations(
-                dim, ["location_id"]
-            ),
-            "location_dim not-null keys": quality.not_null_violations(
+            # location_dim
+            "location_dim.location_id unique": quality.Unique(dim, ["location_id"]),
+            "location_dim not-null keys": quality.NotNull(
                 dim, ["location_id", "borough", "neighborhood"]
             ),
-            "stage_rides not-null grain": quality.not_null_violations(
+            # stage_rides
+            "stage_rides not-null grain": quality.NotNull(
                 rides, ["order_key", "line_number", "source"]
             ),
-            "stage_rides.source accepted values": quality.accepted_values_violations(
+            "stage_rides.source accepted values": quality.AcceptedValues(
                 rides, "source", ["yellow", "green", "fhv"], allow_null=False
             ),
             # enriched boroughs must come from the KNOWN dim rows
             # (filter-before-join contract): any other value means the
             # Unknown filter regressed
-            "stage_rides.pickup_borough relationship": quality.relationship_violations(
-                rides.filter(rides.pickup_borough.isNotNull()),
-                "pickup_borough",
-                known_dim.select("borough").distinct(),
-                "borough",
+            "stage_rides.pickup_borough relationship": quality.Relationship(
+                rides, "pickup_borough", known_dim, "borough"
             ),
-            "mart grain unique": quality.unique_violations(
-                mart, ["ride_date", "pickup_borough"]
-            ),
-            # expression_violations takes the INVARIANT (rows where it
-            # fails, or is NULL, come back)
-            "mart counts positive": quality.expression_violations(
-                mart, mart.n_rides > 0
-            ),
+            # mart_borough_daily
+            "mart grain unique": quality.Unique(mart, ["ride_date", "pickup_borough"]),
+            # Expression takes the INVARIANT (rows where it fails, or
+            # is NULL, are the violations)
+            "mart counts positive": quality.Expression(mart, mart.n_rides > 0),
             # dbt_utils generic tests (r7): the mart can never have
             # MORE rows than its fact grain, revenue sits in a sane
             # band, and the borough column is not degenerate
-            "mart fewer rows than stage": quality.fewer_rows_than_violation(
-                mart, rides
-            ),
-            "mart revenue accepted range": quality.accepted_range_violations(
+            "mart fewer rows than stage": quality.FewerRowsThan(mart, rides),
+            "mart revenue accepted range": quality.AcceptedRange(
                 mart, "revenue", min_value=0
             ),
-            "mart borough not constant": quality.not_constant_violation(
-                mart, "pickup_borough"
-            ),
+            "mart borough not constant": quality.NotConstant(mart, "pickup_borough"),
         }
     )
 

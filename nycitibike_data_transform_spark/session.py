@@ -9,8 +9,9 @@ warehouse" is a Catalyst/Tungsten session configured for:
   reference's timestamp semantics),
 - Arrow for any pandas interchange,
 - shuffle partitions sized to the machine, not the 200 default,
-- a generated-class cache that holds the registry's working set, so a
-  repeated op reuses its compiled classes instead of recompiling them.
+- a generated-class cache that holds the registry's working set, and
+  class names without the codegen stage id, so a repeated op reuses its
+  compiled classes instead of recompiling them.
 
 On a real cluster the same builder applies — only ``master`` and the
 memory sizing change; AQE re-sizes shuffles at runtime so the static
@@ -67,6 +68,10 @@ def get_spark(
         # distinct classes; at the default 100 entries every repeated
         # op evicts and recompiles the previous op's classes
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # AQE numbers codegen stages in the order its query stages
+        # materialize, which varies between runs of one plan; the stage
+        # id in the class name would make such a rerun miss the cache
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark-graft-warehouse"),

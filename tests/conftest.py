@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import sys
+import uuid
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -23,6 +25,31 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs() as jobs:`` runs the block under a fresh job
+    group; ``jobs()`` is how many Spark jobs the block has started so
+    far (the listener bus is drained first, so none is missed)."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def group():
+        name = f"tests-{uuid.uuid4()}"
+
+        def jobs() -> int:
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return len(sc.statusTracker().getJobIdsForGroup(name))
+
+        sc.setJobGroup(name, name)
+        try:
+            yield jobs
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    return group
 
 
 @pytest.fixture

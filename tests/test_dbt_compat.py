@@ -84,12 +84,16 @@ def test_deduplicate_keeps_ordered_winner(spark):
     assert got == {1: "new", 2: "only"}
 
 
-def test_equal_rowcount_and_fewer_rows(spark):
+def test_equal_rowcount_and_fewer_rows(spark, spark_jobs):
     a, b = spark.range(5), spark.range(5)
+    with spark_jobs() as jobs:  # lazy: building either frame counts nothing
+        equal = equal_rowcount_violation(a, spark.range(6))
+        fewer = fewer_rows_than_violation(a, b)
+    assert jobs() == 0
+    assert equal.collect() == [(5, 6)] and equal.columns == ["count_a", "count_b"]
+    assert fewer.collect() == [(5, 5)] and fewer.columns == ["count_df", "count_than"]
     assert equal_rowcount_violation(a, b).count() == 0
-    assert equal_rowcount_violation(a, spark.range(6)).count() == 1
     assert fewer_rows_than_violation(a, spark.range(6)).count() == 0
-    assert fewer_rows_than_violation(a, spark.range(5)).count() == 1
 
 
 def test_not_null_proportion(spark):

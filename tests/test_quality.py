@@ -2,11 +2,23 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nycitibike_data_transform_spark.quality import (
+    AcceptedRange,
+    AcceptedValues,
+    EqualRowcount,
+    Expression,
+    FewerRowsThan,
+    NotConstant,
+    NotNull,
     QualityError,
+    Relationship,
+    Unique,
     accepted_values_violations,
     check_all,
     expression_violations,
@@ -56,6 +68,49 @@ def test_expression_and_check_all(spark, sf_dir):
     with pytest.raises(QualityError, match="discount_gt_one"):
         check_all({"qty_positive": ok, "discount_gt_one": bad})
     check_all({"qty_positive": ok})  # passing set raises nothing
+
+
+def test_fused_counts_match_violation_frames(spark):
+    # every way check_all folds a test into its relation's aggregate:
+    # extra unique-key sets, distinct counts on and off the grouped
+    # key, joins with NULL keys, row counts across relations, empty
+    # relations and a plain frame
+    df = spark.createDataFrame(
+        [(1, "a", None), (1, "b", 5), (2, "b", -1), (None, "b", 3)],
+        "k int, g string, v int",
+    )
+    parent = spark.createDataFrame([(1,), (1,), (3,)], "k int")
+    same = spark.createDataFrame([(1, "x", 7), (2, "x", 7)], "k int, g string, v int")
+    empty = spark.createDataFrame([], "k int, g string, v int")
+    checks = {
+        "df k unique": Unique(df, ["k"]),
+        "df k g unique": Unique(df, ["k", "g"]),
+        "df g not constant": NotConstant(df, "g"),
+        "df v not null": NotNull(df, ["v"]),
+        "df v range": AcceptedRange(df, "v", min_value=0),
+        "df k in parent": Relationship(df, "k", parent, "k"),
+        "df g values": AcceptedValues(df, "g", ["a"]),
+        "df v positive": Expression(df, F.col("v") > 0),
+        "df rows equal parent": EqualRowcount(df, parent),
+        "df fewer rows than parent": FewerRowsThan(df, parent),
+        "same g unique": Unique(same, ["g"]),
+        "same g not constant": NotConstant(same, "g"),
+        "same v not constant": NotConstant(same, "v"),
+        "same k unique": Unique(same, ["k"]),
+        "empty k unique": Unique(empty, ["k"]),
+        "empty v not constant": NotConstant(empty, "v"),
+        "empty fewer rows than df": FewerRowsThan(empty, df),
+        "plain": df.filter(F.col("v") > 4),
+    }
+    expected = {
+        name: (c if isinstance(c, DataFrame) else c.violations()).count()
+        for name, c in checks.items()
+    }
+    with pytest.raises(QualityError) as exc:
+        check_all(checks, sample=1)
+    got = dict(re.findall(r"(?:^|; )([a-z ]+): (\d+) violations", str(exc.value)))
+    assert {k: int(v) for k, v in got.items()} == {k: n for k, n in expected.items() if n}
+    assert len(got) == 12
 
 
 def test_freshness(spark, sf_dir):

@@ -6,7 +6,6 @@ the files or the inference confs change."""
 from __future__ import annotations
 
 import datetime as dt
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -53,19 +52,6 @@ def _compiles(spark) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
-def _with_jobs(spark, fn):
-    """``(jobs fn started, fn's result)``."""
-    sc = spark.sparkContext
-    group = f"test_repeat_op_caches-{uuid.uuid4()}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group)), out
-
-
 def _restore(spark, key: str, value) -> None:
     if value is None:
         spark.conf.unset(key)
@@ -87,15 +73,14 @@ def test_repeated_sweep_compiles_nothing(spark, sf_dir, tmp_path):
     assert _compiles(spark) - before == 0
 
 
-def test_second_load_of_unchanged_dir_starts_no_job(spark, sf_dir, tmp_path):
+def test_second_load_of_unchanged_dir_starts_no_job(spark, sf_dir, tmp_path, spark_jobs):
     relaid = _relayout(sf_dir, tmp_path)
-
-    def load():
-        return load_table(spark, relaid, "lineitem")
-
-    assert _with_jobs(spark, load)[0] >= 1
-    jobs, df = _with_jobs(spark, load)
-    assert jobs == 0
+    with spark_jobs() as jobs:
+        load_table(spark, relaid, "lineitem")
+    assert jobs() >= 1
+    with spark_jobs() as jobs:
+        df = load_table(spark, relaid, "lineitem")
+    assert jobs() == 0
     assert df.schema == load_table(spark, sf_dir, "lineitem").schema
     assert df.count() == pq.read_metadata(f"{sf_dir}/lineitem.parquet").num_rows
 
