@@ -15,10 +15,11 @@ import os
 import re
 import sys
 import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from nycitibike_data_transform_spark.queries import all_queries
+from nycitibike_data_transform_spark.queries import _EAGER_CACHE, all_queries
 from nycitibike_data_transform_spark.session import default_parallelism, get_spark
 
 # jiffies per second; sysconf returns -1 (truthy!) when unsupported,
@@ -265,6 +266,31 @@ def _calibrate_with_recheck(
     return calib, ratio, recalibrated
 
 
+def default_sf_dir() -> str:
+    """The input dir: ``$SPARK_GRAFT_SF_DIR``, else the sf0.1 testdata."""
+    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def time_noop(build, runs: int) -> list[float]:
+    """Wall seconds of ``runs`` fresh runs of ``build()`` into the
+    ``noop`` sink (executes every partition, writes nothing).
+
+    Fresh means the EAGER verdict memo is cleared before EVERY run
+    (ADVICE r10), so an eager query is rebuilt rather than handed back
+    as the previous run's checkpointed frame; plan construction is
+    inside the timed region. The shared clustered-snapshot fixture
+    (``queries.marts._LAYOUT_FIXTURES``) is NOT cleared: it is
+    precomputed table state (a layout on disk), not part of the query.
+    """
+    times = []
+    for _ in range(runs):
+        _EAGER_CACHE.clear()
+        t0 = time.time()
+        build().write.mode("overwrite").format("noop").save()
+        times.append(time.time() - t0)
+    return times
+
+
 def query_families(registry) -> dict[str, str]:
     """Map every registry query name to its source module (family) —
     derived from the callables themselves so a new query module can
@@ -276,7 +302,7 @@ def query_families(registry) -> dict[str, str]:
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = default_sf_dir()
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
@@ -331,15 +357,10 @@ def main() -> None:
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
     for name in HEADLINE:
-        df = registry[name].spark(spark, sf_dir)
-        df.write.mode("overwrite").format("noop").save()  # warm (JIT, page cache)
-        runs = []
-        for _ in range(3):  # min damps scheduler noise; median shows spread
-            t0 = time.time()
-            df2 = registry[name].spark(spark, sf_dir)
-            df2.write.mode("overwrite").format("noop").save()
-            runs.append(time.time() - t0)
-        runs.sort()
+        build = partial(registry[name].spark, spark, sf_dir)
+        time_noop(build, 1)  # warm (JIT, page cache)
+        # min damps scheduler noise; median shows spread
+        runs = sorted(time_noop(build, 3))
         timings[name] = round(runs[0], 3)
         medians[name] = round(runs[len(runs) // 2], 3)
 
@@ -365,8 +386,6 @@ def main() -> None:
     registry_timings: dict[str, float] = {}
     registry_first: dict[str, float] = {}
     family_totals: dict[str, float] = {}
-    from nycitibike_data_transform_spark.queries import _EAGER_CACHE
-
     registry_load1: dict[str, float] = {}
     registry_foreign: dict[str, float] = {}
     foreign_peak = 0.0  # monotone envelope of the foreign-CPU delta
@@ -392,20 +411,7 @@ def main() -> None:
             / _CLK_TCK,
         )
         registry_foreign[name] = round(foreign_peak, 1)
-        runs = []
-        for rep in range(sweep_runs):
-            if rep:
-                # min-of-N must time FRESH query plans, not memo hits
-                # (ADVICE r10): clear the EAGER verdict memo between
-                # timed repetitions, same as tools/stress_full.py. The
-                # shared clustered-snapshot FIXTURE stays — it is
-                # precomputed table state (a layout on disk), not part
-                # of the query; the re-run times the pruned read path
-                # it exists to serve.
-                _EAGER_CACHE.clear()
-            t0 = time.time()
-            spec.spark(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            runs.append(time.time() - t0)
+        runs = time_noop(partial(spec.spark, spark, sf_dir), sweep_runs)
         registry_first[name] = round(runs[0], 3)
         dt = min(runs)
         registry_timings[name] = round(dt, 3)
@@ -423,13 +429,7 @@ def main() -> None:
     timings_early = dict(timings)
     timings_late: dict[str, float] = {}
     for name in HEADLINE:
-        runs = []
-        for _ in range(2):
-            t0 = time.time()
-            registry[name].spark(spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            runs.append(time.time() - t0)
+        runs = time_noop(partial(registry[name].spark, spark, sf_dir), 2)
         timings_late[name] = round(min(runs), 3)
         timings[name] = min(timings[name], timings_late[name])
     total = round(sum(timings.values()), 3)

@@ -364,3 +364,28 @@ def test_exiting_daemon_cannot_mask_a_live_cotenant():
     finally:
         _kill_quietly(daemon)
     assert _delta_sec(before, after) > burn / 2
+
+
+def test_time_noop_rebuilds_eager_query_on_every_run(spark, sf_dir, spark_jobs):
+    """The timing primitive times FRESH plans: an eager query's build
+    (a layout read checkpointed at plan-build) must start Spark jobs on
+    every run, including the second, instead of returning the first
+    run's memoized frame from ``queries._EAGER_CACHE``."""
+    from bench import time_noop
+
+    from nycitibike_data_transform_spark.queries import all_queries
+
+    query = all_queries()["zonemap_scan"].spark
+    build_jobs: list[int] = []
+    with spark_jobs() as jobs:
+
+        def build():
+            before = jobs()
+            df = query(spark, sf_dir)
+            build_jobs.append(jobs() - before)
+            return df
+
+        times = time_noop(build, 2)
+    assert len(times) == 2 and all(t > 0 for t in times)
+    assert len(build_jobs) == 2
+    assert build_jobs[1] > 0, build_jobs

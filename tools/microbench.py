@@ -30,11 +30,21 @@ import argparse
 import json
 import os
 import sys
-import time
+from functools import partial
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _ROOT not in sys.path:
     sys.path.insert(0, _ROOT)
+
+from bench import (  # noqa: E402
+    _CLK_TCK,
+    _foreign_cpu_delta_jiffies,
+    _foreign_cpu_samples,
+    time_noop,
+)
+from nycitibike_data_transform_spark.plans import count_exchanges  # noqa: E402
+from nycitibike_data_transform_spark.queries import all_queries  # noqa: E402
+from nycitibike_data_transform_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -47,35 +57,21 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from nycitibike_data_transform_spark.plans import count_exchanges
-    from nycitibike_data_transform_spark.queries import _EAGER_CACHE, all_queries
-    from nycitibike_data_transform_spark.session import get_spark
-
     registry = all_queries()
     if args.query not in registry:
         sys.exit(f"unknown query {args.query!r}; try: {', '.join(sorted(registry))}")
-    spec = registry[args.query]
     spark = get_spark(
         "microbench", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
-
-    from bench import _CLK_TCK, _foreign_cpu_delta_jiffies, _foreign_cpu_samples
+    build = partial(registry[args.query].spark, spark, args.sf_dir)
 
     foreign_before = _foreign_cpu_samples()
-    t0 = time.time()
-    df = spec.spark(spark, args.sf_dir)
-    df.write.mode("overwrite").format("noop").save()
-    warm = time.time() - t0
+    (warm,) = time_noop(build, 1)
+    runs = [round(t, 3) for t in time_noop(build, args.runs)]
+    # an eager query's build is a memo hit here: the last timed run's frame
+    df = build()
     if args.explain:
         df.explain("formatted")
-
-    runs: list[float] = []
-    for _ in range(args.runs):
-        # time FRESH plans, not memo hits (same discipline as bench.py)
-        _EAGER_CACHE.clear()
-        t0 = time.time()
-        spec.spark(spark, args.sf_dir).write.mode("overwrite").format("noop").save()
-        runs.append(round(time.time() - t0, 3))
 
     print(
         json.dumps(

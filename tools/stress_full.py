@@ -1,12 +1,13 @@
-"""Whole-registry scale stress (VERDICT r6 item #2): build a complete,
-cross-table-consistent K× replica of sf0.1 ("sf1" at K=10) and time the
-FIRST execution of a fresh plan for EVERY registry query at 1× and K×,
-reporting per-query and per-family wall ratios.
+"""Registry scale stress (VERDICT r6 item #2): build a complete,
+cross-table-consistent K× replica of ``$SPARK_GRAFT_SF_DIR`` (default
+sf0.1; "sf1" at K=10) and time the FIRST execution of a fresh plan for
+every registry query — or the named ones — at 1× and K×, reporting
+per-query and per-family wall ratios.
 
-Replica construction (conventions shared with the per-family stress
-tools, so the same invariants hold):
+Replica construction:
 
-- ``lineitem`` / ``orders``: orderkey-shifted copies (stress_relational's
+- ``lineitem`` / ``orders``: orderkey-shifted copies, both tables by
+  the same shift so every replica line keeps its order (the warehouse
   growth mode — dimensions stay 1×, per-dimension fan-in grows K×).
 - ``documents`` / ``embeddings``: id-shifted copies; the shift is a
   multiple of the decontamination modulus so benchmark membership is
@@ -48,7 +49,10 @@ coins are hash(id, copy) — no RNG, rebuilds are bit-identical.
 
 Usage: python tools/stress_full.py [K] [scratch_dir] [--organic[=PCT]] [query ...]
 Prints one JSON line: {query: [t_1x, t_Kx, ratio, foreign_cpu_sec]} +
-per-family rollup + a run-wide ``foreign_cpu_sec`` total.
+per-family rollup + a run-wide ``foreign_cpu_sec`` total. A family's
+scale check is a name list, e.g. the TPC-H shapes (``pricing_summary
+revenue_by_nation supplier_wait ...``) or the LLM data path
+(``decontaminate dedup_clusters span_dedup ...``).
 
 The 4th per-query element is bench.py's co-tenant stamp over that
 query's timed block (VERDICT r13 item 8): scale ratios feed grading
@@ -61,17 +65,26 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
-import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from bench import (
+    _CLK_TCK,
+    _foreign_cpu_delta_jiffies,
+    _foreign_cpu_samples,
+    default_sf_dir,
+    query_families,
+    time_noop,
+)
 from nycitibike_data_transform_spark.queries import all_queries
+from nycitibike_data_transform_spark.queries.marts import _LAYOUT_FIXTURES
 from nycitibike_data_transform_spark.session import get_spark
 
-BASE = "/root/testdata/sf0.1"
 _DOC_SHIFT = 10_000_000  # multiple of 50 = decontamination modulus
 _KEY_SHIFT = 1_000_000_000
 
@@ -165,8 +178,9 @@ def _organic_embeddings(df, factor: int, rate_pct: int):
 
 
 def build(
-    spark, factor: int, base: str, organic_pct: int | None = None
+    spark, factor: int, src: str, base: str, organic_pct: int | None = None
 ) -> None:
+    """Write the K× replica of every table under ``src`` to ``base``."""
     plans = {
         "lineitem": {"l_orderkey": _KEY_SHIFT},
         "orders": {"o_orderkey": _KEY_SHIFT},
@@ -178,60 +192,33 @@ def build(
         "region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "events", "documents", "embeddings",
     ):
-        src = spark.read.parquet(f"{BASE}/{table}.parquet")
+        df = spark.read.parquet(f"{src}/{table}.parquet")
         if organic_pct is not None and table == "documents":
-            out = _organic_documents(src, factor, organic_pct)
+            out = _organic_documents(df, factor, organic_pct)
         elif organic_pct is not None and table == "embeddings":
-            out = _organic_embeddings(src, factor, organic_pct)
+            out = _organic_embeddings(df, factor, organic_pct)
         elif table in plans:
-            out = _replicate(src, factor, plans[table])
+            out = _replicate(df, factor, plans[table])
         else:
-            out = src
+            out = df
         out.repartition(32).write.mode("overwrite").parquet(
             f"{base}/{table}.parquet"
         )
 
 
 def time_fresh(spark, sf_dir: str, name: str, runs: int = 1) -> float:
-    import shutil
-
-    from nycitibike_data_transform_spark.queries import _EAGER_CACHE
-    from nycitibike_data_transform_spark.queries.marts import _LAYOUT_FIXTURES
-
+    build = partial(all_queries()[name].spark, spark, sf_dir)
     best = float("inf")
     for _ in range(runs):
-        # "fresh" means FRESH: the EAGER memo (r10) would otherwise
-        # hand back the first run's checkpointed frame and the min-of-2
-        # 1× timing would measure a cache hit — 0.02 s "layouts" and
-        # four-digit phantom ratios (observed live before this clear).
-        # The shared clustered-snapshot FIXTURE (r11) must clear too,
-        # and SYMMETRICALLY: a fixture pre-built at 1× but not at 10×
-        # turns the first layout query's ratio into
-        # read-vs-build-plus-read — a 35× phantom (observed live)
-        _EAGER_CACHE.clear()
+        # the shared clustered-snapshot FIXTURE (r11) must clear before
+        # EVERY run, and SYMMETRICALLY: a fixture pre-built at 1× but
+        # not at K× turns the first layout query's ratio into
+        # read-vs-build-plus-read — a 35× phantom (observed live).
+        # time_noop clears the EAGER memo itself.
         for k in list(_LAYOUT_FIXTURES):
             shutil.rmtree(_LAYOUT_FIXTURES.pop(k)["tmp"], ignore_errors=True)
-        t0 = time.time()
-        q = all_queries()[name]
-        # construction included: EAGER (training) queries work here
-        df = q.spark(spark, sf_dir)
-        df.write.mode("overwrite").format("noop").save()
-        best = min(best, time.time() - t0)
+        best = min(best, time_noop(build, 1)[0])
     return round(best, 2)
-
-
-def family_of(name: str) -> str:
-    for mod_name in (
-        "core", "marts", "relational", "advanced",
-        "events", "llmdata", "aux_nyc", "textprep", "dbt_compat",
-    ):
-        mod = __import__(
-            f"nycitibike_data_transform_spark.queries.{mod_name}",
-            fromlist=["QUERIES"],
-        )
-        if name in mod.QUERIES:
-            return mod_name
-    return "?"
 
 
 def main() -> None:
@@ -243,18 +230,20 @@ def main() -> None:
             argv.remove(a)
     factor = int(argv[0]) if argv else 10
     base = argv[1] if len(argv) > 1 else f"/tmp/spark_graft_full_{factor}x"
-    names = argv[2:] or list(all_queries())
+    src = default_sf_dir()
+    registry = all_queries()
+    names = argv[2:] or list(registry)
+    families = query_families(registry)
     spark = get_spark("stress_full")
     marker = f"{factor}:organic={organic_pct}"
     built = f"{base}/_BUILT"
     if not (os.path.exists(built) and open(built).read() == marker):
-        build(spark, factor, base, organic_pct)
+        build(spark, factor, src, base, organic_pct)
         open(built, "w").write(marker)
     # session warmup: JVM/codegen cold-start otherwise lands entirely
     # on the first few 1× timings and poisons their ratios
     for w in ("pricing_summary", "text_stats", "dedup_exact"):
-        time_fresh(spark, BASE, w)
-    from bench import _CLK_TCK, _foreign_cpu_delta_jiffies, _foreign_cpu_samples
+        time_fresh(spark, src, w)
 
     out: dict[str, list[float]] = {}
     fam: dict[str, list[float]] = {}
@@ -264,7 +253,7 @@ def main() -> None:
         try:
             # min-of-2 on the small 1× side (discards residual compile
             # noise); single fresh run at K× where real work dominates
-            t1 = time_fresh(spark, BASE, name, runs=2)
+            t1 = time_fresh(spark, src, name, runs=2)
             tk = time_fresh(spark, base, name)
         except Exception as exc:  # keep the sweep going; report the failure
             out[name] = [str(exc)[:120]]  # type: ignore[list-item]
@@ -277,7 +266,7 @@ def main() -> None:
         foreign_total += foreign
         ratio = round(tk / t1, 2) if t1 > 0 else float("inf")
         out[name] = [t1, tk, ratio, foreign]
-        f = family_of(name)
+        f = families[name]
         fam.setdefault(f, [0.0, 0.0])
         fam[f][0] += t1
         fam[f][1] += tk

@@ -12,6 +12,8 @@ with the file-skipping counts alongside the wall times:
 
     python tools/stress_layout_reads.py /root/testdata/sf0.1 /tmp/sf10
 
+(no argument: ``$SPARK_GRAFT_SF_DIR``, default sf0.1)
+
 prints one JSON line per sf_dir:
     {"sf_dir": ..., "build_sec": ..., "reads": {name:
         {"cold_sec": ..., "min_sec": ..., "files_opened": N,
@@ -21,8 +23,8 @@ Reads mirror the five registry layout queries (same columns, bounds,
 versions — see queries/marts.py) plus the Morton read on v5. Timing
 is first-execution ("cold", includes codegen) and min-of-3; file
 counts come from the executed plan's inputFiles() vs the version
-manifest. No eager memo is involved: read_* builds a fresh plan per
-call.
+manifest. Timing runs through ``bench.time_noop``; read_* builds a
+fresh plan per call, so its eager-memo clear is a no-op here.
 """
 
 from __future__ import annotations
@@ -35,6 +37,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import default_sf_dir, time_noop  # noqa: E402
 from nycitibike_data_transform_spark.queries.marts import (  # noqa: E402
     _LAYOUT_VERSIONS,
     _POINTSET_KEYS,
@@ -45,7 +48,7 @@ from nycitibike_data_transform_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    sf_dirs = sys.argv[1:] or ["/root/testdata/sf0.1"]
+    sf_dirs = sys.argv[1:] or [default_sf_dir()]
     spark = get_spark("stress_layout_reads")
     for sf_dir in sf_dirs:
         t0 = time.time()
@@ -84,12 +87,7 @@ def main() -> None:
         out: dict[str, dict] = {}
         versions = dict(_LAYOUT_VERSIONS, zorder=_ZORDER_VERSION)
         for name, version, mk in reads(versions):
-            runs = []
-            for _ in range(3):
-                t0 = time.time()
-                df = mk()
-                df.write.mode("overwrite").format("noop").save()
-                runs.append(time.time() - t0)
+            runs = time_noop(mk, 3)
             # file/row audit OUTSIDE the timing loop: one extra
             # execution total, not one per timed run (r12 review)
             df = mk()
