@@ -71,7 +71,6 @@ alive in an untouched bucket. Enforced at merge time.
 
 from __future__ import annotations
 
-import json
 import os
 import re
 import shutil
@@ -204,74 +203,19 @@ class BucketedIncrementalTable(VersionedTable):
             )
         return stage
 
-    def _commit_linked(
-        self, links: dict[str, str], schema: StructType
-    ) -> int:
+    def _commit_linked(self, links: dict[str, str], schema: StructType) -> int:
         """Assemble the next snapshot from ``{target_name: source_path}``
-        hardlinks, then commit with the inherited manifest + pointer
-        ordering (data → manifest → atomic swap)."""
-        from nycitibike_data_transform_spark.versioning import (
-            _STATS_FMT,
-            _stats_cols,
-            _sweep_footers,
-        )
-
+        hardlinks, then commit it with the bucket spec in the manifest
+        (data → manifest → atomic swap)."""
         cur = self.current_version()
-        version = (cur or 0) + 1
-        # assemble in a unique attempt dir, one atomic rename into the
-        # slot (fenced) — nothing ever links into a shared path
-        assembly = self._attempt_dir()
-        try:
-            os.makedirs(assembly)
-            for name, src in sorted(links.items()):
-                os.link(src, os.path.join(assembly, name))
-            self._move_into_slot(assembly, version)
-        finally:
-            shutil.rmtree(assembly, ignore_errors=True)
-        data_dir = self._data_dir(version)
-        # commit-time zone-map stats, same posture as write_version:
-        # hardlinked bucket files carry their entry forward by name
-        # (same inode); only the re-staged buckets get swept — at most
-        # num_buckets tiny footer reads, before the pointer swap
-        prev_stats = {}
-        prev_fields: list[str] = []
-        if cur is not None:
-            pm = self.manifest(cur)
-            prev_fields = [f["name"] for f in pm["schema"]["fields"]]
-            if pm.get("stats_fmt") == _STATS_FMT:
-                prev_stats = pm.get("stats", {})
-        carried = {f: prev_stats[f] for f in links if f in prev_stats}
-        from nycitibike_data_transform_spark.versioning import (
-            _backfill_added_all_null,
+        self._link_into_slot(links, (cur or 0) + 1)
+        return self._commit(
+            cur,
+            schema,
+            bucket_cols=self.bucket_cols,
+            num_buckets=self.num_buckets,
+            sort_cols=self.sort_cols,
         )
-
-        # evolution-added columns: hardlinked pre-evolution bucket
-        # files are provably all-null — stamp the prunable marker
-        carried = _backfill_added_all_null(carried, prev_fields, schema)
-        fresh = _sweep_footers(
-            data_dir,
-            [f for f in links if f not in carried],
-            _stats_cols(schema),
-        )
-        manifest = {
-            "version": version,
-            "schema": schema.jsonValue(),
-            "partition_by": [],
-            "files": sorted(links),
-            "bucket_cols": self.bucket_cols,
-            "num_buckets": self.num_buckets,
-            "sort_cols": self.sort_cols,
-            "stats_fmt": _STATS_FMT,
-            "stats": {**carried, **fresh},
-        }
-        self._ensure_lease()  # see VersionedTable's fence note
-        self._put_manifest(version, json.dumps(manifest))
-        self._commit_pointer(cur, version)
-        return version
-
-    @staticmethod
-    def _parquet_files(d: str) -> list[str]:
-        return sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
 
     # ----------------------------------------------------------- writes
 
@@ -335,27 +279,11 @@ class BucketedIncrementalTable(VersionedTable):
                 f"empty table at {self.root}: bootstrap with write_full"
             )
         m = self.manifest(cur)
-        # additive schema evolution (VERDICT r9 item #2): updates may
-        # APPEND nullable columns — untouched buckets keep their old
-        # files hardlinked and byte-identical, reading NULL for the
-        # added columns under the evolved manifest schema; drops and
-        # re-types raise (full rewrite territory). The evolved schema
-        # is committed-fields-first + added fields in updates order,
-        # so every pre-evolution reader's column layout is a prefix.
-        from nycitibike_data_transform_spark.versioning import (
-            _additive_evolution,
-        )
-
-        # narrowing="widen": the committed schema below is rebuilt
-        # from the manifest, preserving committed nullability — an
-        # updates plan with non-nullable columns never narrows it
-        added = set(
-            _additive_evolution(m["schema"], updates.schema, narrowing="widen")
-        )
-        schema = StructType.fromJson(m["schema"])
-        for f in updates.schema.fields:
-            if f.name in added:
-                schema = schema.add(f.name, f.dataType, nullable=True)
+        # additive schema evolution: updates may APPEND nullable columns
+        # — untouched buckets keep their old files hardlinked and
+        # byte-identical, reading NULL for the added columns under the
+        # evolved manifest schema
+        schema = self._evolved_schema(m["schema"], updates.schema)
         updates = updates.select(*[f.name for f in schema.fields])
         # checkpoint BEFORE the touched-bucket collect (review finding
         # r9, the flag_contaminated lesson): the collect below and the

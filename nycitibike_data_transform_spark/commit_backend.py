@@ -28,7 +28,7 @@ protocol:
   and the conditional delete fails instead of destroying the live
   writer's lock (the r10-ADVICE TOCTOU).
 - ``get / exists / put / delete / list`` — plain object I/O for
-  manifests, the sidecar stats cache, and vacuum.
+  manifests and vacuum.
 
 Liveness is LEASE-based, not pid-based, at the interface level:
 ``new_lease()`` mints a lock payload and ``lease_live(payload)``
@@ -70,8 +70,8 @@ class CommitBackend(ABC):
 
     @abstractmethod
     def put(self, key: str, content: str) -> None:
-        """Durable unconditional overwrite (manifests, sidecars —
-        objects owned by the lock holder, so no condition needed)."""
+        """Durable unconditional overwrite of an object owned by the
+        lock holder, so no condition needed."""
 
     @abstractmethod
     def delete(self, key: str) -> None:
@@ -490,11 +490,6 @@ class S3Backend(CommitBackend):
     (DEPLOY.md, fencing note).
     """
 
-    #: AWS rejects multipart parts under 5 MiB (EntityTooSmall) except
-    #: the last — the constructor enforces the floor so a misconfigured
-    #: part size fails at build time, not at the final complete call
-    _MIN_PART_SIZE = 5 * 1024 * 1024
-
     def __init__(
         self,
         bucket: str,
@@ -503,26 +498,17 @@ class S3Backend(CommitBackend):
         lease_ttl: float = 60.0,
         clock=time.time,
         skew_margin: float = 5.0,
-        multipart_threshold: int = 4 * 1024 * 1024,
-        part_size: int = 8 * 1024 * 1024,
     ):
         if client is None:  # pragma: no cover - exercised via moto in tests
             import boto3
 
             client = boto3.client("s3")
-        if part_size < self._MIN_PART_SIZE:
-            raise ValueError(
-                f"part_size must be >= {self._MIN_PART_SIZE} (the AWS "
-                f"multipart minimum), got {part_size}"
-            )
         self._s3 = client
         self.bucket = bucket
         self.prefix = (prefix.rstrip("/") + "/") if prefix else ""
         self.lease_ttl = lease_ttl
         self.skew_margin = skew_margin
         self._clock = clock
-        self.multipart_threshold = multipart_threshold
-        self.part_size = part_size
 
     def _k(self, key: str) -> str:
         return self.prefix + key
@@ -558,52 +544,11 @@ class S3Backend(CommitBackend):
         return self._get_with_etag(key)[0]
 
     def put(self, key: str, content: str) -> None:
-        # unconditional overwrite: lock-holder-owned objects only
-        # (manifests, sidecars) — durability is the store's contract.
-        # Size-routed like the GCS dialect (VERDICT r13 item 3):
-        # manifests grow with table history, so anything above
-        # multipart_threshold uses the documented multipart protocol —
-        # parts are individually retryable and the object appears
-        # atomically at complete. Conditional uploads stay single-shot:
-        # the control plane's pointers/leases are bytes, and S3's
-        # conditional requests compose with plain PutObject.
-        body = content.encode("utf-8")
-        if len(body) <= self.multipart_threshold:
-            self._s3.put_object(Bucket=self.bucket, Key=self._k(key), Body=body)
-            return
-        mp = self._s3.create_multipart_upload(
-            Bucket=self.bucket, Key=self._k(key)
+        # unconditional overwrite: lock-holder-owned objects only —
+        # durability is the store's contract
+        self._s3.put_object(
+            Bucket=self.bucket, Key=self._k(key), Body=content.encode("utf-8")
         )
-        upload_id = mp["UploadId"]
-        try:
-            parts = []
-            for n, off in enumerate(
-                range(0, len(body), self.part_size), start=1
-            ):
-                r = self._s3.upload_part(
-                    Bucket=self.bucket,
-                    Key=self._k(key),
-                    PartNumber=n,
-                    UploadId=upload_id,
-                    Body=body[off : off + self.part_size],
-                )
-                parts.append({"ETag": r["ETag"], "PartNumber": n})
-            self._s3.complete_multipart_upload(
-                Bucket=self.bucket,
-                Key=self._k(key),
-                UploadId=upload_id,
-                MultipartUpload={"Parts": parts},
-            )
-        except BaseException:
-            # abort so the store reclaims the staged parts (billed
-            # otherwise); the original failure propagates regardless
-            try:
-                self._s3.abort_multipart_upload(
-                    Bucket=self.bucket, Key=self._k(key), UploadId=upload_id
-                )
-            except Exception:
-                pass
-            raise
 
     def delete(self, key: str) -> None:
         # S3 DeleteObject on an absent key already succeeds (2xx)
@@ -750,14 +695,15 @@ class S3Backend(CommitBackend):
 
     def sweep_orphans(self) -> int:
         """Abort every INCOMPLETE multipart upload under this table's
-        prefix (VERDICT r14 item 7). A writer SIGKILLed between
+        prefix (VERDICT r14 item 7). This client writes every object
+        with one ``PutObject``, but a bucket can still hold residue from
+        an earlier client: a writer SIGKILLed between
         ``create_multipart_upload`` and ``complete`` leaves its staged
-        parts invisible-but-billed forever — the in-code abort only runs
-        on the exception path, which a process death never reaches. The
-        caller (``vacuum``) holds the table write lock, so any open
-        upload here belongs to a crashed or zombie writer; aborting a
-        zombie's upload makes its eventual ``complete`` fail loudly
-        (NoSuchUpload), which the fencing posture already requires."""
+        parts invisible-but-billed forever. The caller (``vacuum``)
+        holds the table write lock, so any open upload here belongs to
+        a crashed or zombie writer; aborting a zombie's upload makes its
+        eventual ``complete`` fail loudly (NoSuchUpload), which the
+        fencing posture already requires."""
         swept = 0
         paginator = self._s3.get_paginator("list_multipart_uploads")
         for page in paginator.paginate(Bucket=self.bucket, Prefix=self.prefix):
@@ -851,8 +797,8 @@ class GCSBackend(CommitBackend):
             raise ValueError("chunk_size must be positive")
         if chunk_size % self._CHUNK_QUANTUM and not allow_unaligned_chunks:
             # real GCS rejects non-final chunks that are not 256 KiB
-            # multiples — fail at build time like the S3 part_size
-            # floor, not at the first large manifest in production
+            # multiples — fail at build time, not at the first large
+            # manifest in production
             # (ADVICE r14). Tests against the emulator pass
             # allow_unaligned_chunks=True to exercise the loop with
             # tiny chunks.

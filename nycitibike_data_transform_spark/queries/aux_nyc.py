@@ -3,25 +3,29 @@ modeled surface (reference ``notes.md:196-207``: the aux NYC sources
 were staged manually and never got SQL models; only data dictionaries
 and samples ship under ``ref/``).
 
-Two driver-checked queries close that gap:
+Two driver-checked queries close that gap, over synthetic
+repo-resident fixtures (``tests/fixtures/``, generated with fixed
+seeds by ``tools/make_aux_fixtures.py``):
 
-- ``aux_econ_by_nta``: typed CSV ingestion of the real
-  ``data_nyc_econ_by_nta.csv`` sample (261 NTAs × 120+ columns) +
-  borough-level aggregation. Plain SQL oracle over the same file.
+- ``aux_econ_by_nta``: typed CSV ingestion of the NTA economics table
+  (one row per NTA, the real table's ``Borough``/``Pop16plE``/``LFE``
+  columns) + borough-level aggregation. Plain SQL oracle over the same
+  file.
 - ``inspections_by_nta``: the geo-enrichment pipeline the reference
   implied but never built — string-date parsing, WGS84→EPSG:2263
   forward projection (closed-form Column trig, no UDF), WKB
-  point-in-polygon against the REAL NTA zones parquet, then a
+  point-in-polygon against the NTA zones parquet (concave tracts,
+  MultiPolygons, and holes holding other NTAs' tracts), then a
   grouped aggregate. The oracle aggregates on the fixture's stored
-  NTA codes (ground-truth by construction — see
-  ``tools/make_aux_fixtures.py``), so a hash match certifies the
-  whole projection + ray-casting chain, not just the groupBy.
+  NTA codes (ground-truth by construction), so a hash match
+  certifies the whole projection + ray-casting chain, not just the
+  groupBy.
 
-Scale posture: the zones dimension (2,327 polygons) is collected
-driver-side once per query — index metadata, like an ANN quantizer
-(``operators/geo_wkb.py``) — while the point table streams through
-``mapInPandas`` in Arrow batches with a bbox prefilter; the
-projection itself is pure codegen expressions. At 100 TB the point
+Scale posture: the zones dimension (2,327 polygons in the reference's
+real parquet) is collected driver-side once per query — index
+metadata, like an ANN quantizer (``operators/geo_wkb.py``) — while
+the point table streams through ``mapInPandas`` in Arrow batches with
+a bbox prefilter; the projection itself is pure codegen expressions. At 100 TB the point
 table never shuffles for this enrichment.
 """
 
@@ -37,12 +41,10 @@ from nycitibike_data_transform_spark.operators.geo_wkb import tag_points_with_zo
 from nycitibike_data_transform_spark.queries import QuerySpec
 from nycitibike_data_transform_spark.sources.aux_nyc import read_inspections
 
-_REF = "/root/reference/ref"
-ECON_CSV = f"{_REF}/1_SRC___AUX_NYC_DEMOGRAPHIC|data_nyc_econ_by_nta.csv"
-ZONES_PARQUET = f"{_REF}/2_DIM___AUX_NYC|nyc_nta_zones.parquet"
-INSPECTIONS_CSV = str(
-    Path(__file__).resolve().parents[2] / "tests" / "fixtures" / "nyc_restaurant_inspections_sample.csv"
-)
+_FIXTURES = Path(__file__).resolve().parents[2] / "tests" / "fixtures"
+ECON_CSV = str(_FIXTURES / "nyc_econ_by_nta.csv")
+ZONES_PARQUET = str(_FIXTURES / "nyc_nta_zones.parquet")
+INSPECTIONS_CSV = str(_FIXTURES / "nyc_restaurant_inspections_sample.csv")
 
 
 def aux_econ_by_nta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -88,7 +90,7 @@ def load_zones() -> list[tuple[str, bytes]]:
 def inspections_by_nta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(NTA, grade) inspection stats where the NTA is computed
     GEOMETRICALLY: lat/lng → EPSG:2263 → point-in-polygon against the
-    reference's census-tract polygons. The oracle groups by the
+    zones fixture's tract polygons. The oracle groups by the
     fixture's stored NTA codes instead — matching hashes prove the
     geo chain end-to-end."""
     insp = read_inspections(spark, INSPECTIONS_CSV)

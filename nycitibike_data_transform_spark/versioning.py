@@ -122,10 +122,23 @@ def _stats_json(v):
     return v
 
 
-#: Zone-map stats encoding version, shared by the manifest's
-#: write-time stats and the legacy sidecar cache. 2: temporal stats as
-#: epoch micros (r9); 3: decimal stats as exact scaled ints (r10).
+#: Encoding version of the manifest's commit-time zone-map stats.
+#: 2: temporal stats as epoch micros (r9); 3: decimal stats as exact
+#: scaled ints (r10). A manifest at any other version has no usable
+#: stats (see :func:`_manifest_stats`).
 _STATS_FMT = 3
+
+
+def _manifest_stats(manifest: dict) -> dict:
+    """The manifest's per-file zone maps, or ``{}`` when it carries no
+    stats in the current encoding. A manifest is input read from disk:
+    an older encoding would mix with the current bound
+    canonicalization and prune wrongly, so it reads as stat-less —
+    every file is read (fail-safe), and the next commit sweeps that
+    snapshot's files afresh."""
+    if manifest.get("stats_fmt") != _STATS_FMT:
+        return {}
+    return manifest["stats"]
 
 
 def _is_nan(v) -> bool:
@@ -391,11 +404,6 @@ def _sweep_footers(data_dir: str, rels, cols) -> dict:
 
     cols = list(cols)
 
-    def hive_cols(rel: str) -> set[str]:
-        return {
-            seg.split("=", 1)[0] for seg in rel.split("/")[:-1] if "=" in seg
-        }
-
     def _raw_int(v) -> int:
         return (
             int.from_bytes(v, "big", signed=True)
@@ -410,29 +418,10 @@ def _sweep_footers(data_dir: str, rels, cols) -> dict:
             md.schema.column(i).name: i for i in range(md.num_columns)
         }
         for c in cols:
+            # a column the file doesn't carry (a hive partition column)
+            # has no footer stats: None, fail-safe
             idx = name_to_idx.get(c)
             agg = None
-            if idx is None and c not in hive_cols(rel):
-                # the file doesn't carry the column at all AND it is
-                # not a hive partition column (those live in the dir
-                # name, not the footer — their value is anything but
-                # null): under the manifest-pinned read schema (the
-                # only way snapshots are read here) Spark NULL-fills
-                # it, so the file is PROVABLY all-null — stamp the
-                # prunable marker. This is how the sidecar-backfill
-                # path (pre-r10 manifests swept post-hoc after an
-                # evolution) gets the same pre-evolution-tail pruning
-                # commit-time stats get from _backfill_added_all_null
-                # (VERDICT r10 item #7). Partition columns stay None
-                # here (fail-safe); the commit paths overwrite them
-                # with exact dir-name stats via
-                # _augment_partition_stats where the type allows.
-                agg = {
-                    "min": None,
-                    "max": None,
-                    "nulls": md.num_rows,
-                    "rows": md.num_rows,
-                }
             if idx is not None:
                 lt = md.schema.column(idx).logical_type
                 dec_scale = (
@@ -533,8 +522,7 @@ def _durable_write(path: str, content: str) -> None:
     the commit point and both the bytes and the directory entry are
     on disk before this returns (process-kill safety needs only the
     rename; power-loss safety needs the fsyncs). The temp name is
-    UNIQUE per writer: concurrent readers both backfilling the same
-    stats sidecar (a legal many-readers race) must not share a temp
+    UNIQUE per writer: two writers of one path must not share a temp
     inode — a fixed '.tmp' let one truncate the other's in-flight
     bytes and commit a torn file (r11 review)."""
     import uuid as _uuid
@@ -589,10 +577,6 @@ class VersionedTable:
     def _manifest_key(version: int) -> str:
         return f"_versions/v{version:08d}.json"
 
-    @staticmethod
-    def _sidecar_key(version: int) -> str:
-        return f"_versions/v{version:08d}.stats.json"
-
     def _commit_pointer(self, prev: int | None, version: int) -> None:
         """THE commit point: compare-and-swap the version pointer from
         the value this writer started from. Under the writer lock the
@@ -626,8 +610,8 @@ class VersionedTable:
             return []
         out = []
         for key in self._backend.list("_versions/"):
-            # strict manifest pattern: zone-map sidecars (vN.stats.json)
-            # and any future metadata live alongside the manifests
+            # strict manifest pattern: any other metadata may live
+            # alongside the manifests
             m = re.fullmatch(r"v(\d{8})\.json", key.rsplit("/", 1)[-1])
             if m:
                 v = int(m.group(1))
@@ -886,13 +870,9 @@ class VersionedTable:
         Order matters for crash-safety: (1) data into a UNIQUE staging
         dir (a crash here orphans files but commits nothing; nothing
         ever writes into the shared slot), (2) one atomic rename into
-        ``data/vN`` (fenced — :meth:`_move_into_slot`), (3) manifest
-        (conditional — :meth:`_put_manifest`), (4) pointer
-        compare-and-swap — the only step with commit semantics
-        (:meth:`_commit_pointer`)."""
+        ``data/vN`` (fenced — :meth:`_move_into_slot`), (3) manifest,
+        then the pointer compare-and-swap (:meth:`_commit`)."""
         prev = self.current_version()
-        cur = prev or 0
-        version = cur + 1
         stage = self._attempt_dir()
         writer = df.write.mode("overwrite")
         if partition_by:
@@ -900,39 +880,111 @@ class VersionedTable:
         try:
             with _stats_friendly_writes(df.sparkSession):
                 writer.parquet(stage)
-
-            files = sorted(
-                os.path.relpath(os.path.join(base, f), stage)
-                for base, _, fs in os.walk(stage)
-                for f in fs
-                if f.endswith(".parquet")
-            )
-            stats = _sweep_footers(stage, files, _stats_cols(df.schema))
-            self._move_into_slot(stage, version)
+            self._move_into_slot(stage, (prev or 0) + 1)
         finally:
             shutil.rmtree(stage, ignore_errors=True)
-        _augment_partition_stats(stats, partition_by, df.schema)
+        return self._commit(prev, df.schema, partition_by)
+
+    @staticmethod
+    def _parquet_files(root: str) -> list[str]:
+        """Sorted paths, relative to ``root``, of the parquet files in
+        a snapshot tree (hive partition dirs included; Spark's
+        ``_SUCCESS`` and ``.crc`` files left out)."""
+        return sorted(
+            os.path.relpath(os.path.join(base, f), root)
+            for base, _, fs in os.walk(root)
+            for f in fs
+            if f.endswith(".parquet")
+        )
+
+    def _link_into_slot(self, links: dict[str, str], version: int) -> None:
+        """Assemble a snapshot from ``{rel_target: abs_source}``
+        hardlinks in a unique attempt dir, then install it into
+        ``data/vN`` with one fenced rename (:meth:`_move_into_slot`) —
+        nothing ever links into a shared path."""
+        assembly = self._attempt_dir()
+        try:
+            os.makedirs(assembly)
+            for rel, src in sorted(links.items()):
+                dst = os.path.join(assembly, rel)
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.link(src, dst)
+            self._move_into_slot(assembly, version)
+        finally:
+            shutil.rmtree(assembly, ignore_errors=True)
+
+    @staticmethod
+    def _evolved_schema(manifest_schema: dict, new_schema):
+        """The schema a merge commits (VERDICT r9 item #2): the
+        committed columns first, with their ORIGINAL nullability, then
+        the columns ``new_schema`` appends, nullable, in its order — so
+        a pre-evolution reader's column layout is a prefix. Drops and
+        re-types raise (:func:`_additive_evolution`). ``narrowing=
+        "widen"``: a merge plan that recomputes a column as
+        non-nullable never narrows the manifest over hardlinked files
+        that may hold NULLs (ADVICE r10)."""
+        from pyspark.sql.types import StructType
+
+        added = set(
+            _additive_evolution(manifest_schema, new_schema, narrowing="widen")
+        )
+        schema = StructType.fromJson(manifest_schema)
+        for fld in new_schema.fields:
+            if fld.name in added:
+                schema = schema.add(fld.name, fld.dataType, nullable=True)
+        return schema
+
+    def _commit(self, prev: int | None, schema, partition_by=(), **layout) -> int:
+        """Commit the snapshot already installed in ``data/v{prev+1}``
+        — the one commit tail of every writer. Order: zone-map stats,
+        then the manifest (conditional — :meth:`_put_manifest`), then
+        the pointer compare-and-swap from ``prev``, the only step with
+        commit semantics (:meth:`_commit_pointer`). ``layout`` adds
+        writer-specific manifest keys (the bucket spec).
+
+        Stats are collected AT COMMIT TIME into the manifest (VERDICT
+        r9 item #1), so the READ path never sweeps footers. A file the
+        previous manifest already lists is a hardlink of it (same
+        inode, same footer): its entry carries forward verbatim, with
+        the all-null marker stamped for columns an evolution just
+        added. Only the rest — the slot's fresh files — get their
+        local, page-cache-hot footers swept, before the pointer swap.
+        Partition columns get exact dir-name stats."""
+        version = (prev or 0) + 1
+        data_dir = self._data_dir(version)
+        files = self._parquet_files(data_dir)
+        carried: dict = {}
+        if prev is not None:
+            pm = self.manifest(prev)
+            prev_stats = _manifest_stats(pm)
+            carried = _backfill_added_all_null(
+                {f: prev_stats[f] for f in files if f in prev_stats},
+                [f["name"] for f in pm["schema"]["fields"]],
+                schema,
+            )
+        stats = {
+            **carried,
+            **_sweep_footers(
+                data_dir,
+                [f for f in files if f not in carried],
+                _stats_cols(schema),
+            ),
+        }
+        _augment_partition_stats(stats, partition_by, schema)
         manifest = {
             "version": version,
-            "schema": df.schema.jsonValue(),
+            "schema": schema.jsonValue(),
             "partition_by": list(partition_by),
+            **layout,
             "files": files,
-            # Zone-map stats collected AT COMMIT TIME, into the
-            # manifest (VERDICT r9 item #1): the footers being read
-            # here are the staged write's own just-written local files
-            # (page-cache hot, pre-pointer-swap), standing in for what
-            # an object-store port gets from the write tasks — so the
-            # READ path never needs a post-hoc footer sweep at all.
-            # The vN.stats.json sidecar sweep survives only as
-            # backfill for pre-r10 snapshots. Partition columns get
-            # exact dir-name stats (_augment_partition_stats).
             "stats_fmt": _STATS_FMT,
             "stats": stats,
         }
-        # the Spark write above is the long span a lease can expire in:
-        # re-validate before overwriting the manifest slot a reclaimed
-        # winner may have committed (the pointer CAS would catch the
-        # zombie too, but only AFTER it clobbered the winner's manifest)
+        # the Spark write before this is the long span a lease can
+        # expire in: re-validate before overwriting the manifest slot a
+        # reclaimed winner may have committed (the pointer CAS would
+        # catch the zombie too, but only AFTER it clobbered the
+        # winner's manifest)
         self._ensure_lease()
         self._put_manifest(version, json.dumps(manifest))
         self._commit_pointer(prev, version)  # the commit point
@@ -946,60 +998,24 @@ class VersionedTable:
         [, "scale": s]} | None}}`` (None = no usable stats for that
         column in that file — the pruner must keep it).
 
-        Post-r10 snapshots answer this straight from the MANIFEST: the
-        stats were collected at commit time from the staged write's
-        own footers (see :meth:`write_version`), so a range read on a
-        fresh snapshot opens ZERO parquet footers beyond the data
-        files it actually scans — the posture an object store needs,
-        where a post-hoc footer sweep over a 10k-file snapshot is a
-        10k-GET listing storm.
-
-        Pre-r10 snapshots (no ``stats`` key in the manifest) fall back
-        to the legacy driver-side footer sweep, cached durably in the
-        ``vN.stats.json`` sidecar — backfill only, never the fresh
-        path. Snapshot immutability makes both caches valid forever.
+        Answered straight from the MANIFEST: the stats were collected
+        at commit time from the written files' own footers (see
+        :meth:`_commit`), so a range read opens ZERO parquet footers
+        beyond the data files it actually scans — the posture an
+        object store needs, where a post-hoc footer sweep over a
+        10k-file snapshot is a 10k-GET listing storm. A manifest
+        without current-format stats reads as all-None (fail-safe).
         """
         if version not in self.versions():
             raise ValueError(f"version {version} not committed")
         manifest = self.manifest(version)
-        if manifest.get("stats_fmt") == _STATS_FMT:
-            mstats = manifest["stats"]
-            # a column absent from the commit-time sweep (added later,
-            # or non-primitive) reads as None — fail-safe, never prune;
-            # _nan_guard drops NaN-contaminated entries a pre-fix sweep
-            # may have committed (json round-trips NaN)
-            return {
-                f: {c: _nan_guard(mstats.get(f, {}).get(c)) for c in cols}
-                for f in manifest["files"]
-            }
-        sidecar = self._sidecar_key(version)
-        cached: dict = {}
-        sidecar_content = self._backend.get(sidecar)
-        if sidecar_content is not None:
-            cached = json.loads(sidecar_content)
-            # format versioning: fmt 2 switched temporal stats from ISO
-            # strings to epoch micros (the tz-aware-vs-naive ordering
-            # bug); fmt 3 switched decimals from float to exact scaled
-            # ints — an older cache would mix encodings with the new
-            # bound canonicalization, so rebuild instead of trusting it
-            if cached.pop("_fmt", 1) != _STATS_FMT:
-                cached = {}
-        missing_cols = [
-            c
-            for c in cols
-            if any(c not in cached.get(f, {}) for f in manifest["files"])
-        ]
-        if missing_cols:
-            swept = _sweep_footers(
-                self._data_dir(version), manifest["files"], missing_cols
-            )
-            for rel, entry in swept.items():
-                cached.setdefault(rel, {}).update(entry)
-            self._backend.put(
-                sidecar, json.dumps({**cached, "_fmt": _STATS_FMT})
-            )
+        mstats = _manifest_stats(manifest)
+        # a column absent from the commit-time sweep (added later, or
+        # non-primitive) reads as None — fail-safe, never prune;
+        # _nan_guard drops NaN-contaminated entries a pre-fix sweep may
+        # have committed (json round-trips NaN)
         return {
-            f: {c: _nan_guard(cached[f].get(c)) for c in cols}
+            f: {c: _nan_guard(mstats.get(f, {}).get(c)) for c in cols}
             for f in manifest["files"]
         }
 
@@ -1404,34 +1420,12 @@ class VersionedTable:
                 f"table is partitioned by {prev_manifest['partition_by']}, "
                 f"cow merge requested on [{partition_col!r}]"
             )
-        # additive schema evolution (VERDICT r9 item #2): a merged
-        # frame may APPEND nullable columns — the hardlinked untouched
-        # partitions keep their old files byte-identical and read
-        # NULL-filled under the new manifest schema (read_version pins
-        # it); drops/re-types raise instead of committing a manifest
-        # the old files can't satisfy. The COMMITTED schema preserves
-        # the committed columns' original nullability (ADVICE r10,
-        # same shape as the bucketed merge path): a merge plan that
-        # recomputes a column as non-nullable must not narrow the
-        # manifest over hardlinked files that may hold NULLs —
-        # committed-fields-first + added fields in merge order, so a
-        # pre-evolution reader's column layout is a prefix.
-        from pyspark.sql.types import StructType as _StructType
-
-        added = set(
-            _additive_evolution(
-                prev_manifest["schema"], merged.schema, narrowing="widen"
-            )
-        )
-        commit_schema = _StructType.fromJson(prev_manifest["schema"])
-        for fld in merged.schema.fields:
-            if fld.name in added:
-                commit_schema = commit_schema.add(
-                    fld.name, fld.dataType, nullable=True
-                )
-        version = cur + 1
+        # additive schema evolution: a merged frame may APPEND nullable
+        # columns — the hardlinked untouched partitions keep their old
+        # files byte-identical and read NULL-filled under the new
+        # manifest schema (read_version pins it)
+        commit_schema = self._evolved_schema(prev_manifest["schema"], merged.schema)
         stage = self._attempt_dir()  # Spark's partitioned merge output
-        assembly = self._attempt_dir()  # the linked snapshot tree
         with _stats_friendly_writes(merged.sparkSession):
             merged.write.mode("overwrite").partitionBy(partition_col).parquet(stage)
         try:
@@ -1445,61 +1439,12 @@ class VersionedTable:
                 top = f.split("/", 1)[0]
                 if top not in replaced_dirs:
                     links[f] = os.path.join(self._data_dir(cur), f)
-            for base, _dirs, fs in os.walk(stage):
-                for f in fs:
-                    if f.endswith(".parquet"):
-                        rel = os.path.relpath(os.path.join(base, f), stage)
-                        links[rel] = os.path.join(base, f)
-            for rel, src in sorted(links.items()):
-                dst = os.path.join(assembly, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.link(src, dst)
-            self._move_into_slot(assembly, version)
+            for rel in self._parquet_files(stage):
+                links[rel] = os.path.join(stage, rel)
+            self._link_into_slot(links, cur + 1)
         finally:
             shutil.rmtree(stage, ignore_errors=True)
-            shutil.rmtree(assembly, ignore_errors=True)
-        data_dir = self._data_dir(version)
-        # commit-time zone-map stats: hardlinked files carry their
-        # entry forward from the previous manifest verbatim (same
-        # inode, same footer — zero I/O); only the replaced
-        # partitions' fresh files get swept. A pre-r10 predecessor
-        # without manifest stats gets its untouched files backfilled
-        # here once, so every post-r10 manifest is complete.
-        prev_stats = (
-            prev_manifest.get("stats", {})
-            if prev_manifest.get("stats_fmt") == _STATS_FMT
-            else {}
-        )
-        carried = {rel: prev_stats[rel] for rel in links if rel in prev_stats}
-        # evolution-added columns: old files are provably all-null —
-        # stamp the prunable marker instead of fail-safe None
-        carried = _backfill_added_all_null(
-            carried,
-            (f["name"] for f in prev_manifest["schema"]["fields"]),
-            commit_schema,
-        )
-        fresh = _sweep_footers(
-            data_dir,
-            [rel for rel in links if rel not in carried],
-            _stats_cols(commit_schema),
-        )
-        stats = {**carried, **fresh}
-        # exact partition-value stats from the dir names — also
-        # BACKFILLS carried entries from pre-augmentation manifests
-        # (the dir name is the same metadata either way)
-        _augment_partition_stats(stats, [partition_col], commit_schema)
-        manifest = {
-            "version": version,
-            "schema": commit_schema.jsonValue(),
-            "partition_by": [partition_col],
-            "files": sorted(links),
-            "stats_fmt": _STATS_FMT,
-            "stats": stats,
-        }
-        self._ensure_lease()  # see _write_version_locked's fence note
-        self._put_manifest(version, json.dumps(manifest))
-        self._commit_pointer(cur, version)  # the commit point
-        return version
+        return self._commit(cur, commit_schema, (partition_col,))
 
     def history(self) -> list[dict]:
         """DESCRIBE HISTORY-style audit of the committed, unvacuumed
@@ -1524,19 +1469,17 @@ class VersionedTable:
             except FileNotFoundError:
                 continue
             rows: int | None = 0
-            if m.get("stats_fmt") == _STATS_FMT:
-                for rel in m["files"]:
-                    counts = [
-                        a["rows"]
-                        for a in m["stats"].get(rel, {}).values()
-                        if a is not None and a.get("rows") is not None
-                    ]
-                    if not counts:
-                        rows = None
-                        break
-                    rows += max(counts)
-            else:
-                rows = None
+            mstats = _manifest_stats(m)
+            for rel in m["files"]:
+                counts = [
+                    a["rows"]
+                    for a in mstats.get(rel, {}).values()
+                    if a is not None and a.get("rows") is not None
+                ]
+                if not counts:
+                    rows = None
+                    break
+                rows += max(counts)
             data_dir = self._data_dir(v)
             try:
                 size = sum(
@@ -1903,7 +1846,7 @@ class VersionedTable:
         # per-mutation fence (`_fenced`) — a zombie vacuum waking
         # post-reclaim cannot delete data dirs, the winner's in-flight
         # _staging attempt, or above-pointer slots. The backend
-        # manifest/sidecar deletes are store-atomic but lease-checked
+        # manifest deletes are store-atomic but lease-checked
         # only here (check-then-act): the residual zombie shape is
         # bounded to deleting manifests of versions OUTSIDE the keep
         # window computed from the CURRENT committed state (fresh
@@ -1920,8 +1863,6 @@ class VersionedTable:
             # but data is gone" — versions()/read_version key off the
             # manifest's existence
             self._backend.delete(self._manifest_key(v))
-            # zone-map sidecar, if file_stats ever ran on v
-            self._backend.delete(self._sidecar_key(v))
             # per-mutation fenced (r12): a ZOMBIE vacuum waking
             # post-reclaim must not rmtree data dirs out from under
             # the new owner — same fence as the slot install

@@ -185,7 +185,7 @@ def test_two_emulated_concurrent_commits_one_winner(tmp_path):
 
 
 def test_versioned_table_full_lifecycle_on_memory_backend(spark, tmp_path):
-    """The ENTIRE control plane (pointer, manifests, sidecar, vacuum
+    """The ENTIRE control plane (pointer, manifests, vacuum
     bookkeeping) runs through the backend: a table whose metadata
     lives only in memory — no _current, no _versions/ on disk —
     commits, time-travels, zone-map-prunes, and vacuums exactly like
@@ -397,8 +397,8 @@ def test_versioned_table_full_lifecycle_on_s3_backend(
     spark, tmp_path, s3_backend_factory
 ):
     """The third CommitBackend end-to-end (r11 VERDICT item #3): the
-    ENTIRE control plane — lock, pointer, manifests, zone-map sidecar,
-    vacuum bookkeeping — lives in an S3 bucket behind real conditional
+    ENTIRE control plane — lock, pointer, manifests, vacuum
+    bookkeeping — lives in an S3 bucket behind real conditional
     requests, while Spark's parquet data plane stays on the local fs.
     Same assertions as the MemoryBackend lifecycle test."""
     b = s3_backend_factory()
@@ -790,67 +790,3 @@ def test_two_real_spark_writers_interleave_without_lost_updates(spark, tmp_path)
     for w in ("alpha", "beta"):
         seq = [m for m in markers if m.startswith(w)]
         assert seq == [f"{w}:{i}" for i in range(n_each)]
-
-
-@pytest.mark.skipif(not _HAVE_MOTO, reason="boto3/moto absent")
-def test_s3_large_put_goes_multipart(s3_backend_factory):
-    """VERDICT r13 item 3, S3 parity: manifests above the threshold go
-    through the documented multipart protocol — parts individually
-    retryable, object visible atomically at complete. The multipart
-    ETag's '-N' suffix is the store's own witness that N parts landed;
-    small control-plane objects keep the plain (suffix-free) ETag."""
-    b = s3_backend_factory(
-        multipart_threshold=1024 * 1024, part_size=5 * 1024 * 1024
-    )
-    manifest = "m" * (11 * 1024 * 1024)  # 3 parts: 5 MiB + 5 MiB + 1 MiB
-    b.put("_versions/v00000001.json", manifest)
-    assert b.get("_versions/v00000001.json") == manifest
-    _, etag = b._get_with_etag("_versions/v00000001.json")
-    assert etag.rstrip('"').endswith("-3")
-
-    b.put("_current", "7")
-    _, etag = b._get_with_etag("_current")
-    assert "-" not in etag
-
-
-@pytest.mark.skipif(not _HAVE_MOTO, reason="boto3/moto absent")
-def test_s3_part_size_below_aws_minimum_refused():
-    """AWS rejects sub-5-MiB parts only at the final complete call
-    (EntityTooSmall) — the constructor fails fast instead."""
-    with pytest.raises(ValueError, match="AWS multipart minimum"):
-        S3Backend("bucket", client=object(), part_size=1024)
-
-
-@pytest.mark.skipif(not _HAVE_MOTO, reason="boto3/moto absent")
-def test_s3_failed_multipart_aborts_staged_parts(s3_backend_factory):
-    """A part-upload failure must abort the multipart upload (staged
-    parts are billed until reclaimed) and leave the key absent — the
-    object only ever appears atomically at complete."""
-    b = s3_backend_factory(
-        multipart_threshold=1024 * 1024, part_size=5 * 1024 * 1024
-    )
-
-    class _FailSecondPart:
-        def __init__(self, inner):
-            self._inner = inner
-            self.aborted = 0
-
-        def upload_part(self, **kw):
-            if kw["PartNumber"] == 2:
-                raise RuntimeError("injected part failure")
-            return self._inner.upload_part(**kw)
-
-        def abort_multipart_upload(self, **kw):
-            self.aborted += 1
-            return self._inner.abort_multipart_upload(**kw)
-
-        def __getattr__(self, name):
-            return getattr(self._inner, name)
-
-    b._s3 = _FailSecondPart(b._s3)
-    with pytest.raises(RuntimeError, match="injected part failure"):
-        b.put("_versions/v00000002.json", "x" * (11 * 1024 * 1024))
-    assert b._s3.aborted == 1
-    assert b.get("_versions/v00000002.json") is None
-    pending = b._s3.list_multipart_uploads(Bucket=b.bucket).get("Uploads", [])
-    assert pending == []

@@ -221,8 +221,8 @@ def test_gcs_list_paginates(gcs_backend_factory):
 def test_versioned_table_full_lifecycle_on_gcs_backend(
     spark, tmp_path, gcs_backend_factory
 ):
-    """The ENTIRE control plane — lock, pointer, manifests, zone-map
-    sidecar, vacuum bookkeeping — behind the live GCS endpoint, while
+    """The ENTIRE control plane — lock, pointer, manifests, vacuum
+    bookkeeping — behind the live GCS endpoint, while
     Spark's parquet data plane stays on the local fs. Same assertions
     as the Memory/S3 lifecycle tests."""
     b = gcs_backend_factory()

@@ -4,12 +4,18 @@ shuffle counts of the key single-shuffle operators are pinned."""
 
 from __future__ import annotations
 
+import os
+import re
+import tempfile
+from urllib.parse import unquote, urlparse
+
 import pytest
 
 from nycitibike_data_transform_spark.plans import count_exchanges
 from nycitibike_data_transform_spark.queries import all_queries
 
 REGISTRY = all_queries()
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_registry_shape():
@@ -19,13 +25,44 @@ def test_registry_shape():
         assert spec.oracle is None or "SELECT" in spec.oracle.upper(), name
 
 
+def _outside_inputs(paths, sf_dir: str) -> list[str]:
+    """The paths that lie neither in the repo nor in ``sf_dir``. A
+    query's own scratch layout, built from ``sf_dir`` under the temp
+    dir (``queries/marts.py``), counts as ``sf_dir``-derived."""
+    roots = [
+        os.path.realpath(r) + os.sep
+        for r in (REPO, sf_dir, os.path.join(tempfile.gettempdir(), "spark_graft_bucketed"))
+    ]
+    return [
+        p
+        for p in paths
+        if not any(os.path.realpath(p).startswith(r) for r in roots)
+    ]
+
+
 @pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_query_plan_builds(spark, sf_dir, name):
+def test_query_plan_builds(spark, sf_dir, name, monkeypatch):
     """Plan construction + analysis only — no job runs. Catalyst
-    resolution errors (renamed columns, bad casts) surface here."""
+    resolution errors (renamed columns, bad casts) surface here. The
+    query reads nothing outside the repo and ``sf_dir``: not in its
+    plan's scans, its build's driver-side parquet reads, or the files
+    its oracle reads."""
+    import pyarrow.parquet as pq
+
+    driver_reads = []
+    read_table = pq.read_table
+
+    def recording_read_table(source, *a, **k):
+        driver_reads.append(str(source))
+        return read_table(source, *a, **k)
+
+    monkeypatch.setattr(pq, "read_table", recording_read_table)
     df = REGISTRY[name].spark(spark, sf_dir)
     assert df.schema.fields  # analyzed schema exists
     assert len(df.columns) == len(set(df.columns)), "duplicate output columns"
+    scans = [unquote(urlparse(f).path) for f in df.inputFiles()]
+    oracle_reads = re.findall(r"read_\w+\(\s*'([^']+)'", REGISTRY[name].oracle or "")
+    assert _outside_inputs(scans + driver_reads + oracle_reads, sf_dir) == []
 
 
 def test_driver_priority_matches_rotation_tool():

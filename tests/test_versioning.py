@@ -556,7 +556,7 @@ def test_read_range_fail_safe_and_nulls(spark, tmp_path):
     )
     assert got == [(1, "a"), (2, None)]
 
-    # stats sidecar is cached and durable
+    # stats come from the manifest: identical on every call
     v = t.current_version()
     stats1 = t.file_stats(v, ["k"])
     stats2 = t.file_stats(v, ["k"])
@@ -727,43 +727,97 @@ def test_read_box_multiplicative_pruning_on_zorder(spark, tmp_path):
         t.read_box(spark, {})
 
 
+def _nullable_extra():
+    """An appended column, nullable as additive evolution requires."""
+    return F.when(F.col("k") % 2 == 0, F.col("k"))
+
+
+def _write_plain(spark, root, df):
+    t = VersionedTable(root)
+    t.write_version(df.repartitionByRange(4, "k"))
+    return t
+
+
+def _write_cow(spark, root, df):
+    t = VersionedTable(root)
+    parted = df.withColumn("p", (F.col("k") / 2500).cast("int"))
+    t.write_version(parted.repartition("p"), partition_by=("p",))
+    merged = parted.filter("p = 3").withColumn("extra", _nullable_extra())
+    t.write_version_cow(merged.repartition("p"), "p")
+    return t
+
+
+def _write_bucketed(spark, root, df):
+    from nycitibike_data_transform_spark.bucketed_table import (
+        BucketedIncrementalTable,
+    )
+
+    t = BucketedIncrementalTable(root, ["k"], 4)
+    t.write_full(spark, df)
+    t.merge(spark, df.filter("k = 9000").withColumn("extra", _nullable_extra()), ["k"])
+    return t
+
+
+@pytest.mark.parametrize(
+    "writer",
+    [_write_plain, _write_cow, _write_bucketed],
+    ids=["write_version", "write_version_cow", "bucketed_merge"],
+)
 def test_fresh_snapshot_stats_from_manifest_no_footer_sweep(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, writer
 ):
-    """Post-r10 snapshots carry zone-map stats IN the manifest,
-    collected at commit time from the staged write's own footers
-    (VERDICT r9 item #1): a range read on a fresh snapshot must open
-    ZERO parquet footers beyond the data files it scans, and must not
-    create the legacy vN.stats.json sidecar."""
+    """Every writer commits zone-map stats IN the manifest, collected
+    at commit time (VERDICT r9 item #1): a range read on its snapshot
+    opens ZERO parquet footers beyond the data files it scans, and no
+    file besides the manifests appears under ``_versions``. The merges
+    append a nullable column: files carried from the previous snapshot
+    get the prunable all-null marker for it, fresh files real stats."""
     import pyarrow.parquet as pq
 
-    from nycitibike_data_transform_spark.versioning import VersionedTable
-
-    t = VersionedTable(str(tmp_path / "mstats"))
     df = spark.range(10_000).select(
         F.col("id").alias("k"), F.xxhash64("id").alias("v")
     )
-    t.write_version(df.repartitionByRange(4, "k"))
+    t = writer(spark, str(tmp_path / "mstats"), df)
+    v = t.current_version()
 
     def boom(*a, **k):
         raise AssertionError("footer sweep ran on a fresh snapshot")
 
     monkeypatch.setattr(pq, "ParquetFile", boom)
     got = t.read_range(spark, "k", 100, 150)
-    assert len(got.inputFiles()) == 1  # 3 of 4 range files pruned
     assert got.count() == 51
-    assert not any(
-        f.endswith(".stats.json") for f in os.listdir(t._versions_dir)
-    )
+    if writer is _write_plain:
+        assert len(got.inputFiles()) == 1  # 3 of 4 range files pruned
+    else:
+        prev = set(t.manifest(v - 1)["files"])
+        stats = t.file_stats(v, ["extra"])
+        carried = [s["extra"] for f, s in stats.items() if f in prev]
+        fresh = {f for f in stats if f not in prev}
+        assert carried and fresh
+        assert all(
+            s is not None and s["min"] is None and s["nulls"] == s["rows"] > 0
+            for s in carried
+        )
+        assert all(stats[f]["extra"]["min"] is not None for f in fresh)
+        ranged = t.read_range(spark, "extra", 0, 10**9)
+        assert {os.path.basename(f) for f in ranged.inputFiles()} == {
+            os.path.basename(f) for f in fresh
+        }
+    assert sorted(os.listdir(t._versions_dir)) == [
+        f"v{i:08d}.json" for i in range(1, v + 1)
+    ]
 
 
-def test_pre_r10_manifest_falls_back_to_sidecar_sweep(spark, tmp_path):
-    """A manifest WITHOUT commit-time stats (pre-r10 snapshot) still
-    answers through the legacy footer sweep + durable sidecar cache —
-    backfill path, same answers."""
+def test_manifest_without_current_stats_reads_every_file(
+    spark, tmp_path, monkeypatch
+):
+    """A manifest without current-format stats (stripped here) is
+    input the reader cannot trust for pruning: the range read falls
+    back to reading every file — same answer — without opening a
+    footer or writing anything beside the manifest."""
     import json as _json
 
-    from nycitibike_data_transform_spark.versioning import VersionedTable
+    import pyarrow.parquet as pq
 
     t = VersionedTable(str(tmp_path / "legacy"))
     df = spark.range(10_000).select(
@@ -778,10 +832,15 @@ def test_pre_r10_manifest_falls_back_to_sidecar_sweep(spark, tmp_path):
     with open(mp, "w") as f:
         _json.dump(m, f)
 
+    def boom(*a, **k):
+        raise AssertionError("footer sweep ran on the read path")
+
+    monkeypatch.setattr(pq, "ParquetFile", boom)
     got = t.read_range(spark, "k", 100, 150)
-    assert len(got.inputFiles()) == 1
+    assert len(got.inputFiles()) == 4
     assert got.count() == 51
-    assert any(f.endswith(".stats.json") for f in os.listdir(t._versions_dir))
+    assert os.listdir(t._versions_dir) == [f"v{v:08d}.json"]
+    assert t.history()[0]["rows"] is None
 
 
 def test_cow_commit_carries_stats_for_hardlinked_files(spark, tmp_path):
@@ -1456,52 +1515,6 @@ def test_read_version_as_vacuumed_raises_explicitly(spark, tmp_path):
     schema = StructType.fromJson(t.manifest(3)["schema"])
     with pytest.raises(ValueError, match="was vacuumed"):
         t.read_version_as(spark, 1, schema)
-
-
-def test_sidecar_backfill_stamps_all_null_markers(spark, tmp_path):
-    """VERDICT r10 item #7: the post-hoc footer-sweep path (pre-r10
-    manifests without commit-time stats) stamps the SAME prunable
-    all-null marker on pre-evolution files for evolution-added columns
-    that the commit-time path gets from _backfill_added_all_null — a
-    file that doesn't carry the column at all is provably all-null
-    under the manifest-pinned read schema. Partition columns are
-    exempt (their value lives in the dir name, anything but null)."""
-    import json as _json
-
-    t = VersionedTable(str(tmp_path / "backfill"))
-    v1 = spark.createDataFrame(
-        [(1, 1, "a"), (2, 1, "b"), (3, 2, "c")], "id int, day int, v string"
-    )
-    t.write_version(v1.repartition("day"), partition_by=("day",))
-    merged = spark.createDataFrame(
-        [(3, 2, "c2", 30), (4, 2, "d", 40)],
-        "id int, day int, v string, score int",
-    ).repartition("day")
-    t.write_version_cow(merged, "day")
-
-    # simulate a pre-r10 (fmt-2 era) manifest: strip the commit-time
-    # stats so file_stats must fall back to the sidecar footer sweep
-    mpath = t._manifest_path(2)
-    m = _json.loads(open(mpath).read())
-    m.pop("stats"), m.pop("stats_fmt")
-    with open(mpath, "w") as fh:
-        fh.write(_json.dumps(m))
-
-    stats = t.file_stats(2, ["score", "day"])
-    carried = {f: s for f, s in stats.items() if f.startswith("day=1/")}
-    assert carried  # hardlinked pre-evolution files exist
-    for s in carried.values():
-        # added column: prunable all-null marker from the sweep itself
-        assert s["score"]["min"] is None
-        assert s["score"]["nulls"] == s["score"]["rows"] > 0
-        # partition column: fail-safe None from the sweep (the dir
-        # value is real data, not null)
-        assert s["day"] is None
-    # and the pruning payoff: a range scan on the added column opens
-    # only the evolved partition's files
-    ranged = t.read_range(spark, "score", 35, 50)
-    assert all("day=2" in f for f in ranged.inputFiles())
-    assert {r["id"] for r in ranged.collect()} == {4}
 
 
 def test_topk_cutoff_pushdown_temporal_and_decimal(spark, tmp_path):
