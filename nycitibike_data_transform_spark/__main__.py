@@ -13,10 +13,10 @@ one command over this engine (VERDICT r5 "what's missing" #1):
 
     preflight  ≙ dbt debug   input dirs + source parquet readable,
                              warehouse writable, session boots
-    run        ≙ dbt run     topo-ordered full-refresh materialization
-                             (snapshot-VERSIONED by default — the
-                             upgrade over the reference's clobbering
-                             CREATE OR REPLACE)
+    run        ≙ dbt run     topo-ordered full-refresh materialization,
+                             each model committed as a new snapshot
+                             (the upgrade over the reference's
+                             clobbering CREATE OR REPLACE)
     test       ≙ dbt test    data-quality checks over the materialized
                              models (quality.check_all)
 
@@ -69,7 +69,9 @@ def preflight(spark: SparkSession, env: str, sf_dir: str, warehouse: str) -> lis
                 problems.append(f"source table missing: {path}")
                 continue
             try:
-                spark.read.parquet(path).schema  # readable + parseable footer
+                # readable + parseable footer; memoized per file
+                # identity, so an unchanged source starts no Spark job
+                read_parquet(spark, path).schema
             except Exception as exc:  # noqa: BLE001 - report, don't crash
                 problems.append(f"source table unreadable: {path}: {exc}")
     try:
@@ -146,12 +148,6 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
         p.add_argument("--warehouse", default="/tmp/spark-graft-warehouse/pipeline")
         if name == "run":
             p.add_argument(
-                "--no-versioned",
-                action="store_true",
-                help="clobbering full refresh (the reference's semantics) "
-                "instead of snapshot versioning",
-            )
-            p.add_argument(
                 "--keep-versions",
                 type=int,
                 default=None,
@@ -198,20 +194,15 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
         pipe = testdata_pipeline(args.sf_dir, args.warehouse)
         if args.cmd == "test":
             # materialized warehouse must already exist; read, don't
-            # build. Versioned layout goes through VersionedTable (no
-            # version-path literals here — ADVICE r6); a missing or
-            # never-materialized model becomes a clean PreflightError
-            # + exit 1, not an AnalysisException traceback.
+            # build, through VersionedTable (no version-path literals
+            # here — ADVICE r6); a missing or never-committed model
+            # becomes a clean PreflightError + exit 1, not a traceback.
             built = {m: _read_model(spark, args.warehouse, m) for m in _MODELS}
             data_tests(built)
             print("data tests ok")
             return 0
 
-        built = pipe.run(
-            spark,
-            versioned=not args.no_versioned,
-            keep_versions=args.keep_versions,
-        )
+        built = pipe.run(spark, keep_versions=args.keep_versions)
         print(f"run ok: materialized {sorted(built.keys() & set(_MODELS))}")
         if not args.skip_tests:
             data_tests(built)
@@ -228,18 +219,13 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
 def _read_model(spark: SparkSession, warehouse: str, model: str) -> DataFrame:
     from nycitibike_data_transform_spark.versioning import VersionedTable
 
-    root = f"{warehouse}/{model}"
-    if os.path.isdir(f"{root}/data"):
-        t = VersionedTable(root)
-        if t.current_version() is None:
-            raise PreflightError(f"no committed version for {model} under {warehouse}")
-        return t.read_current(spark)
-    if not os.path.isdir(root):
-        raise PreflightError(f"model {model} not materialized under {warehouse}")
-    try:
-        return read_parquet(spark, root)
-    except Exception as exc:  # corrupt/empty dir: clean FAILED, not a traceback
-        raise PreflightError(f"model {model} unreadable under {warehouse}: {exc}")
+    t = VersionedTable(f"{warehouse}/{model}")
+    if t.current_version() is None:
+        raise PreflightError(
+            f"model {model} not materialized under {warehouse}: "
+            "no committed version"
+        )
+    return t.read_current(spark)
 
 
 if __name__ == "__main__":

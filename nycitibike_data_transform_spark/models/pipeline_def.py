@@ -10,9 +10,9 @@ full-refresh each — expressed over this engine's testdata models:
                                       declared and never shipped)
 
 Run with ``testdata_pipeline(sf_dir, warehouse).run(spark)`` — the
-whole DAG materializes as parquet under the warehouse dir with
-dependency ordering, full-refresh semantics, and a partitioned MART
-(partition pruning is live on ``ride_date``).
+whole DAG materializes under the warehouse dir, one committed snapshot
+per model per run, with dependency ordering, full-refresh semantics,
+and a partitioned MART (partition pruning is live on ``ride_date``).
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Streaming upsert materialization: maintain a latest-row-per-key
-parquet table from a stream (the CDC "apply changes" / materialized
+snapshot table from a stream (the CDC "apply changes" / materialized
 upsert view — Delta's streaming MERGE pattern, expressed with this
 engine's batch merge machinery inside ``foreachBatch``).
 
@@ -9,15 +9,20 @@ tie-break id), not by which micro-batch happened to arrive last — a
 late-arriving older row never overwrites a newer one. That is the
 difference between this and blind last-writer-wins CDC apply.
 
+Every micro-batch commits a ``VersionedTable`` snapshot: the merge
+lands in a fresh snapshot dir and the pointer swap is the only commit
+point, so a batch killed mid-write leaves the previous snapshot
+intact and checkpoint replay re-applies the batch onto a whole table.
+
 Scale shape per micro-batch: one shuffle of the batch on the key for
 the within-batch winner window, then a merge against the CURRENT
-table. With ``partition_col`` set (the 100 TB form) the merge is
+snapshot. With ``partition_col`` set (the 100 TB form) the merge is
 PARTITION-SCOPED: only the partitions the batch touches are read,
-re-deduplicated, and rewritten via dynamic partition-overwrite —
-untouched partitions' files are never opened or replaced, so a
-micro-batch costs O(touched data), not O(table). The unpartitioned
-form (``partition_col=None``) keeps the whole-table rewrite and is
-only appropriate for bounded view-sized targets.
+re-deduplicated, and rewritten; untouched partitions' files are
+hardlinked into the new snapshot, so a micro-batch costs O(touched
+data), not O(table). The unpartitioned form (``partition_col=None``)
+rewrites the whole table and is only appropriate for bounded
+view-sized targets.
 """
 
 from __future__ import annotations
@@ -28,8 +33,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.readwriter import DataStreamWriter
 
-from nycitibike_data_transform_spark.catalog import read_parquet
 from nycitibike_data_transform_spark.functions.dbt_compat import deduplicate
+from nycitibike_data_transform_spark.pipeline import touched_partition_filter
+from nycitibike_data_transform_spark.versioning import VersionedTable
 
 
 def _winners(df: DataFrame, keys: list[str], order_desc: list[str]) -> DataFrame:
@@ -48,6 +54,20 @@ def _winners(df: DataFrame, keys: list[str], order_desc: list[str]) -> DataFrame
     return deduplicate(df, keys, order)
 
 
+def _holds_plain_parquet(path: str) -> bool:
+    """Whether ``path`` holds a plain parquet table: part files at the
+    root or under hive ``col=value`` dirs. The snapshot layout's own
+    dirs (``data/``, ``_staging/``) are skipped — a bootstrap killed
+    before its pointer swap leaves files only there, and its replay
+    must bootstrap again, not be refused."""
+    for root, dirs, files in os.walk(path):
+        if root == path:
+            dirs[:] = [d for d in dirs if "=" in d]
+        if any(f.endswith(".parquet") for f in files):
+            return True
+    return False
+
+
 def apply_upsert_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -55,34 +75,22 @@ def apply_upsert_batch(
     keys: list[str],
     order_desc: list[str],
     partition_col: str | None = None,
-    versioned: bool = False,
     keep_versions: int | None = None,
 ) -> None:
     """The ``foreachBatch`` body — also directly callable for tests
     and for batch backfills (same code path as the stream, the
     batch-parity property the suite pins).
 
-    With ``partition_col`` the table is laid out
-    ``partitionBy(partition_col)`` and each batch merges ONLY the
-    partitions it touches (dynamic partition-overwrite — VERDICT r7
-    item #1: the whole-table rewrite was the last O(table)-per-batch
-    path). Contract, as for ``merge_upsert_partitioned``:
+    Each batch commits one snapshot. With ``partition_col`` the table
+    is laid out ``partitionBy(partition_col)`` and each batch after
+    the bootstrap merges ONLY the partitions it touches, hardlinking
+    the rest into the new snapshot (``write_version_cow``). Contract:
     ``partition_col`` must be functionally dependent on ``keys`` (a
     key never moves between partitions; the column may itself be a
     key, which satisfies it trivially) — a moved key would leave its
     old row alive in an untouched partition.
 
-    ``versioned=True`` (VERDICT r8 item #3) makes each micro-batch a
-    crash-ATOMIC ``VersionedTable`` commit instead of an in-place
-    overwrite: the merge lands in a fresh snapshot dir and the fsync'd
-    pointer swap is the only commit point, so a batch killed mid-write
-    leaves the previous snapshot intact — which matters because
-    checkpoint REPLAY cannot heal a torn in-place overwrite (the torn
-    partition lost rows of keys the replayed batch doesn't carry).
-    With ``partition_col`` the commit is still partition-scoped:
-    untouched partitions' files are hardlinked into the new snapshot
-    (``write_version_cow`` — O(touched data) written per batch). The
-    cost of atomicity is snapshot accumulation — one snapshot per
+    The cost of atomicity is snapshot accumulation — one snapshot per
     micro-batch, unbounded over a long-running stream — so
     ``keep_versions`` vacuums after each commit (the Pipeline's
     retention knob, applied at stream cadence). ``None`` keeps
@@ -90,14 +98,6 @@ def apply_upsert_batch(
     availableNow catch-up runs, wrong for a 24/7 processingTime
     stream.
     """
-    from nycitibike_data_transform_spark.pipeline import (
-        _has_parquet_files,
-        read_table_for_merge,
-        touched_partition_filter,
-        write_dynamic_partition_overwrite,
-    )
-    from nycitibike_data_transform_spark.versioning import VersionedTable
-
     if not batch_df.columns:
         return
     spark = batch_df.sparkSession
@@ -105,33 +105,29 @@ def apply_upsert_batch(
     if partition_col is not None and partition_col not in winners.columns:
         raise ValueError(f"batch missing partition column {partition_col!r}")
 
-    table = VersionedTable(path) if versioned else None
-    if versioned and table.current_version() is None and _has_parquet_files(path):
-        # an existing NON-versioned table at path: bootstrapping a
-        # versioned view over it would silently abandon every prior
-        # row (the old part files have no manifest and never merge
-        # again). Fail loudly — migrate by replaying the stream into a
-        # fresh path, or seed the snapshot with one explicit
-        # write_version of the old table (review finding r9)
+    table = VersionedTable(path)
+    exists = table.current_version() is not None
+    if not exists and _holds_plain_parquet(path):
+        # a plain parquet table at path: bootstrapping a snapshot over
+        # it would silently abandon every prior row (the old part
+        # files have no manifest and never merge again). Fail loudly —
+        # migrate by replaying the stream into a fresh path, or seed
+        # the snapshot with one explicit write_version of the old
+        # table (review finding r9)
         raise ValueError(
             f"{path!r} holds parquet data but no versioned-table "
-            "pointer: refusing to bootstrap versioned=True over a "
-            "non-versioned upsert target"
+            "pointer: refusing to bootstrap a snapshot over a plain "
+            "parquet upsert target"
         )
-    exists = (
-        table.current_version() is not None
-        if versioned
-        else os.path.exists(path)
-    )
 
+    # every merged frame is checkpointed so the snapshot write never
+    # re-runs the merge
     if not exists:
         merged = winners.localCheckpoint(eager=True)
     elif partition_col is None:
-        existing = (
-            table.read_current_as(spark, winners.schema)
-            if versioned
-            else read_parquet(spark, path)
-        ).select(*winners.columns)
+        existing = table.read_current_as(spark, winners.schema).select(
+            *winners.columns
+        )
         merged = _winners(
             existing.unionByName(winners), keys, order_desc
         ).localCheckpoint(eager=True)
@@ -140,33 +136,21 @@ def apply_upsert_batch(
         # collect and the merge below would otherwise each re-run the
         # batch's dedup window shuffle (the flag_contaminated lesson)
         winners = winners.localCheckpoint(eager=True)
-        existing = (
-            table.read_current_as(spark, winners.schema)
-            if versioned
-            else read_table_for_merge(spark, path, winners.schema)
-        )
+        existing = table.read_current_as(spark, winners.schema)
         _, cond = touched_partition_filter(winners, partition_col)
         merged = _winners(
             existing.filter(cond).unionByName(winners), keys, order_desc
         ).localCheckpoint(eager=True)
 
-    # (lineage broken above so the write can overwrite the path the
-    # merge plan reads — and, in the versioned forms, so the snapshot
-    # write never re-runs the merge)
-    if versioned:
-        if partition_col is None or not exists:
-            table.write_version(
-                merged,
-                partition_by=(partition_col,) if partition_col else (),
-            )
-        else:
-            table.write_version_cow(merged, partition_col)
-        if keep_versions is not None:
-            table.vacuum(keep=keep_versions)
-    elif partition_col is None:
-        merged.write.mode("overwrite").parquet(path)
+    if partition_col is None or not exists:
+        table.write_version(
+            merged,
+            partition_by=(partition_col,) if partition_col else (),
+        )
     else:
-        write_dynamic_partition_overwrite(merged, path, partition_col)
+        table.write_version_cow(merged, partition_col)
+    if keep_versions is not None:
+        table.vacuum(keep=keep_versions)
 
 
 def upsert_stream_to_table(
@@ -176,7 +160,6 @@ def upsert_stream_to_table(
     order_desc: list[str],
     checkpoint_dir: str,
     partition_col: str | None = None,
-    versioned: bool = False,
     keep_versions: int | None = None,
 ) -> DataStreamWriter:
     """Wire a stream into the upsert view. Returns a CONFIGURED
@@ -184,11 +167,9 @@ def upsert_stream_to_table(
     (``.trigger(availableNow=True).start()`` for catch-up runs,
     ``.trigger(processingTime=...)`` for continuous maintenance); the
     query is NOT started here. ``partition_col`` selects the
-    partition-scoped merge; ``versioned`` makes every micro-batch a
-    crash-atomic snapshot commit, with ``keep_versions`` bounding
-    snapshot retention per batch (see :func:`apply_upsert_batch`)."""
-    if keep_versions is not None and not versioned:
-        raise ValueError("keep_versions requires versioned=True")
+    partition-scoped merge; every micro-batch is a crash-atomic
+    snapshot commit, with ``keep_versions`` bounding snapshot
+    retention per batch (see :func:`apply_upsert_batch`)."""
     if keep_versions is not None and keep_versions < 1:
         # vacuum(keep=0) would raise AFTER each snapshot commit — the
         # stream would crash every batch while versions accumulate
@@ -197,8 +178,7 @@ def upsert_stream_to_table(
     return (
         stream_df.writeStream.foreachBatch(
             lambda df, bid: apply_upsert_batch(
-                df, bid, path, keys, order_desc, partition_col, versioned,
-                keep_versions,
+                df, bid, path, keys, order_desc, partition_col, keep_versions
             )
         )
         .option("checkpointLocation", checkpoint_dir)

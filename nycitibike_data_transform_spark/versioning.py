@@ -1532,9 +1532,8 @@ class VersionedTable:
             return self._write_version_locked(df, partition_by=partition_by)
 
     def read_current_as(self, spark: SparkSession, schema) -> DataFrame:
-        """Read the current snapshot under an EXPLICIT schema (the
-        partition-type-inference hazard from
-        ``pipeline.read_table_for_merge``: a string partition value
+        """Read the current snapshot under an EXPLICIT schema (hive
+        partition-type inference is lossy: a string partition value
         '01' re-infers as int 1, and a merge under the inferred type
         would re-render it differently). Validates the requested
         schema as an ADDITIVE evolution of the committed manifest

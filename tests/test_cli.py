@@ -1,10 +1,12 @@
 """One-shot pipeline CLI (python -m nycitibike_data_transform_spark):
-the full preflight → versioned topo-run → data-tests lifecycle, the
+the full preflight → snapshot topo-run → data-tests lifecycle, the
 engine's analogue of the reference's setup_script.sh sequence."""
 
 from __future__ import annotations
 
 import os
+
+import pytest
 
 from nycitibike_data_transform_spark.__main__ import main
 from nycitibike_data_transform_spark.versioning import VersionedTable
@@ -31,16 +33,16 @@ def test_run_full_lifecycle_versioned(spark, tmp_path):
     assert main(["test", "--sf-dir", SF_DIR, "--warehouse", wh], spark=spark) == 0
 
 
-def test_run_unversioned_clobber_mode(spark, tmp_path):
-    wh = str(tmp_path / "wh")
-    rc = main(
-        ["run", "--no-versioned", "--sf-dir", SF_DIR, "--warehouse", wh],
-        spark=spark,
-    )
-    assert rc == 0
-    # plain parquet dirs, no snapshot machinery (reference semantics)
-    assert os.path.isdir(os.path.join(wh, "stage_rides"))
-    assert not os.path.exists(os.path.join(wh, "stage_rides", "_current"))
+def test_run_rejects_keep_versions_below_one_before_any_commit(spark, tmp_path):
+    """``--keep-versions 0`` fails the run before the first model
+    commits — not after, with a half-refreshed warehouse."""
+    wh = tmp_path / "wh"
+    with pytest.raises(ValueError, match="keep_versions must be >= 1"):
+        main(
+            ["run", "--sf-dir", SF_DIR, "--warehouse", str(wh), "--keep-versions", "0"],
+            spark=spark,
+        )
+    assert not list(wh.rglob("_current"))
 
 
 def test_preflight_reports_all_problems(spark, tmp_path, capsys):
@@ -63,6 +65,19 @@ def test_preflight_catches_missing_source_table(spark, tmp_path, capsys):
     assert rc == 1
     err = capsys.readouterr().err
     assert "nation.parquet" in err and "region.parquet" in err
+
+
+def test_preflight_reports_unreadable_source(spark, tmp_path, capsys):
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    (sf / "lineitem.parquet").write_bytes(b"not a parquet file")
+    for t in ("nation", "region"):
+        spark.range(1).write.parquet(str(sf / f"{t}.parquet"))
+    rc = main(["preflight", "--sf-dir", str(sf), "--warehouse", str(tmp_path / "wh")], spark=spark)
+    assert rc == 1
+    err = capsys.readouterr().err
+    assert "source table unreadable" in err and "lineitem.parquet" in err
+    assert "nation.parquet" not in err
 
 
 def test_run_full_lifecycle_core_env(spark, tmp_path):

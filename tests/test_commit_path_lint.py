@@ -6,6 +6,11 @@ it alone puts the manifest and swaps the pointer, and the manifest's
 zone-map stats format is known to ``versioning.py`` alone. A writer
 that grows its own commit tail, or a module that reads or writes the
 stats format itself, fails here.
+
+The snapshot is also the only persisted-table format for pipeline
+models and streaming upsert targets: those two modules never touch a
+``DataFrameWriter`` themselves, and no module flips Spark's dynamic
+partition-overwrite mode (the in-place overwrite a killed run tears).
 """
 
 from __future__ import annotations
@@ -64,4 +69,31 @@ def test_stats_format_names_only_in_versioning():
                 continue
             if name in STATS_NAMES:
                 offenders.append(f"{rel}:{getattr(node, 'lineno', '?')} {name}")
+    assert offenders == []
+
+
+#: modules that persist tables only through the snapshot classes
+SNAPSHOT_ONLY = ("pipeline.py", "streaming/upsert.py")
+
+
+def test_pipeline_and_upsert_never_write_parquet_directly():
+    offenders = [
+        f"{rel}:{node.lineno}"
+        for rel, tree in _trees()
+        if rel in SNAPSHOT_ONLY
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute) and node.attr == "write"
+    ]
+    assert offenders == []
+
+
+def test_no_dynamic_partition_overwrite():
+    offenders = [
+        f"{rel}:{node.lineno}"
+        for rel, tree in _trees()
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and "partitionOverwriteMode" in node.value
+    ]
     assert offenders == []

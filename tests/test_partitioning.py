@@ -5,10 +5,13 @@ SURVEY.md §4)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from nycitibike_data_transform_spark.pipeline import Pipeline
 from nycitibike_data_transform_spark.plans import formatted_plan
+from nycitibike_data_transform_spark.versioning import VersionedTable
 
 
 def test_partitioned_write_and_pruned_read(spark, tmp_path, sf_dir):
@@ -22,8 +25,9 @@ def test_partitioned_write_and_pruned_read(spark, tmp_path, sf_dir):
     )
     built = p.run(spark)
 
-    # hive-layout directories per partition value
-    years = {d.name for d in (tmp_path / "wh" / "orders_by_year").iterdir() if d.is_dir()}
+    # hive-layout directories per partition value in the snapshot
+    t = VersionedTable(str(tmp_path / "wh" / "orders_by_year"))
+    years = {d.name for d in Path(t._data_dir(t.current_version())).iterdir() if d.is_dir()}
     assert any(y.startswith("order_year=") for y in years)
 
     # a filter on the partition column must prune at plan time

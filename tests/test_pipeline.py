@@ -84,42 +84,65 @@ def test_merge_upsert_validation(spark):
         merge_upsert(df, df, [])
 
 
-def _partition_files(root, part_dir):
-    d = root / part_dir
-    return {f.name: f.stat().st_mtime_ns for f in d.iterdir() if f.name.endswith(".parquet")}
+def _partitioned_model(tmp_path, rows, schema, partition_col, build=None):
+    """An incremental model partitioned by ``partition_col`` over a
+    mutable in-memory feed: ``rows[:]`` replaced between runs is the
+    next refresh's source. The watermark is the constant ``w`` column,
+    so every refresh merges its whole feed (partition-scoped)."""
+    p = Pipeline(warehouse_dir=str(tmp_path / "wh"))
+    p.add_source(
+        "feed",
+        lambda s: s.createDataFrame(rows, schema).withColumn("w", F.lit(0)),
+    )
+    p.add_model(
+        "tbl",
+        build or (lambda s, feed: feed),
+        deps=("feed",),
+        partition_by=(partition_col,),
+        incremental_keys=("k",),
+        watermark_col="w",
+    )
+    return p
+
+
+def _snapshot_files(table, version, part_dir):
+    return {
+        f for f in table.manifest(version)["files"] if f.startswith(f"{part_dir}/")
+    }
 
 
 def test_merge_upsert_partitioned_rewrites_only_touched_partitions(spark, tmp_path):
-    from nycitibike_data_transform_spark.pipeline import merge_upsert_partitioned
+    """The partition-scoped merge of an incremental ``partition_by``
+    model: the refresh's snapshot rewrites only the partitions its
+    updates touch and hardlinks every other partition's files from the
+    previous snapshot."""
+    import os
 
-    root = tmp_path / "tbl"
-    initial = spark.createDataFrame(
-        [(1, "2024-01-01", "a"), (2, "2024-01-01", "b"),
-         (3, "2024-01-02", "c"), (4, "2024-01-03", "d")],
-        "k int, dt string, v string",
-    )
-    initial.write.partitionBy("dt").parquet(str(root))
-    before_d1 = _partition_files(root, "dt=2024-01-01")
-    before_d3 = _partition_files(root, "dt=2024-01-03")
+    from nycitibike_data_transform_spark.versioning import VersionedTable
 
-    updates = spark.createDataFrame(
-        [(2, "2024-01-01", "B2"), (5, "2024-01-01", "e"), (6, "2024-01-04", "f")],
-        "k int, dt string, v string",
-    )
-    touched = merge_upsert_partitioned(spark, str(root), updates, ["k"], "dt")
-    assert set(touched) == {"2024-01-01", "2024-01-04"}
+    rows = [(1, "2024-01-01", "a"), (2, "2024-01-01", "b"),
+            (3, "2024-01-02", "c"), (4, "2024-01-03", "d")]
+    p = _partitioned_model(tmp_path, rows, "k int, dt string, v string", "dt")
+    p.run(spark)
+    rows[:] = [(2, "2024-01-01", "B2"), (5, "2024-01-01", "e"), (6, "2024-01-04", "f")]
+    built = p.run(spark)["tbl"]
 
-    # untouched partitions: byte-identical files, never rewritten
-    assert _partition_files(root, "dt=2024-01-02")
-    assert _partition_files(root, "dt=2024-01-03") == before_d3
-    # touched partition WAS rewritten
-    assert _partition_files(root, "dt=2024-01-01") != before_d1
+    t = VersionedTable(str(tmp_path / "wh" / "tbl"))
+    d1, d2 = t._data_dir(1), t._data_dir(2)
+    # untouched partitions: the v1 files themselves, hardlinked
+    for part in ("dt=2024-01-02", "dt=2024-01-03"):
+        files = _snapshot_files(t, 2, part)
+        assert files and files == _snapshot_files(t, 1, part)
+        for f in files:
+            assert os.path.samefile(os.path.join(d1, f), os.path.join(d2, f))
+    # touched partition WAS rewritten; the new one came from the merge
+    assert not _snapshot_files(t, 2, "dt=2024-01-01") & _snapshot_files(t, 1, "dt=2024-01-01")
+    assert _snapshot_files(t, 2, "dt=2024-01-04")
 
-    # partition-value inference reads dt back as DateType — stringify
-    out = {r["k"]: (str(r["dt"]), r["v"]) for r in spark.read.parquet(str(root)).collect()}
+    out = {r["k"]: (r["dt"], r["v"]) for r in built.collect()}
     assert out == {
         1: ("2024-01-01", "a"),
-        2: ("2024-01-01", "B2"),  # updated in place
+        2: ("2024-01-01", "B2"),  # updated
         3: ("2024-01-02", "c"),  # untouched partition intact
         4: ("2024-01-03", "d"),
         5: ("2024-01-01", "e"),  # insert into existing partition
@@ -128,15 +151,17 @@ def test_merge_upsert_partitioned_rewrites_only_touched_partitions(spark, tmp_pa
 
 
 def test_merge_upsert_partitioned_validation(spark, tmp_path):
-    from nycitibike_data_transform_spark.pipeline import merge_upsert_partitioned
+    """A partitioned model whose build lacks its partition column
+    fails before anything is committed."""
+    from nycitibike_data_transform_spark.versioning import VersionedTable
 
-    root = tmp_path / "tbl2"
-    spark.createDataFrame([(1, "p", "x")], "k int, dt string, v string").write.partitionBy(
-        "dt"
-    ).parquet(str(root))
-    bad = spark.createDataFrame([(1, "x")], "k int, v string")
-    with pytest.raises(ValueError, match="partition column"):
-        merge_upsert_partitioned(spark, str(root), bad, ["k"], "dt")
+    p = _partitioned_model(
+        tmp_path, [(1, "p", "x")], "k int, dt string, v string", "dt",
+        build=lambda s, feed: feed.drop("dt"),
+    )
+    with pytest.raises(ValueError, match=r"missing from output: \['dt'\]"):
+        p.run(spark)
+    assert VersionedTable(str(tmp_path / "wh" / "tbl")).current_version() is None
 
 
 def test_scd2_bootstrap_and_update(spark):
@@ -244,22 +269,18 @@ def test_scd2_rerun_same_batch_is_noop(spark):
 
 
 def test_merge_upsert_partitioned_preserves_null_partition(spark, tmp_path):
-    from nycitibike_data_transform_spark.pipeline import merge_upsert_partitioned
-
-    path = str(tmp_path / "t")
-    existing = spark.createDataFrame(
-        [(1, "keep-null", None), (2, "keep-a", "a"), (3, "old", None)],
-        "k int, v string, p string",
-    )
-    existing.write.partitionBy("p").parquet(path)
-    updates = spark.createDataFrame([(3, "new", None)], "k int, v string, p string")
-    touched = merge_upsert_partitioned(spark, path, updates, ["k"], "p")
-    assert touched == [None]
-    rows = {r["k"]: (r["v"], r["p"]) for r in spark.read.parquet(path).collect()}
+    """NULL is a legal partition value: a refresh touching the NULL
+    partition merges its existing rows instead of dropping them."""
+    rows = [(1, "keep-null", None), (2, "keep-a", "a"), (3, "old", None)]
+    p = _partitioned_model(tmp_path, rows, "k int, v string, p string", "p")
+    p.run(spark)
+    rows[:] = [(3, "new", None)]
+    built = p.run(spark)["tbl"]
+    out = {r["k"]: (r["v"], r["p"]) for r in built.collect()}
     # k=1 lives in the NULL partition and was NOT in updates: preserved
-    assert rows[1] == ("keep-null", None)
-    assert rows[3] == ("new", None)
-    assert rows[2] == ("keep-a", "a")  # untouched partition intact
+    assert out[1] == ("keep-null", None)
+    assert out[3] == ("new", None)
+    assert out[2] == ("keep-a", "a")  # untouched partition intact
 
 
 def test_partitioned_model_writes_one_file_per_partition(spark, tmp_path, sf_dir):
@@ -272,11 +293,13 @@ def test_partitioned_model_writes_one_file_per_partition(spark, tmp_path, sf_dir
     from nycitibike_data_transform_spark.models.pipeline_def import (
         testdata_pipeline,
     )
+    from nycitibike_data_transform_spark.versioning import VersionedTable
 
     wh = str(tmp_path / "wh")
-    built = testdata_pipeline(sf_dir, wh).run(spark, versioned=False)
+    built = testdata_pipeline(sf_dir, wh).run(spark)
     assert built["mart_borough_daily"].count() > 0
-    mart = f"{wh}/mart_borough_daily"
+    t = VersionedTable(f"{wh}/mart_borough_daily")
+    mart = t._data_dir(t.current_version())
     dirs = [d for d in os.listdir(mart) if d.startswith("ride_date=")]
     assert len(dirs) > 100  # daily partitioning is real
     for d in dirs[:50]:
@@ -285,10 +308,10 @@ def test_partitioned_model_writes_one_file_per_partition(spark, tmp_path, sf_dir
 
 
 def test_bucketed_model_materialization(spark, tmp_path, sf_dir):
-    """bucket_by on a model routes through bucketing.write_bucketed:
-    the materialized table is catalog-registered, downstream joins on
-    the bucket key are co-located (zero Exchange), and the returned
-    frame answers exactly like the unbucketed build."""
+    """bucket_by on a model materializes a BucketedIncrementalTable:
+    the snapshot is catalog-registered, downstream joins on the bucket
+    key are co-located (zero Exchange), and the returned frame answers
+    exactly like the unbucketed build."""
     import uuid
 
     from nycitibike_data_transform_spark.bucketing import bucket_spec, colocated_join
@@ -347,21 +370,43 @@ def test_bucketed_model_validation(tmp_path, sf_dir):
         )
 
 
-def test_bucketed_model_rejects_versioned(spark, tmp_path, sf_dir):
+def test_bucketed_full_refresh_model_is_snapshot(spark, tmp_path, sf_dir):
+    """A full-refresh bucket_by model commits one snapshot per run:
+    the previous run stays time-travel readable, and the registered
+    table still gives a co-located join."""
     import uuid
 
-    name = f"bkt_model_v_{uuid.uuid4().hex[:8]}"
+    from nycitibike_data_transform_spark.bucketed_table import (
+        BucketedIncrementalTable,
+    )
+    from nycitibike_data_transform_spark.bucketing import colocated_join
+    from nycitibike_data_transform_spark.plans import count_exchanges
+
+    name = f"bkt_snap_{uuid.uuid4().hex[:8]}"
     p = Pipeline(warehouse_dir=str(tmp_path / "wh"))
     p.add_source("orders", lambda s: s.read.parquet(f"{sf_dir}/orders.parquet"))
     p.add_model(
         name,
-        lambda s, orders: orders,
+        lambda s, orders: orders.select("o_orderkey", "o_orderpriority"),
         deps=("orders",),
         bucket_by=("o_orderkey",),
         num_buckets=4,
     )
-    with pytest.raises(ValueError, match="not snapshot-versioned"):
-        p.run(spark, versioned=True)
+    try:
+        p.run(spark)
+        built = p.run(spark)[name]
+        t = BucketedIncrementalTable(str(tmp_path / "wh" / name), ["o_orderkey"], 4)
+        assert t.versions() == [1, 2]
+        n = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
+        assert t.read_version(spark, 1).count() == n
+        assert built.count() == n
+        joined = colocated_join(
+            built, spark.table(name).select(F.col("o_orderkey").alias("k")),
+            F.col("o_orderkey") == F.col("k"),
+        )
+        assert count_exchanges(joined) == 0
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 def _write_src(spark, src, rows):
@@ -410,6 +455,8 @@ def test_incremental_model_bootstrap_and_merge(spark, tmp_path):
 def test_incremental_partitioned_rewrites_only_touched(spark, tmp_path):
     import os
 
+    from nycitibike_data_transform_spark.versioning import VersionedTable
+
     src = str(tmp_path / "src")
     _write_src(
         spark, src, [(1, 1, "a"), (2, 2, "b"), (3, 3, "c")]
@@ -425,12 +472,12 @@ def test_incremental_partitioned_rewrites_only_touched(spark, tmp_path):
         watermark_col="day",
     )
     p.run(spark)
-    mart = str(tmp_path / "wh" / "inc")
+    table = VersionedTable(str(tmp_path / "wh" / "inc"))
 
     def files_of(day):
-        d = f"{mart}/day={day}"
+        d = f"{table._data_dir(table.current_version())}/day={day}"
         return {
-            f: os.stat(f"{d}/{f}").st_mtime_ns
+            f: os.stat(f"{d}/{f}").st_ino
             for f in os.listdir(d)
             if f.endswith(".parquet")
         }
@@ -445,7 +492,8 @@ def test_incremental_partitioned_rewrites_only_touched(spark, tmp_path):
     assert sorted(map(tuple, built.collect())) == [
         (1, 1, "a"), (2, 2, "b"), (3, 3, "c2"), (4, 4, "d"),
     ]
-    # untouched partitions: same file names, same mtimes — never opened
+    # untouched partitions: same file names, same inodes — hardlinked
+    # into the new snapshot, never rewritten
     assert files_of(1) == before_d1
     assert files_of(2) == before_d2
 
@@ -464,9 +512,9 @@ def test_incremental_versioned_snapshots(spark, tmp_path):
         incremental_keys=("id",),
         watermark_col="day",
     )
-    p.run(spark, versioned=True)
+    p.run(spark)
     _write_src(spark, src, [(1, 1, "a"), (2, 2, "b")])
-    built = p.run(spark, versioned=True)["inc"]
+    built = p.run(spark)["inc"]
     assert built.count() == 2
     table = VersionedTable(str(tmp_path / "wh" / "inc"))
     versions = table.versions()
@@ -569,18 +617,14 @@ def test_incremental_readback_preserves_partition_type(spark, tmp_path):
 def test_incremental_rejects_remote_warehouse(spark):
     """r8 review finding: bootstrap detection is local-filesystem;
     an object-store warehouse would silently full-rewrite every run —
-    fail loudly instead (VersionedTable's contract)."""
-    p = Pipeline(warehouse_dir="s3a://bucket/wh")
-    p.add_source("ev", lambda s: s.createDataFrame([(1, 1)], "id int, day int"))
-    p.add_model(
-        "inc",
-        lambda s, ev: ev,
-        deps=("ev",),
-        incremental_keys=("id",),
-        watermark_col="day",
-    )
-    with pytest.raises(ValueError, match="local path"):
-        p.run(spark)
+    fail loudly instead (VersionedTable's contract), for incremental
+    and full-refresh models alike."""
+    for inc in ({"incremental_keys": ("id",), "watermark_col": "day"}, {}):
+        p = Pipeline(warehouse_dir="s3a://bucket/wh")
+        p.add_source("ev", lambda s: s.createDataFrame([(1, 1)], "id int, day int"))
+        p.add_model("m", lambda s, ev: ev, deps=("ev",), **inc)
+        with pytest.raises(ValueError, match="local path"):
+            p.run(spark)
 
 
 def test_incremental_bucketed_composed_layout(spark, tmp_path):
@@ -657,7 +701,7 @@ def test_incremental_bucketed_composed_layout(spark, tmp_path):
 
 
 def test_incremental_versioned_partitioned_is_cow(spark, tmp_path):
-    """versioned=True + partition_by now commits partition-scoped
+    """An incremental partition_by model commits partition-scoped
     copy-on-write snapshots (VERDICT r8 item #3): the second run's
     snapshot hardlinks every untouched partition's files from the
     first (same inodes, zero bytes copied) while staying an atomic
@@ -678,14 +722,14 @@ def test_incremental_versioned_partitioned_is_cow(spark, tmp_path):
         incremental_keys=("id",),
         watermark_col="day",
     )
-    p.run(spark, versioned=True)
+    p.run(spark)
     table = VersionedTable(str(tmp_path / "wh" / "inc"))
     assert table.current_version() == 1
 
     _write_src(
         spark, src, [(1, 1, "a"), (2, 2, "b"), (3, 3, "c2"), (4, 4, "d")]
     )
-    built = p.run(spark, versioned=True)["inc"]
+    built = p.run(spark)["inc"]
     assert sorted(map(tuple, built.collect())) == [
         (1, 1, "a"), (2, 2, "b"), (3, 3, "c2"), (4, 4, "d"),
     ]
@@ -788,11 +832,11 @@ def test_incremental_versioned_cow_pins_updates_plan(spark, tmp_path):
         incremental_keys=("id",),
         watermark_col="day",
     )
-    p.run(spark, versioned=True)
+    p.run(spark)
     n_bootstrap = sum(1 for _ in open(marker))
 
     _write_src(spark, src, [(1, 1, "a"), (2, 2, "b2"), (3, 3, "c")])
-    built = p.run(spark, versioned=True)["inc"]
+    built = p.run(spark)["inc"]
     assert sorted(map(tuple, built.collect())) == [
         (1, 1, "a"),
         (2, 2, "b2"),

@@ -267,6 +267,19 @@ def test_stream_static_enrichment_matches_batch(spark, sf_dir):
     assert s == b and len(s) > 0
 
 
+def _current(spark, target):
+    from nycitibike_data_transform_spark.versioning import VersionedTable
+
+    return VersionedTable(target).read_current(spark)
+
+
+def _current_dir(target):
+    from nycitibike_data_transform_spark.versioning import VersionedTable
+
+    t = VersionedTable(target)
+    return t._data_dir(t.current_version())
+
+
 def test_upsert_stream_matches_batch_dedup_latest(spark, sf_dir, tmp_path):
     """The streaming upsert view, fed the events fixture in chunks,
     must converge to exactly the batch dedup_latest result — and the
@@ -289,7 +302,7 @@ def test_upsert_stream_matches_batch_dedup_latest(spark, sf_dir, tmp_path):
         apply_upsert_batch(chunk, i, target, ["user_id"], ["ts", "event_id"])
     got = {
         r["user_id"]: (r["event_id"], r["ts"])
-        for r in spark.read.parquet(target).collect()
+        for r in _current(spark, target).collect()
     }
     batch = {
         r["user_id"]: (r["event_id"], r["ts"])
@@ -309,15 +322,15 @@ def test_upsert_batch_replay_is_idempotent(spark, sf_dir, tmp_path):
     )
     target = str(tmp_path / "replayed")
     apply_upsert_batch(ev, 0, target, ["user_id"], ["ts", "event_id"])
-    once = sorted(map(tuple, spark.read.parquet(target).collect()))
+    once = sorted(map(tuple, _current(spark, target).collect()))
     apply_upsert_batch(ev, 0, target, ["user_id"], ["ts", "event_id"])
-    twice = sorted(map(tuple, spark.read.parquet(target).collect()))
+    twice = sorted(map(tuple, _current(spark, target).collect()))
     assert once == twice
 
 
 def test_upsert_stream_end_to_end_available_now(spark, sf_dir, tmp_path):
     """Drive the real writeStream wiring (file source -> foreachBatch
-    -> parquet view) with an availableNow trigger."""
+    -> snapshot view) with an availableNow trigger."""
     from nycitibike_data_transform_spark.streaming.events import read_events_stream
     from nycitibike_data_transform_spark.streaming.upsert import (
         upsert_stream_to_table,
@@ -336,7 +349,7 @@ def test_upsert_stream_end_to_end_available_now(spark, sf_dir, tmp_path):
         .start()
     )
     q.awaitTermination(120)
-    got = {r["user_id"] for r in spark.read.parquet(target).collect()}
+    got = {r["user_id"] for r in _current(spark, target).collect()}
     batch = {
         r["user_id"]
         for r in all_queries()["dedup_latest"].spark(spark, sf_dir).collect()
@@ -361,9 +374,9 @@ def test_upsert_partitioned_rewrites_only_touched_partition(
 ):
     """VERDICT r7 item #1: with partition_col, a micro-batch that
     touches one partition must leave every other partition's files
-    bit-level untouched (same names, same mtimes) — O(touched data)
-    per batch, not O(table) — while converging to exactly the
-    unpartitioned result."""
+    bit-level untouched (same names, same mtimes: hardlinked into the
+    new snapshot) — O(touched data) per batch, not O(table) — while
+    converging to exactly the unpartitioned result."""
     from nycitibike_data_transform_spark.catalog import load_table
     from nycitibike_data_transform_spark.streaming.upsert import apply_upsert_batch
 
@@ -374,12 +387,12 @@ def test_upsert_partitioned_rewrites_only_touched_partition(
     apply_upsert_batch(
         ev, 0, target, ["user_id"], ["ts", "event_id"], partition_col="shard"
     )
-    before = _parquet_files(target)
+    before = _parquet_files(_current_dir(target))
     assert any("shard=2" in p for p in before)
 
     # a newer event for one shard-2 user: only shard=2 may change
     upd = (
-        spark.read.parquet(target)
+        _current(spark, target)
         .filter(F.col("shard") == 2)
         .limit(1)
         .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1000 DAYS"))
@@ -389,22 +402,22 @@ def test_upsert_partitioned_rewrites_only_touched_partition(
     apply_upsert_batch(
         upd, 1, target, ["user_id"], ["ts", "event_id"], partition_col="shard"
     )
-    after = _parquet_files(target)
+    after = _parquet_files(_current_dir(target))
     assert {p: m for p, m in before.items() if "shard=2" not in p} == {
         p: m for p, m in after.items() if "shard=2" not in p
     }
 
     # convergence parity with the unpartitioned path fed the same rows
     flat = str(tmp_path / "flat")
-    apply_upsert_batch(ev, 0, flat, ["user_id"], ["ts", "event_id"])
+    apply_upsert_batch(ev.drop("shard"), 0, flat, ["user_id"], ["ts", "event_id"])
     apply_upsert_batch(upd.drop("shard"), 1, flat, ["user_id"], ["ts", "event_id"])
     got = {
         (r["user_id"], r["event_id"], r["ts"])
-        for r in spark.read.parquet(target).collect()
+        for r in _current(spark, target).collect()
     }
     want = {
         (r["user_id"], r["event_id"], r["ts"])
-        for r in spark.read.parquet(flat).collect()
+        for r in _current(spark, flat).collect()
     }
     assert got == want
 
@@ -417,7 +430,7 @@ def test_upsert_partitioned_rewrites_only_touched_partition(
     )
     assert {
         (r["user_id"], r["event_id"], r["ts"])
-        for r in spark.read.parquet(target).collect()
+        for r in _current(spark, target).collect()
     } == got
 
 
@@ -438,7 +451,7 @@ def test_upsert_partitioned_null_partition_and_replay(spark, tmp_path):
     apply_upsert_batch(upd, 1, target, ["k"], ["seq"], partition_col="shard")
     got = {
         (r["k"], r["v"], r["seq"], r["shard"])
-        for r in spark.read.parquet(target).collect()
+        for r in _current(spark, target).collect()
     }
     assert got == {(1, "a2", 2, None), (3, "c", 1, None), (2, "b", 1, 2)}
 
@@ -468,8 +481,8 @@ def test_upsert_stream_partitioned_end_to_end(spark, sf_dir, tmp_path):
         .start()
     )
     q.awaitTermination(120)
-    assert any(d.startswith("shard=") for d in os.listdir(target))
-    got = {r["user_id"] for r in spark.read.parquet(target).collect()}
+    assert any(d.startswith("shard=") for d in os.listdir(_current_dir(target)))
+    got = {r["user_id"] for r in _current(spark, target).collect()}
     batch = {
         r["user_id"]
         for r in all_queries()["dedup_latest"].spark(spark, sf_dir).collect()
@@ -492,7 +505,7 @@ def test_upsert_partitioned_date_string_partition_roundtrip(spark, tmp_path):
     apply_upsert_batch(base, 0, target, ["k"], ["seq"], partition_col="day")
     upd = spark.createDataFrame([(1, "a2", 2, "2024-01-01")], schema)
     apply_upsert_batch(upd, 1, target, ["k"], ["seq"], partition_col="day")
-    got = spark.read.parquet(target)
+    got = _current(spark, target)
     rows = {(r["k"], r["v"], r["seq"], str(r["day"])) for r in got.collect()}
     assert rows == {(1, "a2", 2, "2024-01-01"), (2, "b", 1, "2024-01-02")}
 
@@ -500,9 +513,9 @@ def test_upsert_partitioned_date_string_partition_roundtrip(spark, tmp_path):
 def test_upsert_partitioned_zero_padded_string_partition(spark, tmp_path):
     """'01' as a string partition value infers as int 1 on read;
     without an explicit read schema the merge would cast it back to
-    '1' and dynamic overwrite would write a NEW day=1 directory while
-    day=01 kept its stale rows (silent duplication). The batch-schema
-    read must round-trip the value exactly."""
+    '1' and the commit would write a NEW day=1 directory beside
+    day=01's stale rows (silent duplication). The batch-schema read
+    must round-trip the value exactly."""
     import os
 
     from nycitibike_data_transform_spark.streaming.upsert import apply_upsert_batch
@@ -515,20 +528,20 @@ def test_upsert_partitioned_zero_padded_string_partition(spark, tmp_path):
     apply_upsert_batch(base, 0, target, ["k"], ["seq"], partition_col="day")
     upd = spark.createDataFrame([(1, "a2", 2, "01")], schema)
     apply_upsert_batch(upd, 1, target, ["k"], ["seq"], partition_col="day")
-    dirs = {d for d in os.listdir(target) if d.startswith("day=")}
+    dirs = {d for d in os.listdir(_current_dir(target)) if d.startswith("day=")}
     assert dirs == {"day=01", "day=02"}
     rows = {
         (r["k"], r["v"], r["seq"], r["day"])
-        for r in spark.read.schema(base.schema).parquet(target).collect()
+        for r in _current(spark, target).collect()
     }
     assert rows == {(1, "a2", 2, "01"), (2, "b", 1, "02")}
 
 
 def test_upsert_versioned_partitioned_cow_and_time_travel(spark, sf_dir, tmp_path):
-    """versioned=True (VERDICT r8 item #3): each micro-batch is an
-    atomic snapshot commit. Values must match the unversioned path
-    exactly; untouched partitions share INODES across snapshots (zero
-    bytes copied); the pre-batch snapshot stays time-travel readable."""
+    """Each micro-batch is an atomic snapshot commit (VERDICT r8 item
+    #3). Values must match the unpartitioned path exactly; untouched
+    partitions share INODES across snapshots (zero bytes copied); the
+    pre-batch snapshot stays time-travel readable."""
     import os
 
     from nycitibike_data_transform_spark.catalog import load_table
@@ -541,7 +554,7 @@ def test_upsert_versioned_partitioned_cow_and_time_travel(spark, sf_dir, tmp_pat
     target = str(tmp_path / "vview")
     apply_upsert_batch(
         ev, 0, target, ["user_id"], ["ts", "event_id"],
-        partition_col="shard", versioned=True,
+        partition_col="shard",
     )
     table = VersionedTable(target)
     assert table.current_version() == 1
@@ -557,23 +570,21 @@ def test_upsert_versioned_partitioned_cow_and_time_travel(spark, sf_dir, tmp_pat
     )
     apply_upsert_batch(
         upd, 1, target, ["user_id"], ["ts", "event_id"],
-        partition_col="shard", versioned=True,
+        partition_col="shard",
     )
     assert table.current_version() == 2
 
-    # parity with the unversioned partitioned path fed the same batches
+    # parity with the unpartitioned path fed the same batches
     flat = str(tmp_path / "plain")
-    apply_upsert_batch(ev, 0, flat, ["user_id"], ["ts", "event_id"],
-                       partition_col="shard")
-    apply_upsert_batch(upd, 1, flat, ["user_id"], ["ts", "event_id"],
-                       partition_col="shard")
+    apply_upsert_batch(ev, 0, flat, ["user_id"], ["ts", "event_id"])
+    apply_upsert_batch(upd, 1, flat, ["user_id"], ["ts", "event_id"])
     got = {
         (r["user_id"], r["event_id"], r["ts"])
         for r in table.read_current(spark).collect()
     }
     want = {
         (r["user_id"], r["event_id"], r["ts"])
-        for r in spark.read.parquet(flat).collect()
+        for r in _current(spark, flat).collect()
     }
     assert got == want
 
@@ -593,7 +604,7 @@ def test_upsert_versioned_kill_mid_batch_then_replay(spark, tmp_path, monkeypatc
     """Kill-mid-batch (test_sinks.py style): a crash at any point
     before the pointer swap leaves the committed snapshot intact and
     readable, and replaying the same batch converges — the guarantee
-    the torn in-place dynamic-partition overwrite cannot give."""
+    an in-place partition overwrite cannot give."""
     import nycitibike_data_transform_spark.versioning as versioning
     from nycitibike_data_transform_spark.streaming.upsert import apply_upsert_batch
     from nycitibike_data_transform_spark.versioning import VersionedTable
@@ -605,7 +616,7 @@ def test_upsert_versioned_kill_mid_batch_then_replay(spark, tmp_path, monkeypatc
     target = str(tmp_path / "vcrash")
     apply_upsert_batch(
         batch0, 0, target, ["user_id"], ["ts", "event_id"],
-        partition_col="shard", versioned=True,
+        partition_col="shard",
     )
     table = VersionedTable(target)
     before = sorted(map(tuple, table.read_current(spark).collect()))
@@ -625,7 +636,7 @@ def test_upsert_versioned_kill_mid_batch_then_replay(spark, tmp_path, monkeypatc
     with _pytest.raises(RuntimeError, match="kill mid-batch"):
         apply_upsert_batch(
             batch1, 1, target, ["user_id"], ["ts", "event_id"],
-            partition_col="shard", versioned=True,
+            partition_col="shard",
         )
     monkeypatch.setattr(versioning, "_durable_write", real)
 
@@ -636,7 +647,7 @@ def test_upsert_versioned_kill_mid_batch_then_replay(spark, tmp_path, monkeypatc
     # replay converges from the torn state
     apply_upsert_batch(
         batch1, 1, target, ["user_id"], ["ts", "event_id"],
-        partition_col="shard", versioned=True,
+        partition_col="shard",
     )
     assert table.current_version() == 2
     winner = (
@@ -646,9 +657,46 @@ def test_upsert_versioned_kill_mid_batch_then_replay(spark, tmp_path, monkeypatc
     assert winner["event_id"] == 99
 
 
+def test_upsert_killed_bootstrap_replays(spark, tmp_path, monkeypatch):
+    """A bootstrap batch killed after its data landed but before the
+    pointer swap leaves parquet files inside the snapshot layout only;
+    the replay bootstraps again instead of taking the target for a
+    plain parquet table."""
+    import pytest as _pytest
+
+    import nycitibike_data_transform_spark.versioning as versioning
+    from nycitibike_data_transform_spark.streaming.upsert import apply_upsert_batch
+    from nycitibike_data_transform_spark.versioning import VersionedTable
+
+    batch0 = spark.createDataFrame(
+        [(u, 1, float(u), "t", u % 2) for u in range(4)],
+        "user_id long, event_id long, ts double, event_type string, shard long",
+    )
+    target = str(tmp_path / "vboot")
+    real = versioning._durable_write
+
+    def boom(path, content):
+        raise RuntimeError("kill mid-bootstrap")
+
+    monkeypatch.setattr(versioning, "_durable_write", boom)
+    with _pytest.raises(RuntimeError, match="kill mid-bootstrap"):
+        apply_upsert_batch(
+            batch0, 0, target, ["user_id"], ["ts", "event_id"], partition_col="shard"
+        )
+    monkeypatch.setattr(versioning, "_durable_write", real)
+    table = VersionedTable(target)
+    assert table.current_version() is None
+
+    apply_upsert_batch(
+        batch0, 0, target, ["user_id"], ["ts", "event_id"], partition_col="shard"
+    )
+    assert table.current_version() == 1
+    assert table.read_current(spark).count() == 4
+
+
 def test_upsert_versioned_stream_end_to_end(spark, sf_dir, tmp_path):
-    """The real writeStream wiring with versioned=True: availableNow
-    catch-up commits snapshots and converges to the batch answer."""
+    """The real writeStream wiring: availableNow catch-up commits
+    snapshots and converges to the batch answer."""
     from nycitibike_data_transform_spark.streaming.events import read_events_stream
     from nycitibike_data_transform_spark.streaming.upsert import (
         upsert_stream_to_table,
@@ -662,7 +710,7 @@ def test_upsert_versioned_stream_end_to_end(spark, sf_dir, tmp_path):
     q = (
         upsert_stream_to_table(
             stream, target, ["user_id"], ["ts", "event_id"],
-            checkpoint_dir=str(tmp_path / "ckpt"), versioned=True,
+            checkpoint_dir=str(tmp_path / "ckpt"),
         )
         .trigger(availableNow=True)
         .start()
@@ -682,26 +730,24 @@ def test_upsert_versioned_stream_end_to_end(spark, sf_dir, tmp_path):
 
 
 def test_upsert_versioned_refuses_nonversioned_target(spark, tmp_path):
-    """r9 review: flipping versioned=True over an existing PLAIN
-    upsert target must fail loudly — a versioned bootstrap there would
-    silently abandon every prior row (no manifest, never merged)."""
+    """r9 review: bootstrapping a snapshot over an existing PLAIN
+    parquet target must fail loudly — it would silently abandon every
+    prior row (no manifest, never merged)."""
     from nycitibike_data_transform_spark.streaming.upsert import apply_upsert_batch
 
     rows = spark.createDataFrame(
         [(1, 1, 1.0, "t")], "user_id long, event_id long, ts double, event_type string"
     )
     target = str(tmp_path / "plain_then_versioned")
-    apply_upsert_batch(rows, 0, target, ["user_id"], ["ts", "event_id"])
+    rows.write.parquet(target)
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="refusing to bootstrap"):
-        apply_upsert_batch(
-            rows, 1, target, ["user_id"], ["ts", "event_id"], versioned=True
-        )
+        apply_upsert_batch(rows, 1, target, ["user_id"], ["ts", "event_id"])
 
 
 def test_upsert_versioned_keep_versions_bounds_retention(spark, tmp_path):
-    """keep_versions vacuums after each versioned batch commit: a
+    """keep_versions vacuums after each batch commit: a
     long-running stream keeps a bounded snapshot history while the
     newest snapshots stay readable (hardlinks survive the vacuum)."""
     from nycitibike_data_transform_spark.streaming.upsert import (
@@ -716,7 +762,7 @@ def test_upsert_versioned_keep_versions_bounds_retention(spark, tmp_path):
         batch = spark.createDataFrame([(i, i, float(i), "t", i % 2)], schema)
         apply_upsert_batch(
             batch, i, target, ["user_id"], ["ts", "event_id"],
-            partition_col="shard", versioned=True, keep_versions=2,
+            partition_col="shard", keep_versions=2,
         )
     table = VersionedTable(target)
     assert table.current_version() == 4
@@ -725,8 +771,8 @@ def test_upsert_versioned_keep_versions_bounds_retention(spark, tmp_path):
 
     import pytest as _pytest
 
-    with _pytest.raises(ValueError, match="keep_versions requires"):
+    with _pytest.raises(ValueError, match="keep_versions must be >= 1"):
         upsert_stream_to_table(
             spark.readStream.format("rate").load(), target,
-            ["user_id"], ["ts"], str(tmp_path / "ck"), keep_versions=2,
+            ["user_id"], ["ts"], str(tmp_path / "ck"), keep_versions=0,
         )

@@ -137,8 +137,8 @@ def test_partitioned_write_prunes_on_read(spark, tmp_path):
 
 
 def test_pipeline_versioned_materialization(spark, tmp_path):
-    """Pipeline.run(versioned=True): two runs of the same model leave
-    both snapshots readable with an intact pointer."""
+    """Pipeline.run: two runs of the same model leave both snapshots
+    readable with an intact pointer."""
     from nycitibike_data_transform_spark.pipeline import Pipeline
 
     state = {"n": 0}
@@ -149,9 +149,9 @@ def test_pipeline_versioned_materialization(spark, tmp_path):
     p = Pipeline(warehouse_dir=str(tmp_path / "wh"))
     p.add_source("raw", src)
     p.add_model("m", lambda s, raw: raw.select("k", "v"), deps=("raw",))
-    p.run(spark, versioned=True)
+    p.run(spark)
     state["n"] = 1
-    p.run(spark, versioned=True)
+    p.run(spark)
     t = VersionedTable(str(tmp_path / "wh" / "m"))
     assert t.versions() == [1, 2]
     assert {r["k"] for r in t.read_version(spark, 1).collect()} == {0}
@@ -202,15 +202,19 @@ def test_pipeline_run_bounds_retention(spark, tmp_path, sf_dir):
     p.add_source("nation", lambda s: s.read.parquet(f"{sf_dir}/nation.parquet"))
     p.add_model("dim", lambda s, nation: nation.select("n_nationkey"), deps=("nation",))
     for _ in range(4):
-        p.run(spark, versioned=True, keep_versions=2)
+        p.run(spark, keep_versions=2)
     t = VersionedTable(str(tmp_path / "dim"))
     assert t.versions() == [3, 4]  # retention bounded at 2
     assert t.read_current(spark).count() == 25
 
     import pytest
 
-    with pytest.raises(ValueError, match="requires versioned"):
-        p.run(spark, keep_versions=2)
+    # bad arguments fail before any model commits
+    with pytest.raises(ValueError, match="keep_versions must be >= 1"):
+        p.run(spark, keep_versions=0)
+    with pytest.raises(ValueError, match="in-place parquet materialization was removed"):
+        p.run(spark, versioned=False)
+    assert t.versions() == [3, 4]
 
 
 def test_compact_reduces_files_data_identical(spark, tmp_path):
