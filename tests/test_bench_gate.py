@@ -1,49 +1,59 @@
-"""The bench contamination gate must SEE a co-tenant (VERDICT r12 item 2).
+"""``bench.py``'s record: wall minimums beside process-tree CPU-seconds.
 
-r12's driver bench recorded 13.9 s ``contaminated: false`` while clean
-re-runs of identical code measured 10.8-10.9 s — a load-10 co-tenant
-slipped under the static ``own_load_max`` ceiling.  ``bench.py`` now
-measures the co-tenant directly: per-process ``(pid, starttime)``-keyed
-CPU deltas over the sweep for live processes outside the bench's own
-process tree and outside the kernel.  These tests pin the accounting:
+The bench has no co-tenant gate. Its per-query CPU-seconds
+(``perfbench.run.tree_cpu_s`` around each ``time_noop`` run) are what
+make a slow wall reading attributable: a co-tenant stretches the walls,
+but its own CPU is never counted in this process tree's. These tests pin:
 
-- our own subprocesses (the Spark JVM's analogue) must NOT count;
-- a process re-parented outside our tree (a true co-tenant) MUST count;
-- a long-lived foreign process EXITING mid-window must not subtract its
-  boot-to-date CPU and mask a concurrent real co-tenant (r13
-  self-review: the first implementation differenced aggregate sums,
-  which had exactly that hole).
+- the accounting: CPU burned by the bench's own subprocesses counts, a
+  detached co-tenant's CPU does not, and the timed loop still rebuilds
+  eager queries on every run;
+- the stdout record external harnesses parse: every key it had is
+  still there, the retired box-forensics keys are ``null``,
+  the CPU totals are present, and the exit code is 0.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 import signal
 import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-# _CLK_TCK is positivity-guarded in bench.py; a re-derived
-# `sysconf() or 100` here would keep -1 — truthy — on platforms where
-# SC_CLK_TCK is unsupported, the exact bug that guard exists for
-# (ADVICE r13)
-from bench import _CLK_TCK as _CLK
-from bench import _foreign_cpu_delta_jiffies, _foreign_cpu_samples
+from bench import time_noop  # noqa: E402
+
+# the stdout keys external harnesses parse (the record before the
+# forensics were retired); only the two CPU totals were added since
+PARSED_KEYS = {
+    "metric", "value", "unit", "queries", "value_early_window",
+    "value_late_window", "registry_total_sec", "registry_families",
+    "loadavg_before", "loadavg_after", "calib_cpu_1t_sec",
+    "calib_cpu_nt_sec", "calib_cpu_threads", "calib_degraded_ratio",
+    "calib_recalibrated", "contaminated", "contamination_reasons",
+    "foreign_cpu_sec", "ancestor_cpu_sec", "idle_wait_sec", "cpus", "sf",
+}
+RETIRED_KEYS = {
+    "calib_cpu_1t_sec", "calib_cpu_nt_sec", "calib_cpu_threads",
+    "calib_degraded_ratio", "calib_recalibrated", "contaminated",
+    "contamination_reasons", "foreign_cpu_sec", "ancestor_cpu_sec",
+    "idle_wait_sec",
+}
 
 
 def _burn_script(seconds: float) -> str:
+    """A busy loop that stops after ``seconds`` of its OWN CPU time, so
+    it burns that much however contended the box is."""
     return (
         "import time\n"
-        f"end = time.time() + {seconds}\n"
-        "while time.time() < end:\n"
+        f"while time.process_time() < {seconds}:\n"
         "    sum(i * i for i in range(10000))\n"
     )
-
-
-def _delta_sec(before, after) -> float:
-    return _foreign_cpu_delta_jiffies(before, after) / _CLK
 
 
 def _spawn_detached(seconds: float) -> int:
@@ -83,287 +93,83 @@ def _kill_quietly(pid: int) -> None:
         pass
 
 
-def test_own_subprocess_cpu_is_not_foreign():
-    """A CPU burner spawned as OUR child (like the Spark JVM) must
-    never be SAMPLED as foreign — asserted on process identity, not
-    CPU arithmetic (r13 review: any ambient-CPU bound flakes the
-    moment something else runs on the box, including this repo's own
-    bench in a sibling session; tree membership is load-independent)."""
-    proc = subprocess.Popen([sys.executable, "-c", _burn_script(5.0)])
+def _proc_cpu_s(pid: int) -> float:
+    """CPU seconds one live process has run (its schedstat, in ns)."""
+    with open(f"/proc/{pid}/schedstat") as fh:
+        return int(fh.read().split()[0]) / 1e9
+
+
+def test_time_noop_cpu_counts_own_tree_not_cotenant(spark):
+    """Own subprocess CPU counts; a detached co-tenant's does not.
+
+    The first build runs and waits for a 1 s burner of its own (the
+    shape of a Spark Python worker): each run must report at least
+    0.7 s. The second build idles 1 s — a query waiting on I/O —
+    beside a detached burner that keeps a core busy the whole time:
+    the run must report under 0.5 s, while the burner itself is seen
+    to burn more than that inside the window.
+    """
+
+    def own_burner():
+        subprocess.run([sys.executable, "-c", _burn_script(1.0)], check=True)
+        return spark.range(1)
+
+    _, cpu = time_noop(own_burner, 2)
+    assert all(c >= 0.7 for c in cpu), cpu
+
+    def idle_build():
+        time.sleep(1.0)
+        return spark.range(1)
+
+    time_noop(lambda: spark.range(1), 1)  # warm the noop write path
+    burner = _spawn_detached(5.0)
     try:
-        time.sleep(0.5)  # ensure it is alive and visible in /proc
-        samples = _foreign_cpu_samples()
-        assert all(pid != proc.pid for pid, _ in samples)  # in our tree
-        assert all(pid != os.getpid() for pid, _ in samples)  # we aren't
-    finally:
-        proc.kill()
-        proc.wait(timeout=10)
-
-
-def test_ancestor_chain_is_not_foreign():
-    """ADVICE r13: the processes that LAUNCHED the bench (shell, driver
-    harness, sshd) are machinery, not co-tenants — a CPU-active parent
-    harness must not stamp a clean run contaminated. Pin: no pid on our
-    ancestor chain is ever sampled as foreign."""
-    ancestors = set()
-    pid = os.getppid()
-    while pid > 0 and pid not in ancestors:
-        ancestors.add(pid)
-        try:
-            with open(f"/proc/{pid}/stat", "rb") as fh:
-                raw = fh.read().decode("ascii", "replace")
-            pid = int(raw[raw.rindex(")") + 2 :].split()[1])
-        except (OSError, ValueError):
-            break
-    assert ancestors  # at least the direct parent
-    sampled = {p for p, _ in _foreign_cpu_samples()}
-    assert not (sampled & ancestors)
-
-
-def test_cpu_calibration_stamp_shape():
-    """VERDICT r13 item 4: the fixed-work probe emits positive timings
-    and the requested thread width, so box drift is readable from any
-    single payload."""
-    from bench import _cpu_calibration
-
-    from nycitibike_data_transform_spark.session import default_parallelism
-
-    c = _cpu_calibration()
-    assert c["calib_cpu_1t_sec"] > 0
-    assert c["calib_cpu_nt_sec"] > 0
-    assert c["calib_cpu_threads"] == default_parallelism()
-
-
-def test_cpu_calibration_pool_sized_from_requested_cpus(monkeypatch):
-    """VERDICT r15 item 2: a low-core driver run (SPARK_GRAFT_CPUS=8 on
-    a 32-core box) must probe at the REQUESTED width, not the box width
-    — the r15 c8 payload read ``calib_cpu_threads: 32`` and tripped the
-    driver's ``suspect_cpus_ignored`` heuristic."""
-    from bench import _cpu_calibration
-
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
-    c = _cpu_calibration()
-    assert c["calib_cpu_threads"] == 2
-
-
-def test_calibration_recheck_redrains_once_when_degraded():
-    """VERDICT r14 item 3, fault-injected via the calibrate hook: the
-    first calibration reads degraded (3.2× the anchor — the r14 graded
-    state), the recheck must re-drain ONCE, re-calibrate, and stamp the
-    FINAL ratio. A second degraded reading must not trigger a second
-    drain (bounded recovery, not a wait-forever loop)."""
-    from bench import _calibrate_with_recheck
-
-    readings = iter(
-        [
-            {"calib_cpu_1t_sec": 0.36, "calib_cpu_nt_sec": 6.007, "calib_cpu_threads": 32},
-            {"calib_cpu_1t_sec": 0.36, "calib_cpu_nt_sec": 1.9, "calib_cpu_threads": 32},
-        ]
-    )
-    drains = {"n": 0}
-
-    def loaded() -> bool:
-        drains["n"] += 1
-        return drains["n"] <= 2  # loaded twice, then drained
-
-    calib, ratio, recal = _calibrate_with_recheck(
-        anchor_nt=1.883,
-        degraded_ratio=1.5,
-        redrain_sec=60.0,
-        _calibrate=lambda: next(readings),
-        _loaded=loaded,
-        _sleep=lambda _s: None,
-    )
-    assert recal == 1
-    assert calib["calib_cpu_nt_sec"] == 1.9
-    assert ratio == round(1.9 / 1.883, 2) == 1.01
-    assert drains["n"] == 3  # two loaded polls + the final drained one
-
-
-def test_calibration_recheck_still_degraded_stamps_honest_ratio():
-    """If the box stays degraded after the single re-drain, the payload
-    must carry the HONEST elevated ratio — the field exists precisely so
-    a graded 11.587-at-6.007 number self-documents."""
-    from bench import _calibrate_with_recheck
-
-    calib, ratio, recal = _calibrate_with_recheck(
-        anchor_nt=1.883,
-        degraded_ratio=1.5,
-        _calibrate=lambda: {
-            "calib_cpu_1t_sec": 0.36,
-            "calib_cpu_nt_sec": 6.007,
-            "calib_cpu_threads": 32,
-        },
-        _loaded=lambda: False,
-        _sleep=lambda _s: None,
-    )
-    assert recal == 1
-    assert ratio == round(6.007 / 1.883, 2) == 3.19
-
-
-def test_calibration_recheck_clean_run_ratio_near_one():
-    """Drained-box leg of the done-criterion: a REAL calibration anchored
-    to its own immediately-preceding reading must neither re-drain nor
-    read degraded (ratio well under the 1.5 gate; ≈1 modulo scheduler
-    noise between two back-to-back probes)."""
-    from bench import _calibrate_with_recheck, _cpu_calibration
-
-    anchor = _cpu_calibration()["calib_cpu_nt_sec"]
-    calib, ratio, recal = _calibrate_with_recheck(
-        anchor_nt=anchor, degraded_ratio=1.5, _loaded=lambda: False
-    )
-    assert recal == 0
-    assert ratio is not None and ratio < 1.5
-    assert calib["calib_cpu_nt_sec"] > 0
-
-
-def test_calibration_burn_injection_reads_degraded():
-    """Real fault injection (VERDICT r14 done-criterion): the probe
-    must FEEL a co-tenant stealing its cores. An unpinned burner cannot
-    prove that on this box — the hypervisor burst-schedules the VM
-    (~5-6 effective cores that EXPAND under demand: a full-width burner
-    measurably consumes ~4.5 cpu/s yet leaves the calibration reading
-    unchanged, which is what two r15 cuts of this test flaked on). So
-    both the calibration subprocess and the burner are PINNED to the
-    same small CPU set via sched_setaffinity: contention inside the set
-    is kernel-scheduler-guaranteed, independent of how the host scales
-    the VM's total quota. Expect ~2x; assert a generous 1.3x. The
-    deterministic payload semantics (re-drain, honest ratio) are pinned
-    by the hook-injected tests above."""
-    import pytest
-
-    if not hasattr(os, "sched_setaffinity"):
-        pytest.skip("sched_setaffinity unavailable")
-    ncpu = os.cpu_count() or 1
-    if ncpu < 2:
-        pytest.skip("needs >= 2 cpus to pin a contended set")
-    cpus = set(range(min(4, ncpu)))
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    calib_script = (
-        "import os, sys\n"
-        f"os.sched_setaffinity(0, {cpus!r})\n"
-        f"sys.path.insert(0, {repo!r})\n"
-        "from bench import _cpu_calibration\n"
-        "print(_cpu_calibration()['calib_cpu_nt_sec'])\n"
-    )
-
-    def run_calib() -> float:
-        out = subprocess.run(
-            [sys.executable, "-c", calib_script],
-            capture_output=True,
-            text=True,
-            timeout=300,
-        )
-        return float(out.stdout.strip())
-
-    clean = min(run_calib() for _ in range(2))
-    burn_script = (
-        "import concurrent.futures, os, time, zlib\n"
-        f"os.sched_setaffinity(0, {cpus!r})\n"
-        "buf = bytes(range(256)) * 4096\n"
-        "def spin(_):\n"
-        "    end = time.time() + 120\n"
-        "    acc = 0\n"
-        "    while time.time() < end:\n"
-        "        acc = zlib.crc32(buf, acc)\n"
-        f"with concurrent.futures.ThreadPoolExecutor({len(cpus)}) as ex:\n"
-        f"    list(ex.map(spin, range({len(cpus)})))\n"
-    )
-    burner = subprocess.Popen([sys.executable, "-c", burn_script])
-    try:
-        time.sleep(1.0)  # burner threads all spinning before the probe
-        degraded = min(run_calib() for _ in range(2))
-    finally:
-        burner.kill()
-        burner.wait(timeout=10)
-    assert degraded > 1.3 * clean, (clean, degraded)
-
-
-def test_anchor_file_is_committed_and_read():
-    """The committed BENCH_ANCHORS.json must parse and feed
-    _calib_anchor_nt (absent an env override)."""
-    from bench import _calib_anchor_nt
-
-    old = os.environ.pop("SPARK_GRAFT_CALIB_NT_ANCHOR", None)
-    try:
-        anchor = _calib_anchor_nt()
-    finally:
-        if old is not None:
-            os.environ["SPARK_GRAFT_CALIB_NT_ANCHOR"] = old
-    assert anchor is not None and 0 < anchor < 60
-    os.environ["SPARK_GRAFT_CALIB_NT_ANCHOR"] = "2.5"
-    try:
-        from bench import _calib_anchor_nt as f
-
-        assert f() == 2.5
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_CALIB_NT_ANCHOR", None)
-        else:
-            os.environ["SPARK_GRAFT_CALIB_NT_ANCHOR"] = old
-
-
-def test_ancestor_cpu_sampled_separately_not_foreign():
-    """ADVICE r14: ancestor-chain CPU is exempt from the gate but must
-    be SAMPLED into the separate ancestor view so a hot launcher stays
-    attributable. Every ancestor pid appears in the ancestor samples and
-    none in the foreign samples."""
-    from bench import _proc_cpu_scan
-
-    ancestors = set()
-    pid = os.getppid()
-    while pid > 0 and pid not in ancestors:
-        ancestors.add(pid)
-        try:
-            with open(f"/proc/{pid}/stat", "rb") as fh:
-                raw = fh.read().decode("ascii", "replace")
-            pid = int(raw[raw.rindex(")") + 2 :].split()[1])
-        except (OSError, ValueError):
-            break
-    foreign, ancestor = _proc_cpu_scan()
-    sampled_foreign = {p for p, _ in foreign}
-    sampled_ancestor = {p for p, _ in ancestor}
-    assert ancestors  # at least the direct parent
-    assert ancestors <= sampled_ancestor
-    assert not (sampled_foreign & sampled_ancestor)
-
-
-def test_reparented_cotenant_cpu_is_foreign():
-    """The detached burner spins flat-out through the window: the gate
-    must charge at least half its wall time as foreign CPU."""
-    burn = 2.0
-    burner = _spawn_detached(burn + 10)
-    try:
-        before = _foreign_cpu_samples()
-        time.sleep(burn)
-        after = _foreign_cpu_samples()
+        time.sleep(0.2)  # the burner is spinning before the window opens
+        burner_before = _proc_cpu_s(burner)
+        _, cpu = time_noop(idle_build, 1)
+        burned = _proc_cpu_s(burner) - burner_before
     finally:
         _kill_quietly(burner)
-    assert _delta_sec(before, after) > burn / 2
+    assert burned > 0.5, burned
+    assert cpu[0] < 0.5, (cpu, burned)
 
 
-def test_exiting_daemon_cannot_mask_a_live_cotenant():
-    """Masking regression (r13 self-review): daemon A accumulates CPU
-    BEFORE the window, then exits inside it while co-tenant B burns.
-    An aggregate-sum difference would compute B's burn minus A's
-    lifetime CPU ≈ 0 and stamp the run clean; the per-process delta
-    must still charge B."""
-    acc, burn = 1.5, 1.5
-    daemon = _spawn_detached(60)  # A: will be killed mid-window
-    try:
-        time.sleep(acc)  # A accumulates pre-window CPU
-        before = _foreign_cpu_samples()
-        assert any(pid == daemon for pid, _ in before)  # A is sampled
-        _kill_quietly(daemon)  # A exits inside the window...
-        cotenant = _spawn_detached(burn + 10)  # ...while B burns
-        try:
-            time.sleep(burn)
-            after = _foreign_cpu_samples()
-        finally:
-            _kill_quietly(cotenant)
-    finally:
-        _kill_quietly(daemon)
-    assert _delta_sec(before, after) > burn / 2
+def test_bench_record_keeps_stdout_keys(tmp_path, sf_dir):
+    """``bench.py`` run as a script, restricted to one query, exits 0
+    and prints every parsed key (plus the CPU totals) on its last
+    stdout line. The copy in ``tmp_path`` writes its BENCH_DETAIL.json
+    there, not into the checkout."""
+    shutil.copy(os.path.join(REPO, "bench.py"), tmp_path / "bench.py")
+    (tmp_path / "run_bench.py").write_text(
+        "import bench\n"
+        "registry = bench.all_queries\n"
+        "bench.HEADLINE = ['text_stats']\n"
+        "bench.all_queries = lambda: {'text_stats': registry()['text_stats']}\n"
+        "bench.main()\n"
+    )
+    env = dict(
+        os.environ,
+        PYTHONPATH=REPO,
+        SPARK_GRAFT_SF_DIR=sf_dir,
+        SPARK_GRAFT_DRIVER_MEM="1g",
+    )
+    out = subprocess.run(
+        [sys.executable, "run_bench.py"],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    record = json.loads(out.stdout.strip().splitlines()[-1])
+    assert set(record) == PARSED_KEYS | {"cpu_sec", "registry_cpu_sec"}
+    assert all(record[k] is None for k in RETIRED_KEYS)
+    assert record["cpu_sec"] > 0 and record["registry_cpu_sec"] > 0
+    assert set(record["queries"]) == {"text_stats"}
+    detail = json.loads((tmp_path / "BENCH_DETAIL.json").read_text())
+    assert set(detail["queries_cpu_sec"]) == {"text_stats"}
+    assert set(detail["registry_queries_cpu_sec"]) == {"text_stats"}
 
 
 def test_time_noop_rebuilds_eager_query_on_every_run(spark, sf_dir, spark_jobs):
@@ -371,8 +177,6 @@ def test_time_noop_rebuilds_eager_query_on_every_run(spark, sf_dir, spark_jobs):
     (a layout read checkpointed at plan-build) must start Spark jobs on
     every run, including the second, instead of returning the first
     run's memoized frame from ``queries._EAGER_CACHE``."""
-    from bench import time_noop
-
     from nycitibike_data_transform_spark.queries import all_queries
 
     query = all_queries()["zonemap_scan"].spark
@@ -385,7 +189,7 @@ def test_time_noop_rebuilds_eager_query_on_every_run(spark, sf_dir, spark_jobs):
             build_jobs.append(jobs() - before)
             return df
 
-        times = time_noop(build, 2)
+        times, _ = time_noop(build, 2)
     assert len(times) == 2 and all(t > 0 for t in times)
     assert len(build_jobs) == 2
     assert build_jobs[1] > 0, build_jobs

@@ -18,10 +18,11 @@ Usage::
     python tools/microbench.py dedup_near --runs 5 --explain
 
 Prints one JSON line: ``{"query": ..., "sf_dir": ..., "warm_sec": ...,
-"min_sec": ..., "runs": [...], "exchanges": N, "foreign_cpu_sec": ...}``.
-``foreign_cpu_sec`` is bench.py's co-tenant stamp over the timed block
-(VERDICT r13 item 8): probe numbers feed commit decisions, so they
-carry the same contamination evidence as graded bench runs.
+"min_sec": ..., "runs": [...], "exchanges": N, "cpu_sec": ...}``.
+``cpu_sec`` is the least process-tree CPU-seconds of the timed runs
+(``bench.time_noop``): probe numbers feed commit decisions, and a
+co-tenant stretches ``min_sec`` several times more than ``cpu_sec``,
+so a wall change that the CPU does not follow is box noise.
 """
 
 from __future__ import annotations
@@ -36,12 +37,7 @@ _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _ROOT not in sys.path:
     sys.path.insert(0, _ROOT)
 
-from bench import (  # noqa: E402
-    _CLK_TCK,
-    _foreign_cpu_delta_jiffies,
-    _foreign_cpu_samples,
-    time_noop,
-)
+from bench import time_noop  # noqa: E402
 from nycitibike_data_transform_spark.plans import count_exchanges  # noqa: E402
 from nycitibike_data_transform_spark.queries import all_queries  # noqa: E402
 from nycitibike_data_transform_spark.session import get_spark  # noqa: E402
@@ -65,9 +61,9 @@ def main() -> None:
     )
     build = partial(registry[args.query].spark, spark, args.sf_dir)
 
-    foreign_before = _foreign_cpu_samples()
-    (warm,) = time_noop(build, 1)
-    runs = [round(t, 3) for t in time_noop(build, args.runs)]
+    (warm,), _ = time_noop(build, 1)
+    walls, cpus = time_noop(build, args.runs)
+    runs = [round(t, 3) for t in walls]
     # an eager query's build is a memo hit here: the last timed run's frame
     df = build()
     if args.explain:
@@ -82,13 +78,7 @@ def main() -> None:
                 "min_sec": min(runs),
                 "runs": runs,
                 "exchanges": count_exchanges(df),
-                "foreign_cpu_sec": round(
-                    _foreign_cpu_delta_jiffies(
-                        foreign_before, _foreign_cpu_samples()
-                    )
-                    / _CLK_TCK,
-                    1,
-                ),
+                "cpu_sec": round(min(cpus), 3),
             }
         )
     )

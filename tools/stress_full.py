@@ -48,17 +48,17 @@ vector dimension decorrelated too).
 coins are hash(id, copy) — no RNG, rebuilds are bit-identical.
 
 Usage: python tools/stress_full.py [K] [scratch_dir] [--organic[=PCT]] [query ...]
-Prints one JSON line: {query: [t_1x, t_Kx, ratio, foreign_cpu_sec]} +
-per-family rollup + a run-wide ``foreign_cpu_sec`` total. A family's
+Prints one JSON line: {query: [t_1x, t_Kx, ratio, cpu_sec]} +
+per-family rollup + a run-wide ``cpu_sec`` total. A family's
 scale check is a name list, e.g. the TPC-H shapes (``pricing_summary
 revenue_by_nation supplier_wait ...``) or the LLM data path
 (``decontaminate dedup_clusters span_dedup ...``).
 
-The 4th per-query element is bench.py's co-tenant stamp over that
-query's timed block (VERDICT r13 item 8): scale ratios feed grading
-decisions, so each carries the same contamination evidence as graded
-bench runs — a ratio measured while something else burned the box is
-attributable from the record alone.
+The 4th per-query element is the process-tree CPU-seconds of the K×
+run (``bench.time_noop``), and the run-wide ``cpu_sec`` is their sum.
+A co-tenant stretches the wall times several times more than the CPU,
+so a ratio measured while something else burned the box reads as a
+wall jump that its CPU does not follow.
 """
 
 from __future__ import annotations
@@ -73,14 +73,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from bench import (
-    _CLK_TCK,
-    _foreign_cpu_delta_jiffies,
-    _foreign_cpu_samples,
-    default_sf_dir,
-    query_families,
-    time_noop,
-)
+from bench import default_sf_dir, query_families, time_noop
 from nycitibike_data_transform_spark.queries import all_queries
 from nycitibike_data_transform_spark.queries.marts import _LAYOUT_FIXTURES
 from nycitibike_data_transform_spark.session import get_spark
@@ -206,9 +199,12 @@ def build(
         )
 
 
-def time_fresh(spark, sf_dir: str, name: str, runs: int = 1) -> float:
+def time_fresh(
+    spark, sf_dir: str, name: str, runs: int = 1
+) -> tuple[float, float]:
+    """``(wall, cpu)`` seconds of the fastest of ``runs`` fresh runs."""
     build = partial(all_queries()[name].spark, spark, sf_dir)
-    best = float("inf")
+    best = (float("inf"), 0.0)
     for _ in range(runs):
         # the shared clustered-snapshot FIXTURE (r11) must clear before
         # EVERY run, and SYMMETRICALLY: a fixture pre-built at 1× but
@@ -217,8 +213,9 @@ def time_fresh(spark, sf_dir: str, name: str, runs: int = 1) -> float:
         # time_noop clears the EAGER memo itself.
         for k in list(_LAYOUT_FIXTURES):
             shutil.rmtree(_LAYOUT_FIXTURES.pop(k)["tmp"], ignore_errors=True)
-        best = min(best, time_noop(build, 1)[0])
-    return round(best, 2)
+        (wall,), (cpu,) = time_noop(build, 1)
+        best = min(best, (wall, cpu))
+    return round(best[0], 2), round(best[1], 2)
 
 
 def main() -> None:
@@ -247,31 +244,25 @@ def main() -> None:
 
     out: dict[str, list[float]] = {}
     fam: dict[str, list[float]] = {}
-    foreign_total = 0.0
+    cpu_total = 0.0
     for name in names:
-        foreign_before = _foreign_cpu_samples()
         try:
             # min-of-2 on the small 1× side (discards residual compile
             # noise); single fresh run at K× where real work dominates
-            t1 = time_fresh(spark, src, name, runs=2)
-            tk = time_fresh(spark, base, name)
+            t1, _ = time_fresh(spark, src, name, runs=2)
+            tk, cpu = time_fresh(spark, base, name)
         except Exception as exc:  # keep the sweep going; report the failure
             out[name] = [str(exc)[:120]]  # type: ignore[list-item]
             continue
-        foreign = round(
-            _foreign_cpu_delta_jiffies(foreign_before, _foreign_cpu_samples())
-            / _CLK_TCK,
-            1,
-        )
-        foreign_total += foreign
+        cpu_total += cpu
         ratio = round(tk / t1, 2) if t1 > 0 else float("inf")
-        out[name] = [t1, tk, ratio, foreign]
+        out[name] = [t1, tk, ratio, cpu]
         f = families[name]
         fam.setdefault(f, [0.0, 0.0])
         fam[f][0] += t1
         fam[f][1] += tk
         print(
-            f"{name}: {t1} -> {tk}  ({ratio}x)  [foreign {foreign}s]",
+            f"{name}: {t1} -> {tk}  ({ratio}x)  [cpu {cpu}s]",
             file=sys.stderr,
             flush=True,
         )
@@ -285,7 +276,7 @@ def main() -> None:
                 "factor": factor,
                 "queries": out,
                 "families": rollup,
-                "foreign_cpu_sec": round(foreign_total, 1),
+                "cpu_sec": round(cpu_total, 1),
             }
         )
     )

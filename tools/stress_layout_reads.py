@@ -87,7 +87,7 @@ def main() -> None:
         out: dict[str, dict] = {}
         versions = dict(_LAYOUT_VERSIONS, zorder=_ZORDER_VERSION)
         for name, version, mk in reads(versions):
-            runs = time_noop(mk, 3)
+            runs, _ = time_noop(mk, 3)
             # file/row audit OUTSIDE the timing loop: one extra
             # execution total, not one per timed run (r12 review)
             df = mk()
