@@ -5,7 +5,7 @@ A from-scratch re-expression of the capabilities of the reference repo
 ELT pipeline; see SURVEY.md) as an idiomatic PySpark engine:
 
 - ``session``     — SparkSession builder (AQE on, UTC, tuned shuffle).
-- ``catalog``     — env/layer/table naming + testdata registration.
+- ``catalog``     — env/layer/table naming + testdata loading.
 - ``sources``     — parquet/csv readers (schema-on-read and enforced).
 - ``functions``   — scalar/column function library (haversine, decode,
                     text analysis, vector math) — all Catalyst-native
@@ -17,7 +17,8 @@ ELT pipeline; see SURVEY.md) as an idiomatic PySpark engine:
 - ``pipeline``    — dependency-ordered materialization runner (the dbt
                     DAG analogue).
 - ``plans``       — plan-inspection helpers (assert broadcast/pushdown).
-- ``streaming``   — Structured Streaming surface over the events table.
+- ``streaming``   — Structured Streaming surface over the events and
+                    documents feeds.
 
 Design notes (100 TB posture): every operator is expressed on the
 DataFrame/SQL API so Catalyst gets predicate pushdown, column pruning

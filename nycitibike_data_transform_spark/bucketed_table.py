@@ -81,6 +81,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from nycitibike_data_transform_spark.bucketing import write_bucketed
 from nycitibike_data_transform_spark.versioning import (
     VersionedTable,
     _stats_friendly_writes,
@@ -168,18 +169,17 @@ class BucketedIncrementalTable(VersionedTable):
         stage = f"{self._attempt_dir()}.{tag}"
         table = f"__bkt_stage_{os.getpid()}_{uuid.uuid4().hex[:8]}"
         spark.sql(f"DROP TABLE IF EXISTS `{table}`")
-        writer = (
-            df.repartition(self.num_buckets, *[F.col(c) for c in self.bucket_cols])
-            .write.format("parquet")
-            .mode("overwrite")
-            .bucketBy(self.num_buckets, self.bucket_cols[0], *self.bucket_cols[1:])
-            .sortBy(self.sort_cols[0], *self.sort_cols[1:])
-            .option("path", stage)
-        )
         with _stats_friendly_writes(spark):
             # MICROS timestamps (not stat-less INT96) so parquet
             # row-group skipping works on sorted time columns
-            writer.saveAsTable(table)
+            write_bucketed(
+                df,
+                table,
+                self.bucket_cols,
+                self.num_buckets,
+                sort_cols=self.sort_cols,
+                path=stage,
+            )
         spark.sql(f"DROP TABLE `{table}`")  # external: files stay
         # Enforce the one-file-per-bucket invariant the whole layout
         # rests on (ADVICE r9): the repartition above normally yields
@@ -440,57 +440,6 @@ class BucketedIncrementalTable(VersionedTable):
         cond = self._key_condition(vals)
         with self.bucket_pruned(spark):
             return spark.table(table).filter(cond).collect()
-
-    def point_lookup_df(self, spark: SparkSession, values,
-                        version: int | None = None) -> DataFrame:
-        """The COMPOSABLE point lookup (r11 VERDICT item #6): the same
-        O(|keys| buckets) pruned scan as :meth:`point_lookup`, returned
-        as a DataFrame safe to feed into joins/aggregations with the
-        pruning intact — no driver-side collect, no context-manager
-        footgun.
-
-        Why not the catalog route: ``autoBucketedScan`` is a PLANNER
-        flag read at action time, so a DataFrame built under
-        :meth:`bucket_pruned` silently loses its pruning when composed
-        into a larger plan executed outside the block. This variant
-        prunes at the FILE level instead — the snapshot keeps exactly
-        one file per bucket, so the keys' bucket ids name the files —
-        and a file list is part of the plan itself: no later
-        re-planning can widen it.
-
-        The keys' bucket ids come from Spark's OWN ``pmod(murmur3, n)``
-        over a 1-job LocalTableScan of the key values cast to the
-        table's exact key schema (hash semantics are type-sensitive:
-        an int and a long hash differently) — never a hand-rolled
-        re-implementation of Spark's hash. Bounded driver work:
-        ≤ |keys| local rows, no table I/O. The residual key filter
-        keeps the answer exact within the kept files."""
-        vals = list(values)
-        v = self.current_version() if version is None else version
-        if v is None:
-            raise ValueError(f"empty versioned table at {self.root}")
-        if not vals:
-            return self._pruned_scan(spark, v, [])
-        cond = self._key_condition(vals)
-        schema = StructType.fromJson(self.manifest(v)["schema"])
-        key_schema = StructType([schema[c] for c in self.bucket_cols])
-        rows = (
-            [(x,) for x in vals]
-            if len(self.bucket_cols) == 1
-            else [tuple(t) for t in vals]
-        )
-        ids = {
-            r["__b"]
-            for r in spark.createDataFrame(rows, key_schema)
-            .select(self._bucket_expr().alias("__b"))
-            .collect()
-        }
-        files = [
-            f
-            for f in self._parquet_files(self._data_dir(v))
-            if bucket_id_of_file(f) in ids
-        ]
-        return self._pruned_scan(spark, v, files).filter(cond)
 
     def register(self, spark: SparkSession, table: str) -> int:
         """(Re-)create catalog table ``table`` as an external bucketed

@@ -40,19 +40,21 @@ missed):
   pins SortMergeJoin with ``hint("merge")`` so the plan is the one a
   100 TB fact⋈fact join gets (where neither side broadcasts).
 
-Atomicity trade (explicit): ``saveAsTable(mode="overwrite")`` is a
-catalog drop-and-recreate, NOT an atomic pointer swap — a crash
-mid-refresh can leave the table absent until the next run. That is
-the same clobbering contract as the reference's ``CREATE OR REPLACE
-TABLE`` cadence; refreshes that need crash-safety and time travel use
-``versioning.VersionedTable`` instead (the two layouts are per-model
-alternatives in ``pipeline.Pipeline``, never combined — bucket
-metadata lives in the catalog, not the snapshot dir).
+Atomicity: ``saveAsTable(mode="overwrite")`` is a catalog
+drop-and-recreate, NOT an atomic pointer swap — a crash mid-write can
+leave the table absent. ``write_bucketed`` therefore has two callers
+only: the ``bucketed_join`` query's pid-scoped scratch tables, and the
+staging write of ``bucketed_table.BucketedIncrementalTable``, whose
+bucket files are then committed into a ``versioning.VersionedTable``
+snapshot (data, manifest, atomic pointer swap). Every ``bucket_by``
+pipeline model persists through that snapshot
+(``pipeline._materialize``), with its bucket spec in the manifest and
+the catalog entry re-created over the snapshot by ``register()``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -63,13 +65,12 @@ def write_bucketed(
     num_buckets: int,
     *,
     sort_cols: str | list[str] | None = None,
-    path: str | None = None,
-    mode: str = "overwrite",
+    path: str,
 ) -> None:
-    """Materialize ``df`` as a bucketed catalog table (one file per
-    bucket, sorted within buckets — see module docstring for why both
-    matter). ``path`` makes the table external (data at ``path``
-    instead of the session warehouse dir)."""
+    """Materialize ``df`` as an external bucketed catalog table whose
+    data lives at ``path``, replacing any previous contents (one file
+    per bucket, sorted within buckets — see module docstring for why
+    both matter)."""
     bucket_cols = [bucket_cols] if isinstance(bucket_cols, str) else list(bucket_cols)
     if sort_cols is None:
         sort_cols = bucket_cols
@@ -77,35 +78,15 @@ def write_bucketed(
     if num_buckets < 1:
         raise ValueError(f"num_buckets must be >= 1, got {num_buckets}")
 
-    writer = (
+    (
         df.repartition(num_buckets, *[F.col(c) for c in bucket_cols])
         .write.format("parquet")
-        .mode(mode)
+        .mode("overwrite")
         .bucketBy(num_buckets, bucket_cols[0], *bucket_cols[1:])
         .sortBy(sort_cols[0], *sort_cols[1:])
+        .option("path", path)
+        .saveAsTable(table)
     )
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
-
-
-def bucket_spec(spark: SparkSession, table: str) -> dict:
-    """Introspect a table's bucket layout from the catalog:
-    ``{"num_buckets": int, "bucket_cols": [...], "sort_cols": [...]}``
-    (``num_buckets`` 0 when the table is not bucketed). Callers use
-    this to keep new writes ratio-divisible with the existing layout."""
-    rows = spark.sql(f"DESCRIBE EXTENDED {table}").collect()
-    info = {r.col_name.strip(): (r.data_type or "").strip() for r in rows}
-
-    def _cols(v: str) -> list[str]:
-        body = v.strip().strip("[]")
-        return [c.strip().strip("`") for c in body.split(",") if c.strip()]
-
-    return {
-        "num_buckets": int(info.get("Num Buckets", "0") or 0),
-        "bucket_cols": _cols(info.get("Bucket Columns", "")),
-        "sort_cols": _cols(info.get("Sort Columns", "")),
-    }
 
 
 def colocated_join(

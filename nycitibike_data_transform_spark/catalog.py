@@ -1,4 +1,4 @@
-"""Catalog conventions + testdata registration.
+"""Catalog conventions + testdata loading.
 
 The reference encodes a 4-level medallion hierarchy in BigQuery dataset
 names — ``{ENV}_{LevelNumeral}_{LevelID}___{descriptor}`` (reference
@@ -7,8 +7,7 @@ environments CORE/DEV realized by dataset-name prefixes
 (``terraform/a2_config_second_apply/main.tf:239-255``).
 
 Spark mapping: a flat naming convention ``{env}_{layer}__{table}`` over
-catalog-registered tables, plus a directory convention for persisted
-layers ``{warehouse}/{env}/{layer}/{table}/``.
+catalog-registered tables.
 """
 
 from __future__ import annotations
@@ -54,10 +53,6 @@ def table_name(env: str, layer: str, table: str) -> str:
     if layer not in LAYERS:
         raise ValueError(f"unknown layer {layer!r}; expected one of {LAYERS}")
     return f"{env}_{layer}__{table.lower()}"
-
-
-def layer_path(warehouse: str, env: str, layer: str, table: str) -> str:
-    return f"{warehouse}/{env}/{layer}/{table}"
 
 
 # session confs that change what parquet schema inference returns
@@ -150,18 +145,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif kind == "timestamp_ntz":
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
     return df
-
-
-def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every driver-generated parquet table (TESTDATA.md) keyed
-    by table name."""
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
-def register_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every testdata table as a temp view (for the SQL API)
-    and return the DataFrames. Idempotent."""
-    dfs = load_testdata(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

@@ -40,7 +40,7 @@ def _mart_borough_daily(spark, stage_rides):  # noqa: ANN001 - pipeline signatur
     )
 
 
-def testdata_pipeline(sf_dir: str, warehouse_dir: str) -> Pipeline:
+def testdata_pipeline(sf_dir: str, warehouse_dir: str | None) -> Pipeline:
     """Configured DAG over the driver's testdata tables."""
     p = Pipeline(warehouse_dir=warehouse_dir)
     for table in ("lineitem", "nation", "region"):

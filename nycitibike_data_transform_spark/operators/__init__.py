@@ -6,7 +6,6 @@ from nycitibike_data_transform_spark.operators.bloom import (
 )
 from nycitibike_data_transform_spark.operators.conform import ConformSpec, conform, conform_union
 from nycitibike_data_transform_spark.operators.dedup import (
-    drop_exact_duplicates,
     embedding_near_dup_pairs,
     embedding_near_dup_probe,
     exact_dedup,
@@ -21,20 +20,13 @@ from nycitibike_data_transform_spark.operators.graph import (
 )
 from nycitibike_data_transform_spark.operators.joins import (
     as_of_join,
-    broadcast_dim_join,
     range_join,
-    salted_join,
 )
-from nycitibike_data_transform_spark.operators.multimodal import (
-    attach_payload,
-    decoder_for_mime,
-    extract_features,
-)
-from nycitibike_data_transform_spark.operators.diff import diff_summary, snapshot_diff
+from nycitibike_data_transform_spark.operators.multimodal import attach_payload
+from nycitibike_data_transform_spark.operators.diff import snapshot_diff
 from nycitibike_data_transform_spark.operators.packing import pack_sequences
 from nycitibike_data_transform_spark.operators.sampling import (
     hash_sample,
-    stratified_sample,
     train_test_split,
 )
 from nycitibike_data_transform_spark.operators.similarity import cosine_topk, cosine_topk_lsh
@@ -51,7 +43,6 @@ __all__ = [
     "conform",
     "conform_union",
     "exact_dedup",
-    "drop_exact_duplicates",
     "ngram_jaccard_pairs",
     "minhash_signatures",
     "minhash_candidate_pairs",
@@ -63,17 +54,11 @@ __all__ = [
     "connected_components",
     "cluster_assignments",
     "as_of_join",
-    "broadcast_dim_join",
     "range_join",
-    "salted_join",
     "attach_payload",
-    "decoder_for_mime",
     "pack_sequences",
     "snapshot_diff",
-    "diff_summary",
-    "extract_features",
     "hash_sample",
-    "stratified_sample",
     "train_test_split",
     "cosine_topk",
     "cosine_topk_lsh",

@@ -3,10 +3,8 @@
 Companion to ``operators/imaging.py`` (PNG): the container ships no
 soundfile/librosa, but canonical WAV (RIFF + PCM16, the interchange
 format every recorder emits) is a struct header plus an int16 sample
-block — implementable exactly with numpy. This upgrades the audio leg
-of the multimodal surface from "decode is a documented stub"
-(``multimodal.extract_features`` gates undeclared codecs) to "decode
-works on real bytes": 16-bit PCM, any channel count and sample rate,
+block — implementable exactly with numpy. Decode works on real
+bytes: 16-bit PCM, any channel count and sample rate,
 tolerant of extra RIFF chunks (LIST/fact); anything else (float PCM,
 ADPCM, truncated) raises ``WavError`` cleanly, never misparses.
 
@@ -114,16 +112,6 @@ def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
         raise WavError("data chunk not a whole number of frames")
     arr = np.frombuffer(pcm, dtype="<i2").reshape(-1, channels)
     return arr, sample_rate
-
-
-def resample_nearest(samples: np.ndarray, out_n: int) -> np.ndarray:
-    """Nearest-neighbor resample via pure indexing — the batch-side
-    rate-normalization step of a training-data audio pipeline (the
-    audio analogue of ``imaging.resize_nearest``)."""
-    a = np.asarray(samples)
-    n = a.shape[0]
-    idx = (np.arange(out_n) * n // out_n).clip(0, n - 1)
-    return a[idx]
 
 
 AUDIO_STATS_SCHEMA = T.StructType(

@@ -26,7 +26,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nycitibike_data_transform_spark.functions.text import (
-    normalize_text,
     text_fingerprint,
     token_array,
 )
@@ -49,28 +48,6 @@ def exact_dedup(
     )
 
 
-def drop_exact_duplicates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Keep only the min-id representative row of each duplicate group
-    (window-free: semi-join against the winners, preserving all source
-    columns without shuffling the full payload through a window).
-
-    Contentless documents (NULL or whitespace-only text) are NOT
-    deduplicated against each other — they all share one fingerprint
-    and naive grouping would silently delete every one but the first
-    even though they are not copies of anything. They pass through
-    unchanged; dropping them is a quality-filter decision, not a
-    dedup decision."""
-    norm_len = F.length(F.coalesce(normalize_text(F.col(text_col)), F.lit("")))
-    contentful = df.filter(norm_len > 0)
-    contentless = df.filter(norm_len == 0)
-    winners = exact_dedup(contentful, text_col, id_col).select(id_col)
-    return contentful.join(winners, id_col, "left_semi").unionByName(contentless)
-
-
 def dedup_by_url(
     df: DataFrame,
     url_col: str = "url",
@@ -87,8 +64,7 @@ def dedup_by_url(
 
     Rows whose URL cannot be canonicalized (no ``scheme://`` — NULL
     canonical form) are RETAINED as singletons with ``canonical_url``
-    NULL: an unparseable locator is not evidence of duplication, the
-    same conservatism as ``drop_exact_duplicates`` on contentless text.
+    NULL: an unparseable locator is not evidence of duplication.
 
     Output: one row per kept document —
     ``(id_col, canonical_url, group_size)``.
@@ -640,44 +616,21 @@ def flag_contaminated(
 
 # ----------------------------------------------------- embedding near-dup
 
-# method="auto" routes to the linear SRP tier at/above this cosine
-# threshold (theta <= 45 deg, where banding recall is near-1) and to the
-# exact-but-quadratic grid tier below it (with a ResourceWarning).
-AUTO_SRP_THRESHOLD = 0.7
-
-
 def embedding_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "auto",
+    method: str = "grid",
     blocks: int = 8,
-    srp_bits: int = 8,
-    srp_bands: int = 16,
 ) -> DataFrame:
     """Semantic near-duplicate pairs: cosine similarity over the
-    embedding column at/above ``threshold``. Three physical strategies,
-    all returning the same (id_a < id_b, cosine) schema:
+    embedding column at/above ``threshold``. Two exact physical
+    strategies, both returning the same (id_a < id_b, cosine) schema;
+    they are the references :func:`embedding_near_dup_probe` is tested
+    against:
 
-    NOTE: the default changed from exact ``grid`` to threshold-aware
-    ``auto`` in r3 — above cosine 0.7 existing callers now get the
-    near-1-but-approximate SRP tier; pass ``method="grid"`` explicitly
-    for exact results at any threshold (ADVICE r4).
-
-    ``method="auto"`` (default, VERDICT r2 item #7) is threshold-aware:
-    a high threshold (≥ ``AUTO_SRP_THRESHOLD`` = 0.7, i.e. θ ≤ 45°)
-    routes to the LINEAR ``srp`` tier, where banding recall is
-    engineered to be near-1 (miss prob (1-θ/π)^bits per band across
-    ``srp_bands`` bands); a low threshold falls back to the exact
-    ``grid`` tier with a ``ResourceWarning`` — exact semantic near-dup
-    at low thresholds is inherently O(n²) FLOPs (qualifying pairs sit
-    inside the random-cosine noise floor, so no sublinear blocking
-    scheme can separate them), and at true 100 TB corpus scale the
-    caller should raise the threshold or accept the quadratic cost
-    explicitly via ``method="grid"``.
-
-    - ``method="grid"``: exact answer via a fragment-
+    - ``method="grid"`` (default): exact answer via a fragment-
       replicate block join (Okcan & Riedewald's 1-bucket theta-join,
       SIGMOD'11). Rows land in block pmod(xxhash64(id), B); the left
       side replicates a block-β row to keys (β, β..B-1), the right to
@@ -687,36 +640,11 @@ def embedding_near_dup_pairs(
       wall. The O(n²) dot products are unavoidable for an exact answer
       but are spread EVENLY over B(B+1)/2 reducers (pick B ≈ √(2·
       target parallelism)); communication is O(n·B) rows, not O(n²).
-    - ``method="srp"``: SRP-LSH banding (equi-join on (band, bucket))
-      + exact re-rank on candidates. Linear, but recall < 1 near the
-      decision boundary: a pair at angle θ survives a bits-wide band
-      w.p. (1-θ/π)^bits. Use when the threshold is high (θ small).
-      On THIS corpus the measured qualifying pairs sit at cosine
-      0.45-0.51 (θ≈60°, the random-cosine tail at dim 64) where SRP
-      cannot separate signal from noise — which is exactly why the
-      exact grid tier, not SRP, is the default here.
     - ``method="broadcast"``: the r1 all-pairs broadcast-NLJ — only
       sane when one side fits in executor memory; kept as the
       small-data verification tier.
     """
     from nycitibike_data_transform_spark.functions.vectors import dot_product, l2_norm
-
-    if method == "auto":
-        if threshold >= AUTO_SRP_THRESHOLD:
-            method = "srp"
-        else:
-            import warnings
-
-            warnings.warn(
-                f"embedding_near_dup_pairs: threshold {threshold} < "
-                f"{AUTO_SRP_THRESHOLD} forces the EXACT grid tier — "
-                "O(n²) dot products (spread evenly, but still quadratic "
-                "FLOPs). At large corpus scale raise the threshold into "
-                "SRP territory or opt in with method='grid'.",
-                ResourceWarning,
-                stacklevel=2,
-            )
-            method = "grid"
 
     denom = F.col("na") * F.col("nb")
     cosine = F.when(denom == 0, F.lit(None).cast("double")).otherwise(
@@ -767,37 +695,9 @@ def embedding_near_dup_pairs(
                 "cosine",
             )
         )
-    if method == "srp":
-        from nycitibike_data_transform_spark.operators.similarity import _banded_buckets
-
-        dim_row = embeddings.select(F.size(vec_col)).first()
-        if dim_row is None:  # empty corpus: no pairs, schema-correct
-            id_type = embeddings.schema[id_col].dataType.simpleString()
-            return embeddings.sparkSession.createDataFrame(
-                [], f"id_a {id_type}, id_b {id_type}, cosine double"
-            )
-        dim = dim_row[0]
-        cb = _banded_buckets(embeddings, "id_a", dim, srp_bits, srp_bands, id_col, vec_col)
-        qb = _banded_buckets(embeddings, "id_b", dim, srp_bits, srp_bands, id_col, vec_col)
-        cand = (
-            cb.join(qb, ["band", "bucket"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select(
-                "id_a",
-                F.col("id_a_vec").alias("vec_a"),
-                "id_b",
-                F.col("id_b_vec").alias("vec_b"),
-            )
-            .dropDuplicates(["id_a", "id_b"])
-            .withColumn("na", l2_norm("vec_a"))
-            .withColumn("nb", l2_norm("vec_b"))
-        )
-        return cand.select("id_a", "id_b", cosine.alias("cosine")).filter(
-            F.col("cosine") >= threshold
-        )
     if method != "broadcast":
         raise ValueError(
-            f"unknown method: {method!r} (expected 'grid', 'srp', or 'broadcast')"
+            f"unknown method: {method!r} (expected 'grid' or 'broadcast')"
         )
     a = embeddings.select(
         F.col(id_col).alias("id_a"),

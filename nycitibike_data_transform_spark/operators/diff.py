@@ -77,17 +77,3 @@ def snapshot_diff(
         *[F.coalesce(F.col(k), F.col(f"__n_{k}")).alias(k) for k in keys],
         status.alias("status"),
     )
-
-
-def diff_summary(
-    old: DataFrame,
-    new: DataFrame,
-    key: str | list[str],
-) -> DataFrame:
-    """``(status, n_rows)`` rollup of ``snapshot_diff`` — the one-line
-    regression signal ("this refresh changed 0.01%, ship it")."""
-    return (
-        snapshot_diff(old, new, key)
-        .groupBy("status")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-    )

@@ -180,15 +180,6 @@ def decode_png(data: bytes) -> np.ndarray:
     return img
 
 
-def resize_nearest(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Nearest-neighbor resize via pure indexing — the batch-side
-    normalization step of a training-data image pipeline."""
-    h, w = img.shape[:2]
-    ys = (np.arange(out_h) * h // out_h).clip(0, h - 1)
-    xs = (np.arange(out_w) * w // out_w).clip(0, w - 1)
-    return img[ys][:, xs]
-
-
 IMAGE_STATS_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),

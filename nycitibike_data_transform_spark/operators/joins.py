@@ -1,8 +1,6 @@
 """Join operators beyond plain equi-joins (SURVEY.md §2.4 J4 — absent
 in the reference, required for a complete query surface).
 
-- ``broadcast_dim_join``: the reference's fact→dim enrichment pattern
-  with the broadcast pinned (J1/J2).
 - ``as_of_join``: most-recent-match join (time-series enrichment).
   Spark has no native ASOF; this is the union + ordered-window
   formulation: one shuffle on (key), no per-group Python. Equivalent
@@ -16,19 +14,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def broadcast_dim_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    fact_key: str,
-    dim_key: str,
-    how: str = "left",
-) -> DataFrame:
-    """Fact→dimension enrichment with an explicit broadcast pin
-    (reference ``AUX_TLC_RIDES.sql:72-75``; BigQuery did this choice
-    invisibly, we make it deterministic)."""
-    return fact.join(F.broadcast(dim), fact[fact_key] == dim[dim_key], how)
 
 
 def as_of_join(
@@ -102,45 +87,6 @@ def as_of_join(
             for v in right_values
         ],
     )
-
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    fact_key: str,
-    dim_key: str,
-    salt: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-resistant equi-join: the fact side gets a deterministic
-    per-row salt in [0, salt), the dim side is replicated ×salt, and
-    the join runs on (key, salt) — a hot key's rows spread over
-    ``salt`` reducers instead of one.
-
-    Use when a shuffle join has a pathological hot key and the dim is
-    too big to broadcast (otherwise broadcast and salting are both
-    unnecessary); AQE's skew-join handles moderate skew automatically,
-    salting is the explicit big hammer. The salt is a content hash of
-    the full fact row, so salt assignment (and therefore partitioning)
-    is stable across re-runs and task retries — unlike a
-    monotonically_increasing_id discriminator, which depends on
-    partition layout. Caveat: byte-identical duplicate rows share a
-    salt; if the hot key's rows are mostly full duplicates, pass a
-    distinct id column as part of the row or dedupe first.
-    """
-    if salt < 1:
-        raise ValueError(f"salt must be >= 1, got {salt}")
-    salted_fact = fact.withColumn(
-        "__salt",
-        F.pmod(F.xxhash64(*[F.col(c) for c in fact.columns]), F.lit(salt)).cast("int"),
-    )
-    replicated_dim = dim.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
-    )
-    cond = (salted_fact[fact_key] == replicated_dim[dim_key]) & (
-        salted_fact["__salt"] == replicated_dim["__salt"]
-    )
-    return salted_fact.join(replicated_dim, cond, how).drop("__salt")
 
 
 def range_join(

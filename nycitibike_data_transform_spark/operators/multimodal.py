@@ -6,23 +6,15 @@ takes toward its WKB ``geometry: binary`` column (reference
 ``ref/2_DIM___AUX_NYC|nyc_nta_zones.parquet``, SURVEY.md §2.1 S6):
 store, move, and partition the bytes; decode only at the edge.
 
-Decode status: image, audio, and video decode are all REAL —
+The codecs live in their own modules:
 ``operators/imaging.py`` (pure-numpy PNG: zlib + scanline filters),
-``operators/audio.py`` (RIFF/WAV PCM16), and ``operators/video.py``
+``operators/audio.py`` (RIFF/WAV PCM16) and ``operators/video.py``
 (length-prefixed frame container, stride sampling), each driven
 end-to-end by its own driver query (``image_pipeline``,
-``audio_pipeline``, ``video_frames``). ``decoder_for_mime`` maps the
-payload's declared mime to the matching feature decoder for
-``extract_features``; codecs this container genuinely lacks (JPEG,
-MP3, H.264) stay gated — ``extract_features`` raises
-NotImplementedError at plan-build time unless handed a decoder. The
-Spark-side plumbing — schema, Arrow batch shape, ``mapInPandas``
-signature, partition behavior — is identical for every codec.
+``audio_pipeline``, ``video_frames``).
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -34,14 +26,6 @@ MEDIA_META_SCHEMA = T.StructType(
         T.StructField("mime", T.StringType(), False),
         T.StructField("n_bytes", T.LongType(), False),
         T.StructField("checksum_md5", T.StringType(), False),
-    ]
-)
-
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("n_bytes", T.LongType(), False),
-        T.StructField("feature", T.ArrayType(T.DoubleType()), True),
     ]
 )
 
@@ -59,117 +43,3 @@ def attach_payload(df: DataFrame, text_col: str = "text", mime: str = "text/plai
             F.md5(payload).alias("checksum_md5"),
         ),
     )
-
-
-def fake_decoder(payload: bytes) -> list[float]:
-    """Deterministic stand-in for an image/audio decoder: 4 cheap byte
-    statistics. Real deployments swap in PIL/libsndfile here."""
-    if not payload:
-        return [0.0, 0.0, 0.0, 0.0]
-    total = sum(payload)
-    return [
-        float(len(payload)),
-        float(payload[0]),
-        float(payload[-1]),
-        float(total % 997),
-    ]
-
-
-def png_feature_decoder(payload: bytes) -> list[float]:
-    """REAL image features: (width, height, channels, per-channel
-    means padded to 3) from the pure-numpy PNG codec."""
-    from nycitibike_data_transform_spark.operators.imaging import decode_png
-
-    img = decode_png(payload)
-    h, w, c = img.shape
-    means = img.reshape(-1, c).mean(axis=0)
-    m = [float(means[i]) if c > i else float(means[0]) for i in range(3)]
-    return [float(w), float(h), float(c), *m]
-
-
-def wav_feature_decoder(payload: bytes) -> list[float]:
-    """REAL audio features: (rate, channels, frames, duration, RMS,
-    peak, zero-crossings) from the RIFF/WAV PCM16 codec — the same
-    definitions ``decode_audio_batch`` documents."""
-    import numpy as np
-
-    from nycitibike_data_transform_spark.operators.audio import decode_wav
-
-    arr, rate = decode_wav(payload)
-    n, ch = arr.shape
-    x = arr.astype(np.int64)
-    rms = float(np.sqrt(int((x * x).sum()) / (n * ch))) if n else 0.0
-    ch0 = x[:, 0]
-    zc = float(np.count_nonzero(ch0[1:] * ch0[:-1] < 0)) if n else 0.0
-    peak = float(np.abs(x).max()) if n else 0.0
-    return [float(rate), float(ch), float(n), n / rate if rate else 0.0, rms, peak, zc]
-
-
-def frames_feature_decoder(payload: bytes) -> list[float]:
-    """REAL video features: (n_frames, first-frame width/height/mean
-    channels) — container walk + one seek-decode of frame 0."""
-    from nycitibike_data_transform_spark.operators.video import iter_frame_spans
-
-    spans = iter_frame_spans(payload)
-    if not spans:
-        return [0.0, 0.0, 0.0, 0.0, 0.0, 0.0]
-    off, length = spans[0]
-    return [float(len(spans)), *png_feature_decoder(payload[off : off + length])[:5]]
-
-
-#: declared-codec registry: payloads whose metadata mime is listed
-#: here decode with a REAL codec; anything else must come with an
-#: explicit decoder or fails at plan build (the gate below).
-MIME_DECODERS: dict[str, Callable[[bytes], list[float]]] = {
-    "image/png": png_feature_decoder,
-    "audio/wav": wav_feature_decoder,
-    "audio/x-wav": wav_feature_decoder,
-    "video/x-frames": frames_feature_decoder,
-}
-
-
-def decoder_for_mime(mime: str) -> Callable[[bytes], list[float]] | None:
-    """The registered real decoder for a declared mime, or None (the
-    caller then hits ``extract_features``'s plan-build gate — exactly
-    the undeclared-codec failure mode the contract requires)."""
-    return MIME_DECODERS.get(mime)
-
-
-def extract_features(
-    df: DataFrame,
-    decoder: Callable[[bytes], list[float]] | None = None,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    batch_size_hint: int = 1024,
-) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads via
-    ``mapInPandas`` — the decode runs per partition, batch-at-a-time,
-    so executor memory holds one Arrow batch of payloads, never the
-    whole partition's media.
-
-    Without a decoder this raises NotImplementedError at plan-build
-    time (image/audio libs are not in this container — clearly-marked
-    stub per the build contract).
-    """
-    if decoder is None:
-        raise NotImplementedError(
-            "no media decoder available in this environment; pass decoder= "
-            "(tests use multimodal.fake_decoder)"
-        )
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "n_bytes": pdf[payload_col].map(lambda b: len(b) if b is not None else 0),
-                    "feature": pdf[payload_col].map(
-                        lambda b: decoder(bytes(b)) if b is not None else None
-                    ),
-                }
-            )
-            yield out
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema=FEATURE_SCHEMA)

@@ -77,24 +77,6 @@ def weighted_sample(
     ).drop("__k")
 
 
-def stratified_sample(
-    df: DataFrame, strata_col: str, fractions: dict[object, float], id_col: str, seed: int = 0
-) -> DataFrame:
-    """Per-stratum hash sampling (deterministic ``sampleBy``): e.g.
-    downsample the dominant language while keeping the long tail.
-    Strata absent from ``fractions`` are dropped (explicit is safer
-    than silently keeping 100%)."""
-    for k, f in fractions.items():
-        if not 0.0 <= f <= 1.0:
-            raise ValueError(f"fraction for stratum {k!r} must be in [0,1], got {f}")
-    bucket = F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(1_000_000))
-    cond = None
-    for k, f in fractions.items():
-        piece = (F.col(strata_col) == F.lit(k)) & (bucket < int(f * 1_000_000))
-        cond = piece if cond is None else cond | piece
-    return df.filter(cond if cond is not None else F.lit(False))
-
-
 def unimax_allocation(
     strata: DataFrame,
     group_cols: list[str],

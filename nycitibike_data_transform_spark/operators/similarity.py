@@ -164,27 +164,6 @@ def _projection_vectors(dim: int, bits: int, seed: int = 7) -> list[list[float]]
     return planes
 
 
-def srp_bucket(
-    df: DataFrame, vec_col: str, dim: int, bits: int = 12, seed: int = 7
-) -> DataFrame:
-    """Append a sign-random-projection bucket id (int in [0, 2^bits))."""
-    planes = _projection_vectors(dim, bits, seed)
-    bucket = None
-    for i, plane in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(
-                F.col(vec_col).cast("array<double>"),
-                F.array(*[F.lit(v) for v in plane]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bit = F.when(dot >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
-    return df.withColumn("bucket", bucket.cast("int"))
-
-
 def _banded_buckets(
     df: DataFrame, out_id: str, dim: int, bits: int, bands: int, id_col: str, vec_col: str
 ) -> DataFrame:

@@ -3,9 +3,7 @@
 AQE's skew-join split handles most hot-key cases at runtime, but it
 only fires on sort-merge joins whose partition-size stats cross its
 thresholds, and it can't help when a single KEY (not partition) is
-hot enough that one reducer still drowns. Complements
-``operators.joins.salted_join`` (the spread-everything hammer) with
-the surgical tools:
+hot enough that one reducer still drowns. Two surgical tools:
 
 - ``hot_keys``: find keys whose row count exceeds a threshold — the
   diagnostic that decides whether skew handling is needed at all.
@@ -15,7 +13,7 @@ the surgical tools:
   normal shuffled join; results union. Row-identical to the single
   join (pinned by tests), but no reducer ever receives a hot key's
   full row set, and replication cost is paid only for the hot slice —
-  unlike full salting, which replicates the whole small side.
+  unlike salting the join key, which replicates the whole small side.
 """
 
 from __future__ import annotations

@@ -199,74 +199,6 @@ def _materialize(
     return table.read_current(spark).select(*df.columns)
 
 
-def scd2_apply(
-    dim: DataFrame | None,
-    updates: DataFrame,
-    keys: list[str],
-    ts_col: str,
-    end_col: str = "valid_to",
-    start_col: str = "valid_from",
-    current_col: str = "is_current",
-) -> DataFrame:
-    """Slowly-changing-dimension type 2 merge, emulated without a table
-    format (Delta's MERGE would be the managed path; the jars aren't in
-    this environment):
-
-    - ``dim`` rows whose key has an update get their open interval
-      closed at the batch's FIRST update timestamp for that key;
-    - the batch's updates for one key CHAIN: each closes at the next
-      update's timestamp, only the latest stays current — a batch
-      carrying several versions of a key yields a correct interval
-      history, never multiple simultaneously-open rows;
-    - an update whose ``(key, ts)`` already exists in ``dim`` as a
-      row's ``start_col`` is skipped, so re-running the same batch
-      (retry after a failed downstream write) is a no-op — true
-      idempotence, not the caller-beware caveat it used to be.
-
-    ``dim=None`` bootstraps from updates alone (chained). Shuffle:
-    each side hashes once on the key; the within-batch chaining is a
-    lag/lead window over the (tiny) update batch.
-    """
-    if not keys:
-        raise ValueError("scd2_apply needs at least one key column")
-    from pyspark.sql import Window
-
-    if dim is not None:
-        # idempotence: drop updates already applied (their (key, ts)
-        # is some dim row's start) — a re-run becomes a no-op
-        seen = dim.select(*keys, F.col(start_col).alias(ts_col))
-        updates = updates.join(seen, [*keys, ts_col], "left_anti")
-
-    w_chain = Window.partitionBy(*keys).orderBy(ts_col)
-    nxt = F.lead(ts_col).over(w_chain)
-    new_rows = (
-        updates.withColumn(start_col, F.col(ts_col))
-        .withColumn(end_col, nxt.cast("timestamp"))
-        .withColumn(current_col, nxt.isNull())
-        .drop(ts_col)
-    )
-    if dim is None:
-        return new_rows
-    first_update = updates.groupBy(*keys).agg(F.min(ts_col).alias("__new_start"))
-    closed = (
-        dim.join(first_update, keys, "left")
-        .withColumn(
-            end_col,
-            F.when(
-                F.col(current_col) & F.col("__new_start").isNotNull(), F.col("__new_start")
-            ).otherwise(F.col(end_col)),
-        )
-        .withColumn(
-            current_col,
-            F.when(F.col("__new_start").isNotNull(), F.lit(False)).otherwise(
-                F.col(current_col)
-            ),
-        )
-        .drop("__new_start")
-    )
-    return closed.unionByName(new_rows)
-
-
 @dataclass(frozen=True)
 class Model:
     name: str
@@ -388,19 +320,17 @@ class Pipeline:
     def run(
         self,
         spark: SparkSession,
-        materialize: bool = True,
         versioned: bool = True,
         keep_versions: int | None = None,
     ) -> dict[str, DataFrame]:
-        """Build every model in topo order; optionally persist each as
-        a committed snapshot (see :func:`_materialize`). Returns
-        name -> DataFrame.
+        """Build every model in topo order; with a ``warehouse_dir``,
+        persist each as a committed snapshot (see :func:`_materialize`).
+        Returns name -> DataFrame.
 
         Incremental models (``incremental_keys``/``watermark_col``)
-        merge into their materialized target; with
-        ``materialize=False`` (or no ``warehouse_dir``) there is no
-        target to merge into, so they behave as plain full builds for
-        that run — ephemeral runs carry no incremental state.
+        merge into their materialized target; with no ``warehouse_dir``
+        there is no target to merge into, so they behave as plain full
+        builds for that run — ephemeral runs carry no incremental state.
 
         ``keep_versions`` bounds snapshot retention (vacuum after each
         commit) — on the reference's 4-hourly cadence an unbounded
@@ -432,7 +362,7 @@ class Pipeline:
             model = self.models[name]
             inputs = {d: resolve(d) for d in model.deps}
             df = model.build(spark, **inputs)
-            if materialize and self.warehouse_dir:
+            if self.warehouse_dir:
                 df = _materialize(
                     spark, model, df, f"{self.warehouse_dir}/{name}", keep_versions
                 )

@@ -23,7 +23,6 @@ from nycitibike_data_transform_spark.functions.text import (
 )
 from nycitibike_data_transform_spark.functions.vectors import l2_norm
 from nycitibike_data_transform_spark.operators.dedup import (
-    embedding_near_dup_pairs,
     embedding_near_dup_probe,
     exact_dedup,
     hamming_distance64,
@@ -1027,8 +1026,7 @@ def _q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     same bounded-sample pattern as ``quantized_topk``. Restricted to
     probe-touching pairs the values are bit-identical to the
     full-grid tier (``embedding_near_dup_pairs(method="grid")``,
-    still available for exhaustive opt-in audits); the SRP-banded
-    variant remains the production scale path."""
+    the exhaustive reference the probe is tested against)."""
     t = load(spark, sf_dir, "embeddings")
     emb = t["embeddings"]
     probe = emb.filter(F.col("vec_id") < _NEAR_DUP_PROBES)
@@ -3408,10 +3406,9 @@ def _q_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     item #1): the rule is certified for the probe subset (vec_id <
     300) against the FULL corpus — each probe id's verdict is exactly
     what the full-corpus dedup would decide for it, at O(|probe|·n)
-    cost. At corpus scale the production path generates candidates
-    through SRP banding (``embedding_near_dup_pairs(method="auto")``)
-    and the anti-join is unchanged; the exhaustive exact run stays an
-    explicit ``method="grid"`` opt-in."""
+    cost. The exhaustive exact run is
+    ``embedding_near_dup_pairs(method="grid")`` feeding the same
+    anti-join."""
     t = load(spark, sf_dir, "embeddings")
     emb = t["embeddings"]
     probe = emb.filter(F.col("vec_id") < _NEAR_DUP_PROBES)

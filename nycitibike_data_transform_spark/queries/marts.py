@@ -47,10 +47,6 @@ def _dec(c: str, scale: str = "decimal(18,2)") -> Column:
     return F.col(c).cast(scale)
 
 
-def _rate(c: str) -> Column:
-    return F.col(c).cast("decimal(4,2)")
-
-
 # ------------------------------------------------------- TPC-H Q1 style agg
 
 def _q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -12,26 +12,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: evictions — all columns arrive as strings (dict
-#: ``ref/1_SRC___AUX_NYC_LEGAL|dict_nyc_evictions.csv``); dates parsed here.
-EVICTIONS_RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("Court Index Number", T.StringType(), True),
-        T.StructField("Docket Number", T.StringType(), True),
-        T.StructField("Eviction Address", T.StringType(), True),
-        T.StructField("Eviction Apartment Number", T.StringType(), True),
-        T.StructField("Executed Date", T.StringType(), True),
-        T.StructField("Marshal First Name", T.StringType(), True),
-        T.StructField("Marshal Last Name", T.StringType(), True),
-        T.StructField("Residential/Commercial", T.StringType(), True),
-        T.StructField("Borough", T.StringType(), True),
-        T.StructField("Eviction Zip", T.StringType(), True),
-        T.StructField("Latitude", T.StringType(), True),
-        T.StructField("Longitude", T.StringType(), True),
-        T.StructField("NTA", T.StringType(), True),
-    ]
-)
-
 #: restaurant inspections (dict
 #: ``ref/1_SRC___AUX_NYC_RESTAURANT|dict_nyc_restaurant_inspections.csv``).
 INSPECTIONS_RAW_SCHEMA = T.StructType(
@@ -61,18 +41,6 @@ def _snake(name: str) -> str:
     )
 
 
-def read_evictions(spark: SparkSession, path: str) -> DataFrame:
-    """Typed evictions source: snake_case names, MM/DD/YYYY string
-    dates → DateType, string coordinates → double."""
-    raw = spark.read.csv(path, header=True, schema=EVICTIONS_RAW_SCHEMA)
-    df = raw.select(*[F.col(f"`{f.name}`").alias(_snake(f.name)) for f in raw.schema.fields])
-    return (
-        df.withColumn("executed_date", F.to_date("executed_date", "M/d/yyyy"))
-        .withColumn("latitude", F.col("latitude").cast("double"))
-        .withColumn("longitude", F.col("longitude").cast("double"))
-    )
-
-
 def read_inspections(spark: SparkSession, path: str) -> DataFrame:
     """Typed restaurant inspections: snake_case, date parsing, grade
     domain preserved (A/B/C/P/Z/N per the data dictionary)."""
@@ -81,10 +49,3 @@ def read_inspections(spark: SparkSession, path: str) -> DataFrame:
     return df.withColumn("inspection_date", F.to_date("inspection_date", "M/d/yyyy")).withColumn(
         "grade_date", F.to_date("grade_date", "M/d/yyyy")
     )
-
-
-def enrich_with_nta(df: DataFrame, nta_dim: DataFrame, nta_col: str = "nta") -> DataFrame:
-    """Join-to-NTA enrichment, mirroring the zone-join pattern (the
-    geo dim is broadcast; reference ``ref/2_DIM___AUX_NYC|nyc_nta_zones.parquet``
-    is 2,327 rows — broadcast-trivial at any scale)."""
-    return df.join(F.broadcast(nta_dim), df[nta_col] == nta_dim["nta_code"], "left")

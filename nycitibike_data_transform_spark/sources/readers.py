@@ -64,57 +64,3 @@ def read_csv_seed(
 ) -> DataFrame:
     """Load a seed CSV with a declared schema (dbt seed analogue)."""
     return spark.read.csv(path, header=header, schema=schema, mode="FAILFAST")
-
-
-#: The documents table's schema when delivered as JSONL (the standard
-#: LLM-corpus interchange format — one JSON object per line). Not in
-#: the reference (no text surface); north-star addition.
-DOCUMENTS_JSONL_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ]
-)
-
-
-def read_jsonl_documents(
-    spark: SparkSession,
-    path: str | list[str],
-    strict: bool = False,
-) -> DataFrame:
-    """Read an LLM document corpus from JSONL (gzip handled natively).
-
-    Declared schema — never ``inferSchema`` in a pipeline (a second
-    full pass over 100 TB and nondeterministic types). By default
-    malformed lines land in a ``_corrupt_record`` column (PERMISSIVE)
-    so a few bad lines in a petabyte crawl don't kill the job and the
-    caller can count/quarantine them; ``strict=True`` switches to
-    FAILFAST for ingest paths that must stop on corruption.
-
-    Caveat: Spark refuses a query whose only referenced column is the
-    internal corrupt-record column straight off a raw JSON scan —
-    ``cache()`` the frame (or persist it to parquet) before filtering
-    on ``_corrupt_record`` alone.
-    """
-    mode = "FAILFAST" if strict else "PERMISSIVE"
-    schema = DOCUMENTS_JSONL_SCHEMA
-    if not strict:
-        schema = T.StructType(
-            [*schema.fields, T.StructField("_corrupt_record", T.StringType(), True)]
-        )
-    # pass the list itself — *unpacking* would send the second path
-    # into DataFrameReader.json's schema parameter
-    paths = path if isinstance(path, list) else [path]
-    return spark.read.schema(schema).option("mode", mode).json(paths)
-
-
-def write_jsonl_documents(df: DataFrame, path: str, shards: int | None = None) -> None:
-    """Write a corpus as JSONL (one object per line), optionally
-    repartitioned to a fixed shard count — pair with
-    ``shard_manifest``'s deterministic md5 routing for stable export
-    layouts."""
-    out = df.repartition(shards) if shards else df
-    out.write.mode("overwrite").json(path)

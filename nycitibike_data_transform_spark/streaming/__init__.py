@@ -1,19 +1,7 @@
-"""Structured Streaming surface over the events table."""
+"""Structured Streaming surface over the events and documents feeds."""
 
-from nycitibike_data_transform_spark.streaming.events import (
-    click_purchase_join_stream,
-    dedup_stream,
-    enriched_events_stream,
-    hourly_counts_stream,
-    sliding_counts_stream,
-    read_events_stream,
-    run_stream_to_memory,
-    sessionize_stream,
-    write_stream_exactly_once,
-)
+from nycitibike_data_transform_spark.streaming.events import read_events_stream
 from nycitibike_data_transform_spark.streaming.documents import (
-    document_dedup_stream,
-    quality_filter_stream,
     read_documents_stream,
     source_counts_stream,
 )
@@ -27,17 +15,7 @@ __all__ = [
     "apply_upsert_batch",
     "upsert_stream_to_table",
     "read_events_stream",
-    "enriched_events_stream",
-    "hourly_counts_stream",
-    "sliding_counts_stream",
-    "sessionize_stream",
-    "dedup_stream",
-    "click_purchase_join_stream",
     "running_user_totals",
     "read_documents_stream",
-    "document_dedup_stream",
-    "quality_filter_stream",
     "source_counts_stream",
-    "run_stream_to_memory",
-    "write_stream_exactly_once",
 ]

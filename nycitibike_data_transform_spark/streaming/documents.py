@@ -1,17 +1,16 @@
 """Streaming ingestion for the LLM-data surface.
 
-The batch llmdata queries (quality filter, text stats, mixing report)
-are all expression-level transforms or aggregations, so the same
-Column logic runs unchanged on a stream — this module is the wiring
-that proves it: a parquet-directory document feed (production: Kafka /
-autoloader), the Gopher-rule filter applied per micro-batch
-(stateless — infinite corpus, zero state), and the source-mix counts
-as a streaming aggregation (state = one row per (source, lang),
-bounded by the domain, not the corpus).
+The batch llmdata aggregations are Column expressions, so the same
+logic runs unchanged on a stream — this module is the wiring: a
+parquet-directory document feed (production: Kafka / autoloader) and
+the source-mix counts as a streaming aggregation (state = one row per
+(source, lang), bounded by the domain, not the corpus).
 
-Parity with the batch queries is pinned by tests/test_streaming.py;
-streaming output is not DuckDB-oracle-comparable (the driver contract
-is batch).
+Parity with the batch aggregation is pinned by tests/test_streaming.py
+and by the registry query ``streaming_source_mix``, which streams a
+staged multi-file copy of the feed through ``source_counts_stream``;
+streaming output itself is not DuckDB-oracle-comparable (the driver
+contract is batch).
 """
 
 from __future__ import annotations
@@ -49,40 +48,6 @@ def read_documents_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.parquet(sf_dir)
-
-
-def quality_filter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The batch ``quality_filter`` verdict columns on a stream —
-    stateless (pure projection), so it scales to an unbounded feed
-    with zero streaming state."""
-    from nycitibike_data_transform_spark.queries.llmdata import (
-        quality_filter_columns,
-    )
-
-    docs = read_documents_stream(spark, sf_dir)
-    return docs.select("doc_id", *quality_filter_columns())
-
-
-def document_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming exact dedup of the document feed: the same
-    normalized-text md5 fingerprint the batch ``dedup_exact`` query
-    keys on, deduplicated with ``dropDuplicatesWithinWatermark`` over
-    an ingest-time watermark — a replayed or double-delivered document
-    inside the 10-minute horizon is emitted once. State is bounded by
-    the horizon (fingerprints seen in the last 10 minutes), not the
-    corpus, which is what makes exact dedup viable on an unbounded
-    feed; a full-history dedup belongs to the batch path."""
-    from nycitibike_data_transform_spark.functions.text import normalize_text
-
-    docs = read_documents_stream(spark, sf_dir)
-    fingerprint = F.md5(F.coalesce(normalize_text(F.col("text")), F.lit("")))
-    return (
-        docs.withColumn("fingerprint", fingerprint)
-        .withColumn("ingest_ts", F.current_timestamp())
-        .withWatermark("ingest_ts", "10 minutes")
-        .dropDuplicatesWithinWatermark(["fingerprint"])
-        .drop("ingest_ts")
-    )
 
 
 def source_counts_stream(

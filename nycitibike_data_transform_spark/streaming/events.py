@@ -1,21 +1,20 @@
-"""Streaming analogues of the batch event queries.
+"""The events feed as a Structured Streaming source.
 
 The reference has NO streaming path — its freshness model is a 4-hour
 full re-run on Cloud Scheduler (reference
 ``terraform/a2_config_second_apply/main.tf:196-216``; SURVEY.md §2.7).
-This module is the capability *upgrade* the Spark target makes
-natural: the same event logic as ``queries/events.py``, expressed as
-Structured Streaming with watermarks, so a deployment can replace the
-4-hour re-run with incremental micro-batches (or ``availableNow`` for
-the same scheduled-batch cadence with incremental state).
+``read_events_stream`` is the capability *upgrade* the Spark target
+makes natural: the batch events table read as a stream, so a
+deployment can replace the 4-hour re-run with incremental
+micro-batches (or ``availableNow`` for the same scheduled-batch
+cadence with incremental state).
 
-Windowed streaming OUTPUT STREAMS are not DuckDB-oracle-comparable
-(the driver contract is batch); their parity with the batch queries
-is pinned by tests/test_streaming.py. The one exception is the
-MATERIALIZED upsert view: its converged table is a plain batch
-relation, so the registry query ``streaming_upsert_view`` runs the
-real availableNow stream and certifies the result against the
-``dedup_latest`` DuckDB oracle (r8).
+Streaming output is not DuckDB-oracle-comparable (the driver contract
+is batch), so the registry certifies the stream through its converged
+batch results: ``streaming_upsert_view`` runs the real availableNow
+upsert stream (``streaming/upsert.py``) against the ``dedup_latest``
+oracle, and ``streaming_user_totals`` runs the stateful running totals
+(``streaming/stateful.py``).
 """
 
 from __future__ import annotations
@@ -88,181 +87,3 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     if ts_is_nanos:
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def hourly_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour windowed counts per event type with a 2-hour
-    watermark (late data beyond that is dropped — state stays bounded,
-    the property that matters on an unbounded stream)."""
-    events = read_events_stream(spark, sf_dir)
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("hour"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def sliding_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SLIDING 1-hour windows advancing every 15 minutes — the
-    trending-metrics shape (each event lands in 4 overlapping
-    windows). Completes the window-type matrix next to tumbling
-    (hourly_counts_stream) and session (sessionize_stream). State is
-    bounded by watermark × overlap factor: 4× the tumbling state,
-    still independent of stream length."""
-    events = read_events_stream(spark, sf_dir)
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy(
-            F.window("ts", "1 hour", "15 minutes").alias("w"), F.col("event_type")
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-        )
-    )
-
-
-def sessionize_stream(spark: SparkSession, sf_dir: str, gap_minutes: int = 30) -> DataFrame:
-    """Native session windows (the streaming analogue of the batch
-    lag/cumsum sessionization in queries/events.py)."""
-    events = read_events_stream(spark, sf_dir)
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy(F.session_window("ts", f"{gap_minutes} minutes").alias("w"), F.col("user_id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("session_value"),
-        )
-        .select(
-            F.col("user_id"),
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-            "session_value",
-        )
-    )
-
-
-def enriched_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAM-STATIC join — the most common production enrichment
-    shape: the unbounded event stream joined to the bounded customer
-    dim (re-read per micro-batch, so dim updates are picked up
-    without restarting the query). Stateless on the stream side (no
-    watermark needed for an inner equi-join against a static frame);
-    the dim side broadcasts under AQE exactly as in batch."""
-    from nycitibike_data_transform_spark.catalog import load_table
-
-    events = read_events_stream(spark, sf_dir)
-    customers = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"), "c_name", "c_mktsegment"
-    )
-    return events.join(customers, "user_id").select(
-        "event_id", "user_id", "event_type", "c_name", "c_mktsegment", "value"
-    )
-
-
-def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming exact dedup: drop replayed event ids within the
-    watermark horizon (state is bounded by the watermark — the
-    at-least-once-source → exactly-once-pipeline building block)."""
-    events = read_events_stream(spark, sf_dir)
-    return events.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(["event_id"])
-
-
-def click_purchase_join_stream(
-    spark: SparkSession, sf_dir: str, horizon_minutes: int = 60
-) -> DataFrame:
-    """Stream-stream interval join: each purchase attributed to every
-    click by the same user in the preceding ``horizon_minutes``. Both
-    sides carry watermarks AND the join carries a time-range
-    condition — the two ingredients Spark needs to evict join state
-    (a click older than purchase-watermark − horizon can never match
-    again and is dropped), so state stays bounded by the time horizon
-    on an unbounded feed, not by stream length. The batch analogue of
-    "latest click before purchase" is ``asof_purchase_click``
-    (queries/events.py) — stream-stream joins express interval
-    containment, not argmax, so this emits ALL in-horizon pairs and a
-    downstream batch pass picks winners."""
-    events = read_events_stream(spark, sf_dir)
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "2 hours")
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("user_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    return purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (
-            F.col("click_ts")
-            >= F.col("purchase_ts") - F.expr(f"INTERVAL {horizon_minutes} MINUTES")
-        ),
-        "inner",
-    ).select("purchase_id", "user_id", "purchase_ts", "purchase_value", "click_id", "click_ts")
-
-
-def write_stream_exactly_once(
-    df: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-) -> None:
-    """Exactly-once parquet sink via foreachBatch: each micro-batch
-    writes to a batch-id-named directory, so a replayed batch (restart
-    between write and commit) overwrites its own output instead of
-    duplicating it — idempotent writes + the checkpoint's offset log
-    give end-to-end exactly-once for an at-least-once source."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
-    (
-        df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def run_stream_to_memory(
-    df: DataFrame, name: str, output_mode: str = "complete"
-) -> DataFrame:
-    """Drive a streaming frame to completion over the available input
-    (availableNow ≙ the reference's scheduled-batch cadence) and return
-    the materialized result as a batch DataFrame. ``output_mode``:
-    'complete' for aggregations (default), 'append' for stateless
-    transforms/joins where complete mode is invalid."""
-    q = (
-        df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return df.sparkSession.sql(f"SELECT * FROM {name}")

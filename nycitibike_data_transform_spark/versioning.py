@@ -1092,11 +1092,11 @@ class VersionedTable:
                      keep: list[str]) -> DataFrame:
         """Schema-pinned scan of a pruned file subset — the one shared
         tail of every zone-map read (``read_range`` / ``read_in`` /
-        ``read_topk`` / the bucketed ``point_lookup_df``; extracted
-        r12 review so fixes land once). MANIFEST schema, never
-        inference: the kept subset may be all pre-evolution files that
-        lack an added column the caller's filter names (schema
-        evolution), or files with divergent footers. An empty ``keep``
+        ``read_topk``; extracted r12 review so fixes land once).
+        MANIFEST schema, never inference: the kept subset may be all
+        pre-evolution files that lack an added column the caller's
+        filter names (schema evolution), or files with divergent
+        footers. An empty ``keep``
         returns an empty frame with the same schema, so downstream
         filters and orderings still resolve."""
         from pyspark.sql.types import StructType

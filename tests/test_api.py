@@ -1,33 +1,14 @@
-"""Top-level API facade + catalog conventions."""
+"""Catalog naming conventions."""
 
 from __future__ import annotations
 
 import pytest
 
-from nycitibike_data_transform_spark.api import run_query, run_sql
-from nycitibike_data_transform_spark.catalog import layer_path, table_name
-
-
-def test_run_sql(spark, sf_dir):
-    df = run_sql(
-        spark,
-        sf_dir,
-        "SELECT r_name, count(*) AS n FROM nation JOIN region"
-        " ON n_regionkey = r_regionkey GROUP BY 1",
-    )
-    rows = {r["r_name"]: r["n"] for r in df.collect()}
-    assert sum(rows.values()) == 25 and len(rows) == 5
-
-
-def test_run_query_dispatch(spark, sf_dir):
-    assert run_query(spark, sf_dir, "top_orders").count() == 10
-    with pytest.raises(KeyError, match="unknown query"):
-        run_query(spark, sf_dir, "nope")
+from nycitibike_data_transform_spark.catalog import table_name
 
 
 def test_catalog_naming():
     assert table_name("CORE", "2_stg", "AUX_TLC_RIDES") == "core_2_stg__aux_tlc_rides"
-    assert layer_path("/wh", "dev", "4_mart", "daily") == "/wh/dev/4_mart/daily"
     with pytest.raises(ValueError, match="env"):
         table_name("prod", "2_stg", "x")
     with pytest.raises(ValueError, match="layer"):

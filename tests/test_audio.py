@@ -1,6 +1,6 @@
 """Pure-numpy WAV/PCM codec: encode/decode round-trips (mono/stereo,
 odd chunk padding, extra RIFF chunks), clean failures on unsupported
-variants, resampling, and the Spark-side decode_audio_batch operator
+variants, and the Spark-side decode_audio_batch operator
 (real bytes end-to-end)."""
 
 from __future__ import annotations
@@ -15,7 +15,6 @@ from nycitibike_data_transform_spark.operators.audio import (
     decode_audio_batch,
     decode_wav,
     encode_wav,
-    resample_nearest,
 )
 
 RNG = np.random.default_rng(11)
@@ -80,14 +79,6 @@ def test_unsupported_variants_fail_cleanly():
 def test_encode_rejects_out_of_range():
     with pytest.raises(WavError, match="int16"):
         encode_wav(np.array([40000], dtype=np.int32), 8000)
-
-
-def test_resample_nearest():
-    s = np.arange(10, dtype=np.int16)
-    down = resample_nearest(s, 5)
-    np.testing.assert_array_equal(down, [0, 2, 4, 6, 8])
-    up = resample_nearest(np.array([[1, -1], [3, -3]], dtype=np.int16), 4)
-    np.testing.assert_array_equal(up[:, 0], [1, 1, 3, 3])
 
 
 def test_decode_audio_batch_real_bytes_and_poison(spark):

@@ -1,36 +1,15 @@
-"""Aux NYC ingestion surface (FIXTURES.md §5): typed CSV, date parsing,
-NTA enrichment."""
+"""Aux NYC ingestion surface (FIXTURES.md §5): typed CSV, date parsing."""
 
 from __future__ import annotations
 
 import datetime as dt
 
-from nycitibike_data_transform_spark.sources.aux_nyc import (
-    enrich_with_nta,
-    read_evictions,
-    read_inspections,
-)
-
-EVICTIONS_CSV = """Court Index Number,Docket Number,Eviction Address,Eviction Apartment Number,Executed Date,Marshal First Name,Marshal Last Name,Residential/Commercial,Borough,Eviction Zip,Latitude,Longitude,NTA
-1001,D1,100 Main St,2A,1/15/2023,J,Smith,Residential,BROOKLYN,11201,40.69,-73.99,BK09
-1002,D2,5 Park Ave,,12/3/2022,M,Jones,Commercial,MANHATTAN,10016,,,MN17
-"""
+from nycitibike_data_transform_spark.sources.aux_nyc import read_inspections
 
 INSPECTIONS_CSV = """CAMIS,DBA,BORO,CUISINE DESCRIPTION,INSPECTION DATE,ACTION,SCORE,GRADE,GRADE DATE,Latitude,Longitude,NTA
 41234,CAFE X,Brooklyn,Coffee,2/20/2023,No violations,10.5,A,2/20/2023,40.69,-73.99,BK09
 41235,DINER Y,Queens,American,11/1/2022,Violations cited,28.0,C,,40.74,-73.88,QN31
 """
-
-
-def test_evictions_typed(spark, tmp_path):
-    p = tmp_path / "evictions.csv"
-    p.write_text(EVICTIONS_CSV)
-    df = read_evictions(spark, str(p))
-    rows = {r["court_index_number"]: r for r in df.collect()}
-    assert rows["1001"]["executed_date"] == dt.date(2023, 1, 15)
-    assert rows["1001"]["latitude"] == 40.69
-    assert rows["1002"]["latitude"] is None  # empty string -> NULL double
-    assert rows["1002"]["residential_commercial"] == "Commercial"
 
 
 def test_inspections_typed(spark, tmp_path):
@@ -79,16 +58,3 @@ def test_aux_econ_rollup(spark, sf_dir):
     for r in rows.values():
         assert 0.4 < r["lf_rate"] < 0.9  # participation rate sanity
         assert r["pop_16plus"] > r["labor_force"] > 0
-
-
-def test_nta_enrichment_broadcast(spark, tmp_path):
-    p = tmp_path / "evictions.csv"
-    p.write_text(EVICTIONS_CSV)
-    ev = read_evictions(spark, str(p))
-    nta_dim = spark.createDataFrame(
-        [("BK09", "Brooklyn Heights"), ("MN17", "Midtown")], "nta_code string, nta_name string"
-    )
-    out = enrich_with_nta(ev, nta_dim)
-    rows = {r["court_index_number"]: r for r in out.collect()}
-    assert rows["1001"]["nta_name"] == "Brooklyn Heights"
-    assert out.count() == ev.count()

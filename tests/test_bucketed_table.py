@@ -293,46 +293,6 @@ def test_point_lookup_prunes_to_one_bucket(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS bkt_point")
 
 
-def test_point_lookup_df_composes_with_pruning_intact(spark, tmp_path):
-    """r11 VERDICT item #6: the DataFrame-returning point lookup keeps
-    its pruning when composed into a larger plan executed OUTSIDE any
-    pinned-conf block — the catalog route loses SelectedBucketsCount
-    there (autoBucketedScan re-plans at action time), which is exactly
-    the footgun this variant removes by pruning at the FILE level."""
-    t = BucketedIncrementalTable(str(tmp_path / "t"), ["k"], N_BUCKETS)
-    t.write_full(spark, _facts(spark, 200))
-
-    # alone: exact rows, and only the keys' bucket files are read
-    df = t.point_lookup_df(spark, [42, 7])
-    assert {(r["k"], r["v"]) for r in df.collect()} == {(42, 84), (7, 14)}
-    n_alone = len(df.inputFiles())
-    assert 1 <= n_alone <= 2  # ≤ one file per distinct key bucket
-    assert n_alone < N_BUCKETS
-
-    # composed into a join and executed with NO context manager: the
-    # file list is part of the plan, so the pruning survives
-    dim = spark.createDataFrame([(42, "a"), (7, "b"), (9, "c")], "k int, tag string")
-    joined = t.point_lookup_df(spark, [42, 7]).join(dim, "k")
-    got = {(r["k"], r["v"], r["tag"]) for r in joined.collect()}
-    assert got == {(42, 84, "a"), (7, 14, "b")}
-    pruned_files = [f for f in joined.inputFiles() if "parquet" in f]
-    assert len(pruned_files) == n_alone  # composition did not widen the scan
-
-    # empty key list and all-miss keys return empty with the schema
-    assert t.point_lookup_df(spark, []).count() == 0
-    assert t.point_lookup_df(spark, []).columns == df.columns
-    missing = t.point_lookup_df(spark, [10**9])
-    assert missing.count() == 0
-
-    # multi-column keys route through the same file pruning
-    tm = BucketedIncrementalTable(str(tmp_path / "tm"), ["k", "g"], N_BUCKETS)
-    base = _facts(spark, 120).withColumn("g", F.col("k") % 3)
-    tm.write_full(spark, base)
-    got_m = tm.point_lookup_df(spark, [(42, 0), (7, 1)])
-    assert {(r["k"], r["g"]) for r in got_m.collect()} == {(42, 0), (7, 1)}
-    assert len(got_m.inputFiles()) <= 2 < N_BUCKETS
-
-
 def test_bucketed_staging_is_unique_per_attempt(spark, tmp_path):
     """r12 review: the old fixed shared staging dirs (_staging/full,
     _staging/merge) re-opened for the bucketed writer the zombie

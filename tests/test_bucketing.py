@@ -10,11 +10,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from nycitibike_data_transform_spark.bucketing import (
-    bucket_spec,
-    colocated_join,
-    write_bucketed,
-)
+from nycitibike_data_transform_spark.bucketing import colocated_join, write_bucketed
 from nycitibike_data_transform_spark.plans import count_exchanges, formatted_plan
 
 
@@ -71,21 +67,6 @@ def test_one_file_per_bucket(spark, bucketed_tables):
         assert len(files) == 8, sorted(files)
 
 
-def test_bucket_spec_introspection(spark, sf_dir, bucketed_tables):
-    orders_t, _, _ = bucketed_tables
-    spec = bucket_spec(spark, orders_t)
-    assert spec == {
-        "num_buckets": 8,
-        "bucket_cols": ["o_orderkey"],
-        "sort_cols": ["o_orderkey"],
-    }
-    plain = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    plain.createOrReplaceTempView("plain_orders_view")
-    # unbucketed relation → num_buckets 0 (DESCRIBE on a view has no
-    # bucket rows)
-    assert bucket_spec(spark, "plain_orders_view")["num_buckets"] == 0
-
-
 def test_mismatched_bucket_counts_coalesce(spark, sf_dir, bucketed_tables, tmp_path):
     # 16-bucket ⋈ 8-bucket joins shuffle-free via bucket coalescing
     # (session conf spark.sql.bucketing.coalesceBucketsInJoin.enabled)
@@ -131,13 +112,14 @@ def test_bucketed_results_match_plain(spark, sf_dir, bucketed_tables):
     )
 
 
-def test_write_bucketed_rejects_bad_bucket_count(spark, sf_dir):
+def test_write_bucketed_rejects_bad_bucket_count(spark, sf_dir, tmp_path):
     with pytest.raises(ValueError, match="num_buckets"):
         write_bucketed(
             spark.read.parquet(f"{sf_dir}/orders.parquet"),
             "never_created",
             "o_orderkey",
             0,
+            path=str(tmp_path / "never_created"),
         )
 
 

@@ -18,7 +18,7 @@ from nycitibike_data_transform_spark.models.zones import UNKNOWN_BOROUGH
 
 @pytest.fixture(scope="module")
 def built(spark, sf_dir):
-    return pipeline_def.testdata_pipeline(sf_dir, "/nonexistent").run(spark, materialize=False)
+    return pipeline_def.testdata_pipeline(sf_dir, None).run(spark)
 
 
 def _set(df, where, col: str, value):

@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from nycitibike_data_transform_spark.operators.dedup import (
-    drop_exact_duplicates,
     exact_dedup,
     hamming_distance64,
     minhash_candidate_pairs,
@@ -34,12 +33,6 @@ def test_exact_dedup_groups(spark):
     assert by_id[1] == 2  # docs 1+2 collapse, min id wins
     assert 2 not in by_id
     assert by_id[3] == 1 and by_id[4] == 1 and by_id[5] == 1
-
-
-def test_drop_exact_duplicates_keeps_all_columns(spark):
-    out = drop_exact_duplicates(_docs(spark))
-    assert sorted(r["doc_id"] for r in out.collect()) == [1, 3, 4, 5]
-    assert out.columns == ["doc_id", "text"]
 
 
 def test_shingles_short_arrays_empty(spark):
@@ -136,21 +129,6 @@ def test_embedding_probe_equals_grid_restriction(spark, sf_dir):
     assert probed  # non-vacuous: probe-touching pairs exist at 0.4
 
 
-def test_embedding_srp_subset_of_exact(spark, sf_dir):
-    from nycitibike_data_transform_spark.operators.dedup import embedding_near_dup_pairs
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    srp = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_near_dup_pairs(emb, 0.4, method="srp").collect()
-    }
-    exact = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_near_dup_pairs(emb, 0.4, method="broadcast").collect()
-    }
-    assert srp <= exact  # SRP candidates re-ranked exactly: no false positives
-
-
 def test_blocked_equals_exact_on_testdata_corpus(spark, sf_dir):
     """ADVICE r3: dedup_clusters builds its pair graph with
     mode="blocked" while its oracle computes the exact all-pairs
@@ -169,41 +147,6 @@ def test_blocked_equals_exact_on_testdata_corpus(spark, sf_dir):
     }
     assert blocked == exact
     assert exact  # non-vacuous: the corpus must actually contain near-dups
-
-
-def test_auto_method_routes_by_threshold(spark, sf_dir):
-    """VERDICT r2 item #7: method="auto" picks the linear SRP tier at
-    high thresholds (>= AUTO_SRP_THRESHOLD) and falls back to the exact
-    grid tier below it, warning that exact low-threshold near-dup is
-    inherently quadratic."""
-    import warnings
-
-    from nycitibike_data_transform_spark.operators.dedup import (
-        AUTO_SRP_THRESHOLD,
-        embedding_near_dup_pairs,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # high threshold: no warning
-        hi_auto = embedding_near_dup_pairs(emb, AUTO_SRP_THRESHOLD)
-    hi_srp = embedding_near_dup_pairs(emb, AUTO_SRP_THRESHOLD, method="srp")
-    assert {(r["id_a"], r["id_b"]) for r in hi_auto.collect()} == {
-        (r["id_a"], r["id_b"]) for r in hi_srp.collect()
-    }
-
-    with pytest.warns(ResourceWarning, match="grid tier"):
-        lo_auto = embedding_near_dup_pairs(emb, 0.4)
-    lo_exact = {
-        (r["id_a"], r["id_b"]): round(r["cosine"], 9)
-        for r in embedding_near_dup_pairs(emb, 0.4, method="broadcast").collect()
-    }
-    got = {
-        (r["id_a"], r["id_b"]): round(r["cosine"], 9)
-        for r in lo_auto.collect()
-    }
-    assert got == lo_exact  # low-threshold auto == exact tier
-    assert got
 
 
 def test_flag_contaminated_tiers_identical(spark, sf_dir):
@@ -282,24 +225,6 @@ def test_incremental_equals_exact_cross_set_on_testdata(spark, sf_dir):
     }
     assert got == truth
     assert any(v > 0 for v in truth.values())  # non-vacuous
-
-
-def test_drop_exact_duplicates_keeps_all_contentless_docs(spark):
-    from nycitibike_data_transform_spark.operators.dedup import (
-        drop_exact_duplicates,
-    )
-
-    rows = [
-        (1, "same text here"),
-        (2, "same text here"),   # true duplicate of 1
-        (3, None),
-        (4, None),               # NOT a duplicate of 3 — no content
-        (5, "   "),
-        (6, "unique words here"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    kept = {r["doc_id"] for r in drop_exact_duplicates(docs).collect()}
-    assert kept == {1, 3, 4, 5, 6}  # only the true duplicate dropped
 
 
 def test_blocked_mode_rejects_max_shingle_df(spark):

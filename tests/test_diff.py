@@ -1,10 +1,10 @@
-"""snapshot_diff / diff_summary semantics on constructed snapshots."""
+"""snapshot_diff semantics on constructed snapshots."""
 
 from __future__ import annotations
 
 import pytest
 
-from nycitibike_data_transform_spark.operators.diff import diff_summary, snapshot_diff
+from nycitibike_data_transform_spark.operators.diff import snapshot_diff
 
 
 @pytest.fixture(scope="module")
@@ -43,12 +43,6 @@ def test_statuses(spark, snapshots):
         5: "changed",  # string 'NULL' vs SQL NULL must NOT collide
         6: "added",
     }
-
-
-def test_summary_rollup(spark, snapshots):
-    old, new = snapshots
-    got = {r["status"]: r["n_rows"] for r in diff_summary(old, new, "k").collect()}
-    assert got == {"unchanged": 2, "changed": 2, "removed": 1, "added": 1}
 
 
 def test_composite_key_and_schema_mismatch(spark, snapshots):

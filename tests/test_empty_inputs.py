@@ -99,17 +99,6 @@ def test_summary_query_survives_empty_tables(spark, empty_dir, name):
     assert rows[0][SUMMARY_QUERIES[name]] == 0
 
 
-def test_srp_tier_survives_empty_embeddings(spark, empty_dir):
-    from nycitibike_data_transform_spark.operators.dedup import (
-        embedding_near_dup_pairs,
-    )
-
-    emb = spark.read.parquet(f"{empty_dir}/embeddings.parquet")
-    out = embedding_near_dup_pairs(emb, 0.9, method="srp")
-    assert out.count() == 0
-    assert [f.name for f in out.schema.fields] == ["id_a", "id_b", "cosine"]
-
-
 ADVERSARIAL_ROWS = [
     (1, None, "en", "web"),          # NULL text
     (2, "", "en", "web"),            # empty

@@ -447,5 +447,10 @@ def test_bucketed_incremental_table_on_gcs_backend(
     got = {r["k"]: r["v"] for r in t.read_current(spark).collect()}
     assert got[3] == 999 and got[100] == 200 and got[7] == 14
     assert len(got) == 101
-    # file-pruned composable point lookup works against backend manifests
-    assert [r["v"] for r in t.point_lookup_df(spark, [3]).collect()] == [999]
+    # the bucket-pruned point lookup works against backend manifests
+    name = f"gcs_bkt_{os.getpid()}"
+    assert t.register(spark, name) == 2
+    try:
+        assert [r["v"] for r in t.point_lookup(spark, name, [3])] == [999]
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS `{name}`")

@@ -16,7 +16,6 @@ from nycitibike_data_transform_spark.operators.imaging import (
     decode_image_batch,
     decode_png,
     encode_png,
-    resize_nearest,
 )
 
 RNG = np.random.default_rng(7)
@@ -68,13 +67,6 @@ def test_interlaced_and_16bit_rejected():
         decode_png(ihdr(8, 1))
     with pytest.raises(PngError, match="depth"):
         decode_png(ihdr(16, 0))
-
-
-def test_resize_nearest():
-    img = np.arange(24, dtype=np.uint8).reshape(4, 6)
-    out = resize_nearest(img, 2, 3)
-    assert out.shape == (2, 3)
-    assert out[0, 0] == img[0, 0] and out[-1, -1] == img[2, 4]
 
 
 def test_decode_image_batch_real_bytes_and_poison(spark):

@@ -1,4 +1,4 @@
-"""as-of / range / broadcast-dim join operator semantics."""
+"""as-of / range join operator semantics."""
 
 from __future__ import annotations
 
@@ -9,10 +9,8 @@ from pyspark.sql import functions as F
 
 from nycitibike_data_transform_spark.operators.joins import (
     as_of_join,
-    broadcast_dim_join,
     range_join,
 )
-from nycitibike_data_transform_spark.plans import has_broadcast_join
 
 
 def _ts(minute):
@@ -102,31 +100,3 @@ def test_range_join_half_open(spark):
     out = range_join(fact, ranges, F.col("x"), F.col("lo"), F.col("hi"))
     got = {r["id"]: r["band"] for r in out.collect()}
     assert got == {1: "lo", 2: "hi", 3: "hi"}  # boundary 20 goes to the upper band
-
-
-def test_broadcast_dim_join_plan(spark, sf_dir):
-    fact = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    dim = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    out = broadcast_dim_join(fact, dim, "c_nationkey", "n_nationkey")
-    assert has_broadcast_join(out)
-    assert out.count() == fact.count()  # left join never drops facts
-
-
-def test_salted_join_matches_plain_join(spark, sf_dir):
-    from nycitibike_data_transform_spark.operators.joins import salted_join
-
-    fact = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    dim = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    plain = fact.join(dim, fact.o_custkey == dim.c_custkey)
-    salted = salted_join(fact, dim, "o_custkey", "c_custkey", salt=4)
-    assert salted.count() == plain.count()
-    a = {(r["o_orderkey"], r["c_custkey"]) for r in plain.select("o_orderkey", "c_custkey").collect()}
-    b = {(r["o_orderkey"], r["c_custkey"]) for r in salted.select("o_orderkey", "c_custkey").collect()}
-    assert a == b
-
-
-def test_salted_join_validation(spark):
-    from nycitibike_data_transform_spark.operators.joins import salted_join
-
-    with pytest.raises(ValueError, match="salt"):
-        salted_join(None, None, "a", "b", salt=0)

@@ -1,15 +1,8 @@
-"""Multimodal binary-column plumbing (schema, batching, stub gating)."""
+"""Multimodal binary-column plumbing (payload + metadata struct)."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
-from nycitibike_data_transform_spark.operators.multimodal import (
-    attach_payload,
-    extract_features,
-    fake_decoder,
-)
+from nycitibike_data_transform_spark.operators.multimodal import attach_payload
 
 
 def _docs(spark):
@@ -26,50 +19,3 @@ def test_attach_payload_meta(spark):
     assert by_id[2]["media_meta"]["n_bytes"] == 6  # ö is 2 bytes in UTF-8
     assert by_id[1]["media_meta"]["mime"] == "text/plain"
     assert len(by_id[1]["media_meta"]["checksum_md5"]) == 32
-
-
-def test_extract_features_batch_shape(spark):
-    df = attach_payload(_docs(spark))
-    feats = extract_features(df, decoder=fake_decoder).collect()
-    by_id = {r["doc_id"]: r for r in feats}
-    assert by_id[1]["n_bytes"] == 5
-    assert by_id[1]["feature"] == [5.0, float(b"h"[0]), float(b"o"[0]), float(sum(b"hello") % 997)]
-    assert by_id[3]["feature"] == [0.0, 0.0, 0.0, 0.0]
-    assert dict((f.name, f.dataType.simpleString()) for f in extract_features(df, decoder=fake_decoder).schema.fields) == {
-        "doc_id": "bigint",
-        "n_bytes": "bigint",
-        "feature": "array<double>",
-    }
-
-
-def test_missing_decoder_raises_at_plan_time(spark):
-    df = attach_payload(_docs(spark))
-    with pytest.raises(NotImplementedError, match="decoder"):
-        extract_features(df)
-
-
-def test_mime_decoder_registry_real_codecs(spark):
-    import numpy as np
-
-    from nycitibike_data_transform_spark.operators.audio import encode_wav
-    from nycitibike_data_transform_spark.operators.imaging import encode_png
-    from nycitibike_data_transform_spark.operators.multimodal import decoder_for_mime
-    from nycitibike_data_transform_spark.operators.video import encode_frames
-
-    png = encode_png(np.full((2, 3, 3), (9, 8, 7), dtype=np.uint8))
-    df = spark.createDataFrame([(1, bytearray(png))], "doc_id long, payload binary")
-    (row,) = extract_features(df, decoder=decoder_for_mime("image/png")).collect()
-    assert row["feature"] == [3.0, 2.0, 3.0, 9.0, 8.0, 7.0]
-
-    wav = encode_wav(np.array([[100], [-100], [100], [-100]], dtype=np.int16), 8000)
-    df = spark.createDataFrame([(2, bytearray(wav))], "doc_id long, payload binary")
-    (row,) = extract_features(df, decoder=decoder_for_mime("audio/wav")).collect()
-    assert row["feature"] == [8000.0, 1.0, 4.0, 4 / 8000, 100.0, 100.0, 3.0]
-
-    vid = encode_frames([png, png])
-    df = spark.createDataFrame([(3, bytearray(vid))], "doc_id long, payload binary")
-    (row,) = extract_features(df, decoder=decoder_for_mime("video/x-frames")).collect()
-    assert row["feature"] == [2.0, 3.0, 2.0, 3.0, 9.0, 8.0]
-
-    # undeclared codec -> the plan-build gate, unchanged
-    assert decoder_for_mime("video/h264") is None

@@ -22,6 +22,9 @@ are identical and the comparison is deterministic.
 from __future__ import annotations
 
 import re
+import subprocess
+import sys
+from pathlib import Path
 
 from nycitibike_data_transform_spark.queries import all_queries
 
@@ -77,3 +80,34 @@ def test_no_unreviewed_hazards_and_no_exchange_regressions(spark):
         "(including improvements), regenerate the audit so the new "
         "plan shape is a reviewed diff"
     )
+
+
+_WINDOW_LOG_SCRIPT = """
+import sys
+sys.path.insert(0, {root!r})
+from nycitibike_data_transform_spark.queries import all_queries
+from nycitibike_data_transform_spark.session import get_spark
+spark = get_spark("window-log", master="local[2]", shuffle_partitions=2)
+assert all_queries()["weighted_sample"].spark(spark, {sf_dir!r}).collect()
+root = spark._jvm.org.apache.logging.log4j.LogManager.getRootLogger()
+print("root-level", root.getLevel().toString())
+spark.stop()
+"""
+
+
+def test_reviewed_window_warning_is_not_logged(sf_dir):
+    """The unpartitioned-window WARN carries no signal: every GWIN plan
+    is reviewed in FLAG_NOTES (the test above fails an unreviewed one).
+    A fresh ``get_spark`` session that runs ``weighted_sample`` (a
+    reviewed GWIN) prints no such line, and the session stays at WARN."""
+    assert "weighted_sample" in FLAG_NOTES
+    root = str(Path(__file__).resolve().parent.parent)
+    out = subprocess.run(
+        [sys.executable, "-c", _WINDOW_LOG_SCRIPT.format(root=root, sf_dir=sf_dir)],
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "root-level WARN" in out.stdout
+    assert "No Partition Defined" not in out.stderr

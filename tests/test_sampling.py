@@ -6,7 +6,6 @@ import pytest
 
 from nycitibike_data_transform_spark.operators.sampling import (
     hash_sample,
-    stratified_sample,
     train_test_split,
 )
 
@@ -32,23 +31,11 @@ def test_train_test_split_disjoint_exhaustive(spark, sf_dir):
     assert 0.15 < len(te) / docs.count() < 0.35
 
 
-def test_stratified_sample(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    langs = [r["lang"] for r in docs.select("lang").distinct().collect()]
-    keep_all, drop_all = langs[0], langs[1]
-    out = stratified_sample(docs, "lang", {keep_all: 1.0, drop_all: 0.0}, "doc_id")
-    got = {r["lang"] for r in out.select("lang").distinct().collect()}
-    assert got == {keep_all}  # 1.0-stratum fully kept, 0.0 and unlisted dropped
-    assert out.filter(out.lang == keep_all).count() == docs.filter(docs.lang == keep_all).count()
-
-
 def test_validation():
     with pytest.raises(ValueError):
         train_test_split(None, "id", test_fraction=1.5)
     with pytest.raises(ValueError):
         hash_sample(None, -0.1, "id")
-    with pytest.raises(ValueError):
-        stratified_sample(None, "lang", {"en": 2.0}, "id")
 
 
 def test_weighted_sample_prefers_heavy_rows(spark):

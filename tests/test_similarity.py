@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 from nycitibike_data_transform_spark.operators.similarity import (
     cosine_topk,
     cosine_topk_lsh,
-    srp_bucket,
 )
 
 VECS = [
@@ -69,14 +68,6 @@ def test_cosine_topk_rejects_unknown_method(spark):
 
     with pytest.raises(ValueError, match="auto|brute"):
         cosine_topk(_emb(spark), _emb(spark), method="banded")
-
-
-def test_srp_bucket_deterministic_and_bounded(spark):
-    emb = _emb(spark)
-    b1 = {r["vec_id"]: r["bucket"] for r in srp_bucket(emb, "embedding", 3, bits=6).collect()}
-    b2 = {r["vec_id"]: r["bucket"] for r in srp_bucket(emb, "embedding", 3, bits=6).collect()}
-    assert b1 == b2  # deterministic hyperplanes
-    assert all(0 <= v < 64 for v in b1.values())
 
 
 def test_lsh_recall_on_testdata(spark, sf_dir):

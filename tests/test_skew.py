@@ -1,7 +1,6 @@
 """Skew-split join operators: result parity with the plain join on a
 hot-keyed fixture, plus the plan/distribution properties that are the
-operators' whole point. (Full salting parity lives in
-tests/test_joins.py::test_salted_join_matches_plain_join.)
+operators' whole point.
 """
 
 from __future__ import annotations

@@ -58,77 +58,3 @@ def test_parquet_source_glob_and_merge(spark, tmp_path, sf_dir):
 def test_parquet_source_plain(spark, sf_dir):
     df = read_parquet_source(spark, f"{sf_dir}/nation.parquet")
     assert df.count() == 25
-
-
-# ------------------------------------------------------ JSONL corpus IO
-
-
-def test_jsonl_roundtrip_preserves_corpus(spark, sf_dir, tmp_path):
-    from nycitibike_data_transform_spark.catalog import load_table
-    from nycitibike_data_transform_spark.sources.readers import (
-        read_jsonl_documents,
-        write_jsonl_documents,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    write_jsonl_documents(docs, f"{tmp_path}/docs_jsonl", shards=4)
-    back = read_jsonl_documents(spark, f"{tmp_path}/docs_jsonl", strict=True)
-    assert back.count() == docs.count()
-    a = {tuple(r) for r in docs.collect()}
-    b = {tuple(r) for r in back.select(*docs.columns).collect()}
-    assert a == b
-
-
-def test_jsonl_permissive_quarantines_corrupt_lines(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from nycitibike_data_transform_spark.sources.readers import read_jsonl_documents
-
-    p = tmp_path / "mixed.jsonl"
-    p.write_text(
-        '{"doc_id": 1, "text": "good line", "lang": "en", "source": "web", "n_chars": 9}\n'
-        "this is not json at all\n"
-        '{"doc_id": 2, "text": "also fine", "lang": "en", "source": "web", "n_chars": 9}\n'
-        '{"doc_id": 3, "text": "broken...\n'
-    )
-    # Spark disallows filtering ONLY on the internal corrupt-record
-    # column straight off a raw JSON scan — cache first (the reader
-    # docstring documents this caveat)
-    df = read_jsonl_documents(spark, str(p)).cache()
-    try:
-        good = df.filter(F.col("_corrupt_record").isNull())
-        bad = df.filter(F.col("_corrupt_record").isNotNull())
-        assert good.count() == 2
-        assert bad.count() == 2
-        assert {r["doc_id"] for r in good.collect()} == {1, 2}
-    finally:
-        df.unpersist()
-
-
-def test_jsonl_strict_raises_on_corrupt(spark, tmp_path):
-    import pytest
-    from py4j.protocol import Py4JJavaError
-
-    from nycitibike_data_transform_spark.sources.readers import read_jsonl_documents
-
-    p = tmp_path / "bad.jsonl"
-    p.write_text('{"doc_id": 1}\nnot json\n')
-    with pytest.raises(Exception):
-        read_jsonl_documents(spark, str(p), strict=True).count()
-
-
-def test_jsonl_reader_accepts_multiple_paths(spark, sf_dir, tmp_path):
-    from nycitibike_data_transform_spark.catalog import load_table
-    from nycitibike_data_transform_spark.sources.readers import (
-        read_jsonl_documents,
-        write_jsonl_documents,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    a, b = docs.filter("doc_id % 2 = 0"), docs.filter("doc_id % 2 = 1")
-    write_jsonl_documents(a, f"{tmp_path}/a")
-    write_jsonl_documents(b, f"{tmp_path}/b")
-    back = read_jsonl_documents(
-        spark, [f"{tmp_path}/a", f"{tmp_path}/b"], strict=True
-    )
-    assert back.count() == docs.count()

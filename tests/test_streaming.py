@@ -1,206 +1,31 @@
-"""Streaming/batch parity: the streaming queries must agree with the
-batch event queries on the same (bounded) input."""
+"""Streaming/batch parity: the streaming paths must agree with the
+batch queries on the same (bounded) input."""
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nycitibike_data_transform_spark.queries import all_queries
-from nycitibike_data_transform_spark.streaming import (
-    hourly_counts_stream,
-    run_stream_to_memory,
-    sessionize_stream,
-)
 
 
-def test_hourly_stream_matches_batch(spark, sf_dir):
-    stream_out = run_stream_to_memory(hourly_counts_stream(spark, sf_dir), "hourly_test")
-    batch = all_queries()["events_hourly"].spark(spark, sf_dir)
-    s = {
-        (r["hour"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in stream_out.collect()
-    }
-    b = {
-        (r["hour"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in batch.collect()
-    }
-    assert s == b
-
-
-def test_session_stream_matches_batch_counts(spark, sf_dir):
-    stream_out = run_stream_to_memory(sessionize_stream(spark, sf_dir), "session_test")
-    batch = all_queries()["events_sessionize"].spark(spark, sf_dir)
-    # session_window end = last_ts + gap, the batch query reports the
-    # last event ts; compare session structure (count per user, sizes)
-    s = sorted(
-        (r["user_id"], r["n_events"], r["session_value"]) for r in stream_out.collect()
-    )
-    b = sorted(
-        (r["user_id"], r["n_events"], r["session_value"]) for r in batch.collect()
-    )
-    assert s == b
-
-
-def test_stream_watermark_metadata(spark, sf_dir):
-    df = hourly_counts_stream(spark, sf_dir)
-    assert df.isStreaming
-    assert "window" not in df.columns  # flattened projection
-    assert set(df.columns) == {"hour", "event_type", "n_events", "sum_value"}
-
-
-def test_session_stream_gap_semantics(spark, sf_dir):
-    out = run_stream_to_memory(sessionize_stream(spark, sf_dir, gap_minutes=30), "gap_test")
-    row = out.filter(F.col("n_events") > 1).first()
-    # session window spans [first_ts, last_ts + gap)
-    assert (row["session_end"] - row["session_start"]).total_seconds() >= 30 * 60
-
-
-def test_stream_dedup_within_watermark(spark, sf_dir):
-    from nycitibike_data_transform_spark.streaming.events import dedup_stream
-
-    df = dedup_stream(spark, sf_dir)
-    assert df.isStreaming
+def run_stream_to_memory(df: DataFrame, name: str) -> DataFrame:
+    """Drive a streaming aggregation to completion over the available
+    input (availableNow ≙ the reference's scheduled-batch cadence) and
+    return the materialized result as a batch DataFrame."""
     q = (
-        df.writeStream.outputMode("append")
+        df.writeStream.outputMode("complete")
         .format("memory")
-        .queryName("dedup_stream_test")
+        .queryName(name)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    out = spark.sql("SELECT count(*) n, count(DISTINCT event_id) d FROM dedup_stream_test").first()
-    batch_n = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    assert out["n"] == out["d"]  # no duplicate ids emitted
-    assert out["n"] == batch_n  # testdata has unique ids: nothing dropped
-
-
-def test_stream_stream_join_matches_batch(spark, sf_dir):
-    """The stream-stream interval join (purchase ← same-user clicks in
-    the preceding hour) must emit exactly the pairs the equivalent
-    batch join produces on the same bounded input."""
-    from nycitibike_data_transform_spark.catalog import load_table
-    from nycitibike_data_transform_spark.streaming.events import (
-        click_purchase_join_stream,
-    )
-
-    df = click_purchase_join_stream(spark, sf_dir, horizon_minutes=60)
-    assert df.isStreaming
-    q = (
-        df.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ss_join_test")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    stream_pairs = {
-        (r["purchase_id"], r["click_id"])
-        for r in spark.sql("SELECT purchase_id, click_id FROM ss_join_test").collect()
-    }
-
-    ev = load_table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("c_user_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-    )
-    batch_pairs = {
-        (r["purchase_id"], r["click_id"])
-        for r in purchases.join(
-            clicks,
-            (F.col("user_id") == F.col("c_user_id"))
-            & (F.col("click_ts") <= F.col("purchase_ts"))
-            & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 60 MINUTES")),
-        ).collect()
-    }
-    assert len(batch_pairs) > 0  # non-vacuous on testdata
-    assert stream_pairs == batch_pairs
-
-
-def test_foreachbatch_exactly_once_sink(spark, sf_dir, tmp_path):
-    """foreachBatch parquet sink: restartable (checkpoint) and
-    idempotent (batch-id dirs); rerunning with the same checkpoint
-    writes nothing new."""
-    from nycitibike_data_transform_spark.streaming.events import (
-        read_events_stream,
-        write_stream_exactly_once,
-    )
-
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    stream = read_events_stream(spark, sf_dir).select("event_id", "user_id", "value")
-    write_stream_exactly_once(stream, out, ckpt)
-    first = spark.read.parquet(out)
-    batch_total = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    assert first.count() == batch_total
-    assert first.select("event_id").distinct().count() == batch_total
-
-    # re-run with same checkpoint: no new input -> no new rows
-    stream2 = read_events_stream(spark, sf_dir).select("event_id", "user_id", "value")
-    write_stream_exactly_once(stream2, out, ckpt)
-    assert spark.read.parquet(out).count() == batch_total
-
-
-def test_document_dedup_stream_matches_batch_fingerprints(spark, sf_dir):
-    """Streaming exact dedup emits exactly one row per distinct batch
-    fingerprint on a bounded input (all arrivals inside one
-    watermark horizon)."""
-    from nycitibike_data_transform_spark.streaming.documents import (
-        document_dedup_stream,
-    )
-
-    df = document_dedup_stream(spark, sf_dir)
-    assert df.isStreaming
-    q = (
-        df.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("doc_dedup_test")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.sql(
-        "SELECT count(*) n, count(DISTINCT fingerprint) d FROM doc_dedup_test"
-    ).first()
-    batch = all_queries()["dedup_exact"].spark(spark, sf_dir)
-    assert out["n"] == out["d"]  # no duplicate fingerprints emitted
-    assert out["n"] == batch.count()  # one survivor per batch group
-
-
-def test_quality_filter_stream_matches_batch(spark, sf_dir):
-    from nycitibike_data_transform_spark.streaming.documents import (
-        quality_filter_stream,
-    )
-
-    q = (
-        quality_filter_stream(spark, sf_dir)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("qf_stream_test")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    s = {
-        r["doc_id"]: (r["ok_token_count"], r["ok_mean_token_len"], r["ok_stopword_ratio"], r["keep"])
-        for r in spark.sql("SELECT * FROM qf_stream_test").collect()
-    }
-    b = {
-        r["doc_id"]: (r["ok_token_count"], r["ok_mean_token_len"], r["ok_stopword_ratio"], r["keep"])
-        for r in all_queries()["quality_filter"].spark(spark, sf_dir).collect()
-    }
-    assert s == b and s
+    return df.sparkSession.sql(f"SELECT * FROM {name}")
 
 
 def test_source_counts_stream_matches_batch(spark, sf_dir):
-    from nycitibike_data_transform_spark.streaming import (
-        run_stream_to_memory,
-        source_counts_stream,
-    )
+    from nycitibike_data_transform_spark.streaming import source_counts_stream
 
     out = run_stream_to_memory(source_counts_stream(spark, sf_dir), "src_counts_test")
     s = {
@@ -211,60 +36,6 @@ def test_source_counts_stream_matches_batch(spark, sf_dir):
         for r in all_queries()["source_mix_report"].spark(spark, sf_dir).collect()
     }
     assert s == b and s
-
-
-def test_sliding_stream_matches_batch_windows(spark, sf_dir):
-    """Sliding 1h/15min windows: every event lands in exactly 4
-    overlapping windows; stream output must equal the batch
-    F.window aggregation AND total-count conservation must hold."""
-    from nycitibike_data_transform_spark.queries import load
-    from nycitibike_data_transform_spark.streaming import sliding_counts_stream
-
-    stream_out = run_stream_to_memory(
-        sliding_counts_stream(spark, sf_dir), "sliding_test"
-    )
-    events = load(spark, sf_dir, "events")["events"]
-    batch = (
-        events.groupBy(
-            F.window("ts", "1 hour", "15 minutes").alias("w"), F.col("event_type")
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-    )
-    s = {
-        (r["window_start"], r["event_type"]): r["n_events"]
-        for r in stream_out.collect()
-    }
-    b = {
-        (r["window_start"], r["event_type"]): r["n_events"]
-        for r in batch.collect()
-    }
-    assert s == b
-    # conservation: each event counted once per covering window (4x)
-    assert sum(s.values()) == events.count() * 4
-
-
-def test_stream_static_enrichment_matches_batch(spark, sf_dir):
-    """Stream-static dim join: every event row enriched with its
-    customer attributes must equal the batch join row-for-row."""
-    from nycitibike_data_transform_spark.catalog import load_table
-    from nycitibike_data_transform_spark.streaming import enriched_events_stream
-
-    stream_out = run_stream_to_memory(
-        enriched_events_stream(spark, sf_dir), "enrich_test", output_mode="append"
-    )
-    from nycitibike_data_transform_spark.queries import load as _load
-
-    ev = _load(spark, sf_dir, "events")["events"]
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"), "c_name", "c_mktsegment"
-    )
-    batch = ev.join(cust, "user_id").select(
-        "event_id", "user_id", "event_type", "c_name", "c_mktsegment", "value"
-    )
-    s = sorted(map(tuple, stream_out.collect()))
-    b = sorted(map(tuple, batch.collect()))
-    assert s == b and len(s) > 0
 
 
 def _current(spark, target):

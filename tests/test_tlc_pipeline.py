@@ -152,13 +152,11 @@ def test_tlc_pipeline_via_parquet_roundtrip(spark, tmp_path):
 
 
 def test_env_qualified_materialization(spark, tmp_path):
-    """CORE/DEV environment isolation via the catalog path convention
+    """CORE/DEV environment isolation via a per-env warehouse path
     (the reference's dataset-prefix scheme, terraform main.tf:239-255)."""
-    from nycitibike_data_transform_spark.catalog import layer_path
-
     staged = aux_tlc_rides(_feeds(spark), _seed_dim(spark, tmp_path))
     for env in ("core", "dev"):
-        path = layer_path(str(tmp_path / "wh"), env, "2_stg", "aux_tlc_rides")
+        path = str(tmp_path / "wh" / env / "2_stg" / "aux_tlc_rides")
         staged.write.mode("overwrite").parquet(path)
     core = spark.read.parquet(str(tmp_path / "wh" / "core" / "2_stg" / "aux_tlc_rides"))
     dev = spark.read.parquet(str(tmp_path / "wh" / "dev" / "2_stg" / "aux_tlc_rides"))

@@ -9,7 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from nycitibike_data_transform_spark.operators.diff import diff_summary
+from nycitibike_data_transform_spark.operators.diff import snapshot_diff
 from nycitibike_data_transform_spark.versioning import VersionedTable
 
 
@@ -37,12 +37,8 @@ def test_snapshot_diff_across_versions(spark, tmp_path):
     t = VersionedTable(str(tmp_path / "tbl"))
     t.write_version(_df(spark, [(1, "a"), (2, "b"), (4, "same")]))
     t.write_version(_df(spark, [(1, "a2"), (3, "c"), (4, "same")]))
-    got = {
-        (r["status"], r["n_rows"])
-        for r in diff_summary(
-            t.read_version(spark, 1), t.read_version(spark, 2), "k"
-        ).collect()
-    }
+    diff = snapshot_diff(t.read_version(spark, 1), t.read_version(spark, 2), "k")
+    got = {(r["status"], r["count"]) for r in diff.groupBy("status").count().collect()}
     assert got == {("changed", 1), ("removed", 1), ("added", 1), ("unchanged", 1)}
 
 
