@@ -144,26 +144,25 @@ class CommitBackend(ABC):
     # --------------------------------------------------- orphan sweep
 
     def sweep_orphans(self) -> int:
-        """Reclaim store-side residue of CRASHED large-object uploads
+        """Reclaim store-side residue of CRASHED multi-request uploads
         (VERDICT r14 item 7) — called by ``VersionedTable.vacuum`` under
         the table write lock, alongside its local ``_staging`` sweep.
         Returns the number of orphans reclaimed.
 
-        The local/memory backends upload atomically and leave nothing
-        store-side — this default is a true no-op, not a stub. The
-        object-store dialects override it: S3 aborts incomplete
-        multipart uploads under the table prefix (staged parts are
-        billed until aborted); GCS cancels resumable sessions recorded
-        in ``_uploads/`` markers (sessions are not enumerable through
-        the API, so the upload path journals them — see
-        ``GCSBackend._upload``).
+        Every backend here writes each object in one request, so
+        nothing it writes can be left half-uploaded — this default is a
+        true no-op, not a stub. The object-store dialects override it
+        for residue an EARLIER client left in the bucket: S3 aborts
+        incomplete multipart uploads under the table prefix (staged
+        parts are billed until aborted); GCS cancels the resumable
+        sessions that client journaled in ``_uploads/`` markers.
 
         Zombie posture (same class as vacuum's manifest deletes,
-        documented at ``versioning._vacuum_locked``): a zombie vacuum
-        sweeping after lease reclaim could cancel the WINNER's in-flight
-        large upload — the winner's put then fails loudly and its commit
-        retries; committed state is never touched, because an upload
-        only becomes visible at its final conditional apply."""
+        documented at ``versioning._vacuum_locked``): the sweep touches
+        only uploads that never completed, never a committed object —
+        an upload becomes visible only at its final conditional apply —
+        so the worst a zombie sweep can do is fail an earlier client's
+        in-flight upload, which that writer's commit loop retries."""
         return 0
 
 
@@ -355,7 +354,35 @@ class LocalFSBackend(CommitBackend):
         return True
 
 
-class MemoryBackend(CommitBackend):
+class _ExpiryLeases(CommitBackend):
+    """Wall-clock lease expiry, the liveness of every backend that
+    cannot see the lock holder's pid (memory and the object stores).
+
+    A payload is ``{"owner", "expires"}`` with ``expires`` in epoch
+    seconds; it is dead once ``clock()`` minus ``skew_margin`` passes
+    ``expires`` (DEPLOY.md: the margin absorbs NTP drift between the
+    machines sharing a bucket; err toward live). Subclasses set
+    ``lease_ttl``, ``skew_margin`` and ``_clock``."""
+
+    def new_lease(self) -> str:
+        return json.dumps(
+            {
+                "owner": uuid.uuid4().hex,
+                "expires": self._clock() + self.lease_ttl,
+            }
+        )
+
+    def lease_live(self, content: str) -> bool:
+        try:
+            lease = json.loads(content)
+            # skew margin errs toward live: a lease is only dead once
+            # every plausibly-skewed clock agrees it expired
+            return self._clock() - self.skew_margin < float(lease["expires"])
+        except (ValueError, KeyError, TypeError):
+            return True  # unrecognized payload: err toward live
+
+
+class MemoryBackend(_ExpiryLeases):
     """In-memory emulation of an OBJECT-STORE control plane: every
     operation is atomic under one mutex (what S3/GCS conditional
     requests give per-key), and liveness is LEASE-EXPIRY — no pids,
@@ -372,9 +399,12 @@ class MemoryBackend(CommitBackend):
     The default clock is WALL time (``time.time``), not monotonic
     (r11 ADVICE): lease payloads are read by OTHER machines on a real
     object store, and monotonic readings from different hosts are
-    incomparable — expiry must be in a shared timebase, compared with
-    the DEPLOY.md skew margin. ``time.monotonic`` would only be valid
-    for a strictly single-process emulation."""
+    incomparable — expiry must be in a shared timebase. ``time.monotonic``
+    would only be valid for a strictly single-process emulation. One
+    process has one clock, so the skew margin the object-store backends
+    subtract (DEPLOY.md) is 0 here."""
+
+    skew_margin = 0.0
 
     def __init__(self, lease_ttl: float = 60.0, clock=time.time):
         self._store: dict[str, str] = {}
@@ -434,25 +464,8 @@ class MemoryBackend(CommitBackend):
             fn()
             return True
 
-    # --------------------------------------------------------- leases
 
-    def new_lease(self) -> str:
-        return json.dumps(
-            {
-                "owner": uuid.uuid4().hex,
-                "expires": self._clock() + self.lease_ttl,
-            }
-        )
-
-    def lease_live(self, content: str) -> bool:
-        try:
-            lease = json.loads(content)
-            return self._clock() < float(lease["expires"])
-        except (ValueError, KeyError, TypeError):
-            return True  # unrecognized payload: err toward live
-
-
-class S3Backend(CommitBackend):
+class S3Backend(_ExpiryLeases):
     """The control plane on an S3-compatible object store (r11 VERDICT
     item #3) — the real port the LocalFS/Memory backends emulate.
 
@@ -476,12 +489,11 @@ class S3Backend(CommitBackend):
     ``If-Match`` silently would void the protocol — probe with
     :meth:`verify_conditional_support` at deploy time.
 
-    Liveness is wall-clock lease expiry (same payload shape as
-    :class:`MemoryBackend`): machines sharing a bucket cannot see each
-    other's pids, and monotonic clocks from different hosts are
-    incomparable, so ``expires`` is epoch seconds compared against
-    ``clock()`` minus ``skew_margin`` (DEPLOY.md: the margin absorbs
-    NTP drift; err toward live).
+    Liveness is wall-clock lease expiry (:class:`_ExpiryLeases`):
+    machines sharing a bucket cannot see each other's pids, and
+    monotonic clocks from different hosts are incomparable, so
+    ``expires`` is epoch seconds compared against ``clock()`` minus
+    ``skew_margin``.
 
     ``mutate_if`` is NOT overridden: a store-side mutex cannot be held
     around a local syscall, so the inherited check-then-act applies —
@@ -618,25 +630,6 @@ class S3Backend(CommitBackend):
             raise
         return True
 
-    # --------------------------------------------------------- leases
-
-    def new_lease(self) -> str:
-        return json.dumps(
-            {
-                "owner": uuid.uuid4().hex,
-                "expires": self._clock() + self.lease_ttl,
-            }
-        )
-
-    def lease_live(self, content: str) -> bool:
-        try:
-            lease = json.loads(content)
-            # skew margin errs toward live: a lease is only dead once
-            # every plausibly-skewed clock agrees it expired
-            return self._clock() - self.skew_margin < float(lease["expires"])
-        except (ValueError, KeyError, TypeError):
-            return True  # unrecognized payload: err toward live
-
     # -------------------------------------------------------- probing
 
     def verify_conditional_support(self) -> None:
@@ -717,7 +710,7 @@ class S3Backend(CommitBackend):
         return swept
 
 
-class GCSBackend(CommitBackend):
+class GCSBackend(_ExpiryLeases):
     """The control plane on Google Cloud Storage via its JSON API
     (VERDICT r12 item #4): the SECOND real conditional-write dialect,
     proving the :class:`CommitBackend` interface is store-shaped and
@@ -737,12 +730,9 @@ class GCSBackend(CommitBackend):
     - ``delete_if`` → read content + generation, compare, DELETE with
       ``ifGenerationMatch=<generation>`` (the TOCTOU-free reclaim).
 
-    Uploads route by size (``_upload``): control-plane objects go
-    single-shot ``uploadType=media``; anything above
-    ``resumable_threshold`` — manifests grow with table history and
-    have no a-priori bound at 100 TB — uses the documented RESUMABLE
-    protocol in ``chunk_size`` pieces, with identical precondition
-    semantics (VERDICT r13 item 3).
+    Every upload — lease, pointer or manifest — is ONE
+    ``uploadType=media`` request carrying its precondition, as every
+    S3 object is one ``PutObject`` (DEPLOY.md, upload sizing).
 
     Speaks the REST surface directly over ``urllib`` — no SDK
     dependency — so the contract tests can drive it against any
@@ -753,22 +743,16 @@ class GCSBackend(CommitBackend):
     faults (429/5xx) are raised to the caller: the commit protocol's
     own retry loop (ConcurrentWriteError backoff) is the right place
     to re-drive a commit, not a hidden transport retry that could
-    double-apply a non-idempotent conditional. The one exception is
-    INSIDE a resumable session (see ``_upload``): the read-only status
-    query resumes the same session by offset — structurally unable to
-    re-apply, bounded by ``resumable_recoveries`` — and both behaviors
-    are fault-injection-proven in ``tests/test_transport_faults.py``.
+    double-apply a non-idempotent conditional. After a lost reply the
+    retried conditional refuses on its content re-read, whatever the
+    object's size (fault-injection-proven in
+    ``tests/test_transport_faults.py``).
 
     Liveness is wall-clock lease expiry with a skew margin, exactly
     the :class:`S3Backend` semantics (machines sharing a bucket have
     no pid visibility; DEPLOY.md documents the margin). ``mutate_if``
     is likewise NOT overridden — same reasoning as S3.
     """
-
-    #: real GCS requires every non-final resumable chunk to be a
-    #: multiple of 256 KiB; the defaults below comply. Tests against
-    #: the emulator may force smaller chunks to exercise the loop.
-    _CHUNK_QUANTUM = 256 * 1024
 
     def __init__(
         self,
@@ -780,10 +764,6 @@ class GCSBackend(CommitBackend):
         clock=time.time,
         skew_margin: float = 5.0,
         timeout: float = 30.0,
-        resumable_threshold: int = 4 * 1024 * 1024,
-        chunk_size: int = 8 * 1024 * 1024,
-        resumable_recoveries: int = 3,
-        allow_unaligned_chunks: bool = False,
     ):
         self.bucket = bucket
         self.prefix = (prefix.rstrip("/") + "/") if prefix else ""
@@ -793,32 +773,11 @@ class GCSBackend(CommitBackend):
         self.skew_margin = skew_margin
         self._clock = clock
         self._timeout = timeout
-        if chunk_size <= 0:
-            raise ValueError("chunk_size must be positive")
-        if chunk_size % self._CHUNK_QUANTUM and not allow_unaligned_chunks:
-            # real GCS rejects non-final chunks that are not 256 KiB
-            # multiples — fail at build time, not at the first large
-            # manifest in production
-            # (ADVICE r14). Tests against the emulator pass
-            # allow_unaligned_chunks=True to exercise the loop with
-            # tiny chunks.
-            raise ValueError(
-                f"chunk_size must be a multiple of {self._CHUNK_QUANTUM} "
-                f"(the GCS resumable chunk quantum), got {chunk_size}; "
-                "pass allow_unaligned_chunks=True only against emulators"
-            )
-        self.resumable_threshold = resumable_threshold
-        self.chunk_size = chunk_size
-        self.resumable_recoveries = resumable_recoveries
 
     # ------------------------------------------------------ transport
 
     def _request(
-        self,
-        method: str,
-        url: str,
-        body: bytes | None = None,
-        headers: dict[str, str] | None = None,
+        self, method: str, url: str, body: bytes | None = None
     ) -> tuple[int, dict, bytes]:
         import urllib.error
         import urllib.request
@@ -828,8 +787,6 @@ class GCSBackend(CommitBackend):
             req.add_header("Authorization", f"Bearer {self._token}")
         if body is not None:
             req.add_header("Content-Type", "application/octet-stream")
-        for k, v in (headers or {}).items():
-            req.add_header(k, v)
         try:
             with urllib.request.urlopen(req, timeout=self._timeout) as resp:
                 return resp.status, dict(resp.headers), resp.read()
@@ -862,179 +819,6 @@ class GCSBackend(CommitBackend):
             f"GCS {op}: unexpected HTTP {status}: {body[:200].decode('utf-8', 'replace')}"
         )
 
-    def _resumable_url(self, key: str, **params: str) -> str:
-        from urllib.parse import urlencode
-
-        q = {"uploadType": "resumable", "name": self.prefix + key, **params}
-        return (
-            f"{self.endpoint}/upload/storage/v1/b/{self.bucket}/o?"
-            + urlencode(q)
-        )
-
-    def _upload(
-        self, key: str, body: bytes, **params: str
-    ) -> tuple[int, dict, bytes]:
-        """Upload ``body`` to ``key``, honoring any ``ifGenerationMatch``
-        in ``params``, and return the FINAL (status, headers, body) so
-        callers keep their own 412 handling.
-
-        Objects at or under ``resumable_threshold`` go single-shot
-        (``uploadType=media`` — right for the control plane's tiny
-        pointer/lease objects). Larger ones — manifests grow with table
-        history and have no a-priori bound at 100 TB (VERDICT r13
-        item 3) — use the documented resumable protocol: one initiation
-        POST minting a session URI, then ``chunk_size``-sized PUTs with
-        ``Content-Range``; the store answers 308 per intermediate chunk
-        and applies the precondition when the LAST chunk completes the
-        object, so conditional semantics are identical on both paths.
-        Real GCS additionally requires non-final chunks be multiples of
-        256 KiB (the default ``chunk_size`` complies; tests force tiny
-        chunks against the emulator to exercise the loop).
-
-        Lost replies within a session are recovered IN the session
-        (bounded by ``resumable_recoveries``): on a 5xx chunk reply the
-        client issues the documented STATUS query (``Content-Range:
-        bytes */total``, empty body) — read-only, so it can never
-        re-apply anything — and resumes from the byte offset the store
-        reports, or returns the recorded outcome if the session had
-        already finalized (the lost-finalize-reply case). This does not
-        contradict the "transport retries are delegated to the commit
-        loop" rule: re-driving the SAME session is offset-idempotent,
-        and the precondition still applies exactly once at finalize.
-        Single-shot uploads keep raising to the commit loop."""
-        if len(body) <= self.resumable_threshold:
-            return self._request(
-                "POST", self._upload_url(key, **params), body
-            )
-        status, headers, rbody = self._request(
-            "POST", self._resumable_url(key, **params), b""
-        )
-        if status != 200:
-            # initiation-time refusal (GCS may evaluate preconditions
-            # here too): surface it exactly like a final-status 412
-            return status, headers, rbody
-        session = headers.get("Location") or headers.get("location")
-        if not session:
-            raise RuntimeError(
-                "GCS resumable initiation returned no session Location "
-                f"header for object {self.prefix + key!r}"
-            )
-        # journal the session in an ``_uploads/`` marker BEFORE any
-        # chunk moves (VERDICT r14 item 7): resumable sessions are not
-        # enumerable through the API, so a SIGKILLed writer's open
-        # session would be invisible — the marker makes it sweepable
-        # (``sweep_orphans`` cancels the journaled URI). The one
-        # unjournaled window — a crash between initiation and this put —
-        # leaves a session real GCS self-expires after 7 days
-        # (documented residual). Tiny object → single-shot upload.
-        marker = f"_uploads/{uuid.uuid4().hex}"
-        self._request(
-            "POST", self._upload_url(marker), session.encode("utf-8")
-        )
-        outcome: tuple[int, dict, bytes] | None = None
-        try:
-            outcome = self._drive_session(key, session, body)
-            return outcome
-        finally:
-            # normal exits (success OR a surfaced failure) own their
-            # outcome — cancel any non-finalized session so it cannot
-            # outlive this call, then drop the marker. Both best-effort:
-            # a failure here leaves a marker the next vacuum sweeps.
-            try:
-                if outcome is None or outcome[0] != 200:
-                    self._request("DELETE", session, b"")
-            except Exception:
-                pass
-            try:
-                self._request("DELETE", self._object_url(marker))
-            except Exception:
-                pass
-
-    def _drive_session(
-        self, key: str, session: str, body: bytes
-    ) -> tuple[int, dict, bytes]:
-        """Drive one resumable session's chunk loop to its final
-        (status, headers, body) — see ``_upload`` for the protocol and
-        recovery contract."""
-        total = len(body)
-        off = 0
-        recoveries = 0
-        while True:
-            chunk = body[off : off + self.chunk_size]
-            end = off + len(chunk) - 1
-            status, headers, rbody = self._request(
-                "PUT",
-                session,
-                chunk,
-                headers={"Content-Range": f"bytes {off}-{end}/{total}"},
-            )
-            if status in (429, 500, 502, 503, 504):
-                if recoveries >= self.resumable_recoveries:
-                    return status, headers, rbody  # delegate upward
-                recoveries += 1
-                status, headers, rbody = self._request(
-                    "PUT",
-                    session,
-                    b"",
-                    headers={"Content-Range": f"bytes */{total}"},
-                )
-                if status != 308:
-                    # 200: the session had finalized and the reply was
-                    # lost — the recorded outcome, applied exactly once.
-                    # 412/4xx/5xx: surface to the caller unchanged.
-                    return status, headers, rbody
-                off = self._range_have(headers) or 0
-                if off >= total:
-                    raise RuntimeError(
-                        "GCS resumable status query reports all bytes "
-                        f"persisted yet the session is incomplete for "
-                        f"{self.prefix + key!r}"
-                    )
-                continue
-            if status == 308:  # chunk acknowledged, upload incomplete
-                have = self._range_have(headers)
-                if have is None:
-                    # an absent Range on a chunk 308 means NOTHING
-                    # persisted (the _range_have contract and real GCS
-                    # behavior) — the old ``end + 1`` assumption would
-                    # advance past unpersisted bytes and die later on
-                    # the forward-progress guard (ADVICE r14). Restart
-                    # from byte 0, bounded like the 5xx recoveries so a
-                    # store that answers 308-no-Range forever cannot
-                    # loop us.
-                    if recoveries >= self.resumable_recoveries:
-                        raise RuntimeError(
-                            "GCS resumable upload made no forward "
-                            f"progress (308 with no Range at offset {off} "
-                            f"of {total}) for {self.prefix + key!r}"
-                        )
-                    recoveries += 1
-                    off = 0
-                    continue
-                nxt = have
-                if nxt <= off or nxt >= total:
-                    raise RuntimeError(
-                        "GCS resumable upload made no forward progress "
-                        f"(offset {off} -> {nxt} of {total}) for "
-                        f"{self.prefix + key!r}"
-                    )
-                off = nxt
-                continue
-            return status, headers, rbody
-
-    @staticmethod
-    def _range_have(headers: dict) -> int | None:
-        """Bytes persisted per a 308's ``Range: bytes=0-N`` header
-        (N+1), or None when the header is absent (nothing persisted —
-        real GCS omits it)."""
-        r = headers.get("Range") or headers.get("range")
-        if not r or not r.startswith("bytes=0-"):
-            return None
-        try:
-            return int(r[len("bytes=0-") :]) + 1
-        except ValueError:
-            return None
-
     def _get_with_generation(self, key: str) -> tuple[str | None, int | None]:
         status, headers, body = self._request(
             "GET", self._object_url(key, alt="media")
@@ -1059,7 +843,9 @@ class GCSBackend(CommitBackend):
         return self._get_with_generation(key)[0]
 
     def put(self, key: str, content: str) -> None:
-        status, _, body = self._upload(key, content.encode("utf-8"))
+        status, _, body = self._request(
+            "POST", self._upload_url(key), content.encode("utf-8")
+        )
         if status != 200:
             self._raise_unexpected(status, "put", body)
 
@@ -1095,8 +881,10 @@ class GCSBackend(CommitBackend):
     # ---------------------------------------------------- conditionals
 
     def create_exclusive(self, key: str, content: str) -> bool:
-        status, _, body = self._upload(
-            key, content.encode("utf-8"), ifGenerationMatch="0"
+        status, _, body = self._request(
+            "POST",
+            self._upload_url(key, ifGenerationMatch="0"),
+            content.encode("utf-8"),
         )
         if status == 412:
             return False
@@ -1110,8 +898,10 @@ class GCSBackend(CommitBackend):
         observed, gen = self._get_with_generation(key)
         if observed != expected:
             return False
-        status, _, body = self._upload(
-            key, content.encode("utf-8"), ifGenerationMatch=str(gen)
+        status, _, body = self._request(
+            "POST",
+            self._upload_url(key, ifGenerationMatch=str(gen)),
+            content.encode("utf-8"),
         )
         if status == 412:
             return False  # generation moved between read and write
@@ -1131,23 +921,6 @@ class GCSBackend(CommitBackend):
         if status != 204:
             self._raise_unexpected(status, "delete_if", body)
         return True
-
-    # --------------------------------------------------------- leases
-
-    def new_lease(self) -> str:
-        return json.dumps(
-            {
-                "owner": uuid.uuid4().hex,
-                "expires": self._clock() + self.lease_ttl,
-            }
-        )
-
-    def lease_live(self, content: str) -> bool:
-        try:
-            lease = json.loads(content)
-            return self._clock() - self.skew_margin < float(lease["expires"])
-        except (ValueError, KeyError, TypeError):
-            return True  # unrecognized payload: err toward live
 
     # -------------------------------------------------------- probing
 
@@ -1195,16 +968,20 @@ class GCSBackend(CommitBackend):
             self.delete(key)
 
     def sweep_orphans(self) -> int:
-        """Cancel resumable sessions journaled by crashed writers
-        (VERDICT r14 item 7). GCS cannot enumerate open sessions, so
-        ``_upload`` journals each session URI in an ``_uploads/`` marker
-        and removes it on every normal exit — a marker still present
-        while the caller (``vacuum``) holds the table write lock is a
-        crashed or zombie writer's. Cancel is the documented DELETE to
-        the session URI (GCS answers 499; 4xx for an already-expired or
-        finalized session is equally final), then the marker is dropped.
-        Committed objects are never touched — a resumable upload only
-        becomes an object at its final conditional apply."""
+        """Cancel the resumable sessions an EARLIER client journaled
+        (VERDICT r14 item 7). This client uploads every object in one
+        ``uploadType=media`` request and writes no markers, but a bucket
+        an earlier client wrote can still hold them: that client sent
+        objects above 4 MiB through resumable sessions and, because GCS
+        cannot enumerate open sessions, journaled each session URI in
+        an ``_uploads/`` marker, removing it on every normal exit. A
+        marker still present while the caller (``vacuum``) holds the
+        table write lock is a crashed or zombie writer's. Cancel is the
+        documented DELETE to the session URI (GCS answers 499; 4xx for
+        an already-expired or finalized session is equally final), then
+        the marker is dropped. Committed objects are never touched — a
+        resumable upload only becomes an object at its final
+        conditional apply."""
         swept = 0
         for marker in self.list("_uploads"):
             session = self.get(marker)

@@ -18,16 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-#: metadata struct carried alongside every binary payload.
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("mime", T.StringType(), False),
-        T.StructField("n_bytes", T.LongType(), False),
-        T.StructField("checksum_md5", T.StringType(), False),
-    ]
-)
 
 
 def attach_payload(df: DataFrame, text_col: str = "text", mime: str = "text/plain") -> DataFrame:

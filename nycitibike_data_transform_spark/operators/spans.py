@@ -36,10 +36,6 @@ from pyspark.sql import functions as F
 from nycitibike_data_transform_spark.functions.text import token_array
 from nycitibike_data_transform_spark.operators.util import fan_out
 
-# backward-compatible alias: the helper was promoted to
-# functions.text.token_array (shared with packing and perplexity)
-_token_array = token_array
-
 
 def _spans_with_positions(
     docs: DataFrame, width: int, id_col: str, text_col: str
@@ -48,7 +44,7 @@ def _spans_with_positions(
     spans = (doc_id, pos 1-based, __h md5-of-span)."""
     docs = fan_out(docs)
     base = docs.select(
-        F.col(id_col).alias("doc_id"), _token_array(text_col).alias("__w")
+        F.col(id_col).alias("doc_id"), token_array(text_col).alias("__w")
     ).withColumn("__n_tokens", F.size("__w"))
     span_structs = F.when(
         F.col("__n_tokens") >= width,

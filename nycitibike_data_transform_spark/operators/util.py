@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Ensure a CPU-heavy stage has at least cluster-parallelism
     partitions.
 
@@ -17,11 +17,12 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     never triggers.
     """
     spark = df.sparkSession
-    target = min_partitions or spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     # NOTE: the .rdd width probe forces PHYSICAL PLANNING of df's
     # subtree at call time (no execution, but Catalyst runs). Cheap at
     # today's plan depths (VERDICT r15 §minor) — if a caller ever hangs
-    # this off a very deep plan, prefer passing the known source width.
+    # this off a very deep plan, prefer the width its source already
+    # knows over this probe.
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)

@@ -1899,15 +1899,13 @@ class VersionedTable:
                     shutil.rmtree(d, ignore_errors=True)
 
             self._fenced(sweep_orphans)
-        # store-side residue of crashed LARGE uploads (VERDICT r14
-        # item 7): incomplete S3 multipart uploads / journaled GCS
-        # resumable sessions under this table's prefix. We hold the
-        # writer lock, so any open upload is a crashed or zombie
-        # writer's. Lease-checked (check-then-act) like the manifest
-        # deletes above — the bounded zombie residual is canceling the
-        # reclaiming winner's IN-FLIGHT upload, which fails that commit
-        # loudly and retryably; committed objects are never touched
-        # (an upload only becomes visible at its final conditional
-        # apply).
+        # store-side residue of crashed multi-request uploads (VERDICT
+        # r14 item 7): incomplete S3 multipart uploads / journaled GCS
+        # resumable sessions under this table's prefix. Every backend
+        # writes each object in one request, so only an earlier client
+        # can have left them. We hold the writer lock, so any
+        # open upload is a crashed or zombie writer's. Committed
+        # objects are never touched (an upload only becomes visible
+        # at its final conditional apply).
         self._backend.sweep_orphans()
         return removed

@@ -23,15 +23,13 @@ refuses:
   conditions against; object GETs of missing names are 404;
 - list supports ``prefix`` and real ``pageToken`` pagination (small
   page size, so the client's pagination loop is actually exercised);
-- RESUMABLE uploads (``uploadType=resumable``): the initiation POST
-  mints a session URI in the ``Location`` header, chunk PUTs carry
-  ``Content-Range`` and get 308 until the final byte arrives, and the
-  ``ifGenerationMatch`` precondition is evaluated BOTH at initiation
-  (fast-fail, as real GCS may) and again at FINALIZE under the
-  mutation lock — a generation that moves mid-upload turns the last
-  chunk into a 412, never a lost update. A chunk whose offset
-  disagrees with the bytes already stored is refused again with 308 +
-  the stored ``Range`` (the documented resume handshake).
+- resumable SESSIONS, initiation and cancel only: the
+  ``uploadType=resumable`` POST mints a session URI in the
+  ``Location`` header, and a DELETE to that URI cancels it (499).
+  :class:`GCSBackend` uploads every object in one ``uploadType=media``
+  request; a session is the residue an earlier client's crashed large
+  upload leaves, which the sweep tests plant and
+  ``GCSBackend.sweep_orphans`` cancels. Chunk PUTs are not served.
 
 Optional fault injection (``drop_condition_enforcement``) turns the
 emulator into the broken store ``verify_conditional_support`` exists
@@ -49,14 +47,11 @@ a conditional after exactly this.
 from __future__ import annotations
 
 import json
-import re
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlsplit
 
 _PAGE_SIZE = 3  # tiny on purpose: force the client's pagination loop
-_CONTENT_RANGE = re.compile(r"^bytes (\d+)-(\d+)/(\d+)$")
-_STATUS_RANGE = re.compile(r"^bytes \*/(\d+)$")  # status query: no body
 
 
 class _State:
@@ -71,27 +66,9 @@ class _State:
         # the armed failures fire — lets a test target, e.g., the 3rd
         # conditional of a commit (the pointer CAS) specifically
         self.fail_conditional_after = 0
-        # resumable sessions: id -> {"name", "qs", "buf", "puts"} while
-        # in progress; {"done": (name, gen)} once finalized (real GCS
-        # keeps completed sessions queryable — a client whose finalize
-        # reply was lost reads the outcome instead of re-applying)
-        self.sessions: dict[str, dict] = {}
+        # open resumable sessions: id -> object name
+        self.sessions: dict[str, str] = {}
         self.session_counter = 0
-        # >0: the next N NON-final chunk replies are lost as 503 AFTER
-        # the bytes persisted (the mid-upload analogue of the above)
-        self.fail_chunk_replies = 0
-        # >0: the next N chunk PUTs are acknowledged 308 WITHOUT
-        # persisting their bytes (Range reflects only what was already
-        # there — absent when nothing was): models a store/proxy that
-        # dropped the body, the ADVICE r14 no-Range-on-308 case
-        self.drop_chunks = 0
-        # stats of the most recently finalized session (tests assert
-        # the client actually chunked): {"name", "puts", "size"}
-        self.last_finalized: dict | None = None
-        # per-object apply counts — the exactly-once signal that stays
-        # readable when auxiliary objects (e.g. the client's _uploads/
-        # session markers) also mint generations
-        self.write_counts: dict[str, int] = {}
 
     def swallow_conditional_reply(self, qs) -> bool:
         """Called under ``lock`` AFTER a conditional mutation applied:
@@ -170,9 +147,6 @@ class _Handler(BaseHTTPRequestHandler):
                 return self._error(err, "conditionNotMet")
             gen = self.state.next_gen()
             self.state.objects[name] = (body, gen)
-            self.state.write_counts[name] = (
-                self.state.write_counts.get(name, 0) + 1
-            )
             if self.state.swallow_conditional_reply(qs):
                 return self._error(503, "backendError (injected after apply)")
         meta = json.dumps({"name": name, "generation": str(gen)}).encode()
@@ -187,19 +161,12 @@ class _Handler(BaseHTTPRequestHandler):
 
     def _initiate_resumable(self, name: str, qs):
         with self.state.lock:
-            # fast-fail a precondition that already cannot hold (real
-            # GCS may refuse here too); finalize re-checks regardless
             err = self._check_generation_match(qs, name)
             if err:
                 return self._error(err, "conditionNotMet")
             self.state.session_counter += 1
             sid = f"sess{self.state.session_counter}"
-            self.state.sessions[sid] = {
-                "name": name,
-                "qs": qs,
-                "buf": bytearray(),
-                "puts": 0,
-            }
+            self.state.sessions[sid] = name
         host = self.headers.get("Host", "127.0.0.1")
         self._reply(
             200,
@@ -209,99 +176,6 @@ class _Handler(BaseHTTPRequestHandler):
                 ("Location", f"http://{host}/upload/resumable/{sid}"),
             ],
         )
-
-    def _session_done_reply(self, name: str, gen: int):
-        meta = json.dumps({"name": name, "generation": str(gen)}).encode()
-        self._reply(
-            200,
-            meta,
-            [
-                ("Content-Type", "application/json"),
-                ("x-goog-generation", str(gen)),
-            ],
-        )
-
-    def do_PUT(self):
-        url = urlsplit(self.path)
-        parts = url.path.split("/")
-        if len(parts) != 4 or parts[1:3] != ["upload", "resumable"]:
-            return self._error(404, "unknown route")
-        crange = self.headers.get("Content-Range", "")
-        status_q = _STATUS_RANGE.match(crange)
-        if not status_q:
-            m = _CONTENT_RANGE.match(crange)
-            if not m:
-                return self._error(400, f"bad Content-Range {crange!r}")
-            first, last, total = (int(g) for g in m.groups())
-            length = int(self.headers.get("Content-Length", "0"))
-            chunk = self.rfile.read(length)
-            if last - first + 1 != len(chunk):
-                return self._error(
-                    400, "Content-Range disagrees with body size"
-                )
-        with self.state.lock:
-            sess = self.state.sessions.get(parts[3])
-            if sess is None:
-                return self._error(404, "no such upload session")
-            if "done" in sess:
-                # finalized: a status query (or a late chunk re-send)
-                # reads the recorded outcome — never a second apply
-                return self._session_done_reply(*sess["done"])
-            if status_q:
-                have = len(sess["buf"])
-                return self._reply(
-                    308, b"", [("Range", f"bytes=0-{have - 1}")] if have else []
-                )
-            if first != len(sess["buf"]):
-                # resume handshake: tell the client what we have (real
-                # GCS omits the Range header when nothing persisted yet)
-                have = len(sess["buf"])
-                return self._reply(
-                    308, b"", [("Range", f"bytes=0-{have - 1}")] if have else []
-                )
-            if self.state.drop_chunks > 0:
-                # body dropped pre-persist: per real GCS the 308 carries
-                # Range only for bytes actually stored — absent if none
-                self.state.drop_chunks -= 1
-                have = len(sess["buf"])
-                return self._reply(
-                    308, b"", [("Range", f"bytes=0-{have - 1}")] if have else []
-                )
-            sess["buf"].extend(chunk)
-            sess["puts"] += 1
-            if last + 1 < total:
-                if self.state.fail_chunk_replies > 0:
-                    # bytes persisted, reply lost mid-upload
-                    self.state.fail_chunk_replies -= 1
-                    return self._error(
-                        503, "backendError (injected after chunk persisted)"
-                    )
-                return self._reply(
-                    308, b"", [("Range", f"bytes=0-{last}")]
-                )
-            # final chunk: the precondition is evaluated NOW, under the
-            # same lock every other mutation takes — a generation that
-            # moved mid-upload 412s here instead of losing an update
-            name, qs = sess["name"], sess["qs"]
-            err = self._check_generation_match(qs, name)
-            if err:
-                del self.state.sessions[parts[3]]
-                return self._error(err, "conditionNotMet")
-            gen = self.state.next_gen()
-            self.state.objects[name] = (bytes(sess["buf"]), gen)
-            self.state.write_counts[name] = (
-                self.state.write_counts.get(name, 0) + 1
-            )
-            self.state.last_finalized = {
-                "name": name,
-                "puts": sess["puts"],
-                "size": len(sess["buf"]),
-            }
-            # keep the finalized session queryable (see _State note)
-            self.state.sessions[parts[3]] = {"done": (name, gen)}
-            if self.state.swallow_conditional_reply(qs):
-                return self._error(503, "backendError (injected after apply)")
-        self._session_done_reply(name, gen)
 
     def do_GET(self):
         url = urlsplit(self.path)
@@ -359,8 +233,7 @@ class _Handler(BaseHTTPRequestHandler):
         if len(parts) == 4 and parts[1:3] == ["upload", "resumable"]:
             # cancel an upload session (the documented DELETE to the
             # session URI): real GCS answers 499 whether or not bytes
-            # were staged; a finalized session's recorded outcome is
-            # discarded (its OBJECT, if committed, is untouched)
+            # were staged
             with self.state.lock:
                 if parts[3] not in self.state.sessions:
                     return self._error(404, "no such upload session")

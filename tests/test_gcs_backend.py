@@ -115,99 +115,6 @@ def test_gcs_generation_pin_refuses_identical_bytes(gcs_backend_factory):
     assert b.get("ptr") == "v"
 
 
-def test_gcs_large_upload_goes_resumable_and_chunks(gcs_backend_factory):
-    """VERDICT r13 item 3: manifests grow with table history and have
-    no a-priori size bound at 100 TB — objects above the threshold
-    must use the documented resumable protocol. Forced-tiny threshold
-    and chunk size so the loop genuinely iterates: the emulator
-    records how many chunk PUTs finalized the object."""
-    b = gcs_backend_factory(resumable_threshold=100, chunk_size=64, allow_unaligned_chunks=True)
-    manifest = "x" * 1000  # 1000 bytes -> 16 chunks of 64
-    b.put("_versions/v00000001.json", manifest)
-    assert b.get("_versions/v00000001.json") == manifest
-    done = gcs_backend_factory.server.state.last_finalized
-    assert done["name"].endswith("_versions/v00000001.json")
-    assert done["size"] == 1000
-    assert done["puts"] == 16
-
-    # small control-plane objects stay single-shot: no new session
-    sessions_before = gcs_backend_factory.server.state.session_counter
-    b.put("_current", "7")
-    assert gcs_backend_factory.server.state.session_counter == sessions_before
-
-
-def test_gcs_resumable_honors_preconditions(gcs_backend_factory):
-    """Conditional semantics must be identical on both upload paths:
-    a large create_exclusive on an existing key refuses, and a large
-    cas lands exactly once with the full content."""
-    b = gcs_backend_factory(resumable_threshold=100, chunk_size=64, allow_unaligned_chunks=True)
-    big_a, big_b = "a" * 500, "b" * 700
-    assert b.create_exclusive("ptr", big_a) is True
-    assert b.create_exclusive("ptr", big_b) is False  # initiation 412
-    assert b.get("ptr") == big_a
-    assert b.cas("ptr", big_a, big_b) is True
-    assert b.get("ptr") == big_b
-    assert b.cas("ptr", big_a, big_b) is False  # content moved: refuse
-
-
-def test_gcs_resumable_interloper_mid_upload_412s_at_finalize(
-    gcs_backend_factory,
-):
-    """The race the finalize-time check exists for: the generation
-    moves BETWEEN the initiation (where the precondition still held)
-    and the last chunk. The final chunk must 412 and the interloper's
-    write must survive — driven through the raw protocol because the
-    public cas loop is synchronous and cannot hold an upload open."""
-    b = gcs_backend_factory(resumable_threshold=100, chunk_size=64, allow_unaligned_chunks=True)
-    b.put("ptr", "orig")
-    _, gen = b._get_with_generation("ptr")
-
-    status, headers, _ = b._request(
-        "POST", b._resumable_url("ptr", ifGenerationMatch=str(gen)), b""
-    )
-    assert status == 200
-    session = headers["Location"]
-    body = b"z" * 128
-    status, _, _ = b._request(
-        "PUT", session, body[:64],
-        headers={"Content-Range": "bytes 0-63/128"},
-    )
-    assert status == 308
-
-    b.put("ptr", "interloper")  # generation moves mid-upload
-
-    status, _, _ = b._request(
-        "PUT", session, body[64:],
-        headers={"Content-Range": "bytes 64-127/128"},
-    )
-    assert status == 412
-    assert b.get("ptr") == "interloper"  # never lost to the stale upload
-
-
-def test_gcs_resumable_offset_mismatch_gets_resume_handshake(
-    gcs_backend_factory,
-):
-    """A chunk whose offset disagrees with the stored bytes is refused
-    with 308 + the stored Range — the documented resume handshake —
-    and nothing is appended."""
-    b = gcs_backend_factory()
-    status, headers, _ = b._request(
-        "POST", b._resumable_url("obj"), b""
-    )
-    session = headers["Location"]
-    status, _, _ = b._request(
-        "PUT", session, b"x" * 64,
-        headers={"Content-Range": "bytes 0-63/256"},
-    )
-    assert status == 308
-    status, headers, _ = b._request(
-        "PUT", session, b"y" * 64,
-        headers={"Content-Range": "bytes 128-191/256"},  # skipped ahead
-    )
-    assert status == 308
-    assert headers.get("Range") == "bytes=0-63"  # only the real bytes
-
-
 def test_gcs_list_paginates(gcs_backend_factory):
     """The emulator's 3-item pages force the client's pageToken loop —
     a bucket listing at real manifest counts never fits one page."""

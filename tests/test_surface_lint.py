@@ -1,7 +1,7 @@
 """Every public package name has a caller outside the tests (AST lint).
 
-A public top-level function or class, or a public method of a public
-class, must be referenced as an ``ast.Name`` or ``ast.Attribute``
+A public top-level function or class, a public method of a public
+class, or a public UPPER_CASE module-level constant must be referenced as an ``ast.Name`` or ``ast.Attribute``
 somewhere outside its own def: in the package, ``tools/``,
 ``bench.py``, ``__spark_entry__.py`` or ``perfbench/``. Imports and
 ``__all__`` entries are not references (neither is an ``ast.Name`` or
@@ -66,6 +66,7 @@ DOCUMENTED_API: dict[str, str] = {
         "Point entry of the WKB parser; the tests pin the shared header "
         "(byte order, EWKB SRID, Z/M rejection) through it"
     ),
+    "TAXI_ZONE_LOOKUP_SCHEMA": _README_SNIPPET,
 }
 
 
@@ -75,10 +76,25 @@ def _sources(root: Path):
         yield path, ast.parse(path.read_text(), str(path))
 
 
+def _constants(node):
+    """Public UPPER_CASE names a module-level assignment binds."""
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return []
+    return [t.id for t in targets if isinstance(t, ast.Name)
+            and not t.id.startswith("_") and t.id.isupper()]
+
+
 def _public_defs():
-    """``(name, path, lineno, end_lineno)`` for every public def in the package."""
+    """``(name, path, lineno, end_lineno)`` for every public def and
+    constant in the package."""
     for path, tree in _sources(PKG):
         for node in tree.body:
+            for name in _constants(node):
+                yield name, path, node.lineno, node.end_lineno
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 continue
             if node.name.startswith("_"):

@@ -59,29 +59,36 @@ def _gcs(server) -> GCSBackend:
     return GCSBackend("bucket", prefix="tbl", endpoint=server.endpoint)
 
 
+#: above the 4 MiB at which earlier clients switched to resumable
+#: uploads: a large object is still one request, applied once
+_LARGE = 5 * 1024 * 1024
+
+
 def test_gcs_503_mid_cas_retry_refuses(gcs_server):
     b = _gcs(gcs_server)
-    b.put("_current", "a")
-    gen_before_fault = gcs_server.state.gen_counter
+    for a, new in (("a", "b"), ("a" * _LARGE, "b" * _LARGE)):
+        b.put("_current", a)
+        gen_before_fault = gcs_server.state.gen_counter
 
-    gcs_server.state.fail_conditional_responses = 1
-    with pytest.raises(RuntimeError, match="503"):
-        b.cas("_current", "a", "b")  # applied server-side; reply lost
+        gcs_server.state.fail_conditional_responses = 1
+        with pytest.raises(RuntimeError, match="503"):
+            b.cas("_current", a, new)  # applied server-side; reply lost
 
-    # the write landed exactly once despite the lost reply
-    assert b.get("_current") == "b"
-    gen_after_fault = gcs_server.state.gen_counter
-    assert gen_after_fault == gen_before_fault + 1
+        # the write landed exactly once despite the lost reply
+        assert b.get("_current") == new
+        gen_after_fault = gcs_server.state.gen_counter
+        assert gen_after_fault == gen_before_fault + 1
 
-    # the retry loop re-drives the SAME conditional: the content
-    # re-read sees the applied value, mismatches expected, refuses
-    assert b.cas("_current", "a", "b") is False
-    assert gcs_server.state.gen_counter == gen_after_fault  # no new write
-    assert b.get("_current") == "b"
+        # the retry loop re-drives the SAME conditional: the content
+        # re-read sees the applied value, mismatches expected, refuses
+        assert b.cas("_current", a, new) is False
+        assert gcs_server.state.gen_counter == gen_after_fault  # no new write
 
-    # and the caller's recovery read shows its commit actually landed —
-    # the information the ConcurrentWriteError loop rebases from
-    assert b.get("_current") == "b"
+        # and the caller's recovery read shows its commit actually
+        # landed — the information the ConcurrentWriteError loop
+        # rebases from
+        assert b.get("_current") == new
+    assert gcs_server.state.session_counter == 0  # one request per upload
 
 
 def test_gcs_503_mid_delete_if_retry_refuses(gcs_server):
@@ -127,115 +134,18 @@ def test_gcs_503_mid_create_exclusive_is_an_orphaned_lease(gcs_server):
     assert not b.lease_live(orphan)
     assert b.delete_if("_lock", orphan) is True
 
-
-def _resumable_gcs(gcs_server, **kw) -> GCSBackend:
-    return GCSBackend(
-        "bucket",
-        prefix="tbl",
-        endpoint=gcs_server.endpoint,
-        resumable_threshold=100,
-        chunk_size=64,
-        allow_unaligned_chunks=True,
-        **kw,
-    )
-
-
-def test_gcs_lost_finalize_reply_recovers_in_session(gcs_server):
-    """The lost-reply fault on the RESUMABLE path has a strictly
-    better recovery than raise-and-refuse: the session's read-only
-    STATUS query returns the recorded outcome, so cas reports True —
-    its write DID land, applied exactly once (generation counter)."""
-    b = _resumable_gcs(gcs_server)
-    big_a, big_b = "a" * 500, "b" * 500
-    b.put("_current", big_a)
-    # exactly-once is pinned PER OBJECT (the resumable path also writes
-    # _uploads/ session markers, which mint their own generations)
-    wc_before = gcs_server.state.write_counts["tbl/_current"]
-
-    gcs_server.state.fail_conditional_responses = 1
-    assert b.cas("_current", big_a, big_b) is True  # recovered outcome
-
-    assert b.get("_current") == big_b
-    assert gcs_server.state.write_counts["tbl/_current"] == wc_before + 1
-
-
-def test_gcs_308_without_range_restarts_from_zero(gcs_server):
-    """ADVICE r14: a chunk acknowledged 308 with NO Range header means
-    NOTHING persisted (real GCS omits Range in that state) — the old
-    ``end + 1`` assumption advanced past unpersisted bytes and could
-    only fail later. The client must restart from byte 0 and still
-    commit the object exactly once, byte-identical."""
-    b = _resumable_gcs(gcs_server)
-    gcs_server.state.drop_chunks = 1  # first chunk body dropped pre-persist
-    body = "z" * 500
-    b.put("_current", body)
-    assert b.get("_current") == body
-    assert gcs_server.state.write_counts["tbl/_current"] == 1
-    # recovery left no journal residue
-    assert b.list("_uploads") == []
-
-
-def test_gcs_perpetual_no_range_308_is_bounded(gcs_server):
-    """A store that acknowledges chunks without ever persisting them
-    must exhaust the bounded recoveries and raise — not loop forever —
-    and the failed session must be canceled with its marker removed
-    (the normal-exit hygiene of the _uploads journal)."""
-    b = _resumable_gcs(gcs_server)
-    gcs_server.state.drop_chunks = 10_000
-    with pytest.raises(RuntimeError, match="no forward progress"):
-        b.put("_current", "z" * 500)
-    gcs_server.state.drop_chunks = 0
-    assert b.list("_uploads") == []
-    assert all(
-        "done" in s for s in gcs_server.state.sessions.values()
-    )  # no open session left behind
-    assert b.get("_current") is None  # nothing committed
-
-
-def test_gcs_lost_finalize_reply_with_recovery_disabled_delegates(
-    gcs_server,
-):
-    """resumable_recoveries=0 reproduces the delegation path: the 5xx
-    raises to the commit retry loop and the re-driven cas refuses on
-    its content re-read — the same proof as the single-shot dialect."""
-    b = _resumable_gcs(gcs_server, resumable_recoveries=0)
-    big_a, big_b = "a" * 500, "b" * 500
-    b.put("_current", big_a)
-
+    # a large object takes the same single request: applied once, and
+    # the retried create refuses without another write
+    big = "m" * _LARGE
+    gen_before_fault = gcs_server.state.gen_counter
     gcs_server.state.fail_conditional_responses = 1
     with pytest.raises(RuntimeError, match="503"):
-        b.cas("_current", big_a, big_b)
-
-    assert b.get("_current") == big_b  # applied exactly once
-    gen_after = gcs_server.state.gen_counter
-    assert b.cas("_current", big_a, big_b) is False
-    assert gcs_server.state.gen_counter == gen_after
-
-
-def test_gcs_lost_chunk_reply_resumes_same_session(gcs_server):
-    """A 5xx on a NON-final chunk whose bytes persisted: the status
-    query reports the offset and the client resumes the SAME session —
-    one session total, object lands once, bytes exact."""
-    b = _resumable_gcs(gcs_server)
-    manifest = "".join(chr(97 + i % 26) * 1 for i in range(1000))
-
-    gcs_server.state.fail_chunk_replies = 1
-    b.put("_versions/v1.json", manifest)
-
-    assert b.get("_versions/v1.json") == manifest
-    assert gcs_server.state.session_counter == 1  # resumed, not restarted
-    done = gcs_server.state.last_finalized
-    assert done["size"] == 1000
-
-
-def test_gcs_lost_chunk_replies_past_budget_delegate(gcs_server):
-    """More lost replies than resumable_recoveries: the final 5xx
-    surfaces to the caller (the commit loop's territory) instead of
-    looping forever."""
-    b = _resumable_gcs(gcs_server, resumable_recoveries=1)
-    gcs_server.state.fail_chunk_replies = 5
-    with pytest.raises(RuntimeError, match="503"):
-        b.put("_versions/v2.json", "x" * 1000)
+        b.create_exclusive("_versions/v00000001.json", big)
+    assert b.get("_versions/v00000001.json") == big
+    assert gcs_server.state.gen_counter == gen_before_fault + 1
+    assert b.create_exclusive("_versions/v00000001.json", big) is False
+    assert gcs_server.state.gen_counter == gen_before_fault + 1
+    assert gcs_server.state.session_counter == 0  # one request per upload
 
 
 # ------------------------------------------------------------------- S3
