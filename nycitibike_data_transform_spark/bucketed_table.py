@@ -85,6 +85,7 @@ from nycitibike_data_transform_spark.bucketing import write_bucketed
 from nycitibike_data_transform_spark.versioning import (
     VersionedTable,
     _stats_friendly_writes,
+    merge_upsert,
 )
 
 # Spark's bucketed writer encodes the bucket id as _NNNNN before the
@@ -285,13 +286,12 @@ class BucketedIncrementalTable(VersionedTable):
         # evolved manifest schema
         schema = self._evolved_schema(m["schema"], updates.schema)
         updates = updates.select(*[f.name for f in schema.fields])
-        # checkpoint BEFORE the touched-bucket collect (review finding
-        # r9, the flag_contaminated lesson): the collect below and the
-        # merge would otherwise each re-run the updates plan — paying
-        # the build twice, and worse, a nondeterministic source could
-        # emit rows into a bucket the collect didn't see, committing
-        # TWO files for one bucket (stale duplicates + a broken
-        # one-file-per-bucket invariant)
+        # checkpoint BEFORE the touched-bucket collect: the collect
+        # below and the merge would otherwise each re-run the updates
+        # plan, and a nondeterministic source could emit rows into a
+        # bucket the collect didn't see, committing TWO files for one
+        # bucket (stale duplicates + a broken one-file-per-bucket
+        # invariant)
         updates = updates.localCheckpoint(eager=True)
 
         # bounded metadata collect: ≤ num_buckets distinct ids
@@ -310,9 +310,7 @@ class BucketedIncrementalTable(VersionedTable):
 
         if touched_files:
             existing = spark.read.schema(schema).parquet(*touched_files)
-            merged = existing.join(
-                updates.select(*keys), keys, "left_anti"
-            ).unionByName(updates)
+            merged = merge_upsert(existing, updates, keys)
         else:  # all-new buckets (or an empty previous snapshot)
             merged = updates
         # lineage break: the staging write must not re-run the merge
@@ -344,6 +342,18 @@ class BucketedIncrementalTable(VersionedTable):
         raise TypeError(
             "BucketedIncrementalTable snapshots must be written with "
             "write_full()/merge() — write_version() would commit an "
+            "unbucketed snapshot"
+        )
+
+    def write_version_cow(
+        self, updates: DataFrame, resolve, partition_col: str | None = None
+    ) -> int:
+        """Blocked like :meth:`write_version`: the inherited merge
+        commits a manifest without the bucket spec, which every later
+        open rejects. Bucketed merges go through :meth:`merge`."""
+        raise TypeError(
+            "BucketedIncrementalTable snapshots must be written with "
+            "write_full()/merge() — write_version_cow() would commit an "
             "unbucketed snapshot"
         )
 

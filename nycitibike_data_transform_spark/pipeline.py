@@ -21,48 +21,7 @@ from graphlib import TopologicalSorter
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nycitibike_data_transform_spark.versioning import VersionedTable
-
-
-def merge_upsert(existing: DataFrame, updates: DataFrame, keys: list[str]) -> DataFrame:
-    """Incremental MERGE (delete-insert emulation): rows from
-    ``existing`` whose key has no update, plus all ``updates``.
-
-    The reference's freshness story is a full ``CREATE OR REPLACE``
-    every 4 hours (reference ``setup_script.sh:7``); this is the
-    incremental upgrade SURVEY.md §4 flags as optional — an anti-join
-    + union, no table format required (Delta/Iceberg would make it a
-    metadata operation, but their jars aren't in this environment).
-    Shuffle profile: one hash shuffle of each side on the key.
-    """
-    if not keys:
-        raise ValueError("merge_upsert needs at least one key column")
-    if existing.columns != updates.columns:
-        raise ValueError(
-            f"schema mismatch: existing={existing.columns} updates={updates.columns}"
-        )
-    kept = existing.join(updates.select(*keys), keys, "left_anti")
-    return kept.unionByName(updates)
-
-
-def touched_partition_filter(
-    updates: DataFrame, partition_col: str
-) -> tuple[list[object], "F.Column"]:
-    """(touched values, partition-pruning predicate) for the
-    partitions present in ``updates`` — driver-side partition
-    METADATA (thousands of values, never data rows). ``isin`` never
-    matches NULL, but NULL is a legal partition value
-    (__HIVE_DEFAULT_PARTITION__) and ``write_version_cow`` WILL
-    replace it — without the isNull branch the existing null-partition rows
-    would be silently dropped from the merge (review finding r5)."""
-    touched = [
-        r[0] for r in updates.select(partition_col).distinct().collect()
-    ]
-    non_null = [v for v in touched if v is not None]
-    cond = F.col(partition_col).isin(non_null) if non_null else F.lit(False)
-    if len(non_null) != len(touched):
-        cond = cond | F.col(partition_col).isNull()
-    return touched, cond
+from nycitibike_data_transform_spark.versioning import VersionedTable, merge_upsert
 
 
 def _materialize(
@@ -110,7 +69,10 @@ def _materialize(
     whole new snapshot), ``partition_by`` (partition-scoped
     copy-on-write — only touched partitions rewritten, the rest
     hardlinked into the new snapshot), or ``bucket_by``
-    (bucket-granular merge, untouched bucket files hardlinked).
+    (bucket-granular merge, untouched bucket files hardlinked). Each
+    reads its base under the commit lock it commits under, so of two
+    overlapping refreshes the second raises ``ConcurrentWriteError``
+    instead of losing the first's update.
 
     EVERY partition- or bucket-scoped form carries the key-stability
     contract: the partition/bucket columns must be functionally
@@ -129,7 +91,11 @@ def _materialize(
         )
 
     def _updates(existing: DataFrame) -> DataFrame:
-        hwm = existing.agg(F.max(wm).alias("hwm")).first()[0]
+        # read outside the commit lock: the watermark only narrows the
+        # build, and the key merge under the lock keeps the result exact
+        hwm = (
+            existing.agg(F.max(wm)).first()[0] if wm in existing.columns else None
+        )
         return df if hwm is None else df.filter(F.col(wm) >= F.lit(hwm))
 
     if model.bucket_by:
@@ -155,36 +121,13 @@ def _materialize(
 
     table = VersionedTable(path)
     if keys and table.current_version() is not None:
-        # read under the BUILT frame's schema: after an additive
-        # evolution the snapshot lacks the new columns — the pinned
-        # read NULL-fills them (and read_current_as rejects drops and
-        # re-types loudly)
-        existing = table.read_current_as(spark, df.schema)
-        if model.partition_by:
-            # partition-scoped COPY-ON-WRITE commit: merge only the
-            # touched partitions and hardlink the rest into the new
-            # snapshot — O(touched data) per refresh, still an atomic
-            # pointer-swap commit.
-            pc = model.partition_by[0]
-            # Pin the updates plan BEFORE deriving touched partitions:
-            # write_version_cow replaces exactly the partition dirs its
-            # staged write produces, so if a nondeterministic model
-            # source emitted different partition values between the
-            # touched-partition scan and the snapshot write, a replaced
-            # dir could commit without its existing rows ever being
-            # merged in (silent row loss). Same hazard — and same fix —
-            # as bucketed_table.merge and streaming apply_upsert_batch.
-            # Deterministic plans also stop executing the model twice.
-            updates = _updates(existing).localCheckpoint(eager=True)
-            _, cond = touched_partition_filter(updates, pc)
-            merged = merge_upsert(
-                existing.filter(cond).select(*df.columns), updates, keys
-            ).repartition(pc)
-            table.write_version_cow(merged, pc)
-        else:
-            table.write_version(
-                merge_upsert(existing.select(*df.columns), _updates(existing), keys)
-            )
+        pc = model.partition_by[0] if model.partition_by else None
+
+        def upsert(base: DataFrame, updates: DataFrame) -> DataFrame:
+            merged = merge_upsert(base, updates, keys)
+            return merged.repartition(pc) if pc else merged
+
+        table.write_version_cow(_updates(table.read_current(spark)), upsert, pc)
     else:
         # co-locate each partition value before the partitioned write:
         # without this every upstream task writes a sliver into every

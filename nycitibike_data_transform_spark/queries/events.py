@@ -887,7 +887,7 @@ def _q_streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STREAMING_USER_TOTALS_SQL = """
 SELECT user_id,
        CAST(count(*) AS BIGINT) AS n_events,
-       round(sum(value), 2) AS total_value
+       CAST(CAST(sum(CAST(value AS DECIMAL(18,2))) AS STRING) AS DOUBLE) AS total_value
 FROM events
 GROUP BY user_id
 """

@@ -12,9 +12,11 @@ simple.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from decimal import Decimal
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -26,10 +28,15 @@ OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
+# event values carry 2 decimals: the running total accumulates them
+# as exact decimals (a double sum would depend on how the events split
+# into micro-batches) and is cast to double once, on emit
+_MONEY = T.DecimalType(18, 2)
+
 STATE_SCHEMA = T.StructType(
     [
         T.StructField("n_events", T.LongType(), False),
-        T.StructField("total_value", T.DoubleType(), False),
+        T.StructField("total_value", _MONEY, False),
     ]
 )
 
@@ -37,12 +44,12 @@ STATE_SCHEMA = T.StructType(
 def _update_user_totals(
     key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    n, total = state.get if state.exists else (0, 0.0)
+    n, total = state.get if state.exists else (0, Decimal(0))
     for pdf in batches:
         n += len(pdf)
-        total += float(pdf["value"].sum())
+        total += pdf["value"].sum()
     state.update((n, total))
-    yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 2)]})
+    yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "total_value": [float(total)]})
 
 
 def running_user_totals(events: DataFrame) -> DataFrame:
@@ -50,7 +57,7 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     micro-batch. State is O(users) — bounded regardless of stream
     length; add a timeout to expire idle users in production."""
     return (
-        events.select("user_id", "value")
+        events.select("user_id", F.col("value").cast(_MONEY).alias("value"))
         .groupBy("user_id")
         .applyInPandasWithState(
             _update_user_totals,

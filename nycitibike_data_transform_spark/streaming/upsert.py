@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.readwriter import DataStreamWriter
 
 from nycitibike_data_transform_spark.functions.dbt_compat import deduplicate
-from nycitibike_data_transform_spark.pipeline import touched_partition_filter
 from nycitibike_data_transform_spark.versioning import VersionedTable
 
 
@@ -81,14 +80,17 @@ def apply_upsert_batch(
     and for batch backfills (same code path as the stream, the
     batch-parity property the suite pins).
 
-    Each batch commits one snapshot. With ``partition_col`` the table
-    is laid out ``partitionBy(partition_col)`` and each batch after
-    the bootstrap merges ONLY the partitions it touches, hardlinking
-    the rest into the new snapshot (``write_version_cow``). Contract:
-    ``partition_col`` must be functionally dependent on ``keys`` (a
-    key never moves between partitions; the column may itself be a
-    key, which satisfies it trivially) — a moved key would leave its
-    old row alive in an untouched partition.
+    Each batch commits one snapshot through
+    ``VersionedTable.write_version_cow``, which reads the current
+    snapshot and commits the merge under the table's commit lock. With
+    ``partition_col`` the table is laid out
+    ``partitionBy(partition_col)`` and each batch after the bootstrap
+    merges ONLY the partitions it touches, hardlinking the rest into
+    the new snapshot. Contract: ``partition_col`` must be functionally
+    dependent on ``keys`` (a key never moves between partitions; the
+    column may itself be a key, which satisfies it trivially) — a
+    moved key would leave its old row alive in an untouched
+    partition.
 
     The cost of atomicity is snapshot accumulation — one snapshot per
     micro-batch, unbounded over a long-running stream — so
@@ -100,14 +102,12 @@ def apply_upsert_batch(
     """
     if not batch_df.columns:
         return
-    spark = batch_df.sparkSession
     winners = _winners(batch_df, keys, order_desc)
     if partition_col is not None and partition_col not in winners.columns:
         raise ValueError(f"batch missing partition column {partition_col!r}")
 
     table = VersionedTable(path)
-    exists = table.current_version() is not None
-    if not exists and _holds_plain_parquet(path):
+    if table.current_version() is None and _holds_plain_parquet(path):
         # a plain parquet table at path: bootstrapping a snapshot over
         # it would silently abandon every prior row (the old part
         # files have no manifest and never merge again). Fail loudly —
@@ -120,35 +120,11 @@ def apply_upsert_batch(
             "parquet upsert target"
         )
 
-    # every merged frame is checkpointed so the snapshot write never
-    # re-runs the merge
-    if not exists:
-        merged = winners.localCheckpoint(eager=True)
-    elif partition_col is None:
-        existing = table.read_current_as(spark, winners.schema).select(
-            *winners.columns
-        )
-        merged = _winners(
-            existing.unionByName(winners), keys, order_desc
-        ).localCheckpoint(eager=True)
-    else:
-        # checkpoint the batch winners FIRST: the touched-partition
-        # collect and the merge below would otherwise each re-run the
-        # batch's dedup window shuffle (the flag_contaminated lesson)
-        winners = winners.localCheckpoint(eager=True)
-        existing = table.read_current_as(spark, winners.schema)
-        _, cond = touched_partition_filter(winners, partition_col)
-        merged = _winners(
-            existing.filter(cond).unionByName(winners), keys, order_desc
-        ).localCheckpoint(eager=True)
-
-    if partition_col is None or not exists:
-        table.write_version(
-            merged,
-            partition_by=(partition_col,) if partition_col else (),
-        )
-    else:
-        table.write_version_cow(merged, partition_col)
+    table.write_version_cow(
+        winners,
+        lambda base, batch: _winners(base.unionByName(batch), keys, order_desc),
+        partition_col,
+    )
     if keep_versions is not None:
         table.vacuum(keep=keep_versions)
 

@@ -67,6 +67,45 @@ class ConcurrentWriteError(RuntimeError):
     raises instead of silently losing one of the two commits."""
 
 
+def merge_upsert(existing: DataFrame, updates: DataFrame, keys: list[str]) -> DataFrame:
+    """Incremental MERGE (delete-insert emulation): rows from
+    ``existing`` whose key has no update, plus all ``updates``.
+
+    The reference's freshness story is a full ``CREATE OR REPLACE``
+    every 4 hours (reference ``setup_script.sh:7``); this is the
+    incremental upgrade SURVEY.md §4 flags as optional — an anti-join
+    + union, no table format required (Delta/Iceberg would make it a
+    metadata operation, but their jars aren't in this environment).
+    Shuffle profile: one hash shuffle of each side on the key."""
+    if not keys:
+        raise ValueError("merge_upsert needs at least one key column")
+    if existing.columns != updates.columns:
+        raise ValueError(
+            f"schema mismatch: existing={existing.columns} updates={updates.columns}"
+        )
+    kept = existing.join(updates.select(*keys), keys, "left_anti")
+    return kept.unionByName(updates)
+
+
+def _touched_partition_filter(updates: DataFrame, partition_col: str):
+    """Partition-pruning predicate for the partitions present in
+    ``updates`` — collected as driver-side partition METADATA
+    (thousands of values, never data rows). ``isin`` never matches
+    NULL, but NULL is a legal partition value
+    (__HIVE_DEFAULT_PARTITION__) and the copy-on-write commit WILL
+    replace it — without the isNull branch the existing null-partition
+    rows would be silently dropped from the merge (review finding
+    r5)."""
+    from pyspark.sql import functions as F
+
+    touched = [r[0] for r in updates.select(partition_col).distinct().collect()]
+    non_null = [v for v in touched if v is not None]
+    cond = F.col(partition_col).isin(non_null) if non_null else F.lit(False)
+    if len(non_null) != len(touched):
+        cond = cond | F.col(partition_col).isNull()
+    return cond
+
+
 def _hashable_type(dt) -> bool:
     """True iff xxhash64 accepts a column of this type (it rejects
     MapType anywhere in the structure — ADVICE r6)."""
@@ -673,10 +712,12 @@ class VersionedTable:
     def _write_lock(self):
         """SINGLE-WRITER ENFORCEMENT (VERDICT r9 item #3): the
         documented single-writer contract is structural, not
-        honor-system. Every mutating entry point (write_version,
-        write_version_cow, compact, vacuum, and the bucketed
-        write_full/merge) holds a LEASE on the backend's ``_lock``
-        object for its WHOLE read-state → stage → pointer-swap span —
+        honor-system. Every mutating entry point (write_version, the
+        incremental merge write_version_cow — pipeline models and
+        streaming upserts both — rewrite_full, compact, vacuum, and
+        the bucketed write_full/merge) holds a LEASE on the backend's
+        ``_lock`` object for its WHOLE read-state → stage →
+        pointer-swap span, the merges' base read included —
         a second concurrent writer raises
         :class:`ConcurrentWriteError` at entry instead of racing the
         swap and silently losing one commit (or, worse for merge,
@@ -1367,84 +1408,93 @@ class VersionedTable:
         return self.read_box(spark, {col: (lo, hi)}, version=version)
 
     def write_version_cow(
-        self, merged: DataFrame, partition_col: str
+        self, updates: DataFrame, resolve, partition_col: str | None = None
     ) -> int:
-        """Locked wrapper (see :meth:`_write_lock`) around the
-        partition-scoped copy-on-write commit below; a concurrent
-        writer raises :class:`ConcurrentWriteError`."""
+        """Merge ``updates`` into the current snapshot and commit the
+        result — the one incremental merge behind pipeline models and
+        streaming upserts. The base read, the merge and the commit hold
+        ONE :meth:`_write_lock` span, so two overlapping merges never
+        start from the same base: the second raises
+        :class:`ConcurrentWriteError` instead of committing a snapshot
+        without the first's rows (a lost update).
+
+        ``resolve(base, updates)`` is the caller's merge rule
+        (:func:`merge_upsert`, a winner-per-key dedup of the union, …).
+        ``base`` is the current snapshot under the manifest schema as
+        ``updates`` additively evolve it (:meth:`_evolved_schema`;
+        drops and re-types raise), columns in ``updates``' order.
+        Without ``partition_col`` the merged rows are the whole next
+        snapshot. With it, ``base`` holds only the partitions
+        ``updates`` touch, and the commit is partition-scoped
+        COPY-ON-WRITE: the merged rows replace exactly those partition
+        directories and every other partition's files are HARDLINKED
+        from the current snapshot — O(touched data) written, zero bytes
+        copied, and a crash at ANY point is invisible because the
+        write lands in a fresh ``data/vN`` (unlike dynamic partition
+        overwrite in place, which a killed micro-batch tears beyond
+        what a foreachBatch replay can heal). "Touched" is the set of
+        partition directories the merged rows' own write produces, so
+        hive escaping and the NULL sentinel never disagree with
+        Spark's encoding; a rule must therefore keep a row in every
+        touched partition (upserts and delete-insert merges do, both
+        keep the updates). An empty table bootstraps with ``updates``
+        as they are."""
         with self._write_lock():
-            return self._write_version_cow_locked(merged, partition_col)
-
-    def _write_version_cow_locked(
-        self, merged: DataFrame, partition_col: str
-    ) -> int:
-        """Partition-scoped COPY-ON-WRITE commit: ``merged`` holds the
-        full post-merge content of the partitions a refresh touched
-        (and ONLY those); the new snapshot replaces exactly those
-        partition directories and HARDLINKS every other partition's
-        files from the current snapshot — O(touched data) written,
-        O(untouched files) link syscalls, zero bytes copied.
-
-        This is the crash-atomic alternative to dynamic
-        partition-overwrite IN PLACE (VERDICT r8 item #3): the in-place
-        form can be killed mid-batch with a partition half-overwritten
-        and no pointer to roll back — and a foreachBatch REPLAY cannot
-        self-heal it, because the torn partition lost rows of keys the
-        replayed batch doesn't carry. Here the write lands in a fresh
-        ``data/vN``; the previous snapshot stays the committed truth
-        until the pointer swap, so a crash at ANY point is invisible
-        and the replay merges against intact data.
-
-        Which partitions are "touched" is defined structurally: the
-        partition directories present in ``merged``'s own write output
-        — no re-rendering of partition values in Python, so hive
-        escaping and the NULL sentinel can never disagree with Spark's
-        own encoding. (A touched partition always has output rows:
-        upserts and delete-insert merges both include the updates.)
-
-        Hardlinks are the local-fs file re-reference (the same trade as
-        :class:`BucketedIncrementalTable <nycitibike_data_transform_spark.bucketed_table.BucketedIncrementalTable>`
-        — an object-store port lists files across version dirs in the
-        manifest instead). Bootstrap (empty table) falls back to
-        :meth:`write_version`."""
-        cur = self.current_version()
-        if cur is None:
-            # already under the caller's lock — the public write_version
-            # would deadlock on re-acquire
-            return self._write_version_locked(
-                merged, partition_by=(partition_col,)
+            cur = self.current_version()
+            partition_by = (partition_col,) if partition_col else ()
+            if cur is None:
+                return self._write_version_locked(updates, partition_by)
+            prev_manifest = self.manifest(cur)
+            if partition_col and prev_manifest["partition_by"] != [partition_col]:
+                raise ValueError(
+                    f"table is partitioned by {prev_manifest['partition_by']}, "
+                    f"cow merge requested on [{partition_col!r}]"
+                )
+            schema = self._evolved_schema(prev_manifest["schema"], updates.schema)
+            # Pin the updates BEFORE collecting the touched partitions:
+            # the commit replaces exactly the partition dirs its write
+            # produces, so a nondeterministic source that emitted other
+            # partition values between the collect and the write would
+            # commit a replaced dir whose existing rows were never
+            # merged in (silent row loss). Pinned, the updates plan also
+            # runs once instead of once per use.
+            updates = updates.localCheckpoint(eager=True)
+            base = (
+                updates.sparkSession.read.schema(schema)
+                .parquet(self._data_dir(cur))
+                .select(*updates.columns)
             )
-        prev_manifest = self.manifest(cur)
-        if prev_manifest["partition_by"] != [partition_col]:
-            raise ValueError(
-                f"table is partitioned by {prev_manifest['partition_by']}, "
-                f"cow merge requested on [{partition_col!r}]"
+            if not partition_col:
+                return self._write_version_locked(resolve(base, updates))
+            merged = resolve(
+                base.filter(_touched_partition_filter(updates, partition_col)),
+                updates,
             )
-        # additive schema evolution: a merged frame may APPEND nullable
-        # columns — the hardlinked untouched partitions keep their old
-        # files byte-identical and read NULL-filled under the new
-        # manifest schema (read_version pins it)
-        commit_schema = self._evolved_schema(prev_manifest["schema"], merged.schema)
-        stage = self._attempt_dir()  # Spark's partitioned merge output
-        with _stats_friendly_writes(merged.sparkSession):
-            merged.write.mode("overwrite").partitionBy(partition_col).parquet(stage)
-        try:
-            replaced_dirs = {
-                d
-                for d in os.listdir(stage)
-                if os.path.isdir(os.path.join(stage, d))
-            }
-            links: dict[str, str] = {}  # rel target -> abs source
-            for f in prev_manifest["files"]:
-                top = f.split("/", 1)[0]
-                if top not in replaced_dirs:
-                    links[f] = os.path.join(self._data_dir(cur), f)
-            for rel in self._parquet_files(stage):
-                links[rel] = os.path.join(stage, rel)
-            self._link_into_slot(links, cur + 1)
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
-        return self._commit(cur, commit_schema, (partition_col,))
+            # untouched partitions keep their files byte-identical and
+            # read columns the merge appended as NULL under the new
+            # manifest schema
+            commit_schema = self._evolved_schema(
+                prev_manifest["schema"], merged.schema
+            )
+            stage = self._attempt_dir()  # Spark's partitioned merge output
+            with _stats_friendly_writes(merged.sparkSession):
+                merged.write.mode("overwrite").partitionBy(partition_col).parquet(stage)
+            try:
+                replaced_dirs = {
+                    d
+                    for d in os.listdir(stage)
+                    if os.path.isdir(os.path.join(stage, d))
+                }
+                links: dict[str, str] = {}  # rel target -> abs source
+                for f in prev_manifest["files"]:
+                    if f.split("/", 1)[0] not in replaced_dirs:
+                        links[f] = os.path.join(self._data_dir(cur), f)
+                for rel in self._parquet_files(stage):
+                    links[rel] = os.path.join(stage, rel)
+                self._link_into_slot(links, cur + 1)
+            finally:
+                shutil.rmtree(stage, ignore_errors=True)
+            return self._commit(cur, commit_schema, partition_by)
 
     def history(self) -> list[dict]:
         """DESCRIBE HISTORY-style audit of the committed, unvacuumed

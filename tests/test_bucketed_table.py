@@ -173,6 +173,14 @@ def test_contracts(spark, tmp_path):
         t.write_version(_facts(spark, 5))
     with pytest.raises(TypeError, match="one file per bucket"):
         t.compact(spark)
+    with pytest.raises(TypeError, match="write_full"):
+        t.write_version_cow(upd, lambda base, u: u, "k")
+    # on an empty table the inherited COW bootstrap would commit a
+    # manifest without the bucket spec, failing every later open
+    empty = BucketedIncrementalTable(str(tmp_path / "cow_empty"), ["k"], 4)
+    with pytest.raises(TypeError, match="write_full"):
+        empty.write_version_cow(upd, lambda base, u: u)
+    assert empty.current_version() is None
     with pytest.raises(ValueError, match="layout"):
         BucketedIncrementalTable(str(tmp_path / "t"), ["k"], 4)
     # sort_cols is part of the layout spec too (r9 review: a silent

@@ -11,6 +11,11 @@ The snapshot is also the only persisted-table format for pipeline
 models and streaming upsert targets: those two modules never touch a
 ``DataFrameWriter`` themselves, and no module flips Spark's dynamic
 partition-overwrite mode (the in-place overwrite a killed run tears).
+Nor do they prepare a merge themselves: an incremental merge's base
+read and input pinning happen under the commit lock, inside
+``VersionedTable.write_version_cow`` or the bucketed ``merge``, so a
+caller cannot derive a merge from a base another writer has already
+replaced.
 """
 
 from __future__ import annotations
@@ -83,6 +88,22 @@ def test_pipeline_and_upsert_never_write_parquet_directly():
         if rel in SNAPSHOT_ONLY
         for node in ast.walk(tree)
         if isinstance(node, ast.Attribute) and node.attr == "write"
+    ]
+    assert offenders == []
+
+
+#: a merge's base read and input pinning — versioning.py and
+#: bucketed_table.py only, under the commit lock
+MERGE_PREP = {"read_current_as", "localCheckpoint"}
+
+
+def test_pipeline_and_upsert_never_prepare_a_merge():
+    offenders = [
+        f"{rel}:{node.lineno} {node.attr}"
+        for rel, tree in _trees()
+        if rel in SNAPSHOT_ONLY
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute) and node.attr in MERGE_PREP
     ]
     assert offenders == []
 

@@ -63,7 +63,7 @@ def test_cycle_detection(tmp_path, sf_dir):
 
 
 def test_merge_upsert(spark):
-    from nycitibike_data_transform_spark.pipeline import merge_upsert
+    from nycitibike_data_transform_spark.versioning import merge_upsert
 
     existing = spark.createDataFrame(
         [(1, "old"), (2, "keep"), (3, "stale")], "k int, v string"
@@ -74,7 +74,7 @@ def test_merge_upsert(spark):
 
 
 def test_merge_upsert_validation(spark):
-    from nycitibike_data_transform_spark.pipeline import merge_upsert
+    from nycitibike_data_transform_spark.versioning import merge_upsert
 
     df = spark.createDataFrame([(1, "a")], "k int, v string")
     other = spark.createDataFrame([(1,)], "k int")
@@ -148,6 +148,47 @@ def test_merge_upsert_partitioned_rewrites_only_touched_partitions(spark, tmp_pa
         5: ("2024-01-01", "e"),  # insert into existing partition
         6: ("2024-01-04", "f"),  # insert creating a new partition
     }
+
+
+def test_overlapping_incremental_refreshes_lose_no_update(
+    spark, tmp_path, monkeypatch
+):
+    """Two overlapping refreshes of one incremental ``partition_by``
+    model: refresh B, started while refresh A is inside its merge
+    (holding the table's commit lock), raises ConcurrentWriteError
+    before committing; rerun after A commits, it merges onto A's
+    snapshot, so both refreshes' updates are in the table.
+
+    When ``_materialize`` read the base snapshot and merged before
+    taking the lock, the same interleaving (A prepares k1→A, B
+    prepares and commits k2→B, A commits) raised nothing and A's
+    snapshot silently dropped B's update."""
+    from nycitibike_data_transform_spark import pipeline as pipeline_mod
+    from nycitibike_data_transform_spark.versioning import ConcurrentWriteError
+
+    schema = "k int, dt string, v string"
+    rows_a = [(1, "p", "v1"), (2, "p", "v1")]
+    a = _partitioned_model(tmp_path, rows_a, schema, "dt")
+    a.run(spark)
+    rows_a[:] = [(1, "p", "A")]
+    b = _partitioned_model(tmp_path, [(2, "p", "B")], schema, "dt")
+
+    real = pipeline_mod.merge_upsert
+    refused = []
+
+    def merge_while_b_runs(base, updates, keys):
+        monkeypatch.setattr(pipeline_mod, "merge_upsert", real)
+        try:
+            b.run(spark)
+        except ConcurrentWriteError as e:
+            refused.append(e)
+        return real(base, updates, keys)
+
+    monkeypatch.setattr(pipeline_mod, "merge_upsert", merge_while_b_runs)
+    a.run(spark)
+    assert len(refused) == 1
+    built = b.run(spark)["tbl"]
+    assert {r["k"]: r["v"] for r in built.collect()} == {1: "A", 2: "B"}
 
 
 def test_merge_upsert_partitioned_validation(spark, tmp_path):

@@ -17,6 +17,12 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "k int, v string")
 
 
+def _replace(base, updates):
+    """COW merge rule: ``updates`` are the touched partitions' whole
+    new content."""
+    return updates
+
+
 def test_write_read_roundtrip_and_time_travel(spark, tmp_path):
     t = VersionedTable(str(tmp_path / "tbl"))
     assert t.current_version() is None
@@ -405,18 +411,18 @@ def test_write_version_cow_contracts(spark, tmp_path):
         [(1, "p1", "a"), (2, "p2", "b")], "k int, part string, v string"
     )
     # bootstrap through cow falls back to a full partitioned write
-    assert t.write_version_cow(df, "part") == 1
+    assert t.write_version_cow(df, _replace, "part") == 1
     assert t.manifest(1)["partition_by"] == ["part"]
     # partition-col mismatch is rejected
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="partitioned by"):
-        t.write_version_cow(df.withColumnRenamed("part", "other"), "other")
+        t.write_version_cow(df.withColumnRenamed("part", "other"), _replace, "other")
     # merge one partition: the other's file is the same inode
     import os
 
     upd = spark.createDataFrame([(1, "p1", "a2")], "k int, part string, v string")
-    t.write_version_cow(upd, "part")
+    t.write_version_cow(upd, _replace, "part")
     m2 = t.manifest(2)
     p2_files = [f for f in m2["files"] if f.startswith("part=p2/")]
     assert p2_files
@@ -472,13 +478,13 @@ def test_write_version_cow_adversarial_partition_values(spark, tmp_path):
         (4, "01", "r4"), (5, None, "r5"), (6, "plain", "r6"),
     ]
     df1 = spark.createDataFrame(rows1, schema)
-    t.write_version_cow(df1, "part")
+    t.write_version_cow(df1, _replace, "part")
 
     # touch only 'a/b' (escaped dir a%2Fb) and NULL
     upd = spark.createDataFrame(
         [(1, "a/b", "R1"), (5, None, "R5"), (7, None, "r7")], schema
     )
-    t.write_version_cow(upd, "part")
+    t.write_version_cow(upd, _replace, "part")
 
     got = {r["k"]: (r["part"], r["v"]) for r in
            t.read_current_as(spark, StructType.fromDDL(schema)).collect()}
@@ -743,7 +749,7 @@ def _write_cow(spark, root, df):
     parted = df.withColumn("p", (F.col("k") / 2500).cast("int"))
     t.write_version(parted.repartition("p"), partition_by=("p",))
     merged = parted.filter("p = 3").withColumn("extra", _nullable_extra())
-    t.write_version_cow(merged.repartition("p"), "p")
+    t.write_version_cow(merged.repartition("p"), _replace, "p")
     return t
 
 
@@ -859,7 +865,7 @@ def test_cow_commit_carries_stats_for_hardlinked_files(spark, tmp_path):
     merged = spark.createDataFrame(
         [(3, 2, 33), (4, 2, 40), (5, 2, 50)], "id int, day int, v int"
     ).repartition("day")
-    t.write_version_cow(merged, "day")
+    t.write_version_cow(merged, _replace, "day")
     m2 = t.manifest(t.current_version())
     assert m2.get("stats_fmt") == m1["stats_fmt"]
     day1_files = [f for f in m2["files"] if f.startswith("day=1/")]
@@ -1040,6 +1046,58 @@ def test_live_lock_blocks_and_vacuum_is_locked(spark, tmp_path):
     assert t.write_version(_df(spark, [(2, "b")])) == 2
 
 
+@pytest.mark.parametrize("partition_col", ["p", None],
+                         ids=["partitioned", "unpartitioned"])
+def test_overlapping_merges_fail_loudly_and_lose_no_update(
+    spark, tmp_path, partition_col
+):
+    """A merge reads its base and commits under ONE commit-lock span:
+    a second merge started while the first is inside its merge rule
+    raises ConcurrentWriteError, and retried after the first commits
+    it merges onto the first's snapshot — both updates survive.
+
+    Before the base read moved under the lock, callers prepared the
+    merge outside it (``read_current_as``, ``localCheckpoint``, the
+    touched-partition filter, ``merge_upsert``) and only the commit
+    was locked. That interleaving — writer A prepares k1→A, writer B
+    prepares k2→B and commits, then A commits — raised nothing, and
+    A's snapshot silently dropped B's update."""
+    from nycitibike_data_transform_spark.versioning import (
+        ConcurrentWriteError,
+        merge_upsert,
+    )
+
+    root = str(tmp_path / "overlap")
+    schema = "k string, p string, v string"
+    VersionedTable(root).write_version(
+        spark.createDataFrame([("k1", "p", "v1"), ("k2", "p", "v1")], schema),
+        partition_by=(partition_col,) if partition_col else (),
+    )
+
+    def upsert(base, updates):
+        return merge_upsert(base, updates, ["k"])
+
+    b_updates = spark.createDataFrame([("k2", "p", "B")], schema)
+    refused = []
+
+    def upsert_while_b_starts(base, updates):
+        try:
+            VersionedTable(root).write_version_cow(b_updates, upsert, partition_col)
+        except ConcurrentWriteError as e:
+            refused.append(e)
+        return upsert(base, updates)
+
+    a_updates = spark.createDataFrame([("k1", "p", "A")], schema)
+    t = VersionedTable(root)
+    assert t.write_version_cow(a_updates, upsert_while_b_starts, partition_col) == 2
+    assert len(refused) == 1
+    assert t.write_version_cow(b_updates, upsert, partition_col) == 3
+    assert {r["k"]: r["v"] for r in t.read_current(spark).collect()} == {
+        "k1": "A",
+        "k2": "B",
+    }
+
+
 def test_versioned_cow_schema_evolution_add_column(spark, tmp_path):
     """Additive schema evolution on the partition-scoped COW path
     (VERDICT r9 item #2): a merge that appends a nullable column
@@ -1064,7 +1122,7 @@ def test_versioned_cow_schema_evolution_add_column(spark, tmp_path):
         [(3, 2, "c2", 30), (4, 2, "d", 40)],
         "id int, day int, v string, score int",
     ).repartition("day")
-    t.write_version_cow(merged, "day")
+    t.write_version_cow(merged, _replace, "day")
 
     got = {
         r["id"]: (r["v"], r["score"]) for r in t.read_current(spark).collect()
@@ -1105,13 +1163,13 @@ def test_versioned_cow_schema_evolution_add_column(spark, tmp_path):
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="additive-only"):
-        t.write_version_cow(merged.drop("v"), "day")
+        t.write_version_cow(merged.drop("v"), _replace, "day")
     with _pytest.raises(ValueError, match="additive-only"):
         t.write_version_cow(
-            merged.withColumn("v", merged["v"].cast("int")), "day"
+            merged.withColumn("v", merged["v"].cast("int")), _replace, "day"
         )
     with _pytest.raises(ValueError, match="must be nullable"):
-        t.write_version_cow(merged.withColumn("flag", F.lit(1)), "day")
+        t.write_version_cow(merged.withColumn("flag", F.lit(1)), _replace, "day")
 
 
 def test_partition_column_zone_maps_prune_file_list(spark, tmp_path):
@@ -1221,6 +1279,7 @@ def test_evolution_lifecycle_compact_and_cross_version_diff(spark, tmp_path):
             [(2, 2, "b2", 20), (3, 2, "c", 30)],
             "id int, day int, v string, score int",
         ).repartition("day"),
+        _replace,
         "day",
     )
 
@@ -1477,7 +1536,7 @@ def test_nullability_never_narrows_on_cow_commit(spark, tmp_path):
         .select("id", "day", "score")
     )
     assert not merged.schema["score"].nullable
-    t.write_version_cow(merged, "day")
+    t.write_version_cow(merged, _replace, "day")
 
     # committed schema did NOT narrow
     assert next(
@@ -1690,7 +1749,7 @@ def test_history_and_explicit_full_rewrite(spark, tmp_path):
     # a RENAME is additive-refused on the merge path...
     renamed = t.read_current(spark).withColumnRenamed("v", "label")
     with pytest.raises(ValueError, match="additive-only"):
-        t.write_version_cow(renamed, "day")
+        t.write_version_cow(renamed, _replace, "day")
     # ...and explicit through rewrite_full, keeping the partition spec
     v3 = t.rewrite_full(spark, lambda cur: cur.withColumnRenamed("v", "label"))
     assert v3 == 3
