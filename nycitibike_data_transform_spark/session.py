@@ -13,7 +13,10 @@ warehouse" is a Catalyst/Tungsten session configured for:
   class names without the codegen stage id, so a repeated op reuses its
   compiled classes instead of recompiling them,
 - WARN logging, except for ``WindowExec``'s unpartitioned-window
-  warning (see ``_WINDOW_EXEC_LOGGER``).
+  warning (see ``_WINDOW_EXEC_LOGGER``),
+- a driver JVM that JIT-compiles with C1 only (see
+  ``_DRIVER_JAVA_OPTIONS``); it applies only when ``get_spark`` starts
+  the JVM, and cluster executors keep C2.
 
 On a real cluster the same builder applies — only ``master`` and the
 memory sizing change; AQE re-sizes shuffles at runtime so the static
@@ -35,6 +38,15 @@ CODEGEN_CACHE_ENTRIES = 4096
 # the plan-audit test, so the line carries no signal and floods the log.
 _WINDOW_EXEC_LOGGER = "org.apache.spark.sql.execution.window.WindowExec"
 
+# the scheduled job is a cold JVM every run, and C2 (the optimizing
+# compiler) spent ~40 % of a refresh's process-tree CPU compiling code
+# the run ends before it pays back. C1 alone halves set-up CPU and cuts
+# refresh op CPU ~45 %; hot executor loops in a warm JVM run slower on
+# C1 code (embedding_near_dup's wall x1.45; README "Session defaults").
+# Set as defaultJavaOptions so a caller's spark.driver.extraJavaOptions
+# adds to it rather than replacing it.
+_DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1"
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
@@ -52,7 +64,9 @@ def get_spark(
     sizes its generated-class cache once, from the session that
     triggers the first codegen. It therefore takes effect only when
     this function builds the JVM's first session; a session obtained
-    from an already running JVM keeps that JVM's cache size."""
+    from an already running JVM keeps that JVM's cache size. The same
+    holds for the driver's JVM options, which only a JVM this function
+    launches receives."""
     cpus = default_parallelism()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
@@ -67,6 +81,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.defaultJavaOptions", _DRIVER_JAVA_OPTIONS)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         # ratio-divisible bucket counts (16 ⋈ 8) still join co-located

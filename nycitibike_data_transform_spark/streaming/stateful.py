@@ -11,6 +11,7 @@ simple.
 
 from __future__ import annotations
 
+import warnings
 from collections.abc import Iterator
 from decimal import Decimal
 
@@ -32,6 +33,16 @@ OUTPUT_SCHEMA = T.StructType(
 # as exact decimals (a double sum would depend on how the events split
 # into micro-batches) and is cast to double once, on emit
 _MONEY = T.DecimalType(18, 2)
+
+# PySpark's applyInPandasWithState serializer pads the output and state
+# frames with all-NA rows before concatenating them, which pandas warns
+# about on every batch. Installed at import: the Python worker imports
+# this module to unpickle _update_user_totals, so the filter holds there.
+warnings.filterwarnings(
+    "ignore",
+    message="The behavior of DataFrame concatenation with empty or all-NA entries is deprecated",
+    category=FutureWarning,
+)
 
 STATE_SCHEMA = T.StructType(
     [

@@ -1668,16 +1668,22 @@ class VersionedTable:
             if not bs:  # all-null or constant column: one rank
                 continue
             arr = F.array(*[F.lit(float(b)) for b in bs])
-            # rank = #boundaries <= value (vectorized JVM lambda, no
-            # UDF); NULLs rank 0 — they cluster together at the low end
+            # rank = #boundaries <= value, by binary search over the
+            # sorted boundaries (n-1 of them, so `bits` halving steps
+            # reach every index): `bits` lambda steps per row, not n-1
+            # (a JVM lambda is interpreted, and the rank is evaluated
+            # once per interleaved bit). NULLs rank 0 — they cluster
+            # together at the low end
+            steps = F.array(*[F.lit(1 << k) for k in reversed(range(bits))])
             rank = F.when(
                 expr.isNull(), F.lit(0)
             ).otherwise(
                 F.aggregate(
-                    arr,
+                    steps,
                     F.lit(0),
-                    lambda acc, b: acc
-                    + F.when(expr >= b, F.lit(1)).otherwise(F.lit(0)),
+                    lambda lo, step: F.when(
+                        F.element_at(arr, lo + step) <= expr, lo + step
+                    ).otherwise(lo),
                 )
             ).cast("long")
             for j in range(bits):  # interleave bit j of column i

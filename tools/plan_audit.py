@@ -273,8 +273,9 @@ EAGER_NOTES = {
     "streaming_upsert_view": "runs the real availableNow stream at "
     "construction (file source → foreachBatch partition-scoped upsert "
     "merge) and returns the checkpointed converged view; per-batch "
-    "shape: one batch-sized shuffle on the key + dynamic overwrite of "
-    "only the touched partitions.",
+    "shape: one batch-sized shuffle on the key + a partition-scoped "
+    "copy-on-write snapshot commit (VersionedTable.write_version_cow) "
+    "that rewrites only the touched partitions and hardlinks the rest.",
     "bpe_merges": "k driver-collect rounds; each round is a vocab-local "
     "pair count (map-side combinable, one shuffle on the pair key) + a "
     "1-row argmax — the same footprint as the IVF k-means trainer.",
