@@ -33,8 +33,7 @@ guard aggregate — ``max(abs(units)) · count`` compared (in double,
 conservatively) against int64 range — and raises at execution time
 instead of returning a wrapped "exact" result. The guard adds two
 cheap long aggregates to the same grouping; the sum itself stays on
-the codegen fast path. ``checked=False`` opts out for inputs whose
-bounds are proven by construction (ANSI still protects those).
+the codegen fast path.
 """
 
 from __future__ import annotations
@@ -63,7 +62,7 @@ def _ansi_enabled() -> bool:
         return False
 
 
-def _guarded_sum(units: Column, label: str, checked: bool) -> Column:
+def _guarded_sum(units: Column, label: str) -> Column:
     """``sum(units)`` with a runtime overflow guard: if the worst-case
     magnitude ``max(abs(units)) · count`` can exceed int64, raise
     rather than silently wrap. All-null/empty groups pass (coalesce:
@@ -74,7 +73,7 @@ def _guarded_sum(units: Column, label: str, checked: bool) -> Column:
     that enforcement — it is elided to keep the two extra aggregate
     buffers out of the hot path (measured ~2× on the money queries)."""
     total = F.sum(units)
-    if not checked or _ansi_enabled():
+    if _ansi_enabled():
         return total
     worst = F.max(F.abs(units)).cast("double") * F.count(units).cast("double")
     ok = F.coalesce(worst <= F.lit(_INT64_SAFE), F.lit(True))
@@ -104,25 +103,23 @@ def units_to_amount(sum_units: Column, decimals: int) -> Column:
     return (sum_units.cast("decimal(38,0)") / F.lit(10**decimals)).cast("double")
 
 
-def fast_money_sum(col: Column | str, decimals: int = 2, checked: bool = True) -> Column:
+def fast_money_sum(col: Column | str, decimals: int = 2) -> Column:
     """Σx as double, exact — drop-in for
     ``F.sum(x.cast('decimal(18,2)')).cast('double')``. Raises at
     execution time if a group could overflow int64 (see module doc)."""
     return units_to_amount(
-        _guarded_sum(to_units(col, decimals), "fast_money_sum", checked), decimals
+        _guarded_sum(to_units(col, decimals), "fast_money_sum"), decimals
     )
 
 
-def fast_revenue_sum(
-    price: Column | str, discount: Column | str, checked: bool = True
-) -> Column:
+def fast_revenue_sum(price: Column | str, discount: Column | str) -> Column:
     """Σ price·(1−discount), exact in 10^-4 units; overflow-guarded."""
     units = to_units(price, 2) * (F.lit(100) - to_units(discount, 2))
-    return units_to_amount(_guarded_sum(units, "fast_revenue_sum", checked), 4)
+    return units_to_amount(_guarded_sum(units, "fast_revenue_sum"), 4)
 
 
 def fast_charge_sum(
-    price: Column | str, discount: Column | str, tax: Column | str, checked: bool = True
+    price: Column | str, discount: Column | str, tax: Column | str
 ) -> Column:
     """Σ price·(1−discount)·(1+tax), exact in 10^-6 units;
     overflow-guarded."""
@@ -131,4 +128,4 @@ def fast_charge_sum(
         * (F.lit(100) - to_units(discount, 2))
         * (F.lit(100) + to_units(tax, 2))
     )
-    return units_to_amount(_guarded_sum(units, "fast_charge_sum", checked), 6)
+    return units_to_amount(_guarded_sum(units, "fast_charge_sum"), 6)

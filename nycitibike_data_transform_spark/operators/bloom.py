@@ -11,7 +11,7 @@ match and never enter the shuffle; the small surviving fraction
 final result is bit-identical to the unfiltered plan — only the
 shuffle volume changes.
 
-Construction: each key row explodes to k bit positions
+Construction: each key row explodes to ``_K`` bit positions
 (double-hashing h1 + i·h2, the standard Kirsch–Mitzenmacher scheme,
 over xxhash64 — JVM-side), positions group into 64-bit words, and
 ``bit_or`` folds each word's set bits. Only the bounded final bitset
@@ -29,13 +29,23 @@ O(position) PER ROW — ~30 s at 10⁶ probe rows). Data beats
 expressions for large constants.
 
 Sizing: FPR ≈ (1 - e^(-k·n/m))^k; with m = 16·n bits and k = 7 the
-rate is ~0.8%. Pick ``m_bits`` ≥ 16× the distinct key count.
+rate is ~0.8%. ``m_bits_for(n)`` is that rule for n distinct keys.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+# hash count k — one constant shared by build and probe: a probe that
+# tested more positions than the build set would reject true members
+_K = 7
+
+
+def m_bits_for(n_keys: int) -> int:
+    """Bitset size for ``n_keys`` distinct keys: 16 bits per key
+    (~0.8% FPR at k = 7), rounded up to whole 64-bit words."""
+    return max(64, -(-(n_keys * 16) // 64) * 64)
 
 
 def _hashes(col: Column, m_bits: int) -> tuple[Column, Column]:
@@ -56,17 +66,16 @@ def _hashes(col: Column, m_bits: int) -> tuple[Column, Column]:
     return h1, h2
 
 
-def _positions(col: Column, m_bits: int, k: int) -> list[Column]:
+def _positions(col: Column, m_bits: int) -> list[Column]:
     """k bit-position Columns for a key: pos_i = (h1 + i·h2) mod m."""
     h1, h2 = _hashes(col, m_bits)
-    return [F.pmod(h1 + F.lit(i) * h2, F.lit(m_bits)) for i in range(k)]
+    return [F.pmod(h1 + F.lit(i) * h2, F.lit(m_bits)) for i in range(_K)]
 
 
 def bloom_build(
     df: DataFrame,
     col: str,
     m_bits: int = 1 << 20,
-    k: int = 7,
 ) -> list[int]:
     """Build the filter over the DISTINCT values of ``df[col]`` and
     return the dense ``m_bits/64``-long bitset (signed 64-bit words —
@@ -80,7 +89,7 @@ def bloom_build(
         .filter(F.col("__key").isNotNull())
         .distinct()
         .select(
-            F.explode(F.array(*_positions(F.col("__key"), m_bits, k))).alias("__pos")
+            F.explode(F.array(*_positions(F.col("__key"), m_bits))).alias("__pos")
         )
         .select(
             (F.col("__pos") / 64).cast("long").alias("__word"),
@@ -100,9 +109,7 @@ def bloom_build(
     return dense
 
 
-def bloom_prefilter(
-    df: DataFrame, col: str, bloom: list[int], k: int = 7
-) -> DataFrame:
+def bloom_prefilter(df: DataFrame, col: str, bloom: list[int]) -> DataFrame:
     """Keep only rows whose ``col`` MIGHT be in the filtered set —
     the lossless prefilter (no false negatives; survivors are true
     matches plus the sizing FPR). NULL keys are dropped (NULL
@@ -123,7 +130,7 @@ def bloom_prefilter(
         {"__h1": h1, "__h2": h2}
     )
     tests = []
-    for i in range(k):
+    for i in range(_K):
         pos = F.pmod(F.col("__h1") + F.lit(i) * F.col("__h2"), F.lit(m_bits))
         word = F.element_at(arr, (pos / 64).cast("int") + 1)
         bit = F.call_function(

@@ -59,103 +59,32 @@ def _spans_with_positions(
     return base, spans
 
 
-# --- bloom_prefilter="auto" gate (VERDICT r8 item #4, the size-gated
-# pattern from similarity.cosine_topk). The prefilter provably cuts
-# probe-side SHUFFLE ROWS (measured 10.9× at 0.07% FPR on the natural
-# sf0.1 corpus, ROUND8_NOTES), but rows-cut only converts to wall time
-# when shuffle bytes are expensive — i.e. when they cross a network.
-# Measured both ways (r9, 10× organic corpus: 2.36M span rows, 5.3%
-# dup-key fraction, local[32]): off 6.1 s, on 7.8 s — on a single node
-# the shuffle is a memcpy and the prefilter's fixed costs (dup-set
-# checkpoint + count, 343 KB bitset collect, extra probe jobs) never
-# pay for themselves even at a 93% row cut. The row threshold is
-# therefore calibrated for the CLUSTER regime the operator targets:
-# ~50M span rows ≈ 1.6 GB of md5 hashes per shuffle side, where
-# dropping >90% of them beats a sub-second bitset build by orders of
-# magnitude. Local/test scales stay on the off-path (and the r9
-# measurement shows that is the FASTER path there, not a missed win).
-# The gate turns the prefilter on only when BOTH hold:
-#
-# - span stream ≥ BLOOM_AUTO_MIN_SPAN_ROWS (estimated from
-#   sum(length(text)) — one column-pruned scan, no tokenize pass, no
-#   shuffle; ~6 chars per whitespace token+space);
-# - the duplicated-hash set is a small fraction of the span stream —
-#   when most span hashes are duplicated the probe passes nearly
-#   every row and the bitset buys nothing.
-#
-# The estimate is checked FIRST (r15): at local/test scales it fails
-# the gate and the off-path costs only that one cheap scan — the
-# dup-key checkpoint + count run only when the estimate passes, and
-# that count is the SAME count the bitset sizing needs, so the on-path
-# decision costs nothing extra. Bitset ceiling at the gate boundary:
-# 50M rows × 25% dup keys × 16 bits = 25 MB broadcast — acceptable;
-# callers forcing True on larger dup sets should size bits_per_key
-# down or re-shard first.
-BLOOM_AUTO_MIN_SPAN_ROWS = 50_000_000
-BLOOM_AUTO_MAX_DUP_KEY_FRACTION = 0.25
-_EST_CHARS_PER_TOKEN = 6
-
-
 def _resolve_bloom(
-    docs: DataFrame,
-    text_col: str,
-    spans: DataFrame,
-    dup_keys: DataFrame,
-    mode,
-    bits_per_key: int,
+    spans: DataFrame, dup_keys: DataFrame, bloom_prefilter: bool
 ) -> tuple[DataFrame, DataFrame]:
-    """Apply the ``bloom_prefilter`` mode: True forces the prefilter,
-    False bypasses it, "auto" decides by the size gate above. Returns
-    (possibly prefiltered spans, checkpointed-or-passthrough dup_keys);
-    output is bit-identical across all three modes (the prefilter is
-    lossless — pinned in tests/test_spans.py both sides of the gate).
+    """Apply the ``bloom_prefilter`` choice: False (the default)
+    returns both relations unchanged and the plan stays fully lazy;
+    True runs ``_bloom_cut_probe_side``, which EXECUTES at call time
+    (checkpoint + count + bitset collect). Output is bit-identical
+    either way (the prefilter is lossless — pinned in
+    tests/test_spans.py).
 
-    Laziness contract (r9 review, narrowed r15): ``False`` builds a
-    fully lazy plan; ``True`` EXECUTES at call time (checkpoint +
-    count + bitset collect — the measured-faster shape, see
-    ``_bloom_cut_probe_side``). ``"auto"`` executes ONE cheap
-    column-pruned text scan at call time for the span-row estimate;
-    only when that estimate passes the size gate (i.e. on the
-    cluster-scale ON path) does it additionally checkpoint and count
-    the dup-key relation — the count the gate's second condition and
-    the bitset sizing both need. At local/test scales the estimate
-    fails the gate first, so "auto" plans cost one metadata-cheap scan
-    instead of r14's checkpoint + count + scan (r15 opt: interleaved
-    A/B min-of-5 at sf0.1 — span_strip 2.58 → 2.05 s, span_dedup
-    1.75 → 1.32 s).
+    The prefilter cuts probe-side shuffle ROWS (10.9× at 0.07% FPR on
+    the natural sf0.1 corpus, ROUND8_NOTES), but the cut converts to
+    wall time only when shuffle bytes cross a network: on one node the
+    shuffle is a memcpy and the fixed costs never pay back (r9, 10×
+    organic corpus, local[32]: off 6.1 s, on 7.8 s). Hence off by
+    default; ``span_strip_bloom`` runs the True path.
     """
-    if mode is False:
+    if bloom_prefilter is False:
         return spans, dup_keys
-    if mode is True:
-        return _bloom_cut_probe_side(spans, dup_keys, bits_per_key)
-    if mode != "auto":
-        raise ValueError(
-            f"bloom_prefilter must be True, False, or 'auto', got {mode!r}"
-        )
-    total_chars = docs.agg(F.sum(F.length(text_col)).alias("c")).first()[0] or 0
-    est_span_rows = total_chars / _EST_CHARS_PER_TOKEN
-    if est_span_rows < BLOOM_AUTO_MIN_SPAN_ROWS:
-        # OFF path decided by the estimate alone — no dup-key
-        # materialization, fully lazy downstream plan
-        return spans, dup_keys
-    dup_keys = dup_keys.localCheckpoint(eager=True)
-    n_keys = dup_keys.count()
-    if n_keys == 0:
-        return spans, dup_keys  # nothing duplicated — the join is empty
-    if n_keys > est_span_rows * BLOOM_AUTO_MAX_DUP_KEY_FRACTION:
-        return spans, dup_keys
-    # same sized build as the forced-True path — shared helper so the
-    # bitset sizing/FPR math can never diverge between modes (r9 review)
-    return _bloom_cut_probe_side(
-        spans, dup_keys, bits_per_key, n_keys=n_keys
-    )
+    if bloom_prefilter is True:
+        return _bloom_cut_probe_side(spans, dup_keys)
+    raise ValueError(f"bloom_prefilter must be True or False, got {bloom_prefilter!r}")
 
 
 def _bloom_cut_probe_side(
-    spans: DataFrame,
-    dup_keys: DataFrame,
-    bits_per_key: int,
-    n_keys: int | None = None,
+    spans: DataFrame, dup_keys: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """Lossless Bloom prefilter in front of the spans ⋈ dup-hash
     equi-join (VERDICT r7 item #4 — the DEPLOY.md shuffle-cut wired
@@ -171,8 +100,6 @@ def _bloom_cut_probe_side(
     collect, and the final join would otherwise each recompute the
     full span groupBy from scratch (the flag_contaminated lesson,
     ADVICE r7). Returns (prefiltered spans, checkpointed dup_keys).
-    Pass ``n_keys`` when the caller already checkpointed and counted
-    (the auto gate) — the keys are then used as-is.
 
     r15 opt round measured (and REJECTED) a fully lazy alternative —
     the bitset built in-plan as a one-row relation (no checkpoint, no
@@ -188,13 +115,11 @@ def _bloom_cut_probe_side(
     from nycitibike_data_transform_spark.operators.bloom import (
         bloom_build,
         bloom_prefilter,
+        m_bits_for,
     )
 
-    if n_keys is None:
-        dup_keys = dup_keys.localCheckpoint(eager=True)
-        n_keys = dup_keys.count()
-    m_bits = max(64, -(-(n_keys * bits_per_key) // 64) * 64)
-    bits = bloom_build(dup_keys, "__h", m_bits=m_bits)
+    dup_keys = dup_keys.localCheckpoint(eager=True)
+    bits = bloom_build(dup_keys, "__h", m_bits=m_bits_for(dup_keys.count()))
     return bloom_prefilter(spans, "__h", bits), dup_keys
 
 
@@ -204,8 +129,7 @@ def strip_duplicate_spans(
     min_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bloom_prefilter: bool | str = "auto",
-    bloom_bits_per_key: int = 16,
+    bloom_prefilter: bool = False,
 ) -> DataFrame:
     """Remove duplicated spans, keeping each span's globally-first
     occurrence (smallest ``(doc_id, pos)``) — the cut step of Lee
@@ -229,15 +153,12 @@ def strip_duplicate_spans(
     map-side combinable — then per-document windows). The rebuild
     collects each document's surviving tokens into one row — bounded
     by input-document size, which arrived as one row already.
-    ``bloom_prefilter`` ("auto" default) cuts the join-back shuffle:
-    span rows whose hash provably isn't duplicated are dropped by a
-    broadcast Bloom bitset before they shuffle — lossless, output
-    bit-identical. "auto" engages it only past the size gate (see
-    ``_resolve_bloom``); True/False force either path. Laziness: False
-    builds a fully lazy plan; True executes the dup-hash count and
-    bitset build at plan construction; "auto" runs one column-pruned
-    text scan at plan construction, plus the dup-hash count only when
-    the size gate's ON path is reached (see ``_resolve_bloom``).
+    ``bloom_prefilter=True`` cuts the join-back shuffle: span rows
+    whose hash provably isn't duplicated are dropped by a broadcast
+    Bloom bitset before they shuffle — lossless, output bit-identical.
+    Laziness: the default (False) builds a fully lazy plan; True
+    executes the dup-hash count and bitset build at plan construction
+    (see ``_resolve_bloom``).
     """
     if width < 1:
         raise ValueError(f"width must be >= 1, got {width}")
@@ -257,9 +178,7 @@ def strip_duplicate_spans(
         .filter(F.col("__cnt") >= min_count)
         .select("__h", "__first")
     )
-    spans, dup_first = _resolve_bloom(
-        docs, text_col, spans, dup_first, bloom_prefilter, bloom_bits_per_key
-    )
+    spans, dup_first = _resolve_bloom(spans, dup_first, bloom_prefilter)
     removed = (
         spans.join(dup_first, "__h")
         .filter(
@@ -317,8 +236,7 @@ def duplicate_span_stats(
     min_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bloom_prefilter: bool | str = "auto",
-    bloom_bits_per_key: int = 16,
+    bloom_prefilter: bool = False,
 ) -> DataFrame:
     """Per-document duplicate-span statistics.
 
@@ -332,7 +250,8 @@ def duplicate_span_stats(
     Returns one row per input document:
     ``(doc_id, n_tokens, n_spans, n_dup_spans, dup_tokens,
     dup_token_fraction)`` — documents shorter than ``width`` tokens
-    get zero spans and fraction 0.0.
+    get zero spans and fraction 0.0. ``bloom_prefilter`` works as in
+    ``strip_duplicate_spans``.
     """
     if width < 1:
         raise ValueError(f"width must be >= 1, got {width}")
@@ -347,9 +266,7 @@ def duplicate_span_stats(
         .filter(F.col("__cnt") >= min_count)
         .select("__h")
     )
-    spans, dup_hashes = _resolve_bloom(
-        docs, text_col, spans, dup_hashes, bloom_prefilter, bloom_bits_per_key
-    )
+    spans, dup_hashes = _resolve_bloom(spans, dup_hashes, bloom_prefilter)
     dup_positions = spans.join(dup_hashes, "__h").select(
         "doc_id", "pos", (F.col("pos") + F.lit(width - 1)).alias("__end")
     )

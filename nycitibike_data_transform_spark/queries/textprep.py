@@ -1074,11 +1074,7 @@ def _q_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id")
     )
     ftop = cosine_topk(
-        # method="brute": this is the exact AUDIT tier by design (the
-        # whole query compares float vs int8 rankings on a bounded
-        # 50-query sample) — auto-routing to an approximate tier would
-        # make the audit audit the approximation
-        emb, emb.filter(F.col("vec_id") < _QT_N_QUERIES), k=_QT_K, method="brute"
+        emb, emb.filter(F.col("vec_id") < _QT_N_QUERIES), k=_QT_K
     ).select("query_id", "neighbor_id")
     overlap = ftop.join(qtop, ["query_id", "neighbor_id"]).groupBy("query_id").agg(
         F.count(F.lit(1)).alias("__n")

@@ -153,7 +153,7 @@ def test_flag_contaminated_tiers_identical(spark, sf_dir):
     """Broadcast and shuffled decontamination tiers are the same
     logical plan modulo join strategy — outputs must be row-identical
     (r4 verdict: the shuffled tier is the big-benchmark fallback), and
-    the auto tier must route a tiny benchmark to broadcast."""
+    an unknown tier is refused."""
     from nycitibike_data_transform_spark.operators.dedup import flag_contaminated
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -168,17 +168,8 @@ def test_flag_contaminated_tiers_identical(spark, sf_dir):
     }
     assert rows_b == rows_s
     assert len(rows_b) == corpus.count()
-    # tiny benchmark must route to the broadcast path (and a forced
-    # 0-budget auto must route to shuffle and still agree)
-    rows_auto = {
-        tuple(r)
-        for r in flag_contaminated(
-            corpus, bench, method="auto", broadcast_max_shingles=0
-        ).collect()
-    }
-    assert rows_auto == rows_b
     with pytest.raises(ValueError):
-        flag_contaminated(corpus, bench, method="bogus")
+        flag_contaminated(corpus, bench, method="auto")
 
 
 def test_incremental_equals_exact_cross_set_on_testdata(spark, sf_dir):
@@ -226,12 +217,3 @@ def test_incremental_equals_exact_cross_set_on_testdata(spark, sf_dir):
     assert got == truth
     assert any(v > 0 for v in truth.values())  # non-vacuous
 
-
-def test_blocked_mode_rejects_max_shingle_df(spark):
-    import pytest
-
-    from nycitibike_data_transform_spark.operators.dedup import ngram_jaccard_pairs
-
-    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="max_shingle_df"):
-        ngram_jaccard_pairs(docs, mode="blocked", max_shingle_df=10)

@@ -101,7 +101,7 @@ def test_quantiles_array_percentile_matches_scalar(spark):
     )
 
 
-# --- r15 second pass: auto-gate laziness + DSIR broadcast build side
+# --- r15 second pass: span-operator laziness + DSIR broadcast build side
 
 
 def _plan_of(df) -> str:
@@ -109,31 +109,56 @@ def _plan_of(df) -> str:
 
 
 def test_span_auto_gate_off_path_never_materializes(spark, monkeypatch):
-    """The "auto" bloom gate must decide the OFF path from the cheap
-    text-length estimate ALONE: no localCheckpoint (and hence no
-    dup-key materialization or count job) may run at plan-build time
-    below the size gate. Pins the r15 reorder (estimate first,
-    checkpoint+count only on the ON path) — a revert to the r14 order
-    would checkpoint here and fail."""
-    from pyspark.sql import DataFrame
-
+    """The default (Bloom-off) span path must not localCheckpoint the
+    dup-key relation at plan-build time: only ``bloom_prefilter=True``
+    materializes it. The counter patches the session's own DataFrame
+    class: Spark 4's classic DataFrame overrides ``localCheckpoint``,
+    so a patch on ``pyspark.sql.DataFrame`` would never be called."""
     from nycitibike_data_transform_spark.operators.spans import (
         strip_duplicate_spans,
     )
 
+    rows = [(i, "alpha beta gamma delta epsilon zeta eta theta") for i in range(8)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
     calls = {"n": 0}
-    real = DataFrame.localCheckpoint
+    real = type(docs).localCheckpoint
 
     def counting(self, eager=True):
         calls["n"] += 1
         return real(self, eager=eager)
 
-    monkeypatch.setattr(DataFrame, "localCheckpoint", counting)
-    rows = [(i, "alpha beta gamma delta epsilon zeta eta theta") for i in range(8)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = strip_duplicate_spans(docs, width=3, bloom_prefilter="auto")
-    assert calls["n"] == 0, "auto off-path must not checkpoint at plan build"
+    monkeypatch.setattr(type(docs), "localCheckpoint", counting)
+    out = strip_duplicate_spans(docs, width=3)
+    assert calls["n"] == 0, "the default path must not checkpoint at plan build"
+    strip_duplicate_spans(docs, width=3, bloom_prefilter=True)
+    assert calls["n"] == 1  # the counter sees the Bloom path's checkpoint
     assert out.count() == 8  # plan still executes correctly
+
+
+def test_default_builds_start_no_job(spark, spark_jobs):
+    """Building ``cosine_topk``, ``duplicate_span_stats`` and
+    ``strip_duplicate_spans`` with default arguments is lazy: no
+    probe job measures the input to pick a tier."""
+    from nycitibike_data_transform_spark.operators.similarity import cosine_topk
+    from nycitibike_data_transform_spark.operators.spans import (
+        duplicate_span_stats,
+        strip_duplicate_spans,
+    )
+
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(8)], "vec_id long, embedding array<double>"
+    )
+    docs = spark.createDataFrame(
+        [(i, "alpha beta gamma delta") for i in range(8)], "doc_id long, text string"
+    )
+    for build in (
+        lambda: cosine_topk(emb, emb.filter("vec_id < 2")),
+        lambda: duplicate_span_stats(docs, width=3),
+        lambda: strip_duplicate_spans(docs, width=3),
+    ):
+        with spark_jobs() as jobs:
+            build()
+            assert jobs() == 0
 
 
 def test_dsir_ngram_ratio_is_broadcast_build_right(spark):

@@ -52,8 +52,6 @@ def test_fast_money_guard_fires_with_ansi_off(spark):
         df = spark.createDataFrame([(9.1e16,), (9.1e16,)], "x double")
         with pytest.raises(Exception, match="envelope"):
             df.select(fast_money_sum("x")).collect()
-        # and the unchecked opt-out is the only way to get a wrapped sum
-        df.select(fast_money_sum("x", checked=False)).collect()
     finally:
         spark.conf.unset("spark.sql.ansi.enabled")
 

@@ -37,39 +37,6 @@ def test_cosine_topk_excludes_self(spark):
     assert all(r["query_id"] != r["neighbor_id"] for r in out)
 
 
-def test_cosine_topk_auto_matches_brute_below_gate(spark):
-    # below BRUTE_MAX_CORPUS_ROWS the auto gate must produce the SAME
-    # plan/rows as the explicit brute tier (VERDICT r5 item #3)
-    emb = _emb(spark)
-    q = emb.filter(F.col("vec_id") <= 2)
-    auto = sorted(map(tuple, cosine_topk(emb, q, k=3, method="auto").collect()))
-    brute = sorted(map(tuple, cosine_topk(emb, q, k=3, method="brute").collect()))
-    assert auto == brute and len(auto) > 0
-
-
-def test_cosine_topk_auto_routes_to_lsh_above_gate(spark):
-    # force the gate with a tiny threshold: the plan must switch to
-    # the banded equi-join tier — no BroadcastNestedLoopJoin anywhere
-    emb = spark.createDataFrame(
-        [(i, [float(i % 7) + 0.1, 1.0 - float(i % 5) / 5.0, 0.3]) for i in range(40)],
-        "vec_id bigint, embedding array<float>",
-    )
-    q = emb.filter(F.col("vec_id") < 3)
-    out = cosine_topk(emb, q, k=3, method="auto", brute_max_corpus_rows=10)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan
-    rows = out.collect()
-    assert len(rows) > 0
-    assert {c for c in out.columns} == {"query_id", "neighbor_id", "rank", "cosine"}
-
-
-def test_cosine_topk_rejects_unknown_method(spark):
-    import pytest
-
-    with pytest.raises(ValueError, match="auto|brute"):
-        cosine_topk(_emb(spark), _emb(spark), method="banded")
-
-
 def test_lsh_recall_on_testdata(spark, sf_dir):
     """ANN recall vs exact top-5 on the real embeddings table: the
     single-band SRP index should recover a solid share of true
@@ -152,25 +119,3 @@ def test_zero_norm_query_returns_no_neighbors(spark):
     # cosine undefined against a zero vector → no ranked neighbors
     assert out.count() == 0
 
-
-def test_auto_gate_trusts_caller_supplied_sizes(spark, sf_dir):
-    """ADVICE r6: looping callers pass corpus_rows/lsh_dim to skip the
-    per-call probe jobs. A declared size above the gate must route to
-    the SRP tier (identical to calling cosine_topk_lsh directly) even
-    though the actual corpus is tiny; a declared size below keeps the
-    exact brute plan."""
-    from nycitibike_data_transform_spark.operators.similarity import (
-        cosine_topk,
-        cosine_topk_lsh,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = emb.filter("vec_id < 5")
-    routed = cosine_topk(emb, q, k=3, corpus_rows=200_000, lsh_dim=64)
-    direct = cosine_topk_lsh(emb, q, dim=64, k=3)
-    assert sorted(map(tuple, routed.collect())) == sorted(
-        map(tuple, direct.collect())
-    )
-    exact = cosine_topk(emb, q, k=3, corpus_rows=10, method="auto")
-    brute = cosine_topk(emb, q, k=3, method="brute")
-    assert sorted(map(tuple, exact.collect())) == sorted(map(tuple, brute.collect()))

@@ -398,36 +398,6 @@ def test_span_bloom_prefilter_no_duplicates_edge(spark):
         assert plain == bloomed
 
 
-def test_span_bloom_auto_gate_both_sides(spark, monkeypatch):
-    """bloom_prefilter="auto" (the r9 default) must be parity-pinned on
-    BOTH sides of the size gate: forced-on (thresholds dropped to zero)
-    and forced-off (thresholds raised sky-high) both equal the explicit
-    True and False paths."""
-    from nycitibike_data_transform_spark.operators import spans as sp
-
-    docs = spark.createDataFrame(
-        [
-            ("a", "the cat sat on the mat and then the cat sat on the mat"),
-            ("b", "the cat sat on the mat quite happily all day long"),
-            ("c", "completely unrelated text with no repeats at all here"),
-        ],
-        "doc_id string, text string",
-    )
-    for fn in (sp.duplicate_span_stats, sp.strip_duplicate_spans):
-        baseline = sorted(map(tuple, fn(docs, width=3, bloom_prefilter=False).collect()))
-        forced = sorted(map(tuple, fn(docs, width=3, bloom_prefilter=True).collect()))
-        assert baseline == forced
-
-        monkeypatch.setattr(sp, "BLOOM_AUTO_MIN_SPAN_ROWS", 1)
-        monkeypatch.setattr(sp, "BLOOM_AUTO_MAX_DUP_KEY_FRACTION", 1.0)
-        auto_on = sorted(map(tuple, fn(docs, width=3).collect()))
-        assert auto_on == baseline
-
-        monkeypatch.setattr(sp, "BLOOM_AUTO_MIN_SPAN_ROWS", 10**12)
-        auto_off = sorted(map(tuple, fn(docs, width=3).collect()))
-        assert auto_off == baseline
-
-
 def test_span_bloom_invalid_mode_rejected(spark):
     from nycitibike_data_transform_spark.operators.spans import duplicate_span_stats
 

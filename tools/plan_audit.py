@@ -174,10 +174,10 @@ FLAG_NOTES = {
     "not a pair join; the df side is a |query_terms|-row broadcast and the "
     "top-k is TakeOrderedAndProject (same reviewed scalar-broadcast family "
     "as tfidf_top_terms/dsir_select).",
-    "cosine_topk": "exact brute tier through the size-gated auto mode (r6): "
-    "below BRUTE_MAX_CORPUS_ROWS the query-set broadcast is the right plan; a "
-    "corpus past the gate auto-routes to the banded SRP tier, so the BNLJ here "
-    "is the bounded small-corpus path, not an unbounded default.",
+    "cosine_topk": "the exact brute tier over a bounded 50-vector query set: "
+    "the BNLJ broadcasts the queries against the corpus, O(|queries|·n) "
+    "dot products, linear in the corpus. Approximate search at scale is "
+    "the explicit banded SRP or IVF tier (cosine_topk_lsh/_ivf rows).",
     "cosine_topk_lsh": "BNLJ belongs to the embedded EXACT top-k truth side of "
     "the r5 recall verdict (same reviewed brute tier as cosine_topk); the LSH "
     "candidate path under test stays (band, bucket) equi-join.",
