@@ -533,6 +533,30 @@ def _sweep_footers(data_dir: str, rels, cols) -> dict:
         return dict(ex.map(_one, rels))
 
 
+# Spark lists more input paths or partition dirs than this threshold
+# with a distributed job of one task per path. A snapshot sits on the
+# local disk, where the driver lists a daily-partitioned one (2,289 dirs
+# at sf0.001) in ~0.4 s; the listing job took ~12 s.
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _read_local_parquet(
+    spark: SparkSession, schema, *paths: str, base_path: str | None = None
+) -> DataFrame:
+    """Schema-pinned parquet scan of snapshot paths, listed on the
+    driver. Spark lists the files while it builds the DataFrame, so the
+    threshold is raised for this call only."""
+    reader = spark.read.schema(schema)
+    if base_path is not None:
+        reader = reader.option("basePath", base_path)
+    prev = spark.conf.get(_LISTING_THRESHOLD)
+    spark.conf.set(_LISTING_THRESHOLD, str(2**31 - 1))
+    try:
+        return reader.parquet(*paths)
+    finally:
+        spark.conf.set(_LISTING_THRESHOLD, prev)
+
+
 class _stats_friendly_writes:
     """Write parquet with ``TIMESTAMP_MICROS`` instead of Spark's
     legacy INT96 default (conf saved/restored): INT96 carries NO
@@ -698,7 +722,7 @@ class VersionedTable:
         from pyspark.sql.types import StructType
 
         schema = StructType.fromJson(self.manifest(version)["schema"])
-        return spark.read.schema(schema).parquet(self._data_dir(version))
+        return _read_local_parquet(spark, schema, self._data_dir(version))
 
     def read_current(self, spark: SparkSession) -> DataFrame:
         cur = self.current_version()
@@ -1146,8 +1170,9 @@ class VersionedTable:
         if not keep:
             return spark.createDataFrame([], schema)
         data_dir = self._data_dir(version)
-        reader = spark.read.schema(schema).option("basePath", data_dir)
-        return reader.parquet(*[os.path.join(data_dir, f) for f in keep])
+        return _read_local_parquet(
+            spark, schema, *[os.path.join(data_dir, f) for f in keep], base_path=data_dir
+        )
 
     def read_in(
         self,
@@ -1459,11 +1484,9 @@ class VersionedTable:
             # merged in (silent row loss). Pinned, the updates plan also
             # runs once instead of once per use.
             updates = updates.localCheckpoint(eager=True)
-            base = (
-                updates.sparkSession.read.schema(schema)
-                .parquet(self._data_dir(cur))
-                .select(*updates.columns)
-            )
+            base = _read_local_parquet(
+                updates.sparkSession, schema, self._data_dir(cur)
+            ).select(*updates.columns)
             if not partition_col:
                 return self._write_version_locked(resolve(base, updates))
             merged = resolve(
@@ -1608,7 +1631,7 @@ class VersionedTable:
         the IsNotNull constant-folding hazard — and raises instead."""
         self._ensure_readable(version)
         _additive_evolution(self.manifest(version)["schema"], schema)
-        return spark.read.schema(schema).parquet(self._data_dir(version))
+        return _read_local_parquet(spark, schema, self._data_dir(version))
 
     @staticmethod
     def _zvalue_column(df: DataFrame, cols: tuple[str, ...], bits: int = 8):
