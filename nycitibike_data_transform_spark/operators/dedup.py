@@ -538,14 +538,16 @@ def flag_contaminated(
             .filter(F.length("shingle") > 0)
         )
 
-    # materialize the distinct set once — the Bloom sizing count, the
-    # Bloom build's collect, and the join below would otherwise EACH
-    # run the full benchmark tokenize+explode+distinct from scratch
-    # (ADVICE r7); the pinned set also keeps the join's plan one
-    # exchange shorter than re-deriving it
-    bench_shingles = (
-        _sh(benchmark).select("shingle").distinct().localCheckpoint(eager=True)
-    )
+    bench_shingles = _sh(benchmark).select("shingle").distinct()
+    if method == "broadcast" or bloom_prefilter:
+        # materialize the distinct set once, when the call is made — the
+        # Bloom sizing count, the Bloom build's collect, and the join
+        # below would otherwise EACH run the full benchmark tokenize+
+        # explode+distinct from scratch (ADVICE r7); the pinned set also
+        # keeps the broadcast join's plan one exchange shorter than
+        # re-deriving it. The plain shuffle tier, meant for benchmarks
+        # too big to pin, stays a lazy plan.
+        bench_shingles = bench_shingles.localCheckpoint(eager=True)
     bench_side = (
         F.broadcast(bench_shingles) if method == "broadcast" else bench_shingles
     )

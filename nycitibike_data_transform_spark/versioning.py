@@ -57,6 +57,7 @@ import json
 import os
 import re
 import shutil
+import threading
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -538,6 +539,10 @@ def _sweep_footers(data_dir: str, rels, cols) -> dict:
 # local disk, where the driver lists a daily-partitioned one (2,289 dirs
 # at sf0.001) in ~0.4 s; the listing job took ~12 s.
 _LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+# The threshold is a session conf: two threads (a foreachBatch upsert
+# and a main-thread read) that interleaved save/raise/restore would
+# leave it raised for the rest of the session.
+_LISTING_LOCK = threading.Lock()
 
 
 def _read_local_parquet(
@@ -545,16 +550,17 @@ def _read_local_parquet(
 ) -> DataFrame:
     """Schema-pinned parquet scan of snapshot paths, listed on the
     driver. Spark lists the files while it builds the DataFrame, so the
-    threshold is raised for this call only."""
+    threshold is raised for this call only, one call at a time."""
     reader = spark.read.schema(schema)
     if base_path is not None:
         reader = reader.option("basePath", base_path)
-    prev = spark.conf.get(_LISTING_THRESHOLD)
-    spark.conf.set(_LISTING_THRESHOLD, str(2**31 - 1))
-    try:
-        return reader.parquet(*paths)
-    finally:
-        spark.conf.set(_LISTING_THRESHOLD, prev)
+    with _LISTING_LOCK:
+        prev = spark.conf.get(_LISTING_THRESHOLD)
+        spark.conf.set(_LISTING_THRESHOLD, str(2**31 - 1))
+        try:
+            return reader.parquet(*paths)
+        finally:
+            spark.conf.set(_LISTING_THRESHOLD, prev)
 
 
 class _stats_friendly_writes:

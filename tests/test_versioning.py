@@ -138,6 +138,41 @@ def test_partitioned_write_prunes_on_read(spark, tmp_path):
     assert t.manifest(1)["partition_by"] == ["dt"]
 
 
+def test_concurrent_reads_restore_listing_threshold(spark, tmp_path):
+    """Snapshot reads raise the session's parallel-listing threshold for
+    their own call only. Reads from two threads at once (a foreachBatch
+    upsert beside a main-thread read) must still leave it as it was."""
+    import threading
+
+    from nycitibike_data_transform_spark.versioning import _LISTING_THRESHOLD
+
+    t = VersionedTable(str(tmp_path / "tbl"))
+    t.write_version(
+        spark.range(40).selectExpr("id AS k", "CAST(id AS STRING) AS dt"),
+        partition_by=("dt",),
+    )
+    before = spark.conf.get(_LISTING_THRESHOLD)
+    start = threading.Barrier(2)
+    counts, errors = [], []
+
+    def reader():
+        try:
+            start.wait()
+            for _ in range(5):
+                counts.append(len(t.read_current(spark).inputFiles()))
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=reader) for _ in range(2)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+    assert not errors
+    assert counts == [40] * 10
+    assert spark.conf.get(_LISTING_THRESHOLD) == before
+
+
 def test_pipeline_versioned_materialization(spark, tmp_path):
     """Pipeline.run: two runs of the same model leave both snapshots
     readable with an intact pointer."""
