@@ -135,9 +135,9 @@ def shingles(col: Column, n: int = 3) -> Column:
     return F.array_distinct(joined)
 
 
-# MinHash-LSH banding of the blocked and incremental near-dup tiers:
-# 16 hashes in 8 bands of 2 rows (recall envelope in
-# ngram_jaccard_pairs' docstring)
+# MinHash-LSH banding of every minhash_* operator, and so of the
+# blocked and incremental near-dup tiers: 16 hashes in 8 bands of 2
+# rows (recall envelope in ngram_jaccard_pairs' docstring)
 _LSH_HASHES = 16
 _LSH_BANDS = 8
 
@@ -182,10 +182,7 @@ def ngram_jaccard_pairs(
     a shingle appearing in d docs makes one reducer do O(d²) work.
     """
     if mode == "blocked":
-        candidates = minhash_candidate_pairs(
-            df, text_col, id_col, n, num_hashes=_LSH_HASHES, bands=_LSH_BANDS,
-            shingles_df=shingles_df,
-        )
+        candidates = minhash_candidate_pairs(df, text_col, id_col, n, shingles_df=shingles_df)
         return jaccard_on_candidate_pairs(
             candidates, df, text_col, id_col, n, threshold
         )
@@ -242,13 +239,12 @@ def minhash_signatures(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    num_hashes: int = 16,
     shingles_df: DataFrame | None = None,
 ) -> DataFrame:
-    """(id, h0..h{k-1}) MinHash signature per document.
+    """(id, h0..h{k-1}) MinHash signature per document, k = ``_LSH_HASHES``.
 
     Shape matters here: explode the shingle set once, hash each shingle
-    row ``num_hashes`` ways, then two-phase ``min`` aggregation.
+    row k ways, then two-phase ``min`` aggregation.
     (The tempting alternative — ``array_min(transform(shingles, hash))``
     per hash — re-inlines the shingle-construction expression into all
     k transforms after Catalyst's projection collapse: k× the work.)
@@ -265,7 +261,7 @@ def minhash_signatures(
         )
     )
     return sh.groupBy(id_col).agg(
-        *[F.min(F.xxhash64("shingle", F.lit(i))).alias(f"h{i}") for i in range(num_hashes)]
+        *[F.min(F.xxhash64("shingle", F.lit(i))).alias(f"h{i}") for i in range(_LSH_HASHES)]
     )
 
 
@@ -274,18 +270,14 @@ def minhash_banded(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
     shingles_df: DataFrame | None = None,
 ) -> DataFrame:
     """(id, band, bucket) LSH banding of the MinHash signature — the
     shared candidate-generation primitive for within-corpus pairing
     (``minhash_candidate_pairs``) and cross-set incremental dedup
     (``incremental_near_dup``)."""
-    if num_hashes % bands != 0:
-        raise ValueError("num_hashes must divide evenly into bands")
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, n, num_hashes, shingles_df=shingles_df)
+    rows_per_band = _LSH_HASHES // _LSH_BANDS
+    sig = minhash_signatures(df, text_col, id_col, n, shingles_df=shingles_df)
     return sig.select(
         F.col(id_col),
         F.explode(
@@ -301,7 +293,7 @@ def minhash_banded(
                             ],
                         ).alias("bucket"),
                     )
-                    for b in range(bands)
+                    for b in range(_LSH_BANDS)
                 ]
             )
         ).alias("bb"),
@@ -313,8 +305,6 @@ def minhash_candidate_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
     shingles_df: DataFrame | None = None,
 ) -> DataFrame:
     """LSH candidate pairs: equal band-slices of the MinHash signature
@@ -325,7 +315,7 @@ def minhash_candidate_pairs(
     candidates with ``ngram_jaccard_pairs`` semantics on the candidate
     subset only.
     """
-    banded = minhash_banded(df, text_col, id_col, n, num_hashes, bands, shingles_df=shingles_df)
+    banded = minhash_banded(df, text_col, id_col, n, shingles_df=shingles_df)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -416,12 +406,12 @@ def incremental_near_dup(
     each side's shingle sets by id (linear), never exploding shingles
     into a self-join. Batch docs only ever pair with bucket-mates —
     O(batch × bands) shuffle rows, not O(batch × corpus)."""
-    c_banded = minhash_banded(
-        corpus, text_col, id_col, n, _LSH_HASHES, _LSH_BANDS
-    ).select(F.col(id_col).alias("corpus_id"), "band", "bucket")
-    b_banded = minhash_banded(
-        batch, text_col, id_col, n, _LSH_HASHES, _LSH_BANDS
-    ).select(F.col(id_col).alias("batch_id"), "band", "bucket")
+    c_banded = minhash_banded(corpus, text_col, id_col, n).select(
+        F.col(id_col).alias("corpus_id"), "band", "bucket"
+    )
+    b_banded = minhash_banded(batch, text_col, id_col, n).select(
+        F.col(id_col).alias("batch_id"), "band", "bucket"
+    )
     candidates = (
         c_banded.join(b_banded, ["band", "bucket"])
         .select("corpus_id", "batch_id")

@@ -848,9 +848,9 @@ def _q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, n=_JACCARD_N, threshold=_JACCARD_THRESHOLD, mode="exact",
         shingles_df=sh,
     )
-    cand = minhash_candidate_pairs(
-        docs, n=_JACCARD_N, num_hashes=16, bands=8, shingles_df=sh
-    ).withColumn("__cand", F.lit(1))
+    cand = minhash_candidate_pairs(docs, n=_JACCARD_N, shingles_df=sh).withColumn(
+        "__cand", F.lit(1)
+    )
     return truth.join(cand, ["doc_a", "doc_b"], "left").select(
         "doc_a",
         "doc_b",

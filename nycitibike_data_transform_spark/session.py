@@ -14,9 +14,12 @@ warehouse" is a Catalyst/Tungsten session configured for:
   compiled classes instead of recompiling them,
 - WARN logging, except for ``WindowExec``'s unpartitioned-window
   warning (see ``_WINDOW_EXEC_LOGGER``),
-- a driver JVM that JIT-compiles with C1 only (see
-  ``_DRIVER_JAVA_OPTIONS``); it applies only when ``get_spark`` starts
-  the JVM, and cluster executors keep C2.
+- a driver JVM that JIT-compiles with C1 only and collects with the
+  Serial GC (see ``_DRIVER_JAVA_OPTIONS``); both apply only when
+  ``get_spark`` starts the JVM, and cluster executors keep C2 and their
+  own GC,
+- a driver heap no larger than three quarters of the machine's RAM (see
+  ``default_driver_memory``).
 
 On a real cluster the same builder applies — only ``master`` and the
 memory sizing change; AQE re-sizes shuffles at runtime so the static
@@ -43,13 +46,35 @@ _WINDOW_EXEC_LOGGER = "org.apache.spark.sql.execution.window.WindowExec"
 # the run ends before it pays back. C1 alone halves set-up CPU and cuts
 # refresh op CPU ~45 %; hot executor loops in a warm JVM run slower on
 # C1 code (embedding_near_dup's wall x1.45; README "Session defaults").
+# The Serial GC: the job holds a few MB of data in its heap, and G1's
+# own overhead was most of the driver's memory (NMT on a perfbench
+# queries run: 579 MB of committed heap and 64 MB of GC structures
+# under G1, 379 MB and 1 MB under Serial). Serial cut perfbench's
+# peak_rss_mb 20 % (queries) and 22 % (refresh) at unchanged op CPU;
+# the cost is stop-the-world GC pauses on the wall clock (ops/s -6 %
+# on queries and -4 % on refresh, the refresh op's wall x1.08; README
+# "Session defaults").
 # Set as defaultJavaOptions so a caller's spark.driver.extraJavaOptions
 # adds to it rather than replacing it.
-_DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1"
+_DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1 -XX:+UseSerialGC"
+
+_MAX_DRIVER_MEMORY_MB = 48 * 1024
 
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory``: ``$SPARK_GRAFT_DRIVER_MEM`` if set, else
+    the smaller of 48g and three quarters of physical RAM. Spark sizes
+    execution memory from the heap, so a heap larger than the machine
+    gets the process killed where it would otherwise have spilled."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    ram_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // (1024 * 1024)
+    return f"{min(_MAX_DRIVER_MEMORY_MB, ram_mb * 3 // 4)}m"
 
 
 def get_spark(
@@ -80,7 +105,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.driver.defaultJavaOptions", _DRIVER_JAVA_OPTIONS)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
